@@ -21,40 +21,45 @@ import org.apache.spark.sql.functions._
   *  1. keys are hashed into `numBuckets` partition directories (`kb=<n>`) —
   *     the unit of rewrite, so a batch touching k keys rewrites at most
   *     min(k, numBuckets) directories, not the table;
-  *  2. the surviving rows of the touched buckets are computed executor-side
-  *     (partition-pruned scan + LEFT ANTI join on the key — no driver
-  *     collect; the only driver-side value is the touched-bucket id list,
-  *     bounded by `numBuckets`, i.e. metadata-sized);
-  *  3. merged rows are staged to a sibling directory first (the merge READS
-  *     the table; overwriting inputs mid-scan is the classic self-overwrite
-  *     corruption), then published with dynamic partition overwrite.
+  *  2. a stats job over the batch returns its row count (the width guard)
+  *     and the touched-bucket ids — the only driver-side values, bounded by
+  *     `numBuckets`, i.e. metadata-sized;
+  *  3. a write job reads the touched buckets (partition-pruned, with the
+  *     batch's schema, so no inference job), unions them with the batch
+  *     under a source flag and merges in ONE shuffle on `kb`: grouping by
+  *     `kb` + keys keeps the batch row per key where there is one. Each
+  *     bucket lands in one task and is written as one file, straight into
+  *     `tableDir` by a dynamic partition overwrite. Spark stages that output
+  *     under `.spark-staging-<jobId>` and swaps the touched `kb=` directories
+  *     in only at job commit, after every input has been read, so the merge
+  *     never overwrites a file it is still scanning.
+  *
+  * The swap inside that commit is NOT atomic: per touched bucket Spark
+  * deletes the old directory and then renames the staged one in. A crash
+  * between the two loses that bucket's rows until the batch replays, and a
+  * concurrent reader can see the bucket missing. Whether the checkpoint
+  * replay closes the crash window, and what a reader needs, is unproven.
   *
   * Scale notes: `numBuckets` is the rewrite granularity / parallelism
   * trade-off — at 100 TB of counter state you'd raise it so each bucket is
   * ~100 MB-1 GB, and swap step 3's publish for a transactional table format
-  * (Delta/Iceberg MERGE does steps 2-3 with an atomic log commit; plain
-  * parquet's directory swap is atomic only per-file). One writer per table
-  * (one streaming query per sink instance) — same single-writer rule the
-  * reference gets from one Kafka consumer group per counter table.
+  * (Delta/Iceberg MERGE does steps 2-3 with an atomic log commit). One
+  * writer per table (one streaming query per sink instance) — same
+  * single-writer rule the reference gets from one Kafka consumer group per
+  * counter table.
   */
 final class KeyedParquetSink(val tableDir: String, keyCols: Seq[String],
     numBuckets: Int = 32,
     maxBatchKeys: Long = KeyedParquetSink.DefaultMaxBatchKeys)
     extends Serializable {
 
-  // the width probe materializes maxBatchKeys + 1 as an Int limit(); the
-  // Long-ranged parameter exists for ergonomic call sites, not for caps
-  // past Int.MaxValue (a limit() can't express those anyway)
-  require(maxBatchKeys < Int.MaxValue,
-    s"maxBatchKeys must be < Int.MaxValue (got $maxBatchKeys); " +
-      "use <= 0 to disable the batch-width guard instead")
-
   private val bucketCol = "kb"
+  private val srcCol = "_kps_from_batch"
 
-  private def fs(spark: SparkSession) =
-    new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  def exists(spark: SparkSession): Boolean = fs(spark).exists(new Path(tableDir))
+  def exists(spark: SparkSession): Boolean = {
+    val p = new Path(tableDir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
 
   /** Current durable state, bucket column dropped. */
   def read(spark: SparkSession): DataFrame =
@@ -63,55 +68,47 @@ final class KeyedParquetSink(val tableDir: String, keyCols: Seq[String],
   /** Idempotent merge of one micro-batch of full per-key aggregates. */
   def upsert(batch: DataFrame): Unit = synchronized {
     val spark = batch.sparkSession
-    // the merge takes THREE actions over the batch (emptiness probe,
-    // touched-bucket collect, staged write); without pinning, each one
-    // re-executes the whole upstream micro-batch plan — for a streaming
-    // caller that is the stateful aggregation run 3x per trigger (and 3x
-    // the reported state metrics). Standard foreachBatch discipline:
-    // persist the micro-batch for its multi-action lifetime.
+    // both jobs read the batch; pinned, the upstream micro-batch plan (for a
+    // streaming caller, the stateful aggregation) runs once, inside the
+    // stats job, and the write job reads the cached rows
     val withBucket = batch.withColumn(bucketCol,
       pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets.toLong)).cast("int"))
       .persist()
     try {
+      val stats = withBucket.agg(count(lit(1)), collect_set(col(bucketCol))).head()
       // Fail-fast guard on batch width: the contract is one row per key
       // (update-mode aggregation output), so a batch past `maxBatchKeys`
       // rows means the upstream aggregation has no watermark (or a far
       // too lax one) and its state — and every bucket rewrite here — is
       // growing without bound. Surfacing that as an error at the sink
-      // beats silently rewriting the whole table every trigger. The probe
-      // is limit-bounded: it costs O(maxBatchKeys) scan, not a full count.
-      if (maxBatchKeys > 0 &&
-          withBucket.limit((maxBatchKeys + 1).toInt).count() > maxBatchKeys)
+      // beats silently rewriting the whole table every trigger.
+      if (maxBatchKeys > 0 && stats.getLong(0) > maxBatchKeys)
         throw new IllegalStateException(
           s"KeyedParquetSink($tableDir): micro-batch carries more than " +
             s"$maxBatchKeys keyed rows — is the upstream aggregation " +
             "missing a watermark? Raise maxBatchKeys if this width is " +
             "intended.")
-      if (!exists(spark)) {
-        // first batch: nothing to merge; skip entirely if empty so an empty
-        // trigger can't leave behind a schemaless (unreadable) empty table
-        if (!withBucket.isEmpty) withBucket.write.partitionBy(bucketCol).parquet(tableDir)
-        return
-      }
-      // touched-bucket ids: <= numBuckets ints on the driver (metadata-sized)
-      val touched = withBucket.select(bucketCol).distinct()
-        .collect().map(r => Integer.valueOf(r.getInt(0))).toSeq
-      if (touched.isEmpty) return
-      val existing = spark.read.parquet(tableDir)
-        .filter(col(bucketCol).isin(touched: _*)) // partition-pruned scan
-      val survivors = existing.join(
-        withBucket.select(keyCols.map(col): _*), keyCols, "left_anti")
-      val merged = survivors.unionByName(withBucket.select(existing.columns.map(col): _*))
-      val staging = new Path(tableDir + ".staging")
-      val f = fs(spark)
-      f.delete(staging, true)
-      merged.write.parquet(staging.toString)
-      spark.read.parquet(staging.toString)
+      // an empty batch writes nothing, so an empty first trigger can't
+      // leave behind a schemaless (unreadable) empty table
+      if (stats.getLong(0) == 0) return
+      val fresh = withBucket.withColumn(srcCol, lit(1))
+      val merged =
+        if (!exists(spark)) fresh
+        else spark.read.schema(withBucket.schema).parquet(tableDir)
+          .filter(col(bucketCol).isin(stats.getSeq[Int](1): _*)) // pruned scan
+          .withColumn(srcCol, lit(0))
+          .unionByName(fresh)
+      val valueCols = batch.columns.filterNot(keyCols.contains)
+      merged.repartition(col(bucketCol))
+        .groupBy((bucketCol +: keyCols).map(col): _*)
+        .agg(max_by(struct(valueCols.map(col): _*), col(srcCol)).as(srcCol))
+        .select(batch.columns.map(c =>
+          if (keyCols.contains(c)) col(c) else col(srcCol).getField(c).as(c)) :+
+          col(bucketCol): _*)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(bucketCol)
         .parquet(tableDir)
-      f.delete(staging, true)
     } finally withBucket.unpersist()
   }
 }
@@ -119,7 +116,6 @@ final class KeyedParquetSink(val tableDir: String, keyCols: Seq[String],
 object KeyedParquetSink {
   /** Default per-batch keyed-row cap. Generous: a healthy watermarked
     * counter stream touches days-per-trigger keys (dozens); 4M rows means
-    * state is effectively unbounded. Int-ranged so the limit-bounded
-    * probe stays expressible. */
+    * state is effectively unbounded. */
   val DefaultMaxBatchKeys: Long = 1L << 22
 }

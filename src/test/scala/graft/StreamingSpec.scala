@@ -74,6 +74,48 @@ class StreamingSpec extends AnyFunSuite {
     assert(after == Map("a" -> ((10.5, 3L)), "b" -> ((9.0, 2L)), "c" -> ((1.0, 1L))))
   }
 
+  test("upsert rewrites touched buckets in place: one file per bucket, others untouched") {
+    import spark.implicits._
+    val dir = tmp("layout-tbl") + "/t"
+    val sink = new KeyedParquetSink(dir, Seq("k"), numBuckets = 4)
+    // the key is not the first column: read must keep the batch's order
+    def batch(rows: Seq[(Double, String, Long)]) = rows.toDF("total", "k", "cnt")
+    def snapshot() = sink.read(spark).collect()
+      .map(r => r.getAs[String]("k") -> (r.getAs[Double]("total"), r.getAs[Long]("cnt"))).toMap
+    /** bucket dir -> its parquet files as (name, length) */
+    def layout(): Map[String, Seq[(String, Long)]] = {
+      import scala.jdk.CollectionConverters._
+      Files.list(Paths.get(dir)).iterator().asScala.filter(Files.isDirectory(_))
+        .map(d => d.getFileName.toString -> Files.list(d).iterator().asScala
+          .filter(_.getFileName.toString.endsWith(".parquet"))
+          .map(f => f.getFileName.toString -> Files.size(f)).toSeq.sorted)
+        .toMap
+    }
+    sink.upsert(batch((1 to 40).map(i => (i.toDouble, s"k$i", 1L))))
+    sink.upsert(batch((1 to 40 by 3).map(i => (i * 2.0, s"k$i", 2L))))
+    sink.upsert(batch(Seq((0.5, "k41", 1L))))
+    val before = layout()
+    assert(before.keySet == (0 until 4).map(b => s"kb=$b").toSet)
+    assert(before.values.forall(_.size == 1), s"one parquet file per bucket: $before")
+    assert(sink.read(spark).columns.toSeq == Seq("total", "k", "cnt"))
+
+    val one = batch(Seq((99.0, "k1", 5L))) // touches exactly one bucket
+    sink.upsert(one)
+    val after = layout()
+    assert(after.values.forall(_.size == 1), s"one parquet file per bucket: $after")
+    assert(after.keySet == before.keySet && after.count { case (b, fs) => fs != before(b) } == 1,
+      s"only the touched bucket may be rewritten:\n$before\n$after")
+    assert(!Files.exists(Paths.get(dir + ".staging")))
+
+    val want = (1 to 40).map(i => s"k$i" ->
+      (if (i == 1) (99.0, 5L) else if (i % 3 == 1) (i * 2.0, 2L) else (i.toDouble, 1L))).toMap +
+      ("k41" -> ((0.5, 1L)))
+    assert(snapshot() == want)
+    sink.upsert(one) // replay
+    assert(snapshot() == want)
+    assert(layout().values.forall(_.size == 1))
+  }
+
   test("upsert fails fast past maxBatchKeys (missing-watermark guard), table intact") {
     import spark.implicits._
     val sink = new KeyedParquetSink(tmp("cap-tbl") + "/t", Seq("k"),

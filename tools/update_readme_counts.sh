@@ -22,7 +22,8 @@ if [ "$CHECK" = 1 ]; then
   ROUND=$(sed -n 's/^Status (\(.*\)): .*$/\1/p' README.md | head -1)
   ROUND="${ROUND:-current}"
 fi
-OUT=$(sbt -batch "runMain graft.Counts" 2>/dev/null | sed -n 's/^\[info\] \(queries=\|oracled=\|no_oracle\)/\1/p')
+# the forked run prints straight to stdout, unprefixed (build.sbt outputStrategy)
+OUT=$(sbt -batch "runMain graft.Counts" 2>/dev/null | sed -n '/^\(queries=\|oracled=\|no_oracle\)/p')
 QUERIES=$(echo "$OUT" | sed -n 's/^queries=//p')
 ORACLED=$(echo "$OUT" | sed -n 's/^oracled=//p')
 NO_ORACLE_N=$(echo "$OUT" | sed -n 's/^no_oracle_n=//p')
