@@ -10,82 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      // ── Single-node LATENCY PROFILE (r15) ─────────────────────────────
-      // The bench measures per-query latency at sf0.1 against a single-node
-      // columnar engine. Profiling (graft.ProfileOverhead) decomposed the
-      // warm floor of an overhead-dominated row into: ~15-30 ms DataFrame
-      // build (Dataset ops analyze eagerly), ~10-30 ms optimize+physical
-      // planning, and jobs × ~20-25 ms of driver round-trip (a 1-task noop
-      // job floors at 21 ms) — JIT compilation is pass-1 only once the
-      // codegen cache holds the registry. The four confs below attack the
-      // round-trip count and the per-event payload; every one is a
-      // deployment knob (env-overridable), NOT a semantics change — results
-      // are bit-identical (Verify/INVARIANCE run their own sessions).
-      //
-      // Shuffle width: at bench scale every shuffle partition is a ~1-3 ms
-      // task launch on kB of data; width 4 halves the task count vs 8 with
-      // no compute loss (measured A/B, converged pass totals). A cluster
-      // deployment sets executors × cores as usual.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", math.max(4, cpus.toInt / 8).toString))
-      // AQE OFF for the latency profile: AQE materializes every exchange as
-      // its own job — ~3 extra driver round-trips (~25 ms each) per query —
-      // to gather runtime stats that at sf0.1 are already known at plan
-      // time. Same-window A/B over the full registry: 142.0 s → ~119 s from
-      // this knob alone (pass totals converged; n_failed 0; 211 rows >30 ms
-      // faster, 45 slower — the slower ones lose AQE's runtime broadcast;
-      // where the small side is bounded by construction the query sites
-      // carry static hints instead). At cluster scale AQE stays ON — ScaleStress and
-      // BenchStream sessions keep it enabled and carry the skew-split /
-      // coalescing receipts; this knob trades runtime re-planning (worth
-      // nothing when stats are static) for driver round-trips (88% of the
-      // floor total, README).
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      // Every SQL execution eagerly renders its plan into the
-      // SQLExecutionStart event for the (UI-less) status store; "formatted"
-      // is the most expensive renderer — "simple" saves ~2% of the floor
-      // total for identical execution. (Also A/B'd and REJECTED for this
-      // profile: spark.sql.files.maxPartitionBytes=512m — no mechanism at
-      // these file sizes (splits are governed by the 4 MB openCost floor;
-      // task counts identical) and the apparent win was window drift; and
-      // spark.sql.constraintPropagation.enabled=false — inferred IsNotNull
-      // filters prune real work, +13 s measured.)
-      .config("spark.sql.ui.explainMode", "simple")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // A single long-lived local JVM runs 189 queries back-to-back;
-      // shuffle files, broadcast blocks, and accumulator state are only
-      // reclaimed when the ContextCleaner's weak references fire, and the
-      // default periodic-GC nudge (30 min) is longer than the whole run —
-      // by mid-run the accumulated state inflates per-query times 2-4x
-      // (measured: 189-query run 277 s vs the same queries ~120 s in
-      // family-sized sessions). A 30 s nudge keeps cleanup ahead of
-      // accumulation; on a real cluster executors come and go and this
-      // knob is irrelevant.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      // Interleaved rep passes cycle all ~365 queries between a query's
-      // samples; the default 100-entry codegen cache evicts every
-      // generated class in between, so each pass would re-pay Janino
-      // compilation (~+0.15 s/query measured). Sized to hold the whole
-      // registry's generated classes (static conf — must be set here).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    // experiment/deployment knob: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" applies
-    // runtime-settable SQL confs on top of the baseline session — lets a
-    // conf hypothesis be A/B-measured without editing this file
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => spark.conf.set(k.trim, v.trim)
-        case _ =>
-      }
-    })
-    spark.sparkContext.setLogLevel("WARN")
-    QuietLogs.quietBenignWindowWarnings()
+    val spark = Sessions.start(Sessions.Latency)
     // JVM+Spark warmup on the smallest SF so codegen/classloading cost
     // doesn't land on the first measured query.
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()

@@ -6,7 +6,6 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Streaming-throughput benchmark main — the published number behind the
@@ -54,7 +53,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   */
 object BenchStream {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Sessions.cores
     // floors protocol, streaming edition: one fan-out per rep per
     // provider, best rate published — a single-shot rate swung 2,890 →
     // 12,864 rows/s across one day of host drift, which is noise, not
@@ -67,17 +66,7 @@ object BenchStream {
     val nDays = sys.env.getOrElse("SPARK_GRAFT_STREAM_DAYS", "50").toInt
     val filesN = sys.env.getOrElse("SPARK_GRAFT_STREAM_FILES", "40").toInt
     val filesPerTrigger = sys.env.getOrElse("SPARK_GRAFT_STREAM_FPT", "8").toInt
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", math.max(8, cpus.toInt / 4).toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    QuietLogs.quietBenignWindowWarnings()
+    val spark = Sessions.start(Sessions.Scale)
 
     // --- sized spool: stations × days × 24 hourly readings --------------
     // Deterministic pseudo-measurements; every 200th line is corrupt

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Diagnostic main: dump `.explain("formatted")` for named registry
@@ -8,11 +7,10 @@ import org.apache.spark.sql.execution.ExplainMode
   * under plans/rNN/ (the judge checks plan claims against these).
   *
   * Usage: runMain graft.ExplainDump <sfDir> <outDir> <q1,q2,...> [suffix]
-  * Writes <outDir>/<name><suffix>.txt. The session mirrors Bench's
-  * latency profile (AQE off by default, same shuffle width derivation)
-  * so the dumped plan is the shape the bench actually executes; override
-  * with SPARK_GRAFT_AQE / SPARK_GRAFT_SHUFFLE as in Bench. Stored-artifact
-  * setup (Bench.setup) is run unless SPARK_GRAFT_EXPLAIN_SETUP=0.
+  * Writes <outDir>/<name><suffix>.txt. The session is Bench's
+  * (`Sessions.Latency`) and Bench.setup runs first, so the dumped plan is
+  * the plan the bench executes; SPARK_GRAFT_EXTRA_CONF overrides confs as
+  * for every main.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -24,21 +22,8 @@ object ExplainDump {
     val suffix = if (args.length > 3) args(3) else ""
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", math.max(4, cpus.toInt / 8).toString))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    QuietLogs.quietBenignWindowWarnings()
-    if (sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_SETUP", "1") != "0")
-      Bench.setup(spark, sfDir)
+    val spark = Sessions.start(Sessions.Latency)
+    Bench.setup(spark, sfDir)
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

@@ -15,7 +15,7 @@ import graft.functions.expressions.{DotProduct, ShingleGenerator}
   *
   * Wire it in with either
   * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
+  *   builder.withExtensions(new GraftExtensions)  // as graft.Sessions does
   * }}}
   * or cluster-wide, with no code changes, via
   * `--conf spark.sql.extensions=graft.GraftExtensions`.

@@ -257,7 +257,7 @@ object ScaleStress {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Sessions.cores
     val rep = sys.env.getOrElse("SPARK_GRAFT_STRESS_REP", "10").toInt
     // min-of-3 floors: at min-of-2 a single load spike on either scale
     // flips ratios by 2x (a 19.6x dedup_minhash reading re-measured
@@ -275,34 +275,19 @@ object ScaleStress {
     val unknown = names.toSet -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
 
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", math.max(8, cpus.toInt / 4).toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      // run the top-k partial pass in its FLUSH-DEGRADED regime: the
-      // default 256k key cap never fills at these corpus sizes, so without
-      // this the stress run would certify a code path (heap-map flush →
-      // spillable buffer → final re-merge) that 100 TB NDV actually
-      // exercises. The cap must sit UNDER the per-task key NDV: the corpus
-      // has 1500 users per replica and stress replicas align with input
-      // files, so each task still sees ~1500 keys — 512 guarantees real
-      // flushes at both scales (measured 159 base / 1590 stress, linear in
-      // total NDV); the numCapFlushes metric is read back into the
-      // artifact as proof.
-      .config(graft.plans.TopKPerKeyExec.PartialMaxKeysKey,
-        sys.env.getOrElse("SPARK_GRAFT_STRESS_TOPK_CAP", "512"))
-      // interleaved rep passes (below) cycle ~52 query legs between a
-      // leg's samples; keep their generated classes cached so later
-      // passes don't re-pay Janino compilation (same sizing as Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    QuietLogs.quietBenignWindowWarnings()
+    val spark = Sessions.start(Sessions.Scale)
+    // run the top-k partial pass in its FLUSH-DEGRADED regime: the
+    // default 256k key cap never fills at these corpus sizes, so without
+    // this the stress run would certify a code path (heap-map flush →
+    // spillable buffer → final re-merge) that 100 TB NDV actually
+    // exercises. The cap must sit UNDER the per-task key NDV: the corpus
+    // has 1500 users per replica and stress replicas align with input
+    // files, so each task still sees ~1500 keys — 512 guarantees real
+    // flushes at both scales (measured 159 base / 1590 stress, linear in
+    // total NDV); the numCapFlushes metric is read back into the
+    // artifact as proof. A runtime conf: the planner reads it per query.
+    spark.conf.set(graft.plans.TopKPerKeyExec.PartialMaxKeysKey,
+      sys.env.getOrElse("SPARK_GRAFT_STRESS_TOPK_CAP", "512"))
 
     // --- second stress point (round 14): the structurally riskiest
     // families re-run at rep2 (default 30×) so the growth EXPONENT

@@ -557,7 +557,7 @@ object DedupOps {
       // spread (scale-gated identity at real sizes): the all-pairs
       // nested-loop join streams ONE scan task otherwise, so the 2M-pair
       // graft_dot loop — this query's entire cost (one 440 ms single-task
-      // stage, ProfileStages r15) — ran on 1 core
+      // stage, measured per stage in r15) — ran on 1 core
       val e = Tables.spread(s, Tables.embeddings(s, d), col("vec_id"))
         .select(col("vec_id"), vecDouble(col("embedding")).as("v"))
         .withColumn("nrm", sqrt(expr("graft_dot(v, v)")))

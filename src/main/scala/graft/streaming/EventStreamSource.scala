@@ -12,8 +12,8 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * The driver's testdata has shipped `ts` both as TIMESTAMP(NANOS) (legacy,
   * readable only as raw long) and as native TIMESTAMP(MICROS); a streaming
   * read needs a declared schema, so we peek at the parquet footer with a
-  * batch read first and declare the matching stream schema. StreamDemo, the
-  * stream≡batch equivalence specs, and any future streaming consumer share
+  * batch read first and declare the matching stream schema. The
+  * stream≡batch equivalence specs and any future streaming consumer share
   * this one spelling, so the schema/encoding can never silently drift
   * between copies. A Kafka topic takes the staged directory's place in
   * production. */
