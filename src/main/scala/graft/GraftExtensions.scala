@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{
   Multiply, NamedLambdaVariable, ZipWith}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 import graft.functions.expressions.{DotProduct, ShingleGenerator}
@@ -25,7 +26,10 @@ import graft.functions.expressions.{DotProduct, ShingleGenerator}
   *    permanent (not temp) functions, available from plain SQL in every
   *    session of the cluster;
   *  - [[SelfDotRewrite]], which transparently upgrades the declarative
-  *    HOF spelling of a self dot product to the codegen primitive.
+  *    HOF spelling of a self dot product to the codegen primitive;
+  *  - [[graft.plans.LiftFilterLiterals]], which keeps filter constants
+  *    (request keys) out of whole-stage generated source, so queries that
+  *    differ only in a key share one compiled class.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -181,6 +185,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => BandJoinRewrite)
     ext.injectOptimizerRule(_ => WindowTopKRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] =
+        graft.plans.LiftFilterLiterals
+    })
   }
 }
 

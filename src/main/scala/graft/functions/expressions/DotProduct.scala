@@ -1,6 +1,7 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -61,27 +62,30 @@ case class DotProduct(left: Expression, right: Expression)
 /** Session-level registration for the custom expressions (idempotent). */
 object GraftExpressions {
   def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    // a GraftExtensions session already has every function: skip a name the
+    // registry holds, as replacing it only logs a "replaced a previously
+    // registered function" warning on each query build
+    val registry = spark.sessionState.functionRegistry
+    def register(name: String, builder: Seq[Expression] => Expression): Unit =
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+    register("graft_dot", exprs => DotProduct(exprs(0), exprs(1)))
+    register(
       "graft_shingles",
       exprs => ShingleGenerator(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
+        exprs(1).eval().asInstanceOf[Number].intValue()))
     // per-doc DISTINCT shingles: the generator dedups row-locally, so no
     // corpus-wide distinct() shuffle is ever needed for shingle SETS
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    register(
       "graft_shingle_set",
       exprs => ShingleGenerator(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(), unique = true),
-      "scala_udf")
+        exprs(1).eval().asInstanceOf[Number].intValue(), unique = true))
     // row-local n-gram repetition census (total/distinct/top counts) — the
     // shuffle-free spelling of the C4 repetition filter; see RepetitionStats
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    register(
       "graft_repetition_stats",
       exprs => RepetitionStats(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
+        exprs(1).eval().asInstanceOf[Number].intValue()))
     // Spark ships BloomFilterAggregate/BloomFilterMightContain for its own
     // runtime row-level filtering but does not put them in the public
     // function registry; exposing them keeps Bloom builds IN-PLAN (a
@@ -90,27 +94,25 @@ object GraftExpressions {
     // driver-coordinated stat.bloomFilter build + Scala-UDF probe.
     // same argument validation as the GraftExtensions path — the two
     // registration modes must fail identically for the same bad SQL
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    register(
       "graft_bloom_agg",
       exprs => {
         require(exprs.length == 3,
           s"graft_bloom_agg expects 3 arguments (hash, est_items, num_bits), got ${exprs.length}")
         new org.apache.spark.sql.catalyst.expressions.aggregate
           .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      })
+    register(
       "graft_might_contain",
       exprs => {
         require(exprs.length == 2,
           s"graft_might_contain expects 2 arguments (bloom, hash), got ${exprs.length}")
         org.apache.spark.sql.catalyst.expressions
           .BloomFilterMightContain(exprs(0), exprs(1))
-      },
-      "scala_udf")
+      })
     // mergeable Misra-Gries heavy hitters (k counters per partition, not
     // vocabulary-sized shuffles) — see MisraGries.scala
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    register(
       "graft_freq_sketch",
       exprs => {
         require(exprs.length == 3,
@@ -120,10 +122,9 @@ object GraftExpressions {
         MisraGries(exprs(0),
           exprs(1).eval().asInstanceOf[Number].intValue(),
           exprs(2).eval().asInstanceOf[Number].intValue())
-      },
-      "scala_udf")
+      })
     // exact mergeable bitmap distinct over bounded ids — see BitmapDistinct.scala
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    register(
       "graft_bitmap_distinct",
       exprs => {
         require(exprs.length == 2,
@@ -132,10 +133,9 @@ object GraftExpressions {
           "graft_bitmap_distinct: maxId must be a constant, not a column")
         BitmapDistinct(exprs(0),
           exprs(1).eval().asInstanceOf[Number].longValue())
-      },
-      "scala_udf")
+      })
     // bitmap-emitting twin + intersection count — see BitmapDistinct.scala
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    register(
       "graft_bitmap_agg",
       exprs => {
         require(exprs.length == 2,
@@ -144,36 +144,31 @@ object GraftExpressions {
           "graft_bitmap_agg: maxId must be a constant, not a column")
         BitmapDistinct(exprs(0),
           exprs(1).eval().asInstanceOf[Number].longValue(), emitBitmap = true)
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      })
+    register(
       "graft_bitmap_and_count",
       exprs => {
         require(exprs.length == 2,
           s"graft_bitmap_and_count expects 2 arguments (bitmap, bitmap), got ${exprs.length}")
         BitmapAndCount(exprs(0), exprs(1))
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_zvalue", exprs => MortonZ(exprs(0), exprs(1)), "scala_udf")
+      })
+    register("graft_zvalue", exprs => MortonZ(exprs(0), exprs(1)))
     // row-local char-histogram entropy accumulator — see CharEntropy.scala
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    register(
       "graft_char_entropy",
       exprs => {
         require(exprs.length == 1,
           s"graft_char_entropy expects 1 argument (text), got ${exprs.length}")
         CharEntropyMicro(exprs(0))
-      },
-      "scala_udf")
+      })
     // codegen'd binary search over a sorted boundary array — see
     // LowerBound.scala
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    register(
       "graft_lower_bound",
       exprs => {
         require(exprs.length == 2,
           s"graft_lower_bound expects 2 arguments (sorted array<long>, value), got ${exprs.length}")
         LowerBound(exprs(0), exprs(1))
-      },
-      "scala_udf")
+      })
   }
 }

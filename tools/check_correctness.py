@@ -187,15 +187,17 @@ def main():
     n_skip = sum(1 for v in results.values() if v.startswith("SKIP"))
     for n, v in sorted(results.items()):
         print(f"{n:<{width}}  {v}")
-    # committed receipt for the sketch tail's cross-engine bound (the
-    # driver's CORRECTNESS_r{N}.json records these rows as bare no_oracle;
-    # this artifact carries their bounded_ok verdicts)
+    # receipt for the sketch tail's cross-engine bound (CORRECTNESS_r{N}.json
+    # records these rows as bare no_oracle; this artifact carries their
+    # bounded_ok verdicts), written beside the dump it checks; copy it to
+    # the repo root to refresh the committed one
     if bounded_results:
-        with open("CORRECTNESS_BOUNDED.json", "w") as f:
+        receipt = os.path.join(out_dir, "CORRECTNESS_BOUNDED.json")
+        with open(receipt, "w") as f:
             json.dump({"sf": sf_dir, "bound": 0.10,
                        "criterion": "|spark_est - duck_est| / exact <= bound per row; exact from the same DuckDB query",
                        "rows": bounded_results}, f, indent=1)
-        print(f"bounded cross-engine compares -> CORRECTNESS_BOUNDED.json "
+        print(f"bounded cross-engine compares -> {receipt} "
               f"({sum(1 for r in bounded_results.values() if r['bounded_ok'])}/"
               f"{len(bounded_results)} ok)")
     print(f"\n{n_ok} OK, {n_skip} SKIP, {len(results) - n_ok - n_skip} FAIL of {len(results)}")

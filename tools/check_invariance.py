@@ -52,10 +52,13 @@ for n in missing:
     print(f"MISSING {n}")
 print(f"{len(names)-len(bad)-len(missing)} invariant, {len(bad)} divergent, "
       f"{len(missing)} missing of {len(names)}")
-# committed receipt: the judge-readable record that no query's values
-# depend on partition count (the merge-order float hazard class)
+# receipt: the record that no query's values depend on partition count
+# (the merge-order float hazard class), written beside the first dump; copy
+# it to the repo root to refresh the committed one
 import json
-with open("INVARIANCE.json", "w") as f:
+receipt = os.path.join(a_dir, "INVARIANCE.json")
+print(f"receipt -> {receipt}")
+with open(receipt, "w") as f:
     json.dump({"metric": "partition_invariance", "dumps": sys.argv[1:3],
                "n_queries": len(names),
                "invariant": len(names) - len(bad) - len(missing),
