@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{KeyedParquetSink, WeatherIngest}
 
 /** End-to-end §3.1 ingest on the real wire format: line files → parse →
-  * four sinks. Mirrors the reference's KafkaStreamingActorSpec assertions
+  * one query → four sinks. Mirrors the reference's KafkaStreamingActorSpec assertions
   * (raw count, counter table populated) but value-exact, against DURABLE
   * counter tables (daily + A6 year-cumulative). */
 class WeatherIngestSpec extends AnyFunSuite {
@@ -106,8 +106,8 @@ class WeatherIngestSpec extends AnyFunSuite {
     run1.awaitAll()
     assert(dailySnapshot(run1.dailySink)(("724940:23234", 2008, 1, 1)) == ((0.5, 1L)))
 
-    // new file lands; restart the pipeline from the same checkpoints —
-    // streaming-agg state recovers and the sum continues, not resets
+    // new file lands; restart the pipeline from the same checkpoint — the
+    // counter tables hold the running sums, and the restart adds into them
     Files.write(src.resolve("b2.csv"),
       "724940:23234,2008,01,01,01,11.9,-0.6,1023.8,50,7.2,2,0.25,0.0".getBytes)
     val run2 = WeatherIngest.start(
@@ -116,5 +116,73 @@ class WeatherIngestSpec extends AnyFunSuite {
     assert(dailySnapshot(run2.dailySink)(("724940:23234", 2008, 1, 1)) == ((0.75, 2L)))
     assert(yearSnapshot(run2.yearSink)(("724940:23234", 2008)) == ((0.75, 2L)))
     assert(spark.read.parquet(rawOut).count() == 2)
+  }
+
+  test("crash before the batch commit: restart replays it, every sink matches the lines") {
+    import scala.jdk.CollectionConverters._
+    val src = Files.createTempDirectory("wire-src3")
+    Files.write(src.resolve("b1.csv"), lines.mkString("\n").getBytes("UTF-8"))
+    val rawOut = Files.createTempDirectory("wire-raw3").toString
+    val qOut = Files.createTempDirectory("wire-quar3").toString
+    val ckpt = Files.createTempDirectory("wire-ckpt3")
+    val tables = Files.createTempDirectory("wire-tables3").toString
+    def stream() = spark.readStream.format("text").load(src.toString)
+
+    WeatherIngest.start(stream(), rawOut, qOut, ckpt.toString, tables).awaitAll()
+    // the sinks hold batch 0; drop its commit as if the driver died first
+    val commits = ckpt.resolve("fan/commits")
+    val last = Files.list(commits).iterator().asScala.toSeq
+      .filter(p => !p.getFileName.toString.startsWith("."))
+      .maxBy(_.getFileName.toString.toLong)
+    Files.delete(last)
+    Files.deleteIfExists(commits.resolve("." + last.getFileName.toString + ".crc"))
+    val more = Seq(
+      "724940:23234,2008,01,03,00,11.7,-0.6,1023.8,50,7.2,2,0.25,0.0",
+      "725030:14732,2008,01,01,05,3.0,-2.0,1011.1,200,4.6,4,2.0,0.0",
+      "short,line")
+    Files.write(src.resolve("b2.csv"), more.mkString("\n").getBytes("UTF-8"))
+
+    // restart on a live trigger: the replayed batch and the new file, one query
+    val before = spark.streams.active.map(_.id).toSet
+    val run = WeatherIngest.start(stream(), rawOut, qOut, ckpt.toString, tables,
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime(200))
+    try {
+      assert(spark.streams.active.count(q => !before(q.id)) == 1)
+      assert(Set(run.raw, run.quarantine, run.counter, run.yearCounter).map(_.id).size == 1)
+      run.raw.processAllAvailable()
+    } finally run.raw.stop()
+
+    val all = lines ++ more
+    val parsed = graft.sources.WeatherCsv.parseLines(spark.createDataset(all)(
+      org.apache.spark.sql.Encoders.STRING))
+    val valid = graft.sources.WeatherCsv.valid(parsed)
+    val rawWant = valid.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    val rawGot = spark.read.parquet(rawOut).select(valid.columns.map(org.apache.spark.sql.functions.col): _*)
+      .collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    assert(rawGot == rawWant)
+    assert(spark.read.parquet(qOut).collect().map(_.getString(0)).toSeq.sorted ==
+      Seq("garbage", "short,line"))
+    val measured = graft.sources.WeatherCsv.withPrecipDefaults(valid).collect()
+    def want[K](key: org.apache.spark.sql.Row => K) = measured.groupBy(key).map { case (k, rs) =>
+      k -> ((rs.map(_.getAs[Double]("one_hour_precip")).sum, rs.length.toLong))
+    }
+    assert(dailySnapshot(run.dailySink) == want(r => (r.getAs[String]("wsid"),
+      r.getAs[Int]("year"), r.getAs[Int]("month"), r.getAs[Int]("day"))))
+    assert(yearSnapshot(run.yearSink) == want(r => (r.getAs[String]("wsid"), r.getAs[Int]("year"))))
+  }
+
+  test("start refuses a checkpoint root left by the four-query layout") {
+    val ckpt = Files.createTempDirectory("wire-ckpt-old")
+    Files.createDirectories(ckpt.resolve("counter/commits"))
+    val src = Files.createTempDirectory("wire-src-old")
+    val before = spark.streams.active.length
+    val e = intercept[IllegalStateException] {
+      WeatherIngest.start(spark.readStream.format("text").load(src.toString),
+        Files.createTempDirectory("wire-raw-old").toString,
+        Files.createTempDirectory("wire-quar-old").toString, ckpt.toString,
+        Files.createTempDirectory("wire-tables-old").toString)
+    }
+    assert(e.getMessage.contains(ckpt.toString) && e.getMessage.contains("counter"))
+    assert(spark.streams.active.length == before)
   }
 }
