@@ -38,13 +38,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * trigger-to-durable-commit wall time across the fan-out's non-empty
   * micro-batches (the latency the reference's 1 s batch interval implies).
   *
-  * Prints ONE JSON line and writes it to BENCH_STREAM.json: headline
-  * fields (rows/s, micro-batch count, batch_p50_ms/batch_p95_ms, per-table
-  * row counts, margins over the reference floors) plus a `steady` block
-  * (round 14): a fixed-arrival-rate leg —
-  * a feeder thread drips files at a constant cadence under a
-  * ProcessingTime trigger for ~60 triggers — whose p50/p95/p99 reflect
-  * EQUILIBRIUM commit latency, not the burst legs' warm-up/catch-up mix. Consistency is asserted per run, not assumed: raw+quarantine
+  * Prints ONE JSON line and writes it to BENCH_STREAM.json: rows/s,
+  * micro-batch count, batch_p50_ms/batch_p95_ms, per-table row counts and
+  * margins over the reference floors. Latency at a fixed arrival rate is
+  * perfbench's `ingest` workload (freshness under a live feed), not this
+  * main's. Consistency is asserted per run, not assumed: raw+quarantine
   * must account for every spooled line and the counter tables must carry
   * the exact station-day/station-year key counts, so the artifact can't
   * publish a rate for a run that silently dropped rows.
@@ -183,142 +181,9 @@ object BenchStream {
       .maxBy(_.rps)
     System.err.println(f"[bench-stream] best-of-$streamReps ${head.rps}%8.1f rows/s over ${head.batches} micro-batches, p50=${head.p50Ms} ms p95=${head.p95Ms} ms")
 
-    // --- STEADY-STATE latency leg (round 14): the burst legs above feed
-    // a pre-written spool through AvailableNow — their p50/p95 mixes
-    // warm-up and catch-up batches and says nothing about equilibrium.
-    // Here a feeder thread writes one file at a FIXED cadence (default
-    // 2,000 lines every 500 ms = 4,000 rows/s, well under the measured
-    // ~16k rows/s fan-out capacity — latency under saturation is queueing,
-    // not engine) for SPARK_GRAFT_STREAM_STEADY_FILES triggers while the
-    // full fan-out polls on a ProcessingTime trigger; files land via
-    // write-to-temp + atomic move so the source never lists a partial
-    // file. Published: observed non-empty triggers, the offered rate,
-    // and p50/p95/p99 trigger-to-durable-commit across the fan-out's
-    // non-empty batches at equilibrium.
-    val steadyFiles = sys.env.getOrElse("SPARK_GRAFT_STREAM_STEADY_FILES", "60").toInt
-    val steadyLinesPerFile = sys.env.getOrElse("SPARK_GRAFT_STREAM_STEADY_LPF", "2000").toInt
-    val steadyIntervalMs = sys.env.getOrElse("SPARK_GRAFT_STREAM_STEADY_MS", "500").toLong
-    /** One fixed-arrival-rate leg: feeder drips `files` files of `lpf`
-      * lines every `intervalMs` under a ProcessingTime trigger; returns
-      * (non-empty triggers, per-batch durations, drain ms — the wall
-      * time between the LAST fed file and full durable accounting, i.e.
-      * the backlog left when the offered load stopped). */
-    def steadyLeg(lpf: Int, files: Int): (Int, Vector[Long], Long) = {
-      val src = Files.createTempDirectory("stream-bench-steady")
-      val out = Files.createTempDirectory("stream-bench-steady-out").toString
-      val listener = new FanOutLog
-      spark.streams.addListener(listener)
-      try {
-        // a zero/negative trigger count would make the seed wait below
-        // spin forever (the feeder loop runs no iterations) — fail fast
-        require(files >= 1 && lpf >= 1,
-          s"steady leg needs >=1 file of >=1 line (got files=$files, " +
-            s"lines/file=$lpf)")
-        @volatile var fed = 0L
-        val feeder = new Thread(() => {
-          var written = 0L
-          for (f <- 0 until files) {
-            val buf = new java.lang.StringBuilder(1 << 20)
-            for (i <- 0 until lpf) {
-              if (written % 200 == 199) buf.append("garbled,line\n")
-              else {
-                val st = (written % nStations).toInt
-                val h = (written / nStations % 24).toInt
-                val d = (written / nStations / 24 % 28).toInt
-                buf.append("7249%03d:23234,2008,%02d,%02d,%02d,%.1f,-0.6,1023.8,50,7.2,2,%.2f,0.0\n"
-                  .formatLocal(java.util.Locale.ROOT, st, d / 28 + 1, d % 28 + 1, h,
-                    (st * 31 + d * 7 + h) % 400 / 10.0 - 10.0,
-                    if ((st + d + h) % 3 == 0) (h % 10) / 10.0 else 0.0))
-              }
-              written += 1
-            }
-            val tmp = src.resolve(f".tmp-$f")
-            Files.write(tmp, buf.toString.getBytes(StandardCharsets.UTF_8))
-            Files.move(tmp, src.resolve(f"steady-$f%05d.csv"),
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            fed = written
-            Thread.sleep(steadyIntervalMs)
-          }
-        }, "steady-feeder")
-        // seed one file BEFORE start: the file source requires the path to
-        // exist and an immediately-empty listing would log-spam; the first
-        // file also absorbs the fan-out's stream-start cost. The wait is
-        // BOUNDED and watches feeder liveness — a feeder that dies on an
-        // I/O error must fail this run loudly, not hang it forever.
-        feeder.start()
-        val seedDeadline = System.nanoTime() + 60L * 1000000000L
-        while (fed == 0L && feeder.isAlive && System.nanoTime() < seedDeadline)
-          Thread.sleep(10)
-        require(fed > 0L,
-          if (feeder.isAlive) "steady feeder produced no file within 60 s"
-          else "steady feeder died before its first file (see its stack trace)")
-        val lines = spark.readStream
-          .option("maxFilesPerTrigger", 4)
-          .text(src.toString)
-        val run = graft.streaming.WeatherIngest.start(lines,
-          s"$out/raw", s"$out/quarantine", s"$out/ckpt", s"$out/tables",
-          trigger = org.apache.spark.sql.streaming.Trigger
-            .ProcessingTime(steadyIntervalMs))
-        feeder.join()
-        val expected = fed
-        val tFeedEnd = System.nanoTime()
-        // drain: wait until every fed line is durably accounted for, then
-        // stop the query (ProcessingTime never self-terminates).
-        // The drain time IS the backlog receipt: a pipeline that kept up
-        // has at most one trigger's worth of files left when the feeder
-        // stops, so drain ≈ one trigger interval; a saturated one spends
-        // the queue it grew.
-        val deadline = System.nanoTime() + 300L * 1000000000L
-        def accounted(): Long =
-          try spark.read.parquet(s"$out/raw").count() +
-            spark.read.parquet(s"$out/quarantine").count()
-          catch { case _: Throwable => 0L }
-        while (accounted() < expected && System.nanoTime() < deadline)
-          Thread.sleep(100)
-        require(accounted() == expected,
-          s"steady leg lost lines: accounted=${accounted()} fed=$expected")
-        val drainMs = (System.nanoTime() - tFeedEnd) / 1000000L
-        run.raw.stop()
-        require(listener.done.await(60, TimeUnit.SECONDS),
-          "steady leg: listener never saw the query terminate")
-        val durs = listener.durations
-        (durs.size, durs, drainMs)
-      } finally spark.streams.removeListener(listener)
-    }
-    // --- RATE SWEEP (round 15): the r14 steady leg ran at/over capacity
-    // (51/60 triggers observed, p95 5.7x the interval) — its percentiles
-    // described a backlogged regime. Sweep the offered rate and publish
-    // the max SUSTAINABLE rate, criterion stated in the
-    // artifact: p95 batch duration under the trigger interval AND no
-    // backlog left when the feeder stops (drain <= 2 intervals).
-    val sweepRates = sys.env.getOrElse("SPARK_GRAFT_STREAM_SWEEP",
-        "1000,2000,4000,8000")
-      .split(',').map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
-    final case class SweepLeg(rate: Int, triggers: Int, durs: Vector[Long],
-        drainMs: Long) {
-      def p(q: Double): Long = pct(durs, q)
-      def sustainable: Boolean =
-        p(0.95) < steadyIntervalMs && drainMs <= 2 * steadyIntervalMs
-    }
-    val sweep = sweepRates.map { rate =>
-      val lpf = math.max(1, (rate * steadyIntervalMs / 1000).toInt)
-      val (tr, durs, drain) = steadyLeg(lpf, steadyFiles)
-      val leg = SweepLeg(rate, tr, durs, drain)
-      System.err.println(f"[bench-stream] sweep ${rate}%6d rows/s: $tr triggers p50=${leg.p(0.5)} p95=${leg.p(0.95)} p99=${leg.p(0.99)} ms drain=${drain} ms sustainable=${leg.sustainable}")
-      leg
-    }
-    val maxSustainable = sweep.filter(_.sustainable).map(_.rate).maxOption.getOrElse(0)
-    // headline steady block (back-compat): the leg at the r14 default
-    // offered rate, taken from the sweep (same protocol, one run)
-    val headlineRate = (steadyLinesPerFile * 1000L / steadyIntervalMs).toInt
-    val headLeg = sweep.find(_.rate == headlineRate).getOrElse(sweep.last)
-    val (steadyTriggers, steadyDurs) = (headLeg.triggers, headLeg.durs)
-    val steadyRate = headLeg.rate.toDouble
-    System.err.println(f"[bench-stream] steady $steadyTriggers triggers at ${steadyRate}%8.1f rows/s offered, p50=${pct(steadyDurs, 0.5)} ms p95=${pct(steadyDurs, 0.95)} ms p99=${pct(steadyDurs, 0.99)} ms; max sustainable $maxSustainable rows/s")
-
     def r1(v: Double): String = "%.1f".formatLocal(java.util.Locale.ROOT, v)
     val line =
-      s"""{"metric":"stream_rows_per_sec","value":${r1(head.rps)},"unit":"rows/sec","reps":$streamReps,"lines":$written,"wall_sec":${r1(head.wall)},"micro_batches":${head.batches},"batch_p50_ms":${head.p50Ms},"batch_p95_ms":${head.p95Ms},"raw_rows":${head.rawRows},"quarantine_rows":${head.qRows},"daily_counter_rows":${head.dailyRows},"year_counter_rows":${head.yearRows},"ref_floor_ingest_rows_60s":8000,"ref_floor_counter_rows_60s":500,"ingest_floor_margin_x":${r1(head.rps * 60 / 8000)},"counter_floor_margin_x":${r1(head.dailyRows * math.min(1.0, 60.0 / head.wall) / 500)},"steady":{"planned_files":$steadyFiles,"observed_triggers":$steadyTriggers,"input_rows_per_sec":${r1(steadyRate)},"interval_ms":$steadyIntervalMs,"batch_p50_ms":${pct(steadyDurs, 0.5)},"batch_p95_ms":${pct(steadyDurs, 0.95)},"batch_p99_ms":${pct(steadyDurs, 0.99)},"batches":${steadyDurs.size},"sweep":{"criterion":"sustainable iff batch_p95_ms < interval_ms AND drain_ms <= 2*interval_ms (no backlog left when the feeder stops)","interval_ms":$steadyIntervalMs,"files_per_leg":$steadyFiles,"legs":${sweep.map(l => s""""${l.rate}":{"observed_triggers":${l.triggers},"batch_p50_ms":${l.p(0.5)},"batch_p95_ms":${l.p(0.95)},"batch_p99_ms":${l.p(0.99)},"drain_ms":${l.drainMs},"sustainable":${l.sustainable}}""").mkString("{", ",", "}")},"max_sustainable_rows_per_sec":$maxSustainable}},"cpus":$cpus}"""
+      s"""{"metric":"stream_rows_per_sec","value":${r1(head.rps)},"unit":"rows/sec","reps":$streamReps,"lines":$written,"wall_sec":${r1(head.wall)},"micro_batches":${head.batches},"batch_p50_ms":${head.p50Ms},"batch_p95_ms":${head.p95Ms},"raw_rows":${head.rawRows},"quarantine_rows":${head.qRows},"daily_counter_rows":${head.dailyRows},"year_counter_rows":${head.yearRows},"ref_floor_ingest_rows_60s":8000,"ref_floor_counter_rows_60s":500,"ingest_floor_margin_x":${r1(head.rps * 60 / 8000)},"counter_floor_margin_x":${r1(head.dailyRows * math.min(1.0, 60.0 / head.wall) / 500)},"cpus":$cpus}"""
     try Files.write(Paths.get("BENCH_STREAM.json"),
       (line + "\n").getBytes(StandardCharsets.UTF_8))
     catch { case e: Throwable =>

@@ -39,18 +39,17 @@ import graft.sources.WeatherCsv
   * replayable source plus sinks keyed by batch id (Structured Streaming,
   * SIGMOD 2018): raw and quarantine are Spark's own `FileStreamSink`, whose
   * `_spark_metadata` log skips a batch id it already holds, and the counter
-  * tables are [[KeyedParquetSink.add]], which skips a replayed batch's
-  * increments in every bucket already stamped with its id. The stream holds
-  * no state: the counter tables are the only copy of the running sums,
-  * where the reference keeps them in Cassandra counters, which double-count
-  * replayed increments.
+  * tables are [[CounterTable]]s, which publish each batch's increments by
+  * one directory rename under its batch id and skip a replayed id. The
+  * stream holds no state: the counter tables are the only copy of the
+  * running sums, where the reference keeps them in Cassandra counters,
+  * which double-count replayed increments.
   *
   * Scale notes: the parse is stateless and shuffle-free; only the counter
   * deltas shuffle, and a batch's delta is bounded by the station-days it
-  * touches. What remains open is the counter tables' publish: it deletes
-  * each touched bucket directory and then renames the new one in, so a
-  * reader in between sees the bucket missing, and a crash in between loses
-  * the bucket's earlier rows (see [[KeyedParquetSink]]).
+  * touches. A trigger appends its deltas and rewrites no table; every few
+  * triggers one of them also folds the deltas into a new base (see
+  * [[CounterTable]]).
   */
 object WeatherIngest {
 
@@ -96,7 +95,7 @@ object WeatherIngest {
     * and the two counter tables. */
   final case class Running(raw: StreamingQuery, quarantine: StreamingQuery,
       counter: StreamingQuery, yearCounter: StreamingQuery,
-      dailySink: KeyedParquetSink, yearSink: KeyedParquetSink) {
+      dailySink: CounterTable, yearSink: CounterTable) {
     def awaitAll(): Unit = raw.awaitTermination()
   }
 
@@ -108,9 +107,9 @@ object WeatherIngest {
     * `tableRoot` holds the two durable counter tables
     * (`$tableRoot/daily_precip`, `$tableRoot/year_precip`).
     * `trigger` defaults to AvailableNow (drain-and-stop, the batch-bench
-    * and test shape); BenchStream's steady-state leg passes a
-    * ProcessingTime trigger so the fan-out keeps polling a live spool at
-    * a fixed cadence instead of terminating at the current file set.
+    * and test shape); a live feed passes a ProcessingTime trigger so the
+    * fan-out keeps polling its spool at a fixed cadence instead of
+    * terminating at the current file set.
     *
     * Refuses a `checkpointRoot` left by the four-query layout (a fresh
     * `fan` query restarts at batch 0: the raw sink's log would skip its
@@ -145,10 +144,9 @@ object WeatherIngest {
     }
     val rawSink = fileSink(rawOut)
     val quarantineSink = fileSink(quarantineOut)
-    val dailySink = new KeyedParquetSink(s"$tableRoot/daily_precip",
+    val dailySink = new CounterTable(s"$tableRoot/daily_precip",
       Seq("wsid", "year", "month", "day"))
-    val yearSink = new KeyedParquetSink(s"$tableRoot/year_precip",
-      Seq("wsid", "year"))
+    val yearSink = new CounterTable(s"$tableRoot/year_precip", Seq("wsid", "year"))
     // one thread per sink; idle threads exit, so a stopped query leaves none
     val pool = new ThreadPoolExecutor(4, 4, 30L, TimeUnit.SECONDS,
       new LinkedBlockingQueue[Runnable](), (r: Runnable) => {

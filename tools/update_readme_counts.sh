@@ -140,10 +140,6 @@ try:
     if "batch_p50_ms" in st:
         line += (f" Micro-batch commit latency p50/p95 "
                  f"{st['batch_p50_ms']}/{st['batch_p95_ms']} ms.")
-    rk = st.get("providers", {}).get("rocksdb")
-    if rk:
-        line += (f" RocksDB state-store leg: {rk['value']:.0f} rows/s, "
-                 f"p50/p95 {rk['batch_p50_ms']}/{rk['batch_p95_ms']} ms.")
 except Exception:
     pass
 try:
