@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanDoor, SparkSession}
 
 /** Parquet-backed table layer. Stands in for the reference's Cassandra
   * keyspace (ref: data/create-timeseries.cql) — each logical table is one
@@ -70,6 +70,32 @@ object Tables {
     if (cores > 1 && bytes < BigInt(maxPart) * cores)
       df.repartition(cores, keys: _*)
     else df
+  }
+
+  /** The dual of `spread`: keep a one-split input in one task. Where the
+    * planned scan of `table` has exactly one input partition, the returned
+    * function marks a frame over it as one partition (`coalesce(1)`, no
+    * shuffle). Its output is then `SinglePartition`, so the aggregates and
+    * sorts above need no exchange, and a keyed lookup runs as one stage
+    * and one task instead of shuffling a few hundred filtered rows into
+    * `spark.sql.shuffle.partitions`. The split count is read once, from a
+    * transient copy of the table's plan: an executed plan cached on the
+    * shared frame would stay live as long as the session.
+    *
+    * Scale gate: a table of more than one split (several files, or a file
+    * above the session's split size) gets the IDENTITY, and the scan's own
+    * parallelism feeds the distributed plan. The mark never changes an
+    * answer: a coalesced frame holds the same rows, and a table that grows
+    * past one split after the count only loses parallelism. */
+  def narrow(s: SparkSession, table: DataFrame): DataFrame => DataFrame = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val planned = GraftPlanDoor.ofRows(s, table.queryExecution.analyzed)
+      .queryExecution.sparkPlan
+    val splits = planned.collectLeaves().map {
+      case scan: FileSourceScanExec => scan.inputRDD.getNumPartitions
+      case _ => -1
+    }
+    if (splits == Seq(1)) _.coalesce(1) else identity
   }
 
   def region(s: SparkSession, d: String): DataFrame   = apply(s, d, "region")

@@ -1,6 +1,5 @@
 package graft.api
 
-import java.net.{InetAddress, InetSocketAddress}
 import java.nio.charset.StandardCharsets
 
 import scala.concurrent.duration._
@@ -8,6 +7,8 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
+
+import graft.LoopbackServer
 
 /** The QUERY-plane front door — the mirror of [[graft.streaming.HttpIngest]]
   * (S16's ingest door) closing the reference's last architectural
@@ -35,6 +36,11 @@ import org.apache.spark.sql.SparkSession
   * queries interleave through the scheduler). `None` results — the
   * reference's `NoDataAvailable` null object (Weather.scala:118) — map to
   * 404; malformed parameters to 400.
+  *
+  * The server is made by [[graft.LoopbackServer]], which turns TCP
+  * no-delay on (a JVM-wide property): without it each response's body
+  * waits for the client's delayed ACK of its headers, ~40 ms on every
+  * back-to-back GET of a keep-alive connection.
   *
   * Scale note: this is a DRIVER-side serving door. Each request is a small
   * pushed-down Spark job (key predicates reach the scan), so the cluster
@@ -71,8 +77,7 @@ final class HttpQueryServer(spark: SparkSession, dir: String) {
   /** Start on an ephemeral (or given) loopback port; returns the bound port. */
   def start(port: Int = 0): Int = synchronized {
     require(server == null, "already started")
-    server = HttpServer.create(
-      new InetSocketAddress(InetAddress.getLoopbackAddress, port), 0)
+    server = LoopbackServer.create(port)
     // requests dispatch on the handler pool, not the accept thread, so a
     // slow Spark job can't head-of-line-block the listener
     server.setExecutor(httpPool)

@@ -1,13 +1,14 @@
 package graft.streaming
 
 import java.io.{ByteArrayInputStream, InputStream}
-import java.net.{InetAddress, InetSocketAddress}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicLong
 import java.util.zip.GZIPInputStream
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+
+import graft.LoopbackServer
 
 /** S16 — the HTTP ingest front door (KafkaDataIngestionApp.scala:71-159,
   * HttpDataFeedActor + ClientHelper.scala:46-90): the reference accepts
@@ -33,7 +34,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   *    micro-batches, and a half-written visible file would be consumed
   *    truncated. Rename-into-place is the standard file-source handoff.
   *  - Binds the loopback interface only (this is a demo front door, not an
-  *    authenticated service); JDK built-in HttpServer, zero dependencies.
+  *    authenticated service); JDK built-in HttpServer, zero dependencies,
+  *    made by [[graft.LoopbackServer]] with TCP no-delay on.
   */
 final class HttpIngest(spoolDir: String) {
   private val dir: Path = {
@@ -59,8 +61,7 @@ final class HttpIngest(spoolDir: String) {
   /** Start on an ephemeral (or given) loopback port; returns the bound port. */
   def start(port: Int = 0): Int = synchronized {
     require(server == null, "already started")
-    server = HttpServer.create(
-      new InetSocketAddress(InetAddress.getLoopbackAddress, port), 0)
+    server = LoopbackServer.create(port)
     server.createContext("/weather/data", new HttpHandler {
       override def handle(x: HttpExchange): Unit =
         try handleFeed(x)

@@ -158,4 +158,35 @@ class HttpQuerySpec extends AnyFunSuite {
         f"12 distinct concurrent GETs took $wall%.1f s — handler/query pool starvation?")
     } finally door.stop()
   }
+
+  test("back-to-back keep-alive requests do not wait for a delayed ACK, on both doors") {
+    // the JDK server writes headers and body apart; with Nagle on, the body
+    // waits ~40 ms for the client's delayed ACK on every reused connection
+    def medianMs(requests: Seq[HttpRequest]): Double = {
+      val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+      client.send(requests.head, HttpResponse.BodyHandlers.ofString()) // open the connection
+      val ms = requests.map { r =>
+        val t0 = System.nanoTime()
+        client.send(r, HttpResponse.BodyHandlers.ofString())
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      ms(ms.size / 2)
+    }
+    val door = new HttpQueryServer(spark, sf)
+    val spool = java.nio.file.Files.createTempDirectory("nodelay-spool").toFile
+    val ingest = new graft.streaming.HttpIngest(spool.toString)
+    val (qPort, iPort) = (door.start(), ingest.start())
+    try {
+      val notFound = HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:$qPort/weather/no-such-route")).GET().build()
+      val emptyFeed = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$iPort/weather/data"))
+        .POST(HttpRequest.BodyPublishers.ofString("")).build()
+      val q = medianMs(Seq.fill(20)(notFound))
+      val i = medianMs(Seq.fill(20)(emptyFeed))
+      assert(q < 10.0 && i < 10.0, f"median GET $q%.1f ms, POST $i%.1f ms")
+    } finally {
+      door.stop(); ingest.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(spool)
+    }
+  }
 }
