@@ -6,6 +6,8 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.commons.io.FileUtils
+
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Streaming-throughput benchmark main — the published number behind the
@@ -104,8 +106,6 @@ object BenchStream {
       flush()
       (written, corrupt)
     }
-    val spool = Files.createTempDirectory("stream-bench-spool")
-    val (written, corrupt) = writeSpool(spool, nStations, nDays, filesN)
 
     def pct(sorted: IndexedSeq[Long], p: Double): Long =
       if (sorted.isEmpty) 0L
@@ -137,7 +137,7 @@ object BenchStream {
     // --- the full §3.1 fan-out over a spool, several micro-batches ------
     def runOnce(src: java.nio.file.Path, expLines: Long,
         expCorrupt: Long, expStations: Int): RunStats = {
-      val out = Files.createTempDirectory("stream-bench-out").toString
+      val out = Files.createTempDirectory("stream-bench-out")
       val listener = new FanOutLog
       spark.streams.addListener(listener)
       try {
@@ -170,18 +170,29 @@ object BenchStream {
           s"year counter rows=$yearRows != $expStations")
         RunStats(wall, expLines / wall, durs.size,
           pct(durs, 0.5), pct(durs, 0.95), rawRows, qRows, dailyRows, yearRows)
-      } finally spark.streams.removeListener(listener)
+      } finally {
+        spark.streams.removeListener(listener)
+        FileUtils.deleteDirectory(out.toFile)
+      }
     }
 
     // Unmeasured WARMUP fan-out over a mini spool: the first streaming run
     // of a fresh JVM pays JIT + codegen init that no published number
     // should carry (it halved the first leg's rate when measured cold).
+    // Each spool is deleted once its runs end, however they end.
     val mini = Files.createTempDirectory("stream-bench-warmup")
-    val (wLines, wCorrupt) = writeSpool(mini, 20, 2, 4)
-    runOnce(mini, wLines, wCorrupt, 20)
-    val head = (1 to streamReps)
-      .map(_ => runOnce(spool, written, corrupt, nStations))
-      .maxBy(_.rps)
+    try {
+      val (wLines, wCorrupt) = writeSpool(mini, 20, 2, 4)
+      runOnce(mini, wLines, wCorrupt, 20)
+    } finally FileUtils.deleteDirectory(mini.toFile)
+    val spool = Files.createTempDirectory("stream-bench-spool")
+    val (written, head) =
+      try {
+        val (written, corrupt) = writeSpool(spool, nStations, nDays, filesN)
+        (written, (1 to streamReps)
+          .map(_ => runOnce(spool, written, corrupt, nStations))
+          .maxBy(_.rps))
+      } finally FileUtils.deleteDirectory(spool.toFile)
     System.err.println(f"[bench-stream] best-of-$streamReps ${head.rps}%8.1f rows/s over ${head.batches} micro-batches, p50=${head.p50Ms} ms p95=${head.p95Ms} ms")
 
     def r1(v: Double): String = "%.1f".formatLocal(java.util.Locale.ROOT, v)

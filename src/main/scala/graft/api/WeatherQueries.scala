@@ -45,7 +45,8 @@ import graft.functions.GraftFunctions.{centi, fround}
   * `spark.sql.shuffle.partitions` that a few hundred rows do not need. On a
   * table of more splits the mark is the identity and the distributed plan
   * runs; the scale note is on `narrow`. `currentReading` already runs as
-  * one stage, and `station` keeps its broadcast joins.
+  * one stage, and `station` as one scan of `customer`, enriched from
+  * `nation` and `region` collected once per instance.
   */
 object WeatherQueries {
   final case class Reading(stationId: Long, eventId: Long, kind: String, value: Double)
@@ -183,18 +184,31 @@ final class WeatherQueries(spark: SparkSession, dir: String) {
   def topKDays(k: Int): Seq[StationDay] =
     bind[StationDay](Limit(Literal(k), topKOrdered)).collect().toSeq
 
+  /** nation ⋈ region, collected once: a nation key's (nation, region).
+    * Both are static dimensions of a few dozen rows. */
+  private lazy val stationDims: Map[Int, (String, String)] =
+    Tables.nation(spark, dir)
+      .join(Tables.region(spark, dir), col("n_regionkey") === col("r_regionkey"))
+      .select(col("n_nationkey"), col("n_name"), col("r_name"))
+      .as[(Int, String, String)].collect()
+      .map { case (k, nation, region) => k -> ((nation, region)) }.toMap
+
   private lazy val stationPlan =
     Tables.customer(spark, dir).filter(col("c_custkey") === key(StationKey))
-      .join(broadcast(Tables.nation(spark, dir)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(spark, dir)), col("n_regionkey") === col("r_regionkey"))
-      .select(col("c_custkey").as("id"), col("c_name").as("name"),
-        col("n_name").as("nation"), col("r_name").as("region"))
+      .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
       .queryExecution.analyzed
 
   /** GetWeatherStation (WeatherStationActor.scala:55-58): dimension lookup
-    * enriched through broadcast joins. */
+    * in one scan job; the customer row is enriched on the driver from the
+    * collected nation and region. As in an inner join, a customer whose
+    * nation or region is missing has no answer. */
   def station(id: Long): Option[Station] =
-    bind[Station](stationPlan, StationKey -> id).collect().headOption
+    bind[(Long, String, Option[Int])](stationPlan, StationKey -> id).collect().iterator
+      .flatMap { case (custkey, name, nationKey) =>
+        nationKey.flatMap(stationDims.get).map { case (nation, region) =>
+          Station(custkey, name, nation, region)
+        }
+      }.nextOption()
 
   /** The write-back cascade (TemperatureActor.scala:76-77 + 65-69): persist
     * the daily rollup, serve monthly queries from it. */

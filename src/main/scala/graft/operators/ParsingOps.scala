@@ -389,9 +389,10 @@ object ParsingOps {
     * (version rows emitted per dimension row via a single explode — no
     * shuffle until the presentation sort). A real change batch is
     * increment-sized and joins in first — broadcast while it fits, never
-    * hard-hinted at dimension scale. At 100 TB the dimension rewrite goes
-    * through the same keyed-bucket publish as KeyedParquetSink (only
-    * touched buckets rewritten). */
+    * hard-hinted at dimension scale. At 100 TB the dimension rewrite
+    * would go through a table merged on read, as the streaming
+    * `KeyedTable` does: each change batch published as one delta, the
+    * rewrite paid only at a fold. */
   private val scd2Merge = GraftQuery(
     "mv_scd2_merge",
     "SCD type-2 merge: close changed versions, open new current rows",

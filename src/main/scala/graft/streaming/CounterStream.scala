@@ -12,24 +12,24 @@ import org.apache.spark.sql.types._
   *  - S7: raw append sink (`kafkaStream.saveToCassandra(raw)`)
   *  - S8/A5: per-(station, day) running sum delegated to a Cassandra
   *    `counter` column (create-timeseries.cql:76-83). Here: update-mode
-  *    streaming aggregation + an idempotent overwrite-by-key upsert sink.
+  *    streaming aggregation into a [[KeyedTable]] whose `Latest` rule keeps
+  *    each key's row from the newest batch.
   *  - fan-out: one source feeding two sinks (KafkaStreamingActor.scala:45,62)
   *
   * Improvement over the reference (SURVEY §2.9): Cassandra counters
   * double-count on replay (at-least-once, non-idempotent increments).
   * Update-mode aggregation emits the FULL recomputed aggregate per key per
-  * batch, so overwriting by key is naturally idempotent — replaying a batch
-  * converges to the same state.
+  * batch, so the newest batch's row per key is the whole answer, and the
+  * table skips a replayed batch id.
   *
   * Scale notes: the aggregation state is keyed by (user_id, day) and lives in
   * the state store (RocksDB/HDFS-backed on a cluster). Key cardinality grows
   * with time — [[dailyCounter]]'s `stateTtl` turns on watermark-based
   * eviction so state for closed days is dropped (StreamingSpec pins both
-  * the eviction and the late-row boundary); the sink is a durable
-  * executor-side keyed MERGE
-  * ([[KeyedParquetSink]] — the bare-parquet shape of a Cassandra/Delta
-  * MERGE), so the counter table survives a driver restart and converges
-  * under batch replay.
+  * the eviction and the late-row boundary); the sink is a durable keyed
+  * table that publishes each batch by one directory rename and merges on
+  * read ([[KeyedTable]]), so the counter table survives a driver restart
+  * and converges under batch replay.
   */
 object CounterStream {
 
@@ -43,9 +43,9 @@ object CounterStream {
     StructField("props", StringType)))
 
   /** S8/A5 counter pipeline: streaming groupBy(user, day).sum in update
-    * mode, foreachBatch MERGE-upserting the full updated aggregates by key
-    * into a durable parquet counter table (executor-side — no driver
-    * collect; restartable — the table outlives the query and the JVM).
+    * mode, foreachBatch adding the full updated aggregates under the batch
+    * id to a durable `Latest` table (executor-side — no driver collect;
+    * restartable — the table outlives the query and the JVM).
     *
     * `stateTtl` is the 100 TB honesty knob (SURVEY §7.3): the (user, day)
     * key space grows without bound over time, and with `stateTtl = None`
@@ -59,7 +59,7 @@ object CounterStream {
     * DROPPED before aggregation — the durable table's closed day keeps
     * its finalized value rather than being overwritten by a
     * fresh-state partial recount (which is exactly why eviction without
-    * the late-row drop would corrupt an overwrite-by-key sink). The
+    * the late-row drop would corrupt a newest-row-wins table). The
     * trade — bounded state for a declared late-arrival tolerance — is
     * the same one the reference implicitly makes by keying Cassandra
     * counters on ingest-time calendar fields.
@@ -77,8 +77,8 @@ object CounterStream {
     * library pins the contract instead of silently diverging. */
   def dailyCounter(events: DataFrame, tableDir: String,
       checkpoint: String, stateTtl: Option[String] = None)
-      : (StreamingQuery, KeyedParquetSink) = {
-    val sink = new KeyedParquetSink(tableDir, Seq("user_id", "dy"))
+      : (StreamingQuery, KeyedTable) = {
+    val sink = new KeyedTable(tableDir, Seq("user_id", "dy"), KeyedTable.Latest)
     val agg = stateTtl match {
       case Some(ttl) =>
         // day buckets via window() so the watermark can evict closed
@@ -104,8 +104,8 @@ object CounterStream {
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       // update mode emits only keys changed in this batch, each carrying
-      // the full recomputed aggregate -> merge-by-key is idempotent.
-      .foreachBatch { (batch: DataFrame, _: Long) => sink.upsert(batch) }
+      // the full recomputed aggregate -> the newest row per key wins
+      .foreachBatch { (batch: DataFrame, id: Long) => sink.add(batch, id) }
       .trigger(Trigger.AvailableNow())
       .start()
     (q, sink)
@@ -113,12 +113,12 @@ object CounterStream {
 
   /** A6 year-cumulative counter (the reference's `year_cumulative_precip`
     * table, create-timeseries.cql:86-91 — present in its schema though its
-    * app never writes it): the same update-mode + durable-MERGE machinery
+    * app never writes it): the same update-mode + `Latest` table machinery
     * as [[dailyCounter]] at year grain, over the same rows the batch
     * `w_annual_precip` query aggregates (purchase events). */
   def yearCounter(events: DataFrame, tableDir: String,
-      checkpoint: String): (StreamingQuery, KeyedParquetSink) = {
-    val sink = new KeyedParquetSink(tableDir, Seq("user_id", "yr"))
+      checkpoint: String): (StreamingQuery, KeyedTable) = {
+    val sink = new KeyedTable(tableDir, Seq("user_id", "yr"), KeyedTable.Latest)
     val q = events
       .filter(col("event_type") === "purchase")
       .groupBy(col("user_id"), year(col("ts")).as("yr"))
@@ -126,7 +126,7 @@ object CounterStream {
       .writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) => sink.upsert(batch) }
+      .foreachBatch { (batch: DataFrame, id: Long) => sink.add(batch, id) }
       .trigger(Trigger.AvailableNow())
       .start()
     (q, sink)

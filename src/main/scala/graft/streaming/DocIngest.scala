@@ -8,30 +8,33 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * `dedup_incremental` verdict (DedupOps) as a continuous pipeline: every
   * micro-batch of arriving documents is deduplicated in-batch AND against
   * the durable corpus registry, and only first-seen fingerprints are
-  * admitted. The registry is a [[KeyedParquetSink]] keyed by content
+  * admitted. The registry is a `Latest` [[KeyedTable]] keyed by content
   * fingerprint, so admission is FIRST-WRITER-WINS and convergent:
   *
   *  - in-batch: keep min doc_id per fingerprint (one keyed shuffle,
   *    batch-sized);
   *  - cross-batch: LEFT ANTI join against the registry — arriving keys are
-  *    therefore DISJOINT from stored keys, and the MERGE degenerates to a
-  *    pure insert of new fingerprints (no stored row is ever replaced, so a
-  *    re-delivered batch cannot steal a fingerprint from its first writer);
-  *  - replay (the at-least-once foreachBatch failure mode): a replayed
-  *    batch anti-joins to empty against the registry its first delivery
-  *    already populated — a no-op, which is the idempotence the reference's
-  *    Cassandra counters lack (SURVEY §2.9).
+  *    therefore DISJOINT from stored keys, and each batch only inserts new
+  *    fingerprints (no stored row is ever replaced, so a re-delivered batch
+  *    cannot steal a fingerprint from its first writer);
+  *  - replay (the at-least-once foreachBatch failure mode): the table skips
+  *    a batch id it already holds, and a batch delivered again anti-joins to
+  *    empty against the registry its first delivery populated — a no-op,
+  *    which is the idempotence the reference's Cassandra counters lack
+  *    (SURVEY §2.9).
   *
-  * Scale shape: the registry probe is fingerprint-keyed and
-  * partition-pruned by the sink's key buckets; nothing corpus-sized
-  * shuffles per batch — the anti join touches only the buckets the batch's
-  * fingerprints hash into. Reference analog: the ingest fan-out
-  * (KafkaStreamingActor.scala:55-64) with the dedup admission the reference
-  * never had.
+  * Scale shape: the registry probe reads the whole registry (its base and
+  * live deltas) and anti-joins the batch against it; the batch side is
+  * batch-sized. Hash-bucketing the registry would not narrow that: a
+  * batch's fingerprints hash into nearly every bucket once it carries more
+  * keys than there are buckets. At corpus scale the probe wants the
+  * registry sorted or indexed by fingerprint. Reference analog: the ingest
+  * fan-out (KafkaStreamingActor.scala:55-64) with the dedup admission the
+  * reference never had.
   */
 object DocIngest {
 
-  final case class Running(query: StreamingQuery, registry: KeyedParquetSink) {
+  final case class Running(query: StreamingQuery, registry: KeyedTable) {
     def awaitAll(): Unit = query.awaitTermination()
   }
 
@@ -47,14 +50,14 @@ object DocIngest {
     * The registry table holds one row per distinct fingerprint:
     * `(fp, doc_id, n_chars)` with `doc_id` = the first-admitted document. */
   def start(docs: DataFrame, tableDir: String, checkpoint: String): Running = {
-    val registry = new KeyedParquetSink(tableDir, Seq("fp"))
+    val registry = new KeyedTable(tableDir, Seq("fp"), KeyedTable.Latest)
     val q = docs
       .select(md5(lower(col("text"))).as("fp"), col("doc_id"),
         length(col("text")).as("n_chars"))
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) => admit(registry, batch) }
+      .foreachBatch { (batch: DataFrame, id: Long) => admit(registry, batch, id) }
       .trigger(Trigger.AvailableNow())
       .start()
     Running(q, registry)
@@ -68,8 +71,8 @@ object DocIngest {
   // (doc_id, band, bh) LSH band rows — and admits a document iff no
   // already-indexed candidate (sharing a band bucket) has
   // signature-estimated Jaccard >= the threshold. Nothing corpus-sized is
-  // stored or shuffled per batch: the index carries 12 longs per doc, the
-  // batch's band rows probe only their own buckets, and the estimate
+  // stored per batch: the index carries 12 longs per doc, the batch's band
+  // rows join the stored band rows on their buckets, and the estimate
   // needs no shingle storage at all — the property that lets the index
   // ride along at 100 TB where the raw shingle table cannot.
   //
@@ -79,10 +82,16 @@ object DocIngest {
   //    estimated Jaccard over the candidate pair's two signatures;
   //  - replay: an anti join on doc_id makes a re-delivered batch a no-op
   //    (its docs are already indexed — verdicts cannot flip), the same
-  //    idempotence contract as the exact leg.
+  //    idempotence contract as the exact leg;
+  //  - a crash between the two index writes: the band rows are written
+  //    first, so a replay finds its own docs in the band index only. The
+  //    probe drops those self-pairs, and no other pair of the batch's
+  //    admitted docs is a near-dup (the in-batch pass dropped the larger
+  //    id), so the verdicts repeat; the band write is skipped by its batch
+  //    id and the signatures are written.
 
   final case class RunningMinhash(query: StreamingQuery,
-      sigIndex: KeyedParquetSink, bandIndex: KeyedParquetSink) {
+      sigIndex: KeyedTable, bandIndex: KeyedTable) {
     def awaitAll(): Unit = query.awaitTermination()
   }
 
@@ -98,14 +107,14 @@ object DocIngest {
     * appended to the durable index. */
   def startMinhash(docs: DataFrame, sigDir: String, bandDir: String,
       checkpoint: String): RunningMinhash = {
-    val sigIndex = new KeyedParquetSink(sigDir, Seq("doc_id"))
-    val bandIndex = new KeyedParquetSink(bandDir, Seq("doc_id", "band"))
+    val sigIndex = new KeyedTable(sigDir, Seq("doc_id"), KeyedTable.Latest)
+    val bandIndex = new KeyedTable(bandDir, Seq("doc_id", "band"), KeyedTable.Latest)
     val q = docs
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        admitMinhash(sigIndex, bandIndex, batch) }
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        admitMinhash(sigIndex, bandIndex, batch, id) }
       .trigger(Trigger.AvailableNow())
       .start()
     RunningMinhash(q, sigIndex, bandIndex)
@@ -113,14 +122,17 @@ object DocIngest {
 
   /** One micro-batch of MinHash-LSH index maintenance. Exposed for direct
     * replay testing (DocIngestSpec). */
-  private[graft] def admitMinhash(sigIndex: KeyedParquetSink,
-      bandIndex: KeyedParquetSink, batch: DataFrame): Unit = {
+  private[graft] def admitMinhash(sigIndex: KeyedTable,
+      bandIndex: KeyedTable, batch: DataFrame, batchId: Long): Unit = {
     import graft.operators.DedupOps
     val spark = batch.sparkSession
     val sig0 = DedupOps.minhashSigOf(batch)
+    // the signature index is written last: where it exists, so do the
+    // band rows of every doc it holds
+    val indexed = sigIndex.exists(spark)
     // replay idempotence: already-indexed doc_ids are out in one anti join
     val sig =
-      (if (sigIndex.exists(spark))
+      (if (indexed)
         sig0.join(sigIndex.read(spark).select("doc_id"), Seq("doc_id"), "left_anti")
       else sig0).persist()
     try {
@@ -138,37 +150,34 @@ object DocIngest {
         .join(prefixed(sig), Seq("idx_doc_id"))
         .filter(DedupOps.sigEstJaccard("idx_") >= MinhashAdmitThreshold)
         .select("doc_id").distinct()
-      // cross-index: batch band rows probe ONLY their own buckets of the
-      // stored band table; the estimate joins the two signature rows
+      // cross-index: batch band rows join the stored band rows on their
+      // buckets; a doc's own rows (left by a crash before its signature
+      // write) are no candidate; the estimate joins the two signature rows
       val crossDrop =
-        if (!bandIndex.exists(spark)) inBatchDrop.limit(0)
+        if (!indexed) inBatchDrop.limit(0)
         else bands
           .join(bandIndex.read(spark)
             .select(col("doc_id").as("idx_doc_id"), col("band"), col("bh")),
             Seq("band", "bh"))
+          .filter(col("idx_doc_id") =!= col("doc_id"))
           .select("doc_id", "idx_doc_id").distinct()
           .join(sig, Seq("doc_id"))
           .join(prefixed(sigIndex.read(spark)), Seq("idx_doc_id"))
           .filter(DedupOps.sigEstJaccard("idx_") >= MinhashAdmitThreshold)
           .select("doc_id").distinct()
-      // PIN the admission verdict to one evaluation: the sig-table
-      // overwrite inside sigIndex.upsert re-caches every plan scanning it
-      // (CacheManager.recacheByPath), so a lazily re-evaluated `admitted`
-      // would see the index it just updated when the band upsert runs —
-      // flipping verdicts between the two writes and diverging the band
-      // index from the sig index (observed: a doc admitted to one index
-      // only). localCheckpoint materializes once, lineage-free.
+      // both writes read one evaluation of the verdict: localCheckpoint
+      // materializes it once, lineage-free
       val admitted = sig
         .join(inBatchDrop.union(crossDrop).distinct(), Seq("doc_id"), "left_anti")
         .localCheckpoint(true)
-      sigIndex.upsert(admitted)
-      bandIndex.upsert(DedupOps.bandsOf(admitted))
+      bandIndex.add(DedupOps.bandsOf(admitted), batchId)
+      sigIndex.add(admitted, batchId)
     } finally sig.unpersist()
   }
 
   /** One micro-batch admission: in-batch first-wins, then insert-if-absent
     * against the registry. Exposed for direct replay testing. */
-  private[graft] def admit(registry: KeyedParquetSink, batch: DataFrame): Unit = {
+  private[graft] def admit(registry: KeyedTable, batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val perFp = batch.groupBy("fp")
       .agg(min(struct(col("doc_id"), col("n_chars"))).as("first"))
@@ -178,6 +187,6 @@ object DocIngest {
       if (registry.exists(spark))
         perFp.join(registry.read(spark).select("fp"), Seq("fp"), "left_anti")
       else perFp
-    registry.upsert(fresh)
+    registry.add(fresh, batchId)
   }
 }

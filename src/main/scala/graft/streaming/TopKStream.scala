@@ -15,11 +15,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   *
   * Emission is UPDATE-mode: a key emits its refreshed 1..k leaderboard
   * rows only when the batch actually changed it. Downstream the rows
-  * feed the durable overwrite-by-key MERGE sink keyed on (user_id, rk)
-  * — a rank row's content changes over time but ranks only ever fill in
-  * up to k, so upsert-by-(key, rank) converges to the batch answer and
-  * is idempotent under micro-batch replay (the entry set is deduped, so
-  * re-folding a replayed batch is a no-op).
+  * feed a durable `Latest` [[KeyedTable]] keyed on (user_id, rk) — a rank
+  * row's content changes over time but ranks only ever fill in up to k,
+  * so the newest row per (key, rank) converges to the batch answer. A
+  * replayed batch id is skipped by the table, and the entry set is
+  * deduped, so re-folding a replayed batch into state is a no-op.
   */
 object TopKStream {
   final case class Ev(user_id: Long, event_id: Long, value: Double)
@@ -50,15 +50,15 @@ object TopKStream {
   }
 
   /** Drain available input into a durable leaderboard table at
-    * `tableDir`, MERGE-upserted by (user_id, rk) — the counter-table
-    * pattern applied to rankings. Restartable from `checkpoint`. */
+    * `tableDir`, newest row per (user_id, rk) — the counter-table pattern
+    * applied to rankings. Restartable from `checkpoint`. */
   def run(events: Dataset[Ev], k: Int, tableDir: String,
-      checkpoint: String): (StreamingQuery, KeyedParquetSink) = {
-    val sink = new KeyedParquetSink(tableDir, Seq("user_id", "rk"))
+      checkpoint: String): (StreamingQuery, KeyedTable) = {
+    val sink = new KeyedTable(tableDir, Seq("user_id", "rk"), KeyedTable.Latest)
     val q = topkUpdates(events, k).toDF().writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch((batch: DataFrame, _: Long) => sink.upsert(batch))
+      .foreachBatch((batch: DataFrame, id: Long) => sink.add(batch, id))
       .trigger(Trigger.AvailableNow())
       .start()
     (q, sink)

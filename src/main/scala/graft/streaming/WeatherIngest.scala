@@ -39,7 +39,7 @@ import graft.sources.WeatherCsv
   * replayable source plus sinks keyed by batch id (Structured Streaming,
   * SIGMOD 2018): raw and quarantine are Spark's own `FileStreamSink`, whose
   * `_spark_metadata` log skips a batch id it already holds, and the counter
-  * tables are [[CounterTable]]s, which publish each batch's increments by
+  * tables are `Sum` [[KeyedTable]]s, which publish each batch's increments by
   * one directory rename under its batch id and skip a replayed id. The
   * stream holds no state: the counter tables are the only copy of the
   * running sums, where the reference keeps them in Cassandra counters,
@@ -49,7 +49,7 @@ import graft.sources.WeatherCsv
   * deltas shuffle, and a batch's delta is bounded by the station-days it
   * touches. A trigger appends its deltas and rewrites no table; every few
   * triggers one of them also folds the deltas into a new base (see
-  * [[CounterTable]]).
+  * [[KeyedTable]]).
   */
 object WeatherIngest {
 
@@ -95,7 +95,7 @@ object WeatherIngest {
     * and the two counter tables. */
   final case class Running(raw: StreamingQuery, quarantine: StreamingQuery,
       counter: StreamingQuery, yearCounter: StreamingQuery,
-      dailySink: CounterTable, yearSink: CounterTable) {
+      dailySink: KeyedTable, yearSink: KeyedTable) {
     def awaitAll(): Unit = raw.awaitTermination()
   }
 
@@ -144,9 +144,9 @@ object WeatherIngest {
     }
     val rawSink = fileSink(rawOut)
     val quarantineSink = fileSink(quarantineOut)
-    val dailySink = new CounterTable(s"$tableRoot/daily_precip",
-      Seq("wsid", "year", "month", "day"))
-    val yearSink = new CounterTable(s"$tableRoot/year_precip", Seq("wsid", "year"))
+    val dailySink = new KeyedTable(s"$tableRoot/daily_precip",
+      Seq("wsid", "year", "month", "day"), KeyedTable.Sum)
+    val yearSink = new KeyedTable(s"$tableRoot/year_precip", Seq("wsid", "year"), KeyedTable.Sum)
     // one thread per sink; idle threads exit, so a stopped query leaves none
     val pool = new ThreadPoolExecutor(4, 4, 30L, TimeUnit.SECONDS,
       new LinkedBlockingQueue[Runnable](), (r: Runnable) => {

@@ -1,10 +1,12 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.DocIngest
+import graft.streaming.{DocIngest, KeyedTable}
 
 /** Streaming incremental dedup: first-writer-wins admission, cross-batch
   * and cross-RESTART dedup from the durable registry, and no-op batch
@@ -15,7 +17,7 @@ class DocIngestSpec extends AnyFunSuite {
   private def lines(docs: (Long, String)*): String =
     docs.map { case (id, t) => s"$id,$t" }.mkString("\n")
 
-  private def registrySnapshot(r: graft.streaming.KeyedParquetSink) =
+  private def registrySnapshot(r: KeyedTable) =
     r.read(spark).collect()
       .map(row => row.getAs[String]("fp") -> row.getAs[Long]("doc_id")).toMap
 
@@ -48,15 +50,18 @@ class DocIngestSpec extends AnyFunSuite {
     assert(s2.values.toSet == Set(3L, 1L, 7L),
       s"doc 9 must lose to doc 3's earlier admission: $s2")
 
-    // forced replay of batch 1 (at-least-once redelivery): registry unchanged
+    // forced replay of batch 1 (batch id 0), then the same docs delivered
+    // again in a later batch (at-least-once redelivery): registry unchanged
     import org.apache.spark.sql.functions._
     val replay = spark.createDataFrame(Seq(
         (3L, "the quick fox"), (5L, "THE QUICK FOX"), (1L, "other text")))
       .toDF("doc_id", "text")
       .select(md5(lower(col("text"))).as("fp"), col("doc_id"),
         length(col("text")).as("n_chars"))
-    DocIngest.admit(r2.registry, replay)
+    DocIngest.admit(r2.registry, replay, 0)
     assert(registrySnapshot(r2.registry) == s2, "replayed batch must be a no-op")
+    DocIngest.admit(r2.registry, replay, 2)
+    assert(registrySnapshot(r2.registry) == s2, "redelivered docs must be a no-op")
 
     // equivalence with the batch dedup_exact semantics over ALL delivered docs
     val allDocs = Seq(3L -> "the quick fox", 5L -> "THE QUICK FOX",
@@ -120,10 +125,11 @@ class DocIngestSpec extends AnyFunSuite {
       s"30 is a near-dup of indexed 10; 41 loses in-batch to 40: got ${sigIds(r2)}")
     assert(r2.bandIndex.read(spark).count() == 18L)
 
-    // forced replay of batch 2 (at-least-once redelivery): indexes unchanged
+    // the same docs delivered again in a later batch (at-least-once
+    // redelivery): indexes unchanged
     val replay = spark.createDataFrame(Seq(
         (30L, textA), (41L, textC), (40L, textC))).toDF("doc_id", "text")
-    DocIngest.admitMinhash(r2.sigIndex, r2.bandIndex, replay)
+    DocIngest.admitMinhash(r2.sigIndex, r2.bandIndex, replay, 2)
     assert(sigIds(r2) == Set(10L, 20L, 40L), "replayed batch must be a no-op")
     assert(r2.bandIndex.read(spark).count() == 18L)
 
@@ -135,5 +141,55 @@ class DocIngestSpec extends AnyFunSuite {
     val stored = r2.sigIndex.read(spark)
     assert(batchSig.exceptAll(stored).isEmpty && stored.exceptAll(batchSig).isEmpty,
       "stored index rows == batch minhashSigOf rows")
+  }
+
+  test("minhash admission converges after a crash between its two index writes") {
+    val base = Files.createTempDirectory("mh-crash")
+    val textA = "the curious fox crossed the quiet river before dawn and rested near the old mill"
+    val textB = "market prices rallied sharply after the committee announced unexpected policy changes yesterday evening"
+    val textC = "children gathered around the ancient oak tree listening to stories about distant mountains"
+    val textD = "a late train carried tired workers home through the rain across the wide flat valley"
+    def docs(ds: (Long, String)*) = spark.createDataFrame(ds).toDF("doc_id", "text")
+    def tables(root: Path) = {
+      val sig = root.resolve("sig")
+      val band = root.resolve("band")
+      (sig, band, new KeyedTable(sig.toString, Seq("doc_id"), KeyedTable.Latest),
+        new KeyedTable(band.toString, Seq("doc_id", "band"), KeyedTable.Latest))
+    }
+    def copyTree(from: Path, to: Path): Unit =
+      Files.walk(from).iterator().asScala.toSeq.foreach { p =>
+        val q = to.resolve(from.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
+      }
+    def deleteTree(dir: Path): Unit =
+      Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    def state(sig: KeyedTable, band: KeyedTable): (Set[Long], Map[Long, Long]) = (
+      sig.read(spark).select("doc_id").collect().map(_.getLong(0)).toSet,
+      band.read(spark).groupBy("doc_id").count().collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+
+    val (sigDir, bandDir, sig, band) = tables(base.resolve("live"))
+    DocIngest.admitMinhash(sig, band, docs(10L -> textA, 20L -> textB), 0)
+    val pre = base.resolve("pre")
+    copyTree(base.resolve("live"), pre)
+    // batch 1: 30 is a near-dup of indexed 10, 41 of its sibling 40
+    val batch1 = docs(30L -> textA, 40L -> textC, 41L -> textC, 50L -> textD)
+    DocIngest.admitMinhash(sig, band, batch1, 1)
+    val clean = state(sig, band)
+    assert(clean == ((Set(10L, 20L, 40L, 50L), Map(10L -> 6L, 20L -> 6L, 40L -> 6L, 50L -> 6L))))
+
+    // the crash: batch 1's first index write is published, its second is
+    // not. The one written last has the later files; put it back as it was
+    // before the batch, and replay the batch
+    def written(dir: Path) =
+      Files.getLastModifiedTime(dir.resolve("deltas/batch=1/_SUCCESS")).toMillis
+    val (last, name) = if (written(sigDir) > written(bandDir)) (sigDir, "sig") else (bandDir, "band")
+    deleteTree(last)
+    copyTree(pre.resolve(name), last)
+    DocIngest.admitMinhash(sig, band, batch1, 1)
+    val (sigIds, bandRows) = state(sig, band)
+    assert(bandRows.keySet == sigIds, "both indexes hold the same docs")
+    assert(bandRows.values.forall(_ == 6L), s"6 band rows per doc: $bandRows")
+    assert((sigIds, bandRows) == clean, "the replay's verdicts equal the clean run's")
   }
 }

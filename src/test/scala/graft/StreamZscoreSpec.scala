@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.KeyedParquetSink
+import graft.streaming.KeyedTable
 
 /** The kappa-architecture monitoring pipeline: STREAM the raw events into a
-  * durable daily-count rollup (update-mode agg → idempotent keyed MERGE),
+  * durable daily-count rollup (update-mode agg → `Latest` keyed table),
   * then run the SAME batch z-score analytics over the sinked table — and
   * get row-identical output to running evt_zscore_anomaly over the raw
   * batch. One continuous rollup feeds the whole analytics surface; no
@@ -27,14 +27,14 @@ class StreamZscoreSpec extends AnyFunSuite {
     // the one shared events stream recipe (schema + nanos handling)
     val raw = graft.streaming.EventStreamSource.staged(spark, sf)
 
-    val sink = new KeyedParquetSink(table, Seq("event_type", "day"))
+    val sink = new KeyedTable(table, Seq("event_type", "day"), KeyedTable.Latest)
     val q = raw
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
       .writeStream
       .outputMode("update")
       .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) => sink.upsert(b) }
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) => sink.add(b, id) }
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()

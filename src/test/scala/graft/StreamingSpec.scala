@@ -5,11 +5,11 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{CounterStream, CounterTable, KeyedParquetSink}
+import graft.streaming.{CounterStream, KeyedTable}
 
 /** Streaming parity: the counter pipeline must equal the batch groupBy on
   * the same data (the property the reference delegates to Cassandra counter
-  * columns — KafkaStreamingActor.scala:55-64), the durable MERGE sink must
+  * columns — KafkaStreamingActor.scala:55-64), the durable keyed table must
   * be idempotent under replay AND survive a crash-restart from the
   * checkpoint (the reference's lifecycle, NodeGuardian.scala:61-67), and
   * fan-out (one source, two sinks) must work.
@@ -40,7 +40,7 @@ class StreamingSpec extends AnyFunSuite {
     .map(r => (r.getLong(0), r.getDate(1)) -> (r.getDouble(2), r.getLong(3)))
     .toMap
 
-  private def sinkSnapshot(sink: KeyedParquetSink) =
+  private def sinkSnapshot(sink: KeyedTable) =
     sink.read(spark).collect()
       .map(r => (r.getAs[Long]("user_id"), r.getAs[java.sql.Date]("dy")) ->
         (r.getAs[Double]("total"), r.getAs[Long]("cnt")))
@@ -61,64 +61,23 @@ class StreamingSpec extends AnyFunSuite {
 
   test("durable MERGE upsert is idempotent under batch replay and merges new keys") {
     import spark.implicits._
-    val sink = new KeyedParquetSink(tmp("upsert-tbl") + "/t", Seq("k"), numBuckets = 4)
-    val b1 = Seq(("a", 10.5, 3L), ("b", 4.0, 1L)).toDF("k", "total", "cnt")
-    sink.upsert(b1)
-    sink.upsert(b1) // replayed batch (same recomputed aggregates)
-    val once = sink.read(spark).collect().map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2))).toMap
-    assert(once == Map("a" -> ((10.5, 3L)), "b" -> ((4.0, 1L))))
-    // next batch updates one key, adds one; untouched key must survive
-    val b2 = Seq(("b", 9.0, 2L), ("c", 1.0, 1L)).toDF("k", "total", "cnt")
-    sink.upsert(b2)
-    val after = sink.read(spark).collect().map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2))).toMap
-    assert(after == Map("a" -> ((10.5, 3L)), "b" -> ((9.0, 2L)), "c" -> ((1.0, 1L))))
-  }
-
-  test("upsert rewrites touched buckets in place: one file per bucket, others untouched") {
-    import spark.implicits._
-    val dir = tmp("layout-tbl") + "/t"
-    val sink = new KeyedParquetSink(dir, Seq("k"), numBuckets = 4)
+    val sink = new KeyedTable(tmp("upsert-tbl") + "/t", Seq("k"), KeyedTable.Latest)
     // the key is not the first column: read must keep the batch's order
-    def batch(rows: Seq[(Double, String, Long)]) = rows.toDF("total", "k", "cnt")
     def snapshot() = sink.read(spark).collect()
       .map(r => r.getAs[String]("k") -> (r.getAs[Double]("total"), r.getAs[Long]("cnt"))).toMap
-    /** bucket dir -> its parquet files as (name, length) */
-    def layout(): Map[String, Seq[(String, Long)]] = {
-      import scala.jdk.CollectionConverters._
-      Files.list(Paths.get(dir)).iterator().asScala.filter(Files.isDirectory(_))
-        .map(d => d.getFileName.toString -> Files.list(d).iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .map(f => f.getFileName.toString -> Files.size(f)).toSeq.sorted)
-        .toMap
-    }
-    sink.upsert(batch((1 to 40).map(i => (i.toDouble, s"k$i", 1L))))
-    sink.upsert(batch((1 to 40 by 3).map(i => (i * 2.0, s"k$i", 2L))))
-    sink.upsert(batch(Seq((0.5, "k41", 1L))))
-    val before = layout()
-    assert(before.keySet == (0 until 4).map(b => s"kb=$b").toSet)
-    assert(before.values.forall(_.size == 1), s"one parquet file per bucket: $before")
+    val b1 = Seq((10.5, "a", 3L), (4.0, "b", 1L)).toDF("total", "k", "cnt")
+    sink.add(b1, 0)
+    sink.add(b1, 0) // replayed batch (same recomputed aggregates)
+    assert(snapshot() == Map("a" -> ((10.5, 3L)), "b" -> ((4.0, 1L))))
+    // next batch updates one key, adds one; untouched key must survive
+    sink.add(Seq((9.0, "b", 2L), (1.0, "c", 1L)).toDF("total", "k", "cnt"), 1)
+    assert(snapshot() == Map("a" -> ((10.5, 3L)), "b" -> ((9.0, 2L)), "c" -> ((1.0, 1L))))
     assert(sink.read(spark).columns.toSeq == Seq("total", "k", "cnt"))
-
-    val one = batch(Seq((99.0, "k1", 5L))) // touches exactly one bucket
-    sink.upsert(one)
-    val after = layout()
-    assert(after.values.forall(_.size == 1), s"one parquet file per bucket: $after")
-    assert(after.keySet == before.keySet && after.count { case (b, fs) => fs != before(b) } == 1,
-      s"only the touched bucket may be rewritten:\n$before\n$after")
-    assert(!Files.exists(Paths.get(dir + ".staging")))
-
-    val want = (1 to 40).map(i => s"k$i" ->
-      (if (i == 1) (99.0, 5L) else if (i % 3 == 1) (i * 2.0, 2L) else (i.toDouble, 1L))).toMap +
-      ("k41" -> ((0.5, 1L)))
-    assert(snapshot() == want)
-    sink.upsert(one) // replay
-    assert(snapshot() == want)
-    assert(layout().values.forall(_.size == 1))
   }
 
   test("additive merge: a replayed batch id counts its delta once") {
     import spark.implicits._
-    val sink = new CounterTable(tmp("add-tbl") + "/t", Seq("k"))
+    val sink = new KeyedTable(tmp("add-tbl") + "/t", Seq("k"), KeyedTable.Sum)
     def snapshot() = sink.read(spark).collect()
       .map(r => r.getAs[String]("k") -> (r.getAs[Double]("total"), r.getAs[Long]("cnt"))).toMap
     val d = Seq(("a", 1.5, 2L), ("b", 4.0, 1L)).toDF("k", "total", "cnt")
@@ -131,22 +90,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(snapshot() == Map("a" -> ((1.5, 2L)), "b" -> ((6.5, 4L)), "c" -> ((1.0, 1L))))
     sink.add(Seq(("c", 2.0, 1L)).toDF("k", "total", "cnt"), 9)
     assert(snapshot()("c") == ((3.0, 2L)))
-  }
-
-  test("upsert fails fast past maxBatchKeys (missing-watermark guard), table intact") {
-    import spark.implicits._
-    val sink = new KeyedParquetSink(tmp("cap-tbl") + "/t", Seq("k"),
-      numBuckets = 4, maxBatchKeys = 8)
-    val ok = (1 to 8).map(i => (s"k$i", 1.0, 1L)).toDF("k", "total", "cnt")
-    sink.upsert(ok)
-    assert(sink.read(spark).count() == 8)
-    // a synthetic wide-key batch — what an unwatermarked aggregation's
-    // ever-growing update-mode output looks like — must be rejected
-    // before any table rewrite, leaving the durable state untouched
-    val wide = (1 to 9).map(i => (s"w$i", 1.0, 1L)).toDF("k", "total", "cnt")
-    val e = intercept[IllegalStateException] { sink.upsert(wide) }
-    assert(e.getMessage.contains("watermark"))
-    assert(sink.read(spark).count() == 8)
   }
 
   test("crash recovery: restart from checkpoint replays the uncommitted batch, converges") {

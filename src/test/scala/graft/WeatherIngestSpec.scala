@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{CounterTable, WeatherIngest}
+import graft.streaming.{KeyedTable, WeatherIngest}
 
 /** End-to-end §3.1 ingest on the real wire format: line files → parse →
   * one query → four sinks. Mirrors the reference's KafkaStreamingActorSpec assertions
@@ -23,13 +23,13 @@ class WeatherIngestSpec extends AnyFunSuite {
     a ++ b :+ "garbage"
   }
 
-  private def dailySnapshot(sink: CounterTable) =
+  private def dailySnapshot(sink: KeyedTable) =
     sink.read(spark).collect()
       .map(r => (r.getAs[String]("wsid"), r.getAs[Int]("year"), r.getAs[Int]("month"),
         r.getAs[Int]("day")) -> (r.getAs[Double]("precipitation"), r.getAs[Long]("cnt")))
       .toMap
 
-  private def yearSnapshot(sink: CounterTable) =
+  private def yearSnapshot(sink: KeyedTable) =
     sink.read(spark).collect()
       .map(r => (r.getAs[String]("wsid"), r.getAs[Int]("year")) ->
         (r.getAs[Double]("precipitation"), r.getAs[Long]("cnt")))
