@@ -15,9 +15,9 @@ object Bench {
     // doesn't land on the first measured query.
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
-    val setupSec = setup(spark, sfDir)
-    // Dev-loop filter: SPARK_GRAFT_BENCH_ONLY=q1_pricing,txt_tfidf times
-    // just those queries (full precision, full map to BENCH_FULL.json).
+    // Dev-loop filter: SPARK_GRAFT_BENCH_ONLY=q1_pricing,txt_repetition times
+    // just those queries (full precision, full map to BENCH_PARTIAL.json)
+    // and builds only the stored artifacts they read.
     // Unknown names fail loudly — a silently-empty "targeted bench" would
     // read as a 0-second pass.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -30,6 +30,7 @@ object Bench {
         sys.exit(2)
       }
     }
+    val setupSec = setup(spark, sfDir, only)
     // Isolated-rerun protocol: each query runs SPARK_GRAFT_BENCH_REPS
     // times and the MIN is the primary recorded number; the first-shot
     // column is kept alongside (it carries the cold-plan cost a fresh
@@ -134,7 +135,7 @@ object Bench {
         s""","failed_pass_counts":$counts,"failed_all_passes":$dead"""
       }
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"single_shot":$firstQs,"single_shot_total":$totalFirst,"pass_totals":$passTotals,"reps":$reps,"setup_sec":$setupSec$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"single_shot":$firstQs,"single_shot_total":$totalFirst,"pass_totals":$passTotals,"reps":$reps,"setup_sec":$setupSec$failedJson,"sf":"$sfDir","master":"${spark.sparkContext.master}"}"""
     // a targeted re-check (SPARK_GRAFT_BENCH_ONLY) must not clobber the
     // committed full-registry artifact — the same guard ScaleStress grew
     // in round 12 (a 1-query BENCH_FULL.json overwrote 364 floors once)
@@ -193,72 +194,106 @@ object Bench {
       samples.count(_.isNaN))
   }
 
-  /** Build every stored per-corpus artifact (bucketed layouts, ANN
+  /** One stored per-corpus artifact: the registry rows whose plans read
+    * it, and how to build it for a corpus dir. */
+  private[graft] final case class Artifact(what: String, readers: Set[String],
+      build: (SparkSession, String) => Unit)
+
+  private def noop(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Every artifact [[setup]] builds, in build order. */
+  private[graft] val artifacts: Seq[Artifact] = Seq(
+    // bucketed orders/lineitem layout (co-located join queries)
+    Artifact("layout", Set("j_bucketed_colocated"),
+      (s, d) => graft.sources.Layouts.bucketedOrdersLineitem(s, d)),
+    // dy-partitioned daily rollup: both pruning queries (static + DPP)
+    // serve reads against it
+    Artifact("rollup layout", Set("j_dpp_prune", "w_partition_pruned"),
+      (s, d) => { graft.operators.ParsingOps.dailyRollupLayout(s, d); () }),
+    // IVF index (quantizer training + cid-partitioned index write), so
+    // sim_knn_ivf measures the probe, not index construction
+    Artifact("ivf", Set("sim_knn_ivf"), { (s, d) =>
+      import org.apache.spark.sql.functions.col
+      graft.functions.expressions.GraftExpressions.ensureRegistered(s)
+      graft.operators.IvfAnn.storedIndex(s, d,
+        graft.Tables.embeddings(s, d)
+          .select(col("vec_id"),
+            graft.functions.GraftFunctions.vecDouble(col("embedding")).as("v")))
+      ()
+    }),
+    // PQ codebooks + code table (ADC probes serve against the codes)
+    Artifact("pq", Set("sim_knn_pq"),
+      (s, d) => noop(graft.operators.PqAnn.codeTable(s, d))),
+    // IVF-PQ composite: coarse quantizer + cid-partitioned code index
+    // (same accounting as the ivf/pq legs — sim_knn_ivfpq measures the
+    // pruned ADC probe, not quantizer training or the index write)
+    Artifact("ivfpq", Set("sim_knn_ivfpq"),
+      (s, d) => { graft.operators.IvfPqAnn.storedIndex(s, d); () }),
+    // sign-LSH coded vector table (sim_knn_lsh + embedding near-dup)
+    Artifact("lsh", Set(
+      "dedup_embedding_lsh", "sim_knn_lsh", "sim_recall_curve",
+      "sim_recall_eval"),
+      (s, d) => noop(graft.operators.SimilarityOps.codedTable(s, d))),
+    // trade-graph edge/degree tables (pagerank's iteration-invariant input)
+    Artifact("graph", Set(
+      "graph_assortativity", "graph_bfs_distance", "graph_bfs_doubling",
+      "graph_conductance", "graph_degree_ccdf", "graph_degree_stats",
+      "graph_kcore", "graph_modularity", "graph_pagerank", "graph_ppr",
+      "graph_rich_club", "graph_two_hop"),
+      (s, d) => graft.operators.GraphOps.storedGraph(s, d)),
+    // k-core peel rounds (the census serves counts off the stored rounds)
+    Artifact("kcore", Set("graph_kcore"),
+      (s, d) => graft.operators.GraphOps.storedKcore(s, d)),
+    // (order, brand) basket projection shared by rel_basket_lift's consumers
+    Artifact("basket", Set("rel_basket_lift"),
+      (s, d) => noop(graft.operators.RelationalOps.basketOb(s, d))),
+    // supplier co-occurrence pair weights (bipartite proj + neighbor jaccard)
+    Artifact("cooc", Set("graph_bipartite_proj", "graph_neighbor_jaccard"),
+      (s, d) => noop(graft.operators.GraphOps.coocPairs(s, d))),
+    // node degrees over the same pruned incidence (neighbor jaccard dim)
+    Artifact("cooc-deg", Set("graph_neighbor_jaccard"),
+      (s, d) => noop(graft.operators.GraphOps.coocDegrees(s, d))),
+    // near-dup artifacts: 4-gram shingles → verified Jaccard pairs →
+    // component labels; every component-reading query serves from these
+    Artifact("dedup", Set(
+      "dedup_cluster_sizes", "dedup_components",
+      "dedup_cross_source_matrix", "dedup_keep_list",
+      "dedup_keep_longest", "pipe_audit_trail", "pipe_curation_funnel",
+      "pipe_dataset_card", "samp_cluster_split"),
+      (s, d) => noop(graft.operators.DedupOps.componentLabels(s, d))),
+    // positioned-8-gram inverted index (dedup_dup_spans)
+    Artifact("dup-spans", Set("dedup_dup_spans"),
+      (s, d) => { graft.operators.DedupOps.dupSpanGrams(s, d); () }),
+    // MinHash signature table (dedup_minhash + LSH power eval)
+    Artifact("minhash-sig", Set(
+      "dedup_incremental_minhash", "dedup_lsh_power_eval",
+      "dedup_minhash", "dedup_minhash_error_eval"),
+      (s, d) => noop(graft.operators.DedupOps.minhashSig(s, d))),
+    // stored base MV (mv_incremental_agg refreshes against yesterday's
+    // materialization: the query measures delta-aggregate + merge)
+    Artifact("base-mv", Set("mv_incremental_agg"),
+      (s, d) => noop(graft.operators.ParsingOps.baseOrderMv(s, d))))
+
+  /** Build the stored per-corpus artifacts (bucketed layouts, ANN
     * indexes, graph/k-core/near-dup/MV materializations) for `sfDir` and
     * return the seconds spent. Physical layout DDL and index builds are
     * table-creation-time decisions, not query work — the bench runs this
     * before the timed loop and reports it separately, so layout-dependent
     * queries measure the query over the existing layout (what a deployment
     * actually runs). Shared with [[ScaleStress]], which needs the same
-    * artifacts materialized for its replicated stress corpus. */
-  def setup(spark: SparkSession, sfDir: String): Double = {
+    * artifacts materialized for its replicated stress corpus.
+    *
+    * `rows` selects: only the artifacts some named row reads are built
+    * (a targeted run pays only for what it times); None builds all. */
+  def setup(spark: SparkSession, sfDir: String, rows: Option[Set[String]]): Double = {
     val t0 = System.nanoTime()
-    def step(what: String)(body: => Unit): Unit =
-      try body
+    artifacts.filter(a => rows.forall(r => a.readers.exists(r.contains))).foreach { a =>
+      try a.build(spark, sfDir)
       catch { case e: Throwable =>
-        System.err.println(s"[bench] $what setup failed: ${e.getMessage}")
+        System.err.println(s"[bench] ${a.what} setup failed: ${e.getMessage}")
       }
-    // bucketed orders/lineitem layout (co-located join queries)
-    step("layout")(graft.sources.Layouts.bucketedOrdersLineitem(spark, sfDir))
-    // dy-partitioned daily rollup: both pruning queries (static + DPP)
-    // serve reads against it
-    step("rollup layout")(graft.operators.ParsingOps.dailyRollupLayout(spark, sfDir))
-    // IVF index (quantizer training + cid-partitioned index write), so
-    // sim_knn_ivf measures the probe, not index construction
-    step("ivf") {
-      import org.apache.spark.sql.functions.col
-      graft.functions.expressions.GraftExpressions.ensureRegistered(spark)
-      graft.operators.IvfAnn.storedIndex(spark, sfDir,
-        graft.Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"),
-            graft.functions.GraftFunctions.vecDouble(col("embedding")).as("v")))
     }
-    // PQ codebooks + code table (ADC probes serve against the codes)
-    step("pq")(graft.operators.PqAnn.codeTable(spark, sfDir)
-      .write.format("noop").mode("overwrite").save())
-    // IVF-PQ composite: coarse quantizer + cid-partitioned code index
-    // (same accounting as the ivf/pq legs — sim_knn_ivfpq measures the
-    // pruned ADC probe, not quantizer training or the index write)
-    step("ivfpq")(graft.operators.IvfPqAnn.storedIndex(spark, sfDir))
-    // sign-LSH coded vector table (sim_knn_lsh + embedding near-dup)
-    step("lsh")(graft.operators.SimilarityOps.codedTable(spark, sfDir)
-      .write.format("noop").mode("overwrite").save())
-    // trade-graph edge/degree tables (pagerank's iteration-invariant input)
-    step("graph")(graft.operators.GraphOps.storedGraph(spark, sfDir))
-    // k-core peel rounds (the census serves counts off the stored rounds)
-    step("kcore")(graft.operators.GraphOps.storedKcore(spark, sfDir))
-    // (order, brand) basket projection shared by rel_basket_lift's consumers
-    step("basket")(graft.operators.RelationalOps.basketOb(spark, sfDir)
-      .write.format("noop").mode("overwrite").save())
-    // supplier co-occurrence pair weights (bipartite proj + neighbor jaccard)
-    step("cooc")(graft.operators.GraphOps.coocPairs(spark, sfDir)
-      .write.format("noop").mode("overwrite").save())
-    // node degrees over the same pruned incidence (neighbor jaccard dim)
-    step("cooc-deg")(graft.operators.GraphOps.coocDegrees(spark, sfDir)
-      .write.format("noop").mode("overwrite").save())
-    // near-dup artifacts: 4-gram shingles → verified Jaccard pairs →
-    // component labels; every dedup_* query serves from these
-    step("dedup")(graft.operators.DedupOps.componentLabels(spark, sfDir)
-      .write.format("noop").mode("overwrite").save())
-    // positioned-8-gram inverted index (dedup_dup_spans)
-    step("dup-spans")(graft.operators.DedupOps.dupSpanGrams(spark, sfDir))
-    // MinHash signature table (dedup_minhash + LSH power eval)
-    step("minhash-sig")(graft.operators.DedupOps.minhashSig(spark, sfDir)
-      .write.format("noop").mode("overwrite").save())
-    // stored base MV (mv_incremental_agg refreshes against yesterday's
-    // materialization: the query measures delta-aggregate + merge)
-    step("base-mv")(graft.operators.ParsingOps.baseOrderMv(spark, sfDir)
-      .write.format("noop").mode("overwrite").save())
     (System.nanoTime() - t0) / 1e9
   }
 
@@ -266,7 +301,7 @@ object Bench {
     * all TPC-H shapes included. Kept ≲45 names so the line stays well under
     * the driver's 2000-char output-tail window.
     */
-  private val headline: Seq[String] = Seq(
+  private[graft] val headline: Seq[String] = Seq(
     "q1_pricing", "q3_shipping", "q4_late_orders", "q5_region_revenue",
     "q6_forecast_rev", "q7_nation_volume", "q8_mkt_share", "q9_type_profit",
     "q10_returned_rev", "q12_ship_priority", "q13_cust_distribution",
@@ -276,8 +311,8 @@ object Bench {
     "w_daily_stats", "w_daily_counter", "w_topk_precip", "w_partition_pruned",
     "dedup_exact", "dedup_minhash", "dedup_simhash", "dedup_embedding_lsh",
     "dedup_components", "sim_knn_brute", "sim_knn_lsh", "sim_knn_ivf",
-    "sim_knn_pq", "txt_tfidf", "txt_quality", "txt_langid", "txt_repetition",
-    "txt_boilerplate", "evt_retention",
+    "sim_knn_pq", "txt_langid", "txt_repetition", "txt_boilerplate",
+    "evt_retention",
     "win_session", "win_moving_avg", "j_asof", "j_skew_salted",
     "j_bucketed_colocated", "j_dpp_prune", "sq_min_cost_join",
     "agg_grouping_sets", "mv_rollup_cascade", "samp_stratified")

@@ -14,6 +14,7 @@ object Counts {
     println(s"oracled=${(qs & os).size}")
     println(s"no_oracle_n=${noOracle.size}")
     println(s"no_oracle=${noOracle.mkString(", ")}")
+    println(s"names=${qs.toSeq.sorted.mkString(",")}")
     // an oracle without a query would silently never be checked
     val orphaned = (os -- qs).toSeq.sorted
     if (orphaned.nonEmpty) {

@@ -8,8 +8,9 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * Usage: runMain graft.ExplainDump <sfDir> <outDir> <q1,q2,...> [suffix]
   * Writes <outDir>/<name><suffix>.txt. The session is Bench's
-  * (`Sessions.Latency`) and Bench.setup runs first, so the dumped plan is
-  * the plan the bench executes; SPARK_GRAFT_EXTRA_CONF overrides confs as
+  * (`Sessions.Latency`) and Bench.setup first builds the stored artifacts
+  * the named queries read, so the dumped plan is the plan the bench
+  * executes; SPARK_GRAFT_EXTRA_CONF overrides confs as
   * for every main.
   */
 object ExplainDump {
@@ -23,7 +24,7 @@ object ExplainDump {
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     val spark = Sessions.start(Sessions.Latency)
-    Bench.setup(spark, sfDir)
+    Bench.setup(spark, sfDir, Some(names.toSet))
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

@@ -6,14 +6,8 @@ package graft
   * WindowExec warns "No Partition Defined for Window operation" on every
   * run of an unpartitioned window. The repo's unpartitioned windows are
   * each audited benign because the window input is already reduced to a
-  * bounded handful of rows before the window runs — top-K prefixes
-  * (txt_vocab_topk's 50, samp_shuffle_prefix's 200, txt_zipf_fit's 100,
-  * emb_prototypicality's 20, emb_sim_histogram's 200), tiny aggregate
-  * dims (pipe_mix_weights' sources, qa_benford's 9 digits,
-  * samp_systematic's 256 buckets, rel_sweep_concurrency's ~30 days,
-  * samp_temperature / samp_largest_remainder / txt_langid_kappa /
-  * evt_transition_matrix / qa_equidepth_hist / txt_ppl_buckets /
-  * pipe_pack_sequences over matrix- or bucket-sized frames). The
+  * bounded handful of rows before the window runs: top-K prefixes,
+  * tiny aggregate dims, matrix- or bucket-sized frames. The
   * authoritative, enforced list lives in PlanQualitySpec's allowlist.
   *
   * A partitionBy(lit(...)) rewrite cannot silence it: Spark 4's
@@ -25,7 +19,7 @@ package graft
   * The detection the warning used to provide is NOT lost: PlanQualitySpec
   * ("no NEW unpartitioned windows") walks every registered query's
   * physical plan and fails by name on any unpartitioned WindowExec outside
-  * the three-site allowlist — a stronger guard than a log line.
+  * the allowlist — a stronger guard than a log line.
   */
 object QuietLogs {
   def quietBenignWindowWarnings(): Unit =

@@ -53,11 +53,10 @@ import org.apache.spark.sql.functions._
   *    uniform corpus (skew may add its own share, never amplify).
   */
 object ScaleStress {
-  private val DefaultQueries = Seq(
+  private[graft] val DefaultQueries = Seq(
     // tier 1: the worst committed min3 floors (round 11)
-    "qa_encoding_advisor", "qa_encoding_advisor_hll", "qa_split_contamination",
-    "qa_column_profile", "mm_phash_dedup", "mm_shot_boundary", "txt_novelty",
-    "txt_tfidf_pair_cosine", "graph_kcore", "graph_bfs_distance",
+    "qa_split_contamination", "mm_phash_dedup", "mm_shot_boundary",
+    "txt_novelty", "txt_tfidf_pair_cosine", "graph_kcore", "graph_bfs_distance",
     "rel_sweep_concurrency", "dedup_minhash_error_eval", "dedup_lsh_power_eval",
     // tier 2: structurally quadratic-risk families (pair machinery, skew
     // join, iterative graph, sessionize, stratified ranking) — cheap at
@@ -65,7 +64,7 @@ object ScaleStress {
     // surface at 10×
     "dedup_minhash", "dedup_ngram_jaccard", "dedup_simhash",
     "dedup_components", "graph_pagerank", "j_skew_salted", "win_session",
-    "txt_tfidf", "samp_stratified", "evt_retention",
+    "samp_stratified", "evt_retention",
     // tier 3 (round 13): the custom-plan / optimizer-rule surfaces under
     // growth — the heap top-k lowering with its codegen build (run in the
     // cap-flush regime, see the partialMaxKeys config below), the native
@@ -86,6 +85,19 @@ object ScaleStress {
     // partial combine bounds a hot key's reduce row to one per task);
     // both also get uniform 10× rows like everything else
     "dedup_dup_spans", "qa_key_skew")
+
+  /** Default second-stress-point (rep2) families: the highest 10× ratios
+    * from round 13 among the registered rows. */
+  private[graft] val Rep2Queries = Seq("dedup_minhash", "j_skew_salted",
+    "mm_phash_dedup", "txt_novelty")
+
+  /** Default third-stress-point (rep3) probe: the family whose exponent
+    * sat closest to 1 (txt_novelty, 0.965 in r14). */
+  private[graft] val Rep3Queries = Seq("txt_novelty")
+
+  /** Default Zipf-skew corpus targets. */
+  private[graft] val SkewQueries = Seq("win_session", "dedup_dup_spans",
+    "qa_key_skew", "j_skew_salted")
 
   /** Build the rep× stress corpus into a fresh temp dir and return its
     * path. Extracted from [[main]] so the corpus-construction invariants
@@ -130,6 +142,11 @@ object ScaleStress {
     *   a probe must only read its declared tables. */
   def buildStressCorpus(spark: SparkSession, sfDir: String, rep: Int,
       hotSkew: Boolean = false, onlyTables: Option[Set[String]] = None): String = {
+    // checked before any replica is written: the bound is known up front
+    require(rep <= MaxRep,
+      s"rep=$rep > $MaxRep: the affine letter-permutation family would " +
+        "repeat and replicas i and i+312 would be byte-identical " +
+        "(cross-replica LSH inter-matching) — extend the family first")
     def want(t: String) = onlyTables.forall(_.contains(t))
     val stress = Files.createTempDirectory(
       if (hotSkew) "skew-corpus" else "stress-corpus").toString
@@ -184,10 +201,6 @@ object ScaleStress {
     // corpora that have them; both transforms preserve length and token
     // boundaries.
     val rotDigit = "0123456789"
-    require(rep <= MaxRep,
-      s"rep=$rep > $MaxRep: the affine letter-permutation family would " +
-        "repeat and replicas i and i+312 would be byte-identical " +
-        "(cross-replica LSH inter-matching) — extend the family first")
     def rot(a: String, i: Int) = a.drop(i % a.length) + a.take(i % a.length)
     val docSpan = read("documents").agg(max("doc_id")).head.getLong(0) + 1
     // hot replicas: every text becomes the same one-token repetition, so
@@ -291,13 +304,12 @@ object ScaleStress {
 
     // --- second stress point (round 14): the structurally riskiest
     // families re-run at rep2 (default 30×) so the growth EXPONENT
-    // between 10× and 30× is measured, not extrapolated — the five
-    // highest 10× ratios from round 13 plus anything the caller adds
+    // between 10× and 30× is measured, not extrapolated — Rep2Queries
+    // unless the caller names its own
     val rep2 = sys.env.getOrElse("SPARK_GRAFT_STRESS_REP2", "30").toInt
     val risky = sys.env.get("SPARK_GRAFT_STRESS_REP2_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq("dedup_minhash", "j_skew_salted", "qa_encoding_advisor",
-        "mm_phash_dedup", "txt_novelty"))
+      .getOrElse(Rep2Queries)
       .filter(names.contains)
     val doRep2 = rep2 > rep && risky.nonEmpty
     // --- THIRD stress point (round 15): the 100 TB extrapolation rested
@@ -311,7 +323,7 @@ object ScaleStress {
     val rep3 = sys.env.getOrElse("SPARK_GRAFT_STRESS_REP3", "100").toInt
     val rep3Q = sys.env.get("SPARK_GRAFT_STRESS_REP3_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq("txt_novelty"))
+      .getOrElse(Rep3Queries)
       .filter(n => names.contains(n) && risky.contains(n))
     val rep3Tables = sys.env.getOrElse("SPARK_GRAFT_STRESS_REP3_TABLES",
       "documents").split(',').map(_.trim).filter(_.nonEmpty).toSet
@@ -321,8 +333,7 @@ object ScaleStress {
     // by (uniform share + hot share) — skew carried, never amplified
     val skewQ = sys.env.get("SPARK_GRAFT_STRESS_SKEW")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq("win_session", "dedup_dup_spans", "qa_key_skew",
-        "j_skew_salted"))
+      .getOrElse(SkewQueries)
       .filter(names.contains)
     val doSkew = skewQ.nonEmpty
 
@@ -334,10 +345,10 @@ object ScaleStress {
     val skewDir = if (doSkew) buildStressCorpus(spark, sfDir, rep, hotSkew = true) else ""
 
     // --- identical table-creation-time setup at every scale -----------
-    val setupBase = Bench.setup(spark, sfDir)
-    val setupStress = Bench.setup(spark, stress)
-    val setupStress2 = if (doRep2) Bench.setup(spark, stress2) else 0.0
-    val setupSkew = if (doSkew) Bench.setup(spark, skewDir) else 0.0
+    val setupBase = Bench.setup(spark, sfDir, Some(names.toSet))
+    val setupStress = Bench.setup(spark, stress, Some(names.toSet))
+    val setupStress2 = if (doRep2) Bench.setup(spark, stress2, Some(risky.toSet)) else 0.0
+    val setupSkew = if (doSkew) Bench.setup(spark, skewDir, Some(skewQ.toSet)) else 0.0
 
     // --- measure ------------------------------------------------------
     def nodes(df: DataFrame): Map[String, Int] = {

@@ -164,42 +164,6 @@ object AnalyticsOps {
     },
     Some("""SELECT n_name, count(*) AS cnt, floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 * 100.0 + 0.5) / 100.0 AS total_value FROM events JOIN customer ON user_id = c_custkey JOIN nation ON c_nationkey = n_nationkey GROUP BY 1 ORDER BY 1"""))
 
-  /** TF-IDF top-3 terms per document. tf and df are exact integer counts;
-    * idf = ln((N+1)/(df+1)) is the same libm call on identical inputs in
-    * both engines, so tfidf doubles are bit-identical and the per-doc
-    * ranking is deterministic (tiebreak on the term).
-    * Scale: df comes from a count window over the tok partition of the tf
-    * frame — NOT a separate df aggregate broadcast-joined back, because in
-    * the DataFrame API that subplan is not reused: the df branch would
-    * re-tokenize the whole corpus a second time (explode + regex are the
-    * dominant cost). The window input is at most one row per (doc, term),
-    * so a hot term's partition is bounded by document count; if term skew
-    * ever dominates, the two-pass agg+broadcast-join shape is the fallback
-    * — at the price of tokenizing twice or materializing tf. N rides the
-    * plan as a broadcast one-row count aggregate (cross-join), exactly like
-    * the oracle's `CROSS JOIN n` — building the DataFrame runs no job. */
-  private val txtTfidf = GraftQuery(
-    "txt_tfidf",
-    "TF-IDF top-3 terms per document (ln((N+1)/(df+1)) weighting)",
-    (s, d) => {
-      val docs = Tables.documents(s, d)
-      val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-      val tok = docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-        .filter(length(col("tok")) >= 3)
-      val tf = tok.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      val byDoc = Window.partitionBy("doc_id")
-        .orderBy(desc("tfidf"), col("tok"))
-      tf.withColumn("df", count(lit(1)).over(Window.partitionBy("tok")))
-        .crossJoin(broadcast(nDocs))
-        .withColumn("tfidf", col("tf") * log((col("n_docs") + 1).cast("double") / (col("df") + 1)))
-        .withColumn("rk", row_number().over(byDoc))
-        .filter(col("rk") <= 3)
-        .select(col("doc_id"), col("rk"), col("tok"),
-          col("tf"), col("df"), fround(col("tfidf"), 4).as("tfidf"))
-        .orderBy("doc_id", "rk")
-    },
-    Some("""WITH tok AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents), ft AS (SELECT doc_id, tok FROM tok WHERE length(tok) >= 3), tf AS (SELECT doc_id, tok, count(*) AS tf FROM ft GROUP BY 1, 2), df AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1), n AS (SELECT count(*) AS n FROM documents), w AS (SELECT tf.doc_id, tf.tok, tf.tf, df.df, tf.tf * ln(CAST(n.n + 1 AS DOUBLE) / (df.df + 1)) AS tfidf FROM tf JOIN df USING (tok) CROSS JOIN n), r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, tok) AS rk FROM w) SELECT doc_id, rk, tok, tf, df, floor(tfidf * 10000.0 + 0.5) / 10000.0 AS tfidf FROM r WHERE rk <= 3 ORDER BY 1, 2"""))
-
   /** The one-pass StatsAggregator (§2.10's custom-Aggregator surface; the
     * distributed StatCounter replacement) as a registered capability.
     * Oracle determinism split: the aggregator's EXACT fields
@@ -559,7 +523,7 @@ object AnalyticsOps {
   /** PSI DRIFT MONITOR — the population-stability index between the
     * md5-hash-split corpus halves (train = buckets 0..7 of samp_hash_split's
     * EXACT split spelling, holdout = the rest), over the n_chars/50 length
-    * buckets txt_length_hist uses. The stand-in for the real deployment
+    * buckets. The stand-in for the real deployment
     * question — "does this week's crawl still look like the training
     * distribution?" — where the two halves would be two snapshots. PSI =
     * Σ (p−q)·ln(p/q) with Laplace smoothing ((c+1)/(n+B), B = bucket
@@ -567,10 +531,10 @@ object AnalyticsOps {
     * term instead of ±∞. Determinism: counts are exact integers, p and q
     * exact rationals evaluated in ONE fixed double-op sequence, each term
     * floor-rounded to an integer 1e-8 unit and summed as BIGINT — the
-    * cross-row sum is integer, only the per-row ln rides libm (the
-    * txt_tfidf precedent). Scale shape: one map-side-combined aggregation
-    * to |sources|×|buckets| cells, windows and the PSI fold run over that
-    * tiny cell table, never the corpus. */
+    * cross-row sum is integer, only the per-row ln rides libm. Scale
+    * shape: one map-side-combined aggregation to |sources|×|buckets|
+    * cells, windows and the PSI fold run over that tiny cell table,
+    * never the corpus. */
   private val qaPsiDrift = GraftQuery(
     "qa_psi_drift",
     "PSI distribution drift between md5-split corpus halves, per source",
@@ -833,45 +797,6 @@ object AnalyticsOps {
     },
     Some("""SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_users, count(*) AS n_events FROM events GROUP BY 1 ORDER BY 1"""))
 
-  /** Per-group OLS trend line (slope / intercept / R²) from the six
-    * closed-form sufficient statistics — regression as ONE
-    * map-side-combined aggregation pass, never a solver or a collect.
-    * All six sums are exact integers (x = day index, y = centi value), so
-    * the only floating-point ops are the final divisions — bit-identical
-    * in any engine. The long products stay far under 2^63 at every driver
-    * SF (bounds in comments). Scale: partial aggregation means each
-    * executor ships 6 longs per group; the fit itself is free. */
-  private lazy val qaOlsTrend = GraftQuery(
-    "qa_ols_trend",
-    "per-event-type OLS value-vs-day trend from exact sufficient statistics",
-    (s, d) => {
-      val ev = Tables.events(s, d).select(col("event_type"),
-        datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
-          .cast("long").as("x"),
-        centi(col("value")).as("y"))
-      ev.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("x") * col("y")).as("sxy"),
-          sum(col("y") * col("y")).as("syy"))
-        // covN/dx/dy are exact longs (|covN| ≲ 6e14, dy ≲ 1e18 at sf1);
-        // double conversion + division afterwards is IEEE-identical in
-        // both engines.
-        .withColumn("covn", col("n") * col("sxy") - col("sx") * col("sy"))
-        .withColumn("dx", col("n") * col("sxx") - col("sx") * col("sx"))
-        .withColumn("dy", col("n") * col("syy") - col("sy") * col("sy"))
-        .select(col("event_type"), col("n"),
-          fround(col("covn").cast("double") / col("dx") / 100.0, 6)
-            .as("slope_per_day"),
-          fround((col("sy").cast("double") -
-            col("covn").cast("double") / col("dx") * col("sx")) /
-            col("n") / 100.0, 4).as("intercept"),
-          fround(col("covn").cast("double") * col("covn") /
-            (col("dx").cast("double") * col("dy")), 6).as("r2"))
-        .orderBy("event_type")
-    },
-    Some("""WITH ev AS (SELECT event_type, CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS x, CAST(floor(value * 100 + 0.5) AS BIGINT) AS y FROM events), g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy, CAST(sum(x * x) AS BIGINT) AS sxx, CAST(sum(x * y) AS BIGINT) AS sxy, CAST(sum(y * y) AS BIGINT) AS syy FROM ev GROUP BY 1), k AS (SELECT *, n * sxy - sx * sy AS covn, n * sxx - sx * sx AS dx, n * syy - sy * sy AS dy FROM g) SELECT event_type, n, floor(CAST(covn AS DOUBLE) / dx / 100.0 * 1e6 + 0.5) / 1e6 AS slope_per_day, floor((CAST(sy AS DOUBLE) - CAST(covn AS DOUBLE) / dx * sx) / n / 100.0 * 1e4 + 0.5) / 1e4 AS intercept, floor(CAST(covn AS DOUBLE) * covn / (CAST(dx AS DOUBLE) * dy) * 1e6 + 0.5) / 1e6 AS r2 FROM k ORDER BY 1"""))
-
   /** Seasonality profile: the 7×24 (day-of-week × hour) grid of event
     * count, average value, and the cell count's z-score against the grid
     * — the load-shape fingerprint behind anomaly baselines. Day-of-week
@@ -971,38 +896,6 @@ object AnalyticsOps {
     },
     Some("""WITH ev AS (SELECT event_type, event_id, CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc, TRY_CAST(regexp_extract(props, '"k": (\d+)', 1) AS BIGINT) AS wt FROM events), c AS (SELECT *, sum(wt) OVER (PARTITION BY event_type ORDER BY vc, event_id ROWS UNBOUNDED PRECEDING) AS cw, sum(wt) OVER (PARTITION BY event_type) AS tot FROM ev), f AS (SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY vc, event_id) AS rn FROM c WHERE cw * 2 >= tot) SELECT event_type, floor(CAST(vc AS DOUBLE) / 100.0 * 100.0 + 0.5) / 100.0 AS w_median, CAST(tot AS BIGINT) AS total_weight FROM f WHERE rn = 1 ORDER BY 1"""))
 
-  /** Chi-squared drift over a CATEGORICAL column — the contingency-table
-    * complement to qa_psi_drift (numeric bins) and qa_ks_drift (ECDF):
-    * event-type counts in the first half-month vs the rest, expected
-    * counts from the margins, per-cell (O−E)²/E contributions. Margins
-    * and observed counts are exact integers off ONE 10-cell rollup;
-    * expected/χ² are the only float steps and share expression text
-    * across engines. */
-  private lazy val qaChi2Drift = GraftQuery(
-    "qa_chi2_drift",
-    "chi-squared event-type drift: first half-month vs rest",
-    (s, d) => {
-      val cells = Tables.events(s, d)
-        .select(col("event_type"),
-          when(dayofmonth(col("ts")) <= 15, 0).otherwise(1).as("p"))
-        .groupBy("event_type")
-        .agg(sum(when(col("p") === 0, 1L).otherwise(0L)).as("o_a"),
-          sum(when(col("p") === 1, 1L).otherwise(0L)).as("o_b"))
-      val tot = cells.agg(sum("o_a").as("ca"), sum("o_b").as("cb"))
-      cells.crossJoin(broadcast(tot))
-        .withColumn("ea", (col("o_a") + col("o_b")).cast("double") *
-          col("ca") / (col("ca") + col("cb")))
-        .withColumn("eb", (col("o_a") + col("o_b")).cast("double") *
-          col("cb") / (col("ca") + col("cb")))
-        .select(col("event_type"), col("o_a"), col("o_b"),
-          fround(col("ea"), 4).as("e_a"), fround(col("eb"), 4).as("e_b"),
-          fround((col("o_a") - col("ea")) * (col("o_a") - col("ea")) / col("ea") +
-            (col("o_b") - col("eb")) * (col("o_b") - col("eb")) / col("eb"), 6)
-            .as("chi2_contrib"))
-        .orderBy("event_type")
-    },
-    Some("""WITH cells AS (SELECT event_type, CAST(sum(CASE WHEN p = 0 THEN 1 ELSE 0 END) AS BIGINT) AS o_a, CAST(sum(CASE WHEN p = 1 THEN 1 ELSE 0 END) AS BIGINT) AS o_b FROM (SELECT event_type, CASE WHEN day(CAST(ts AS TIMESTAMP)) <= 15 THEN 0 ELSE 1 END AS p FROM events) GROUP BY 1), t AS (SELECT CAST(sum(o_a) AS BIGINT) AS ca, CAST(sum(o_b) AS BIGINT) AS cb FROM cells), x AS (SELECT *, CAST(o_a + o_b AS DOUBLE) * ca / (ca + cb) AS ea, CAST(o_a + o_b AS DOUBLE) * cb / (ca + cb) AS eb FROM cells CROSS JOIN t) SELECT event_type, o_a, o_b, floor(ea * 1e4 + 0.5) / 1e4 AS e_a, floor(eb * 1e4 + 0.5) / 1e4 AS e_b, floor(((o_a - ea) * (o_a - ea) / ea + (o_b - eb) * (o_b - eb) / eb) * 1e6 + 0.5) / 1e6 AS chi2_contrib FROM x ORDER BY 1"""))
-
   /** Mutual information (and entropies) between the corpus's lang and
     * source labels — the feature-dependence audit behind stratification
     * and leakage checks ("does source already determine language?").
@@ -1054,7 +947,7 @@ object AnalyticsOps {
     * index audits token-contribution concentration across sources. The
     * per-customer Σ x·ln(·) rides as DECIMAL(38,0) micro-nat sums (x_i
     * reaches 1e8 centi-units, so BIGINT would overflow near sf1 — same
-    * 128-bit pattern as emb_isotropy); ln args are ratios of exact
+    * 128-bit pattern as emb_centroid_drift); ln args are ratios of exact
     * integer products. Scale: one keyed rollup orders→customer (the
     * dominant shuffle), one customer→nation rollup, broadcast totals. */
   private lazy val aggTheil = GraftQuery(
@@ -1321,20 +1214,19 @@ object AnalyticsOps {
 
   val all: Seq[GraftQuery] = Seq(
     aggMedianTwopass, evtUpliftCuped, aggQuantileSemantics, qaSliceFinder,
-    qaOlsTrend, calSeasonality, calSeasonalAnomaly, aggWeightedMedian,
-    qaChi2Drift,
-    winSession, winLagLead, aggPercentiles, aggCorr, jSkewSalted, txtTfidf,
-    aggStatsOnepass, aggPivot, winSessionNative, aggApproxPercentile,
-    aggArgExtremes, aggMapHistogram, aggMultiDistinct, aggHllRollup,
-    evtRetention, evtZscore, evtTransitions, qaWinsorize, qaPsiDrift,
-    qaKsDrift, evtEwma, evtRunLengths, winRollingMedian, qaBenford,
-    qaOutlierMad, aggBitmapDistinct, aggBitmapOverlap, qaMutualInfo,
-    aggTheil, aggGini, winRollingCorr, winSessionSensitivity,
-    calWeekOverWeek, qaKeyGaps, aggParetoRatio, qaPkUniqueness, aggAnovaF,
-    aggSkewKurtosis, aggPythagoreanMeans, winOnlineScaling,
-    evtPeriodicityAcf, qaEmdDrift, qaProportionZtest, qaJoinCardEstimate,
-    qaMannWhitney, evtRetentionHalflife, qaSimpsonParadox, qaFkFanout,
-    aggHhi, qaTheilSen, qaDiffInDiff, qaPowerMde)
+    calSeasonality, calSeasonalAnomaly, aggWeightedMedian, winSession,
+    winLagLead, aggPercentiles, aggCorr, jSkewSalted, aggStatsOnepass,
+    aggPivot, winSessionNative, aggApproxPercentile, aggArgExtremes,
+    aggMapHistogram, aggMultiDistinct, aggHllRollup, evtRetention,
+    evtZscore, evtTransitions, qaWinsorize, qaPsiDrift, qaKsDrift, evtEwma,
+    evtRunLengths, winRollingMedian, qaBenford, qaOutlierMad,
+    aggBitmapDistinct, aggBitmapOverlap, qaMutualInfo, aggTheil, aggGini,
+    winRollingCorr, winSessionSensitivity, calWeekOverWeek, qaKeyGaps,
+    aggParetoRatio, qaPkUniqueness, aggAnovaF, aggSkewKurtosis,
+    aggPythagoreanMeans, winOnlineScaling, evtPeriodicityAcf, qaEmdDrift,
+    qaProportionZtest, qaJoinCardEstimate, qaMannWhitney,
+    evtRetentionHalflife, qaSimpsonParadox, qaFkFanout, aggHhi, qaTheilSen,
+    qaDiffInDiff, qaPowerMde)
 
   /** POWER ANALYSIS companion to qa_proportion_ztest: the minimum
     * detectable effect at 80% power / α=0.05 two-sided for the observed
@@ -1409,8 +1301,8 @@ object AnalyticsOps {
     Some("""WITH c AS (SELECT CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS g, CASE WHEN day(CAST(ts AS TIMESTAMP)) > 15 THEN 1 ELSE 0 END AS p, CAST(floor(value * 100 + 0.5) AS BIGINT) AS v FROM events WHERE event_type IN ('purchase', 'click')), a AS (SELECT CAST(sum(CASE WHEN g = 1 AND p = 0 THEN 1 ELSE 0 END) AS BIGINT) AS t_pre_n, CAST(sum(CASE WHEN g = 1 AND p = 1 THEN 1 ELSE 0 END) AS BIGINT) AS t_post_n, CAST(sum(CASE WHEN g = 0 AND p = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c_pre_n, CAST(sum(CASE WHEN g = 0 AND p = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c_post_n, CAST(sum(CASE WHEN g = 1 AND p = 0 THEN v ELSE 0 END) AS BIGINT) AS t_pre_sv, CAST(sum(CASE WHEN g = 1 AND p = 1 THEN v ELSE 0 END) AS BIGINT) AS t_post_sv, CAST(sum(CASE WHEN g = 0 AND p = 0 THEN v ELSE 0 END) AS BIGINT) AS c_pre_sv, CAST(sum(CASE WHEN g = 0 AND p = 1 THEN v ELSE 0 END) AS BIGINT) AS c_post_sv FROM c) SELECT t_pre_n, t_post_n, c_pre_n, c_post_n, floor(CAST(t_pre_sv AS DOUBLE) / CAST(t_pre_n AS DOUBLE) / 100.0 * 1e4 + 0.5) / 1e4 AS treated_pre, floor(CAST(t_post_sv AS DOUBLE) / CAST(t_post_n AS DOUBLE) / 100.0 * 1e4 + 0.5) / 1e4 AS treated_post, floor(CAST(c_pre_sv AS DOUBLE) / CAST(c_pre_n AS DOUBLE) / 100.0 * 1e4 + 0.5) / 1e4 AS control_pre, floor(CAST(c_post_sv AS DOUBLE) / CAST(c_post_n AS DOUBLE) / 100.0 * 1e4 + 0.5) / 1e4 AS control_post, floor(((CAST(t_post_sv AS DOUBLE) / CAST(t_post_n AS DOUBLE) / 100.0 - CAST(t_pre_sv AS DOUBLE) / CAST(t_pre_n AS DOUBLE) / 100.0) - (CAST(c_post_sv AS DOUBLE) / CAST(c_post_n AS DOUBLE) / 100.0 - CAST(c_pre_sv AS DOUBLE) / CAST(c_pre_n AS DOUBLE) / 100.0)) * 1e4 + 0.5) / 1e4 AS did_estimate FROM a"""))
 
   /** THEIL-SEN robust trend of the daily value total — the median of all
-    * pairwise slopes, immune to the outlier days that drag qa_ols_trend's
-    * least-squares line (ship both; their gap IS the outlier report).
+    * pairwise slopes, immune to the outlier days that drag a
+    * least-squares line.
     * The pair set is |days|² ≈ 30² — the DAILY series self-meets, never
     * the fact — and every slope is the exact integer
     * div((y_j−y_i)·1e6, j−i); the median is a rank-pick (no

@@ -118,21 +118,6 @@ object CurationOps {
       Seq("documents"), sparkSql, duckSql)
   }
 
-  /** Token-length histogram per language: fixed-width 50-char buckets.
-    * Map-side combine does all the work; the shuffle carries one row per
-    * (lang, bucket). */
-  private val lengthHist = {
-    val sql =
-      """SELECT lang, CAST(floor(n_chars / 50.0) AS INT) AS bucket,
-        |  count(*) AS n_docs, min(n_chars) AS lo, max(n_chars) AS hi
-        |FROM documents
-        |GROUP BY lang, bucket
-        |ORDER BY lang, bucket""".stripMargin
-    q("txt_length_hist",
-      "length histogram: fixed-width buckets per lang, one keyed shuffle",
-      Seq("documents"), sql, sql.replace("\n", " "))
-  }
-
   /** Symmetric int8 quantization of embeddings — the storage format an ANN
     * serving tier actually holds. Per vector: scale = 127/max|x|, q_i =
     * floor(x*scale + 0.5) clamped to [-127,127]. All decisions are the same
@@ -177,8 +162,8 @@ object CurationOps {
     * and DuckDB agree bit-for-bit; the kept set is reproducible under any
     * repartitioning. A pure narrow map (filter rides the scan — no
     * shuffle); at 100 TB this is the cheapest possible corpus pass. The
-    * quality formula is the same exact-ratio composite txt_quality scores
-    * (stopword/long-token/length-band). */
+    * quality formula is the shared exact-ratio composite
+    * (stopword/long-token/length-band, GraftFunctions.qualityScore). */
   private val sampImportance = {
     import org.apache.spark.sql.functions._
     import graft.functions.GraftFunctions._
@@ -201,10 +186,10 @@ object CurationOps {
       "quality-weighted importance sampling: keep-prob = 0.2 + 0.8*quality, hash uniform",
       // Column-API body so the weight derives from THE shared quality
       // composite (GraftFunctions.qualityScore) — the same definition
-      // txt_quality scores and pipe_filter_gate gates on
+      // pipe_filter_gate gates on
       (s, d) => {
-        // tokenize once (see txt_quality note: lambda filters are
-        // non-codegen; inline copies re-split per reference)
+        // tokenize once (lambda filters are non-codegen; inline copies
+        // re-split per reference)
         val t = col("t")
         Tables.documents(s, d)
           .select(col("doc_id"), tokens(col("text")).as("t"))
@@ -228,7 +213,7 @@ object CurationOps {
     * corpus's `lang = 'en'` slice; both bucket distributions carry add-1
     * smoothing. Output: per-doc bigram count, total LLR, and the
     * length-normalized per-bigram average (micro-integer log terms,
-    * floor-rounded in both engines — the txt_bigram_logprob contract).
+    * floor-rounded in both engines — the txt_unigram_logprob contract).
     *
     * Scale shape: ONE tokenize+bigram pass collapses straight to the
     * (doc_id, bucket) count table (≤ 64 rows per doc — this is the only
@@ -301,7 +286,7 @@ object CurationOps {
     * hash-derived u makes the draw reproducible under repartitioning:
     * a re-run selects the same rows, so downstream caches stay valid.
     * ln() determinism across engines carries the same accepted 1-ulp risk
-    * documented at txt_unigram_logprob (precedent: txt_tfidf). */
+    * documented at txt_unigram_logprob. */
   private val sampWeightedReservoir = {
     import org.apache.spark.sql.functions._
     import graft.functions.GraftFunctions._
@@ -395,29 +380,6 @@ object CurationOps {
       Some("""WITH c AS (SELECT lang, count(*) AS n, CAST(floor(sqrt(count(*)) * 1000000.0 + 0.5) AS BIGINT) AS s_micro FROM documents GROUP BY 1), t AS (SELECT CAST(sum(s_micro) AS BIGINT) AS tot FROM c) SELECT lang, n, floor(CAST(s_micro AS DOUBLE) / tot * 1000000.0 + 0.5) / 1000000.0 AS share, (s_micro * 10000) // tot AS quota_10k FROM c, t ORDER BY 1"""))
   }
 
-  /** Largest-remainder (Hamilton) apportionment of a fixed sample budget
-    * across sources: base = floor(K·nᵢ/N) slots each, then the leftover
-    * slots go to the largest fractional remainders — the EXACT
-    * proportional allocation (Σalloc = K always, no float rounding drift),
-    * which is how a curation run turns target mixture shares into integer
-    * per-source quotas (samp_temperature's quota step is the α-scaled
-    * cousin; this is the exact α=1 base case). All arithmetic is integer
-    * div/mod; the ranking window runs over source-cardinality rows. */
-  private val sampLargestRemainder = {
-    def sql(idiv: String) =
-      s"""WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM documents GROUP BY source),
-         |t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM c),
-         |b AS (SELECT source, n, (n * 1000) $idiv total AS base, (n * 1000) % total AS rem FROM c, t),
-         |l AS (SELECT CAST(1000 - sum(base) AS BIGINT) AS leftover FROM b),
-         |r AS (SELECT source, n, base, row_number() OVER (ORDER BY rem DESC, source) AS rk FROM b)
-         |SELECT source, n AS n_docs,
-         |  CAST(base + (CASE WHEN rk <= leftover THEN 1 ELSE 0 END) AS BIGINT) AS alloc
-         |FROM r, l ORDER BY source""".stripMargin
-    q("samp_largest_remainder",
-      "exact largest-remainder apportionment of 1000 sample slots by source",
-      Seq("documents"), sql("div"), sql("//").replace("\n", " "))
-  }
-
   /** Systematic (every k-th) sampling in md5 order — the stride design that
     * guarantees exactly ceil(n/k) rows and even coverage of the hash range
     * (plain mod-k sampling only hits the rate in expectation). The global
@@ -454,108 +416,6 @@ object CurationOps {
       },
       Some(s"""WITH h AS (SELECT doc_id, ${md5u32Sql("md5(CAST(doc_id AS VARCHAR))")} AS u FROM documents), r AS (SELECT doc_id, row_number() OVER (ORDER BY u, doc_id) AS rn FROM h) SELECT rn, doc_id FROM r WHERE (rn - 1) % 10 = 0 ORDER BY rn"""))
   }
-
-  /** Poisson bootstrap: 20 deterministic resampling replicates of the
-    * corpus mean doc length in ONE distributed pass — the standard way to
-    * put a confidence interval on a 100 TB statistic without materializing
-    * resamples (Chamandy et al., "Estimating uncertainty for massive data
-    * streams", Google TR 2012). Each (doc, replicate) weight is
-    * Binomial(4, 1/4) ≈ Poisson(1), read from four 2-bit md5 fields, so a
-    * re-run reproduces every replicate bit-for-bit. Scale: a narrow 20×
-    * row explosion feeding one map-side-combined 20-group agg — no
-    * shuffle of corpus-sized data, no driver resample loop. */
-  private val sampPoissonBootstrap = {
-    // DuckDB shifts with the >> operator; Spark SQL with shiftright().
-    def weights(shift: Int => String) = (0 until 4)
-      .map(i => s"CAST((${shift(2 * i)} & 3) = 0 AS INT)").mkString(" + ")
-    val sparkH =
-      "CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), ':', CAST(rep AS STRING))), 1, 8), 16, 10) AS BIGINT)"
-    val sparkSql =
-      s"""SELECT rep, CAST(sum(w) AS BIGINT) AS n_eff,
-         |  floor(CAST(sum(w * n_chars) AS DOUBLE) / sum(w) * 1e4 + 0.5) / 1e4 AS est_mean_chars
-         |FROM (SELECT rep, n_chars, ${weights(i => s"shiftright($sparkH, $i)")} AS w
-         |      FROM documents
-         |      LATERAL VIEW explode(sequence(0, 19)) t AS rep)
-         |GROUP BY rep ORDER BY rep""".stripMargin
-    val duckSql =
-      s"""WITH r AS (SELECT unnest(generate_series(0, 19)) AS rep),
-         | x0 AS (SELECT rep, n_chars, md5(CAST(doc_id AS VARCHAR) || ':' || CAST(rep AS VARCHAR)) AS hx FROM documents CROSS JOIN r),
-         | x AS (SELECT rep, n_chars, ${graft.functions.GraftFunctions.md5u32Sql("hx")} AS h FROM x0),
-         | w AS (SELECT rep, n_chars, ${weights(i => s"(h >> $i)")} AS w FROM x)
-         |SELECT rep, CAST(sum(w) AS BIGINT) AS n_eff,
-         |  floor(CAST(sum(w * n_chars) AS DOUBLE) / sum(w) * 1e4 + 0.5) / 1e4 AS est_mean_chars
-         |FROM w GROUP BY rep ORDER BY rep""".stripMargin.replace("\n", " ")
-    q("samp_poisson_bootstrap",
-      "20-replicate deterministic Poisson bootstrap of mean doc length",
-      Seq("documents"), sparkSql, duckSql)
-  }
-
-  /** Differential-privacy-style noised count release: per (source, lang)
-    * doc counts plus two-sided GEOMETRIC noise — the discrete-Laplace
-    * mechanism shape — derived WITHOUT logarithms (libm log is not
-    * bit-identical across engines): a Geometric(1/2) draw is the number
-    * of trailing zero bits of a hash word, ctz(h) = bit_count((h & -h)−1),
-    * and the noise is the difference of two independent draws. Everything
-    * is integer arithmetic on md5 bits, so the release is reproducible
-    * and the oracle exact. (Demo releases true n alongside; a real
-    * deployment drops it and seeds per-release.) Scale: noise is O(1)
-    * per GROUP, computed after the map-side-combined rollup. */
-  private val sampDpCounts = {
-    def ctz(h: String) =
-      s"(CASE WHEN $h = 0 THEN 32 ELSE bit_count(($h & -$h) - 1) END)"
-    def inner(h1: String, h2: String) =
-      s"""SELECT source, lang, n, CAST(${ctz("h1")} - ${ctz("h2")} AS BIGINT) AS noise
-         |FROM (SELECT source, lang, count(*) AS n, $h1 AS h1, $h2 AS h2
-         |      FROM documents GROUP BY source, lang)""".stripMargin
-    def outer(in: String) =
-      s"""SELECT source, lang, CAST(n AS BIGINT) AS n, noise,
-         |  greatest(0, CAST(n AS BIGINT) + noise) AS released
-         |FROM ($in) ORDER BY source, lang""".stripMargin
-    def sparkH(tag: String) =
-      s"CAST(conv(substring(md5(concat('$tag:', source, ':', lang)), 1, 8), 16, 10) AS BIGINT)"
-    def duckH(tag: String) =
-      graft.functions.GraftFunctions.md5u32Sql(s"md5('$tag:' || source || ':' || lang)")
-    q("samp_dp_counts",
-      "noised count release: discrete two-sided-geometric noise from md5 bits",
-      Seq("documents"),
-      outer(inner(sparkH("dp1"), sparkH("dp2"))),
-      outer(inner(duckH("dp1"), duckH("dp2"))).replace("\n", " "))
-  }
-
-  /** Horvitz-Thompson estimation over samp_importance's kept set: the
-    * unequal-probability sample is unbiased ONLY when each kept row is
-    * reweighted by 1/p — this query closes that loop, estimating the
-    * corpus total of n_chars from the sample and reporting the exact
-    * error vs the true total. Per-row contributions n_chars/p are
-    * ROUNDED TO MICRO INTEGERS before summing (identical floor in both
-    * engines), so the estimate never depends on float summation order —
-    * the repo's fixed-point discipline applied to an estimator. Two
-    * corpus passes (sample + truth), like samp_balanced_classes. */
-  private val sampHtEstimate = GraftQuery(
-    "samp_ht_estimate",
-    "Horvitz-Thompson corpus-total estimate off the importance sample",
-    (s, d) => {
-      import org.apache.spark.sql.functions._
-      import graft.functions.GraftFunctions._
-      val t = col("t")
-      val docs = Tables.documents(s, d)
-      val kept = docs
-        .select(col("doc_id"), col("n_chars"), tokens(col("text")).as("t"))
-        .select(col("doc_id"), col("n_chars"), impWeight(t).as("w"),
-          impU01(col("doc_id")).as("u01"))
-        .filter(col("u01") < col("w"))
-        .select(col("n_chars"),
-          floor(col("n_chars") / col("w") * 1000000.0 + 0.5).cast("long")
-            .as("contrib_micro"))
-      val truth = docs.agg(sum("n_chars").as("true_total"))
-      kept.agg(count(lit(1)).as("n_kept"), sum("contrib_micro").as("cm"))
-        .crossJoin(broadcast(truth))
-        .select(col("n_kept"), col("true_total"),
-          fround(col("cm").cast("double") / 1000000.0, 2).as("ht_estimate"),
-          fround((col("cm").cast("double") / 1000000.0 - col("true_total")) /
-            col("true_total") * 1000000.0, 1).as("err_ppm"))
-    },
-    Some(s"""WITH sc AS (SELECT doc_id, n_chars, 0.2 + 0.8 * (CAST(len(list_filter(t, x -> x IN (${graft.functions.GraftFunctions.stopwordsSqlList}))) AS DOUBLE) / len(t) * 0.3 + CAST(len(list_filter(t, x -> length(x) > 4)) AS DOUBLE) / len(t) * 0.4 + (CASE WHEN len(t) BETWEEN 20 AND 200 THEN 1.0 ELSE 0.0 END) * 0.3) AS w, CAST(${graft.functions.GraftFunctions.md5u32Sql("md5('imp:' || CAST(doc_id AS VARCHAR))")} AS DOUBLE) / 4294967296.0 AS u01 FROM (SELECT doc_id, n_chars, string_split(lower(text), ' ') AS t FROM documents)), k AS (SELECT CAST(floor(n_chars / w * 1000000.0 + 0.5) AS BIGINT) AS contrib_micro FROM sc WHERE u01 < w), agg AS (SELECT CAST(count(*) AS BIGINT) AS n_kept, CAST(sum(contrib_micro) AS BIGINT) AS cm FROM k), t AS (SELECT CAST(sum(n_chars) AS BIGINT) AS true_total FROM documents) SELECT n_kept, true_total, floor(CAST(cm AS DOUBLE) / 1000000.0 * 100.0 + 0.5) / 100.0 AS ht_estimate, floor((CAST(cm AS DOUBLE) / 1000000.0 - true_total) / true_total * 1000000.0 * 10.0 + 0.5) / 10.0 AS err_ppm FROM agg CROSS JOIN t"""))
 
   /** NEYMAN ALLOCATION of a 500-doc sample budget across sources — the
     * optimal-stratification rule n_h ∝ N_h·S_h (allocate by stratum size
@@ -799,10 +659,8 @@ object CurationOps {
   }
 
   val all: Seq[GraftQuery] = Seq(
-    sampStratified, sampQuota, shufflePrefix, txtNormalize, lengthHist,
-    embQuantize, sampImportance, sampDsir, sampWeightedReservoir,
-    sampBalancedClasses,
-    sampTemperature, sampLargestRemainder, sampSystematic,
-    sampPoissonBootstrap, sampDpCounts, sampHtEstimate, sampNeyman, sampAqp,
-    sampKfold, sampTemperatureSweep, sampPps, sampTemporalSplit)
+    sampStratified, sampQuota, shufflePrefix, txtNormalize, embQuantize,
+    sampImportance, sampDsir, sampWeightedReservoir, sampBalancedClasses,
+    sampTemperature, sampSystematic, sampNeyman, sampAqp, sampKfold,
+    sampTemperatureSweep, sampPps, sampTemporalSplit)
 }

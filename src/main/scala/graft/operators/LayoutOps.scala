@@ -9,10 +9,10 @@ import graft.functions.GraftFunctions.fround
 /** Physical-DATA-LAYOUT advisory operators — the audits a lakehouse runs
   * before deciding how 100 TB gets laid out on disk: zone-map (min/max)
   * pruning effectiveness, Z-order vs linear clustering for 2-D
-  * predicates, small-file compaction planning, and per-column encoding
-  * choice. The reference's layout decisions are Cassandra clustering
-  * keys (ref: data/create-timeseries.cql — `PRIMARY KEY ((wsid), year,
-  * month, day, hour)` is exactly a hand-chosen sort layout); these
+  * predicates and small-file compaction planning. The reference's layout
+  * decisions are Cassandra clustering keys (ref:
+  * data/create-timeseries.cql — `PRIMARY KEY ((wsid), year, month, day,
+  * hour)` is exactly a hand-chosen sort layout); these
   * queries generalize that decision into measurable audits over the
   * parquet testdata.
   *
@@ -171,118 +171,6 @@ object LayoutOps {
     },
     Some("""WITH files AS (SELECT l_orderkey // 1024 AS f, CAST(count(*) AS BIGINT) AS nrows FROM lineitem GROUP BY 1), b AS (SELECT f, nrows, CAST(sum(nrows) OVER (ORDER BY f) AS BIGINT) AS cum FROM files) SELECT (cum - nrows) // 16384 AS bin, min(f) AS first_file, max(f) AS last_file, CAST(count(*) AS BIGINT) AS n_files, CAST(sum(nrows) AS BIGINT) AS rows, floor(CAST(sum(nrows) AS DOUBLE) / 16384 * 1e4 + 0.5) / 1e4 AS fill_ratio FROM b GROUP BY 1 ORDER BY 1"""))
 
-  /** Per-column ENCODING ADVISOR — the ANALYZE-style read that decides
-    * parquet/ORC encodings: exact NDV, mean run length in the natural
-    * file order, and the standard decision rule (low NDV + long runs →
-    * RLE over a dictionary; low NDV → dictionary; NDV comparable to row
-    * count → plain). ALL SIX columns share one pass: a single keyed
-    * window (one shuffle — (ok, ln) is not unique in the driver
-    * testdata, so the six advised columns complete the sort key into a
-    * total order both engines replay identically; equal-value ties never
-    * split a run) emits every column's run-break flag, then ONE
-    * aggregate carries the six sums + six exact countDistincts and a
-    * stack() unpivots the summary. The multi-countDistinct Expand
-    * multiplies the agg input 6× — at 100 TB run the shipped HLL twin
-    * [[qaEncodingAdvisorHll]] instead (the qa_column_profile_hll
-    * precedent); the run census is already scale-shaped (per-file
-    * windows, never a global sort). */
-  private val qaEncodingAdvisor = GraftQuery(
-    "qa_encoding_advisor",
-    "NDV + run-length scan per column with an encoding recommendation",
-    (s, d) => {
-      val cols = Seq("l_returnflag", "l_linestatus", "l_shipdate",
-        "l_quantity", "l_suppkey", "l_extendedprice")
-      val li = Tables.lineitem(s, d).select(
-        expr("l_orderkey div 4096").as("f") +: col("l_orderkey").as("ok") +:
-          col("l_linenumber").as("ln") +: cols.map(col): _*)
-      val w = Window.partitionBy("f")
-        .orderBy(col("ok") +: col("ln") +: cols.map(col): _*)
-      // spread keyed on f: HashPartitioning(f, cores) SATISFIES the
-      // window's ClusteredDistribution(f), so the per-file window, the
-      // run flags, and the NDV aggregate's partial stage all run at the
-      // session's width instead of the latency-profile shuffle width the
-      // single-task scan fed them at (scale-gated identity at real sizes)
-      val liW = Tables.spread(s, li, col("f"))
-      val withBrk = cols.foldLeft(liW)((df, c) =>
-        df.withColumn(s"brk_$c",
-          when(lag(col(c), 1).over(w).isNull ||
-            lag(col(c), 1).over(w) =!= col(c), 1L).otherwise(0L)))
-      val aggCols = cols.flatMap(c => Seq(
-        sum(s"brk_$c").as(s"runs_$c"), countDistinct(col(c)).as(s"ndv_$c")))
-      val agg = withBrk.agg(count(lit(1)).as("n"), aggCols: _*)
-      agg.selectExpr("n",
-          s"stack(${cols.size}, " +
-            cols.map(c => s"'$c', ndv_$c, runs_$c").mkString(", ") +
-            ") AS (colname, ndv, n_runs)")
-        .select(col("colname").as("column"), col("n"), col("ndv"),
-          fround(col("n").cast("double") / col("n_runs"), 4).as("mean_run"),
-          when(col("ndv") <= 64 &&
-              col("n").cast("double") / col("n_runs") >= 2.0, "RLE_DICT")
-            .when(col("ndv") <= 64, "DICT")
-            .when(col("ndv") * 2 > col("n"), "PLAIN")
-            .otherwise("DICT").as("advice"))
-        .orderBy("column")
-    },
-    Some {
-      val all = Seq("l_returnflag", "l_linestatus", "l_shipdate",
-        "l_quantity", "l_suppkey", "l_extendedprice")
-      val ord = "ok, ln, " + all.mkString(", ")
-      def cte(c: String) =
-        s"""SELECT '$c' AS "column", CAST(count(*) AS BIGINT) AS n, CAST(count(DISTINCT v) AS BIGINT) AS ndv, floor(CAST(count(*) AS DOUBLE) / sum(brk) * 1e4 + 0.5) / 1e4 AS mean_run, CASE WHEN count(DISTINCT v) <= 64 AND CAST(count(*) AS DOUBLE) / sum(brk) >= 2.0 THEN 'RLE_DICT' WHEN count(DISTINCT v) <= 64 THEN 'DICT' WHEN count(DISTINCT v) * 2 > count(*) THEN 'PLAIN' ELSE 'DICT' END AS advice FROM (SELECT CASE WHEN lag(v) OVER (PARTITION BY f ORDER BY $ord) IS NULL OR lag(v) OVER (PARTITION BY f ORDER BY $ord) <> v THEN 1 ELSE 0 END AS brk, v FROM (SELECT l_orderkey // 4096 AS f, l_orderkey AS ok, l_linenumber AS ln, ${all.mkString(", ")}, $c AS v FROM lineitem))"""
-      all.map(cte).mkString("", " UNION ALL ", " ORDER BY \"column\"")
-    })
-
-  /** The scale-safe twin of [[qaEncodingAdvisor]]: identical run-length
-    * census (the keyed per-file window is already the 100 TB shape), but
-    * the six exact countDistincts — whose one-agg spelling compiles to an
-    * Expand replicating the scan ×6 into the distinct shuffle — become
-    * six `approx_count_distinct` HLL++ sketches in ONE partial-aggregable
-    * pass: sketches merge map-side, no Expand, nothing but sketch bytes
-    * cross the wire. Advisory sweeps at scale run THIS one; the exact
-    * twin stays as the DuckDB-oracled anchor. No SQL oracle (HLL
-    * estimates are engine-specific); Round11OpsSpec bounds every NDV
-    * estimate within 5% of the exact anchor's and pins all non-NDV
-    * columns identical. */
-  private val qaEncodingAdvisorHll = GraftQuery(
-    "qa_encoding_advisor_hll",
-    "scale-safe encoding advisor: HLL NDV sketches + exact run census, no Expand",
-    (s, d) => {
-      val cols = Seq("l_returnflag", "l_linestatus", "l_shipdate",
-        "l_quantity", "l_suppkey", "l_extendedprice")
-      val li = Tables.lineitem(s, d).select(
-        expr("l_orderkey div 4096").as("f") +: col("l_orderkey").as("ok") +:
-          col("l_linenumber").as("ln") +: cols.map(col): _*)
-      val w = Window.partitionBy("f")
-        .orderBy(col("ok") +: col("ln") +: cols.map(col): _*)
-      // NO spread here (unlike the exact twin): without the Expand the
-      // extra exchange outweighs the wider window stage (measured
-      // neutral-to-worse), and the scale-safe twin keeps the minimal plan
-      val withBrk = cols.foldLeft(li)((df, c) =>
-        df.withColumn(s"brk_$c",
-          when(lag(col(c), 1).over(w).isNull ||
-            lag(col(c), 1).over(w) =!= col(c), 1L).otherwise(0L)))
-      val aggCols = cols.flatMap(c => Seq(
-        sum(s"brk_$c").as(s"runs_$c"),
-        // rsd 0.03 — the qa_column_profile_hll-calibrated register
-        // budget: ~1% observed error against the 5% spec bound
-        approx_count_distinct(col(c), 0.03).as(s"ndv_$c")))
-      val agg = withBrk.agg(count(lit(1)).as("n"), aggCols: _*)
-      agg.selectExpr("n",
-          s"stack(${cols.size}, " +
-            cols.map(c => s"'$c', ndv_$c, runs_$c").mkString(", ") +
-            ") AS (colname, ndv, n_runs)")
-        .select(col("colname").as("column"), col("n"), col("ndv"),
-          fround(col("n").cast("double") / col("n_runs"), 4).as("mean_run"),
-          when(col("ndv") <= 64 &&
-              col("n").cast("double") / col("n_runs") >= 2.0, "RLE_DICT")
-            .when(col("ndv") <= 64, "DICT")
-            .when(col("ndv") * 2 > col("n"), "PLAIN")
-            .otherwise("DICT").as("advice"))
-        .orderBy("column")
-    },
-    None, boundedBy = Some("Round11OpsSpec"))
-
   val all: Seq[GraftQuery] = Seq(
-    qaZonemapPruning, relZorderLayout, relCompactionPlan, qaEncodingAdvisor,
-    qaEncodingAdvisorHll)
+    qaZonemapPruning, relZorderLayout, relCompactionPlan)
 }

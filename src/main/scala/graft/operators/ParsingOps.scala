@@ -140,29 +140,6 @@ object ParsingOps {
     },
     Some("""SELECT n_name, count(*) AS cnt, floor(CAST(sum(CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 * 100.0 + 0.5) / 100.0 AS total_bal FROM customer JOIN nation ON c_nationkey = n_nationkey GROUP BY n_name ORDER BY n_name"""))
 
-  /** Multimodal decode plumbing as a registered capability: binary payloads
-    * → mapPartitions stub decode → per-format stats. The stub decode is
-    * deterministic byte arithmetic and the corpus is pure ASCII (payload
-    * byte == code point), so the DuckDB oracle replays it exactly: widths/
-    * heights from the leading bytes, luma from the exact integer byte sum
-    * (a double sum of integers ≤ 2^53 is exact, so Spark's per-row double
-    * fold equals DuckDB's integer list_sum bit-for-bit). MultimodalSpec
-    * additionally value-checks the typed Dataset API. */
-  private val mmDecode = GraftQuery(
-    "mm_decode_stats",
-    "multimodal: binary payload decode (stubbed codec) + per-format stats",
-    (s, d) => {
-      import org.apache.spark.sql.functions.{avg => favg}
-      val decoded = graft.multimodal.Multimodal.decodeImages(
-        graft.multimodal.Multimodal.mediaTable(s, d))
-      decoded.groupBy("format")
-        .agg(count(lit(1)).as("cnt"),
-          favg("width").as("avg_w"), favg("height").as("avg_h"),
-          fround(favg("mean_luma"), 4).as("avg_luma"))
-        .orderBy("format")
-    },
-    Some("""WITH d AS (SELECT doc_id, 'img/fake-' || source AS format, text, length(text) AS n FROM documents), b AS (SELECT format, 64 + CASE WHEN n >= 1 THEN ascii(substring(text, 1, 1)) % 128 ELSE 0 END AS w, 64 + CASE WHEN n >= 2 THEN ascii(substring(text, 2, 1)) % 128 ELSE 0 END AS h, CASE WHEN n = 0 THEN 0.0 ELSE CAST(list_sum([ascii(substring(text, i, 1)) for i in generate_series(1, n)]) AS DOUBLE) / n END AS luma FROM d) SELECT format, count(*) AS cnt, avg(w) AS avg_w, avg(h) AS avg_h, floor(avg(luma) * 10000.0 + 0.5) / 10000.0 AS avg_luma FROM b GROUP BY 1 ORDER BY 1"""))
-
   /** S7/S10 at scale: the write side of a time-partitioned table and the
     * partition-PRUNED read-back. The rollup is written partitionBy(dy) —
     * at 100 TB this is the layout decision that turns "scan a month" into
@@ -239,146 +216,6 @@ object ParsingOps {
         .orderBy("dy")
     },
     Some("""WITH r AS (SELECT CAST(day(ts) AS INTEGER) AS dy, user_id, count(*) AS cnt, CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS vc FROM events GROUP BY 1, 2), dim AS (SELECT CAST(day(ts) AS INTEGER) AS dy, sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS tot FROM events WHERE event_type = 'purchase' GROUP BY 1 ORDER BY tot DESC, dy LIMIT 3) SELECT r.dy, count(*) AS n_users, CAST(sum(cnt) AS BIGINT) AS n_events, floor(CAST(sum(vc) AS DOUBLE) / 100.0 * 100.0 + 0.5) / 100.0 AS total_value FROM r JOIN dim ON r.dy = dim.dy GROUP BY r.dy ORDER BY r.dy"""))
-
-  /** Multimodal frame-sampling plumbing as a registered capability: every
-    * 16th "frame" of each payload (byte stride in the stub codec; frame
-    * stride with a real video decoder — only the lambda body changes).
-    * The per-media rollup is exact integer math (byte sums), so the DuckDB
-    * oracle replays the stride and luma bit-for-bit. */
-  private val mmFrameSample = GraftQuery(
-    "mm_frame_sample",
-    "multimodal: stride frame sampling (stub codec) + per-media luma rollup",
-    (s, d) => {
-      val frames = graft.multimodal.Multimodal.frameSample(
-        graft.multimodal.Multimodal.mediaTable(s, d), 16)
-      frames.groupBy("media_id")
-        .agg(count(lit(1)).as("n_frames"),
-          fround(sum(col("luma")) / count(lit(1)), 4).as("avg_luma"),
-          max("frame_idx").as("last_idx"))
-        .orderBy("media_id")
-    },
-    Some("""WITH f AS (SELECT doc_id AS media_id, [ascii(substring(text, i, 1)) for i in generate_series(1, length(text), 16)] AS lumas FROM documents) SELECT media_id, CAST(len(lumas) AS BIGINT) AS n_frames, floor(CAST(list_sum(lumas) AS DOUBLE) / len(lumas) * 10000.0 + 0.5) / 10000.0 AS avg_luma, CAST(len(lumas) - 1 AS INTEGER) AS last_idx FROM f ORDER BY media_id"""))
-
-  /** Column profiling — the data-quality sweep every ingestion runs before
-    * trusting a table (row count, null count, distinct cardinality, value
-    * range per column). ONE pass over the table produces every column's
-    * profile (a per-column loop of count queries would scan the fact N
-    * times); the wide aggregate row is then unpivoted to the long
-    * (column, metric...) shape catalogs store. Values are stringified for
-    * the uniform schema; doubles go through centi-units so both engines
-    * print identical integers (raw double→string formatting differs). */
-  private val qaProfile = GraftQuery(
-    "qa_column_profile",
-    "one-pass column profiling of orders: nulls, distincts, min/max per column",
-    (s, d) => {
-      // one (label, exact-value expr) row per profiled column: the agg
-      // block AND the stack unpivot are both GENERATED from this list, so
-      // adding a column cannot misalign them (doubles go through centi so
-      // both engines stringify identical integers)
-      val profiled: Seq[(String, Column)] = Seq(
-        "o_orderkey" -> col("o_orderkey"),
-        "o_custkey" -> col("o_custkey"),
-        "o_totalprice_c" -> graft.functions.GraftFunctions.centi(col("o_totalprice")),
-        "o_orderpriority" -> col("o_orderpriority"))
-      val aggs = count(lit(1)).as("n") +:
-        profiled.zipWithIndex.flatMap { case ((_, c), i) => Seq(
-          sum(when(c.isNull, 1L).otherwise(0L)).as(s"nulls_$i"),
-          countDistinct(c).as(s"distinct_$i"),
-          min(c).cast("string").as(s"min_$i"),
-          max(c).cast("string").as(s"max_$i")) }
-      val stackRows = profiled.zipWithIndex.map { case ((label, _), i) =>
-        s"'$label', n, nulls_$i, distinct_$i, min_$i, max_$i" }.mkString(", ")
-      // the 3-countDistinct Expand (x4 rows into the partial agg) ran on
-      // the single scan task - spread (scale-gated) fans it out first
-      Tables.spread(s, Tables.orders(s, d), col("o_orderkey"))
-        .agg(aggs.head, aggs.tail: _*)
-        .selectExpr(s"stack(${profiled.size}, $stackRows)" +
-          " AS (column, n, nulls, n_distinct, min_v, max_v)")
-        .orderBy("column")
-    },
-    Some("""WITH a AS (SELECT count(*) AS n, CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS k_nulls, count(DISTINCT o_orderkey) AS k_distinct, CAST(min(o_orderkey) AS VARCHAR) AS k_min, CAST(max(o_orderkey) AS VARCHAR) AS k_max, CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS c_nulls, count(DISTINCT o_custkey) AS c_distinct, CAST(min(o_custkey) AS VARCHAR) AS c_min, CAST(max(o_custkey) AS VARCHAR) AS c_max, CAST(sum(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS p_nulls, count(DISTINCT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS p_distinct, CAST(min(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS VARCHAR) AS p_min, CAST(max(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS VARCHAR) AS p_max, CAST(sum(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS s_nulls, count(DISTINCT o_orderpriority) AS s_distinct, min(o_orderpriority) AS s_min, max(o_orderpriority) AS s_max FROM orders) SELECT * FROM (SELECT 'o_orderkey' AS "column", n, k_nulls AS nulls, k_distinct AS n_distinct, k_min AS min_v, k_max AS max_v FROM a UNION ALL SELECT 'o_custkey', n, c_nulls, c_distinct, c_min, c_max FROM a UNION ALL SELECT 'o_totalprice_c', n, p_nulls, p_distinct, p_min, p_max FROM a UNION ALL SELECT 'o_orderpriority', n, s_nulls, s_distinct, s_min, s_max FROM a) ORDER BY "column""""))
-
-  /** The scale-safe twin of [[qaProfile]]: identical shape, but distinct
-    * cardinalities come from `approx_count_distinct` (HLL++) instead of
-    * exact `countDistinct`. The exact form's three distinct aggregates in
-    * one global agg compile to an Expand that replicates the full scan ×4
-    * into the distinct shuffle — fine at test scale, a corpus-width ×4
-    * shuffle at 100 TB. The HLL form is one partial-aggregatable pass:
-    * sketches merge map-side, nothing but sketch bytes cross the wire, and
-    * the plan has no Expand. Profiling sweeps at scale run THIS one; the
-    * exact twin stays as the DuckDB-oracled correctness anchor. No SQL
-    * oracle (HLL estimates are engine-specific); QaProfileHllSpec asserts
-    * every estimate within 5% of exact and all non-distinct metrics
-    * identical to the exact twin's. */
-  private val qaProfileHll = GraftQuery(
-    "qa_column_profile_hll",
-    "scale-safe column profile: approx_count_distinct sketches, no Expand",
-    (s, d) => {
-      val profiled: Seq[(String, Column)] = Seq(
-        "o_orderkey" -> col("o_orderkey"),
-        "o_custkey" -> col("o_custkey"),
-        "o_totalprice_c" -> graft.functions.GraftFunctions.centi(col("o_totalprice")),
-        "o_orderpriority" -> col("o_orderpriority"))
-      val aggs = count(lit(1)).as("n") +:
-        profiled.zipWithIndex.flatMap { case ((_, c), i) => Seq(
-          sum(when(c.isNull, 1L).otherwise(0L)).as(s"nulls_$i"),
-          // rsd 0.03: 2x the default's register budget buys ~1% observed
-          // error (spec bound 5%), while rsd 0.01's 25x registers cost
-          // ~4x the whole query's runtime for accuracy nothing needs
-          approx_count_distinct(c, 0.03).as(s"distinct_$i"),
-          min(c).cast("string").as(s"min_$i"),
-          max(c).cast("string").as(s"max_$i")) }
-      val stackRows = profiled.zipWithIndex.map { case ((label, _), i) =>
-        s"'$label', n, nulls_$i, distinct_$i, min_$i, max_$i" }.mkString(", ")
-      // NO spread here (unlike the exact twin): without the Expand there
-      // is too little per-row work to amortize the extra exchange —
-      // measured 0.40 s -> 0.71-0.98 s with it, so the sketch pass stays
-      // on the plain scan
-      Tables.orders(s, d).agg(aggs.head, aggs.tail: _*)
-        .selectExpr(s"stack(${profiled.size}, $stackRows)" +
-          " AS (column, n, nulls, n_distinct, min_v, max_v)")
-        .orderBy("column")
-    },
-    None, boundedBy = Some("OperatorSpec"))
-
-  /** Expectation checks — the dbt-test/assertion verb that gates a
-    * pipeline stage: each rule computes its VIOLATION count (0 = pass) in
-    * the cheapest scale shape for that rule class — uniqueness via one
-    * keyed aggregate, referential integrity via LEFT ANTI joins (never a
-    * distinct-collect), range rules as scan-riding filters. Rules run as
-    * one union of small aggregates; a 100 TB deployment runs the same plan
-    * per partition-increment instead of full-table. */
-  private val qaExpectations = GraftQuery(
-    "qa_expectations",
-    "expectation suite: uniqueness, referential integrity, range rules with violation counts",
-    (s, d) => {
-      val o = Tables.orders(s, d)
-      val li = Tables.lineitem(s, d)
-      val c = Tables.customer(s, d)
-      def rule(name: String, violations: org.apache.spark.sql.DataFrame) =
-        violations.select(lit(name).as("rule"), col("violations"))
-      val unique = rule("orderkey_unique",
-        o.groupBy("o_orderkey").agg(count(lit(1)).as("n"))
-          .filter(col("n") > 1)
-          .agg(coalesce(sum(col("n") - 1), lit(0L)).as("violations")))
-      val refCust = rule("orders_ref_customer",
-        o.join(c, col("o_custkey") === col("c_custkey"), "left_anti")
-          .agg(count(lit(1)).as("violations")))
-      val refOrd = rule("lineitem_ref_orders",
-        li.join(o, col("l_orderkey") === col("o_orderkey"), "left_anti")
-          .agg(count(lit(1)).as("violations")))
-      val price = rule("totalprice_positive",
-        o.filter(col("o_totalprice") <= 0).agg(count(lit(1)).as("violations")))
-      val qty = rule("quantity_in_band",
-        li.filter(!col("l_quantity").between(1, 50))
-          .agg(count(lit(1)).as("violations")))
-      unique.unionByName(refCust).unionByName(refOrd)
-        .unionByName(price).unionByName(qty)
-        .withColumn("status", when(col("violations") === 0, lit("pass"))
-          .otherwise(lit("fail")))
-        .orderBy("rule")
-    },
-    Some("""WITH t(rule, violations) AS (SELECT 'orderkey_unique', CAST(coalesce(sum(n - 1), 0) AS BIGINT) FROM (SELECT o_orderkey, count(*) AS n FROM orders GROUP BY 1 HAVING count(*) > 1) UNION ALL SELECT 'orders_ref_customer', count(*) FROM orders WHERE NOT EXISTS (SELECT 1 FROM customer WHERE c_custkey = o_custkey) UNION ALL SELECT 'lineitem_ref_orders', count(*) FROM lineitem WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_orderkey = l_orderkey) UNION ALL SELECT 'totalprice_positive', count(*) FROM orders WHERE o_totalprice <= 0 UNION ALL SELECT 'quantity_in_band', count(*) FROM lineitem WHERE l_quantity NOT BETWEEN 1 AND 50) SELECT rule, violations, CASE WHEN violations = 0 THEN 'pass' ELSE 'fail' END AS status FROM t ORDER BY rule"""))
 
   /** SCD type-2 dimension merge — the warehouse temporal-versioning verb:
     * an incoming change batch closes the current version of each changed
@@ -678,114 +515,6 @@ object ParsingOps {
     },
     Some("""WITH log AS (SELECT user_id, ts, event_id, CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc, CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS is_del FROM events), r AS (SELECT user_id, event_id, vc, is_del, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn, CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n_changes FROM log) SELECT user_id, event_id AS last_event_id, vc AS last_value_c, n_changes FROM r WHERE rn = 1 AND is_del = 0 ORDER BY user_id"""))
 
-  /** Exact pairwise COVARIANCE matrix over the lineitem numerics — the
-    * feature-correlation profile a modeling pipeline computes before
-    * training. Everything is one single-pass global aggregate (map-side
-    * combined: 4 linear + 10 product sums), so the corpus is scanned ONCE
-    * with no shuffle beyond the 1-row combine. Exactness: inputs are ≤2dp,
-    * so centi-int products are exact longs (≤ ~1e14) and their sums are
-    * kept exact in decimal(38,0) (DuckDB: HUGEINT — both lossless), and
-    * cov = (n·Σxy − Σx·Σy)/n² is formed from exact integers with ONE
-    * int→double conversion and an identical division sequence in both
-    * engines, so the rounded output is bit-stable. The 4×4 matrix is
-    * reshaped to rows with stack() — no extra pass. */
-  private val qaCovMatrix = GraftQuery(
-    "qa_cov_matrix",
-    "exact single-pass pairwise covariance matrix of lineitem numerics",
-    (s, d) => {
-      val cols = Seq(
-        "q" -> centi(col("l_quantity")), "p" -> centi(col("l_extendedprice")),
-        "d" -> centi(col("l_discount")), "t" -> centi(col("l_tax")))
-      val pairs = for {
-        (i, (nx, _)) <- cols.zipWithIndex.map(_.swap)
-        (ny, _) <- cols.drop(i)
-      } yield (nx, ny)
-      val base = Tables.lineitem(s, d).select(
-        cols.map { case (n, c) => c.as(n) }: _*)
-      val sums = base.agg(
-        count(lit(1)).as("n"),
-        (cols.map { case (n, _) => sum(col(n)).as(s"s_$n") } ++
-          pairs.map { case (x, y) =>
-            sum((col(x) * col(y)).cast("decimal(38,0)")).as(s"s_${x}_$y") }): _*)
-      val covExprs = pairs.flatMap { case (x, y) =>
-        Seq(lit(x), lit(y),
-          fround((col("n").cast("decimal(38,0)") * col(s"s_${x}_$y") -
-              col(s"s_$x").cast("decimal(38,0)") * col(s"s_$y"))
-            .cast("double") / (col("n") * col("n")).cast("double") / 10000.0,
-            4))
-      }
-      sums.select(stack((lit(pairs.size) +: covExprs): _*).as(Seq("cx", "cy", "cov")))
-        .orderBy("cx", "cy")
-    },
-    Some {
-      val defs = Seq(
-        "q" -> "CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)",
-        "p" -> "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)",
-        "d" -> "CAST(floor(l_discount * 100 + 0.5) AS BIGINT)",
-        "t" -> "CAST(floor(l_tax * 100 + 0.5) AS BIGINT)")
-      val pairs = for {
-        (i, (nx, _)) <- defs.zipWithIndex.map(_.swap); (ny, _) <- defs.drop(i)
-      } yield (nx, ny)
-      val proj = defs.map { case (n, e) => s"$e AS $n" }.mkString(", ")
-      val aggs = (defs.map { case (n, _) => s"sum($n) AS s_$n" } ++
-        pairs.map { case (x, y) => s"sum($x * $y) AS s_${x}_$y" }).mkString(", ")
-      val rows = pairs.map { case (x, y) =>
-        s"SELECT '$x' AS cx, '$y' AS cy, floor(CAST(n * s_${x}_$y - s_$x * s_$y AS DOUBLE) / CAST(n * n AS DOUBLE) / 10000.0 * 10000.0 + 0.5) / 10000.0 AS cov FROM s"
-      }.mkString(" UNION ALL ")
-      s"WITH b AS (SELECT $proj FROM lineitem), s AS (SELECT count(*) AS n, $aggs FROM b) SELECT * FROM ($rows) ORDER BY cx, cy"
-    })
-
-  /** Gini impurity of the language mix per source — label-diversity QA for
-    * a multilingual corpus (a source collapsing to one language, or
-    * splintering into noise, both show up here). gini = 1 − Σ(cᵢ/n)² is a
-    * RATIONAL in the counts, so it's emitted as exact integer ppm via
-    * (n²−Σcᵢ²)·10⁶ div n² — floor division agrees across engines on
-    * positives, no float anywhere. Scale: groupBy (source, lang) is one
-    * map-side-combined shuffle to label-cardinality rows; the per-source
-    * fold is negligible. */
-  private val qaLabelGini = GraftQuery(
-    "qa_label_gini",
-    "per-source language-mix Gini impurity in exact integer ppm",
-    (s, d) => Tables.documents(s, d)
-      .groupBy("source", "lang").agg(count(lit(1)).as("c"))
-      .groupBy("source")
-      .agg(sum("c").as("n_docs"), count(lit(1)).as("n_langs"),
-        sum(col("c") * col("c")).as("s2"))
-      .select(col("source"), col("n_docs"), col("n_langs"),
-        expr("((n_docs * n_docs - s2) * 1000000) div (n_docs * n_docs)").as("gini_ppm"))
-      .orderBy("source"),
-    Some("""WITH c AS (SELECT source, lang, CAST(count(*) AS BIGINT) AS c FROM documents GROUP BY 1, 2), g AS (SELECT source, CAST(sum(c) AS BIGINT) AS n_docs, CAST(count(*) AS BIGINT) AS n_langs, CAST(sum(c * c) AS BIGINT) AS s2 FROM c GROUP BY 1) SELECT source, n_docs, n_langs, ((n_docs * n_docs - s2) * 1000000) // (n_docs * n_docs) AS gini_ppm FROM g ORDER BY source"""))
-
-  /** Exact equi-depth histogram boundaries for o_totalprice at
-    * whole-dollar granularity — the optimizer/QA statistic behind range
-    * pruning and skew detection. Exact deciles over a corpus need a total
-    * order, so the corpus is first REDUCED to dollar price levels
-    * (cardinality bounded by the price RANGE, not the row count — the
-    * same level-reduce rel_skyline uses); the cumulative count runs over
-    * those levels only, and the k-th boundary is the first level whose
-    * cumulative count reaches ceil(k·n/10) — all integer arithmetic. The
-    * 9-row decile spine broadcasts into the level table. At 100 TB the
-    * same shape holds wherever the value domain is bounded; an unbounded
-    * domain falls back to approx_percentile (the repo's t-digest twin). */
-  private val qaEquidepthHist = GraftQuery(
-    "qa_equidepth_hist",
-    "exact equi-depth decile boundaries over dollar price levels",
-    (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val lvl = Tables.orders(s, d)
-        .select(floor(col("o_totalprice")).cast("long").as("lvl"))
-        .groupBy("lvl").agg(count(lit(1)).as("cnt"))
-        .withColumn("cum", sum("cnt").over(
-          Window.orderBy("lvl").rowsBetween(Window.unboundedPreceding, 0)))
-      val n = Tables.orders(s, d).count()
-      val spine = s.range(1, 10).select(col("id").as("k"),
-        ((col("id") * n + 9) / 10).cast("long").as("thr"))
-      lvl.join(broadcast(spine), col("cum") >= col("thr"))
-        .groupBy("k").agg(min("lvl").as("boundary_dollars"))
-        .orderBy("k")
-    },
-    Some("""WITH lvl AS (SELECT CAST(floor(o_totalprice) AS BIGINT) AS lvl, count(*) AS cnt FROM orders GROUP BY 1), c AS (SELECT lvl, sum(cnt) OVER (ORDER BY lvl ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM lvl), t AS (SELECT count(*) AS n FROM orders), s AS (SELECT k, (k * n + 9) // 10 AS thr FROM generate_series(1, 9) g(k), t) SELECT CAST(k AS BIGINT) AS k, CAST(min(lvl) AS BIGINT) AS boundary_dollars FROM c JOIN s ON cum >= thr GROUP BY 1 ORDER BY 1"""))
-
   /** Multimodal RESIZE plumbing (the remaining verb of the decode /
     * feature-extract / resize / frame-sample quartet): nearest-neighbor
     * downsample of each payload to an 8×8 sample grid via the stub
@@ -936,7 +665,7 @@ object ParsingOps {
 
   /** Multimodal AUDIO-FEATURE shape: payload bytes read as unsigned 8-bit
     * PCM samples (the stub decode — text bytes stand in for a real
-    * codec's output, same note as mm_decode_stats), cut into
+    * codec's output), cut into
     * non-overlapping 32-sample frames, per-frame energy Σ(s−64)² as an
     * EXACT integer, silence = energy under a fixed integer threshold.
     * Per clip: frame count, silent-frame count, total energy, RMS. This
@@ -1066,12 +795,11 @@ object ParsingOps {
 
   val all: Seq[GraftQuery] = Seq(
     csvRoundtrip, jsonStruct, jsonInferred, dateConstruct, sqlMultikeyJoin,
-    mvCascade, sqlCtas, mmDecode, partitionPruned, dppPrune, mmFrameSample,
-    qaProfile, qaProfileHll, qaExpectations, scd2Merge, mvIncrementalAgg,
-    qaTableChecksum, qaRefIntegrity, qaKeySkew, mvCompactCdc, qaCovMatrix,
-    qaLabelGini, qaEquidepthHist, mmResize, scd2Asof, mmPhash,
-    mvLambdaServing, sqlRecursiveHierarchy, mmAudioEnergy,
-    qaFingerprintCollisions, mmShotBoundary)
+    mvCascade, sqlCtas, partitionPruned, dppPrune, scd2Merge,
+    mvIncrementalAgg, qaTableChecksum, qaRefIntegrity, qaKeySkew,
+    mvCompactCdc, mmResize, scd2Asof, mmPhash, mvLambdaServing,
+    sqlRecursiveHierarchy, mmAudioEnergy, qaFingerprintCollisions,
+    mmShotBoundary)
 
   /** Time-travel READ over the SCD2 dimension — "the dimension as of
     * 2024-07-01": for each key, exactly the one version whose

@@ -689,65 +689,6 @@ object SimilarityOps {
     cur.agg(sum(col("dmin").cast("decimal(28,0)")).as("i"))
       .collect().head.getDecimal(0).longValueExact()
 
-  /** Whitening TRANSFORM (the apply step over emb_dim_profile's stats):
-    * each vector component standardized to z = (x − μ_dim)/σ_dim — the
-    * preprocessing step before cosine/PCA when dimensions carry different
-    * scales. Stats come from the same integer-micro exact sums as the
-    * profile (shared microDims base), broadcast into the per-element
-    * transform; shown for the first 20 vectors so the output stays
-    * result-sized while the stats pass is corpus-wide. Scale: one
-    * map-side-combined 64-group agg + a broadcast join riding the scan —
-    * the transform itself never shuffles. */
-  private lazy val embWhitening = GraftQuery(
-    "emb_whitening",
-    "per-dim standardization transform z=(x-μ)/σ from integer-exact stats",
-    (s, d) => {
-      val md = microDims(s, d)
-      val stats = md.groupBy("dim").agg(count(lit(1)).as("n"),
-        sum("micro").as("sm"),
-        sum((col("micro") * col("micro")).cast("decimal(38,0)")).as("sm2"))
-      val mean = col("sm").cast("double") / col("n")
-      md.filter(col("vec_id") < 20)
-        .join(broadcast(stats), Seq("dim"))
-        .select(col("vec_id"), col("dim"),
-          fround((col("micro") - mean) /
-            sqrt(col("sm2").cast("double") / col("n") - mean * mean), 4)
-            .as("z"))
-        .orderBy("vec_id", "dim")
-    },
-    Some("""WITH mic AS (SELECT vec_id, dim, CAST(floor(CAST(embedding[dim] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS micro FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS dim)), st AS (SELECT dim, count(*) AS n, CAST(sum(micro) AS BIGINT) AS sm, sum(micro * micro) AS sm2 FROM mic GROUP BY 1) SELECT vec_id, dim, floor((micro - CAST(sm AS DOUBLE) / n) / sqrt(CAST(sm2 AS DOUBLE) / n - (CAST(sm AS DOUBLE) / n) * (CAST(sm AS DOUBLE) / n)) * 1e4 + 0.5) / 1e4 AS z FROM mic JOIN st USING (dim) WHERE vec_id < 20 ORDER BY 1, 2"""))
-
-  /** Isotropy diagnostic WITHOUT any pairwise work: the average
-    * cross-vector dot product equals (‖Σv‖² − Σ‖v‖²)/(n(n−1)) — two
-    * corpus-sized sums instead of n² pairs (the algebraic identity that
-    * makes "is my embedding space collapsing toward a common direction"
-    * an O(n·d) question). Everything is integer-micro exact with 128-bit
-    * squares (‖Σv‖² passes 2^63 immediately); floats appear only in the
-    * three output ratios. Isotropy ≈ 0 is healthy; → 1 means all vectors
-    * share a dominant direction. */
-  private lazy val embIsotropy = GraftQuery(
-    "emb_isotropy",
-    "mean cross-vector dot via the sum-vector identity — no pairwise pass",
-    (s, d) => {
-      val md = microDims(s, d)
-      val dimSums = md.groupBy("dim").agg(sum("micro").as("sd"))
-      val a = dimSums.agg(
-        sum(col("sd").cast("decimal(38,0)") * col("sd")).as("ss"))
-      val b = md.agg(
-        sum((col("micro") * col("micro")).cast("decimal(38,0)")).as("tn"),
-        countDistinct("vec_id").as("n"))
-      a.crossJoin(b).select(col("n").as("n_vecs"),
-        fround(col("tn").cast("double") / col("n") / 1e12, 8)
-          .as("avg_self_dot"),
-        fround((col("ss") - col("tn")).cast("double") /
-          (col("n") * (col("n") - lit(1L))).cast("double") / 1e12, 8)
-          .as("avg_pair_dot"),
-        fround(((col("ss") - col("tn")).cast("double") /
-          (col("n") * (col("n") - lit(1L))).cast("double")) /
-          (col("tn").cast("double") / col("n")), 6).as("isotropy"))
-    },
-    Some("""WITH mic AS (SELECT vec_id, dim, CAST(floor(CAST(embedding[dim] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS micro FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS dim)), ds AS (SELECT dim, CAST(sum(micro) AS BIGINT) AS sd FROM mic GROUP BY 1), a AS (SELECT sum(CAST(sd AS HUGEINT) * sd) AS ss FROM ds), b AS (SELECT sum(CAST(micro AS HUGEINT) * micro) AS tn, CAST(count(DISTINCT vec_id) AS BIGINT) AS n FROM mic) SELECT n AS n_vecs, floor(CAST(tn AS DOUBLE) / n / 1e12 * 1e8 + 0.5) / 1e8 AS avg_self_dot, floor(CAST(ss - tn AS DOUBLE) / CAST(n * (n - 1) AS DOUBLE) / 1e12 * 1e8 + 0.5) / 1e8 AS avg_pair_dot, floor((CAST(ss - tn AS DOUBLE) / CAST(n * (n - 1) AS DOUBLE)) / (CAST(tn AS DOUBLE) / n) * 1e6 + 0.5) / 1e6 AS isotropy FROM a CROSS JOIN b"""))
-
   /** ANN RECALL EVALUATION — the measurement that justifies shipping an
     * approximate index: recall@3 of the sign-LSH in-bucket top-3 against
     * the exact brute-force top-3, per probe. The eval is itself a query
@@ -815,7 +756,7 @@ object SimilarityOps {
     * regressions before they poison an index rebuild. Exactness: per-dim
     * sums ride integer micro-units; the cross-half difference
     * d_i = s0·c1 − s1·c0 clears denominators, so Σ d_i² is an EXACT
-    * 128-bit integer (DECIMAL(38,0)/HUGEINT — the emb_isotropy pattern)
+    * 128-bit integer (DECIMAL(38,0)/HUGEINT)
     * and float math happens once per label at the output edge. Scale: one
     * posexplode pass, one (label, half, dim)-keyed rollup, then
     * label-sized frames. */
@@ -1198,12 +1139,12 @@ object SimilarityOps {
     },
     Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm FROM e), bq AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM n WHERE vec_id % 50 = 0), bsc AS (SELECT bq.q_id, c.vec_id AS n_id, list_sum([s[1]*s[2] for s in list_zip(bq.qv, c.v)]) / (bq.qn * c.nrm) AS cos FROM bq JOIN n c ON c.vec_id <> bq.q_id), b10 AS (SELECT q_id, n_id, rnk AS brnk FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY floor(cos * 1000000.0 + 0.5) DESC, n_id) AS rnk FROM bsc) WHERE rnk <= 10), proj AS (SELECT vec_id, p, list_sum([(CASE WHEN instr('0123456789abcdef', substr(md5(p::VARCHAR || ':' || (i-1)::VARCHAR), 1, 1)) % 2 = 1 THEN 1.0 ELSE -1.0 END) * v[i] for i in generate_series(1, len(v))]) AS dp FROM n, (SELECT unnest(generate_series(0, 7)) AS p)), codes AS (SELECT vec_id, CAST(sum(CASE WHEN dp > 0 THEN 1 << p ELSE 0 END) AS BIGINT) AS code FROM proj GROUP BY 1), c2 AS (SELECT n.vec_id, n.v, n.nrm, codes.code FROM n JOIN codes USING (vec_id)), lq AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn, code AS qcode FROM c2 WHERE vec_id % 50 = 0), lsc AS (SELECT lq.q_id, c2.vec_id AS n_id, list_sum([s[1]*s[2] for s in list_zip(lq.qv, c2.v)]) / (lq.qn * c2.nrm) AS cos FROM lq JOIN c2 ON c2.code = lq.qcode AND c2.vec_id <> lq.q_id), l10 AS (SELECT q_id, n_id, rnk AS lrnk FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY floor(cos * 1000000.0 + 0.5) DESC, n_id) AS rnk FROM lsc) WHERE rnk <= 10), ks AS (SELECT unnest([1, 3, 5, 10]) AS k), hits AS (SELECT k, CAST(count(*) AS BIGINT) AS n_common FROM b10 JOIN l10 USING (q_id, n_id), ks WHERE brnk <= k AND lrnk <= k GROUP BY 1), pr AS (SELECT CAST(count(*) AS BIGINT) AS n_probes FROM b10 WHERE brnk = 1) SELECT CAST(ks.k AS INTEGER) AS k, n_probes, coalesce(hits.n_common, 0) AS n_common, floor(CAST(coalesce(hits.n_common, 0) AS DOUBLE) / (ks.k * n_probes) * 1e4 + 0.5) / 1e4 AS mean_recall FROM ks LEFT JOIN hits ON hits.k = ks.k CROSS JOIN pr ORDER BY 1"""))
 
-  val all: Seq[GraftQuery] = Seq(knnBrute, labelStats, knnLsh, knnMatryoshka,
-    embCentroids, embDimProfile, embAssignPurity, dedupSemantic,
-    embPrototypicality, simHubness, hardNegatives, embKmeansStep,
-    embSimHistogram, embPcaPower, embPcaVar, embKmeansppSeed, embWhitening,
-    embIsotropy, simRecallEval, knnLabelAccuracy, embCentroidDrift,
-    embConcentration, embSignFidelity, embIntrinsicDim, embSilhouette,
-    embMahalanobis, knnMargin, embJlDistortion, simRankSpearman,
-    simRecallCurve)
+  val all: Seq[GraftQuery] = Seq(
+    knnBrute, labelStats, knnLsh, knnMatryoshka, embCentroids,
+    embDimProfile, embAssignPurity, dedupSemantic, embPrototypicality,
+    simHubness, hardNegatives, embKmeansStep, embSimHistogram, embPcaPower,
+    embPcaVar, embKmeansppSeed, simRecallEval, knnLabelAccuracy,
+    embCentroidDrift, embConcentration, embSignFidelity, embIntrinsicDim,
+    embSilhouette, embMahalanobis, knnMargin, embJlDistortion,
+    simRankSpearman, simRecallCurve)
 }

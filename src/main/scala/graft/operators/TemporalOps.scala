@@ -375,7 +375,7 @@ object TemporalOps {
 
   /** Lag-1 autocorrelation of each event type's time-ordered value
     * series — the "is this metric momentum or noise" diagnostic — via the
-    * same exact-sufficient-statistics discipline as qa_ols_trend: lag
+    * exact-sufficient-statistics discipline (integer moment sums): lag
     * pairs from ONE type-keyed window pass, six integer sums, float math
     * only in the final Pearson ratio. */
   private val autocorr = GraftQuery(
@@ -1064,7 +1064,7 @@ object TemporalOps {
     * intervention date (Jan 16) and report the level jump at the cutoff
     * and the slope change — the two coefficients an ITS analysis
     * publishes. Both fits come from exact integer sufficient statistics
-    * (the qa_ols_trend machinery) per event type; the only floats are
+    * (integer moment sums) per event type; the only floats are
     * the final coefficient divisions. One daily rollup + one type-keyed
     * agg per segment. */
   private val interruptedTs = GraftQuery(

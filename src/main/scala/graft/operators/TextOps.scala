@@ -48,30 +48,6 @@ object TextOps {
     },
     Some("""SELECT doc_id, CAST(len(string_split(lower(text), ' ')) AS INTEGER) AS n_tok, CAST(length(text) AS INTEGER) AS n_char, floor(CAST(length(replace(text, ' ', '')) AS DOUBLE) / len(string_split(lower(text), ' ')) * 10000.0 + 0.5) / 10000.0 AS avg_tok_len FROM documents ORDER BY doc_id"""))
 
-  /** Heuristic quality score: stopword ratio, long-token ratio, length band.
-    * All components are exact integer ratios, so the composite double is
-    * bit-identical across engines before rounding. */
-  private val quality = GraftQuery(
-    "txt_quality",
-    "document quality scoring from length/stopword/long-token ratios",
-    (s, d) => {
-      // tokenize once into a column: the three lambda-bearing ratio
-      // filters fall out of whole-stage codegen, so inline copies of the
-      // split re-run per reference; SPARK-36718 keeps the projections
-      // apart (split = non-cheap, multiply-referenced)
-      val t = col("t")
-      val (stop, long, band) = (stopRatio(t), longRatio(t), lenOk(t))
-      Tables.documents(s, d)
-        .select(col("doc_id"), tokens(col("text")).as("t"))
-        .select(
-          col("doc_id"),
-          fround(stop, 4).as("stop_ratio"),
-          fround(long, 4).as("long_ratio"),
-          fround(qualityScore(stop, long, band), 4).as("quality"))
-        .orderBy("doc_id")
-    },
-    Some(s"""SELECT doc_id, floor(stop_ratio * 10000.0 + 0.5) / 10000.0 AS stop_ratio, floor(long_ratio * 10000.0 + 0.5) / 10000.0 AS long_ratio, floor((stop_ratio * 0.3 + long_ratio * 0.4 + len_ok * 0.3) * 10000.0 + 0.5) / 10000.0 AS quality FROM (SELECT doc_id, CAST(len(list_filter(t, x -> x IN (${stopwords.map("'" + _ + "'").mkString(", ")}))) AS DOUBLE) / len(t) AS stop_ratio, CAST(len(list_filter(t, x -> length(x) > 4)) AS DOUBLE) / len(t) AS long_ratio, CASE WHEN len(t) BETWEEN 20 AND 200 THEN 1.0 ELSE 0.0 END AS len_ok FROM (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents)) ORDER BY doc_id"""))
-
   /** Marker-token language-ID heuristic. The synthetic corpus is English-
     * vocabulary for every `lang` label, so the heuristic's *accuracy* is
     * data-limited; the operator (marker scoring + argmax classification)
@@ -383,7 +359,7 @@ object TextOps {
     * disagreeing ulp landing EXACTLY on a .5 micro-unit boundary would
     * flip the floor. Both are correctly-rounded to well under 1 ulp and
     * have matched on every (cnt,total) pair across all three SFs
-    * (txt_tfidf runs the same ln lockstep); a corpus that ever trips
+    * (txt_unigram_logprob's per-token ln terms); a corpus that ever trips
     * this will surface as a hash mismatch in the driver gate, and the
     * fallback is to micro-round cnt/total BEFORE the ln on both sides —
     * applied HERE and in [[lpPerDocCtes]], nowhere else. */
@@ -425,35 +401,6 @@ object TextOps {
       .orderBy("doc_id"),
     Some("WITH " + lpPerDocCtes("") +
       " SELECT doc_id, n_tok, floor(CAST(lp_sum AS DOUBLE) / (n_tok * 1000000.0) * 10000.0 + 0.5) / 10000.0 AS avg_logprob FROM pd ORDER BY doc_id"))
-
-  /** BPE-style pretokenization — the GPT-2-family pretokenizer skeleton:
-    * split into letter runs, digit runs, and punctuation runs by regex
-    * classes (the step that precedes merge-table lookup in a real BPE).
-    * Runs over `events.props` because that column has mixed
-    * letter/digit/punct content; the documents corpus is space-separated
-    * lowercase words by construction, where the BPE-ish and whitespace
-    * tokenizers coincide (txt_token_stats covers that case). Per-row regex
-    * work + one small keyed aggregation — embarrassingly parallel; all
-    * compared values are exact integer counts. Identical character-class
-    * regexes evaluate identically under Java regex and RE2. */
-  private val bpePretokenize = GraftQuery(
-    "txt_bpe_pretokenize",
-    "BPE-ish pretokenizer counts (letter/digit/punct runs) per event type",
-    (s, d) => {
-      val t = lower(col("props"))
-      Tables.events(s, d)
-        .select(col("event_type"),
-          size(regexp_extract_all(t, lit("[a-z]+|[0-9]+|[^a-z0-9 ]+"), lit(0))).as("n_tok"),
-          size(regexp_extract_all(t, lit("[a-z]+"), lit(0))).as("n_alpha"),
-          size(regexp_extract_all(t, lit("[0-9]+"), lit(0))).as("n_digit"),
-          size(regexp_extract_all(t, lit("[^a-z0-9 ]+"), lit(0))).as("n_punct"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_rows"),
-          sum("n_tok").as("tokens"), sum("n_alpha").as("alpha_runs"),
-          sum("n_digit").as("digit_runs"), sum("n_punct").as("punct_runs"))
-        .orderBy("event_type")
-    },
-    Some("""SELECT event_type, count(*) AS n_rows, CAST(sum(len(regexp_extract_all(lower(props), '[a-z]+|[0-9]+|[^a-z0-9 ]+'))) AS BIGINT) AS tokens, CAST(sum(len(regexp_extract_all(lower(props), '[a-z]+'))) AS BIGINT) AS alpha_runs, CAST(sum(len(regexp_extract_all(lower(props), '[0-9]+'))) AS BIGINT) AS digit_runs, CAST(sum(len(regexp_extract_all(lower(props), '[^a-z0-9 ]+'))) AS BIGINT) AS punct_runs FROM events GROUP BY 1 ORDER BY 1"""))
 
   /** Per-document NOVELTY — the share of a doc's 4-gram shingles that
     * appear in no other document. The dedup diagnostic that separates
@@ -633,8 +580,7 @@ object TextOps {
     Some("""WITH tok AS (SELECT source, unnest(string_split(lower(text), ' ')) AS tok FROM documents), v AS (SELECT tok FROM (SELECT tok, count(*) AS cnt FROM tok GROUP BY 1 ORDER BY cnt DESC, tok LIMIT 16)), j AS (SELECT t.source, CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END AS oov FROM tok t LEFT JOIN v ON v.tok = t.tok) SELECT source, count(*) AS n_tok, CAST(sum(oov) AS BIGINT) AS n_oov, (CAST(sum(oov) AS BIGINT) * 1000000) // count(*) AS oov_ppm FROM j GROUP BY 1 ORDER BY 1"""))
 
   /** BPE MERGE-PAIR COUNTING — one iteration of byte-pair-encoding
-    * tokenizer TRAINING (txt_bpe_pretokenize is the inference-side
-    * pretokenizer; this is the training side's inner loop): count every
+    * tokenizer TRAINING (the training side's inner loop): count every
     * adjacent symbol pair across the corpus, weighted by word frequency —
     * the argmax pair is the next merge rule. Symbols here are the initial
     * character alphabet, i.e. the first iteration, which is the expensive
@@ -780,34 +726,6 @@ object TextOps {
         .mkString(" + ")
       s"""WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents), cc AS (SELECT doc_id, len, list_transform(generate_series(1, len), i -> ord(substr(text, i, 1))) AS codes FROM d WHERE len >= 8), cuts AS (SELECT doc_id, unnest(list_filter(list_transform(generate_series(1, len - 7), i -> CASE WHEN ($polySql) % 64 = 0 THEN i + 7 END), x -> x IS NOT NULL)) AS cut FROM cc), g AS (SELECT doc_id, cut, cut - coalesce(lag(cut) OVER (PARTITION BY doc_id ORDER BY cut), 0) AS gap FROM cuts), pd AS (SELECT doc_id, count(*) AS n_cuts, max(gap) AS max_gap, max(cut) AS max_cut FROM g GROUP BY 1) SELECT d.doc_id, d.len, CAST(coalesce(pd.n_cuts, 0) + (CASE WHEN d.len > coalesce(pd.max_cut, 0) THEN 1 ELSE 0 END) AS BIGINT) AS n_chunks, CAST(greatest(coalesce(pd.max_gap, 0), d.len - coalesce(pd.max_cut, 0)) AS BIGINT) AS max_chunk, floor(CAST(d.len AS DOUBLE) / (coalesce(pd.n_cuts, 0) + CASE WHEN d.len > coalesce(pd.max_cut, 0) THEN 1 ELSE 0 END) * 10000.0 + 0.5) / 10000.0 AS avg_chunk FROM d LEFT JOIN pd USING (doc_id) ORDER BY 1"""
     })
-
-  /** Windowed word CO-OCCURRENCE counts (positions ≤ 2 apart, unordered
-    * pair key) — the association-mining kernel under PMI scoring, phrase
-    * detection, and word-vector pretraining (the skip-gram pair stream IS
-    * this query before negative sampling). Pair generation is pure array
-    * HOFs over the token array — zip_with of the array against its own
-    * 1-shift and 2-shift, NO posexplode self-join — so it rides the scan
-    * as a narrow map; the only shuffle is the map-side-combined pair
-    * count, and top-40 is TakeOrderedAndProject. At 100 TB the same plan
-    * holds with a vocabulary-sized combine state (pairs of a bounded
-    * vocab), the classic word-count shape. */
-  private val cooccurrence = GraftQuery(
-    "txt_cooccurrence",
-    "unordered word co-occurrence (distance <= 2) counts, top-40 pairs",
-    (s, d) => Tables.spread(s,
-        Tables.documents(s, d).select(col("doc_id"), col("text")),
-        col("doc_id"))
-      // spread (scale-gated identity at real sizes): tokenize + the two
-      // zip_with pair streams are per-row heavy and the single-task scan
-      // otherwise runs them on 1 core
-      .select(split(lower(col("text")), " ").as("t"))
-      .select(explode(concat(
-        expr("zip_with(slice(t, 1, greatest(size(t) - 1, 0)), slice(t, 2, greatest(size(t) - 1, 0)), (a, b) -> CASE WHEN a <= b THEN concat(a, ' ', b) ELSE concat(b, ' ', a) END)"),
-        expr("zip_with(slice(t, 1, greatest(size(t) - 2, 0)), slice(t, 3, greatest(size(t) - 2, 0)), (a, b) -> CASE WHEN a <= b THEN concat(a, ' ', b) ELSE concat(b, ' ', a) END)")))
-        .as("pair"))
-      .groupBy("pair").agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), col("pair")).limit(40),
-    Some("""WITH t AS (SELECT string_split(lower(text), ' ') AS toks FROM documents), p AS (SELECT unnest([CASE WHEN toks[i] <= toks[i+1] THEN toks[i] || ' ' || toks[i+1] ELSE toks[i+1] || ' ' || toks[i] END for i in generate_series(1, greatest(len(toks) - 1, 0))]) AS pair FROM t UNION ALL SELECT unnest([CASE WHEN toks[i] <= toks[i+2] THEN toks[i] || ' ' || toks[i+2] ELSE toks[i+2] || ' ' || toks[i] END for i in generate_series(1, greatest(len(toks) - 2, 0))]) AS pair FROM t) SELECT pair, CAST(count(*) AS BIGINT) AS n FROM p GROUP BY 1 ORDER BY 2 DESC, 1 LIMIT 40"""))
 
   /** Cross-SPLIT contamination report: after the deterministic 80/10/10
     * md5 hash split (samp_hash_split's rule), how many 4-gram shingles
@@ -998,57 +916,6 @@ object TextOps {
         .limit(10)
     },
     Some("""WITH tok AS (SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents), v AS (SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY 1), v2 AS (SELECT * FROM v WHERE length(tok) >= 2), pr AS (SELECT substring(tok, i, 2) AS pair, cnt FROM (SELECT tok, cnt, unnest(generate_series(1, length(tok) - 1)) AS i FROM v2)), pc AS (SELECT pair, sum(cnt) AS pc FROM pr GROUP BY 1), top AS (SELECT pair AS top_pair FROM pc ORDER BY pc DESC, pair LIMIT 1), m AS (SELECT top_pair, replace(tok, top_pair, '~') AS mtok, cnt FROM v2, top), np AS (SELECT top_pair, substring(mtok, i, 2) AS pair, cnt FROM (SELECT top_pair, mtok, cnt, unnest(generate_series(1, length(mtok) - 1)) AS i FROM m WHERE length(mtok) >= 2)) SELECT top_pair, pair, CAST(sum(cnt) AS BIGINT) AS pair_cnt FROM np GROUP BY 1, 2 ORDER BY pair_cnt DESC, pair LIMIT 10"""))
-
-  /** Lexical-richness profile per source: vocabulary size, hapax
-    * legomena (words seen exactly once in that source) share of the
-    * vocabulary, and source-level type-token ratio — the
-    * hapax/TTR fingerprint distinguishes generated/boilerplate text
-    * (hapax-poor) from organic prose. One corpus tokenize pass, one
-    * (source, word)-keyed rollup, then a source-sized agg; all ratios
-    * derive from exact counts. */
-  private lazy val hapaxProfile = GraftQuery(
-    "txt_hapax_profile",
-    "per-source vocabulary size, hapax share, type-token ratio",
-    (s, d) => Tables.documents(s, d)
-      .select(col("source"), explode(tokens(col("text"))).as("tok"))
-      .groupBy("source", "tok").agg(count(lit(1)).as("cnt"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_vocab"),
-        sum(when(col("cnt") === 1, 1L).otherwise(0L)).as("n_hapax"),
-        sum("cnt").as("n_tokens"))
-      .select(col("source"), col("n_vocab"), col("n_hapax"), col("n_tokens"),
-        fround(col("n_hapax").cast("double") / col("n_vocab"), 6)
-          .as("hapax_share"),
-        fround(col("n_vocab").cast("double") / col("n_tokens"), 6).as("ttr"))
-      .orderBy("source"),
-    Some("""WITH tok AS (SELECT source, unnest(string_split(lower(text), ' ')) AS tok FROM documents), wc AS (SELECT source, tok, count(*) AS cnt FROM tok GROUP BY 1, 2), g AS (SELECT source, CAST(count(*) AS BIGINT) AS n_vocab, CAST(sum(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax, CAST(sum(cnt) AS BIGINT) AS n_tokens FROM wc GROUP BY 1) SELECT source, n_vocab, n_hapax, n_tokens, floor(CAST(n_hapax AS DOUBLE) / n_vocab * 1e6 + 0.5) / 1e6 AS hapax_share, floor(CAST(n_vocab AS DOUBLE) / n_tokens * 1e6 + 0.5) / 1e6 AS ttr FROM g ORDER BY 1"""))
-
-  /** Term burstiness (Church–Gale): for the top-50 corpus terms, the
-    * mean within-document count (cf/df) and the Fano factor
-    * (variance-to-mean over containing documents) — bursty terms (Fano ≫
-    * 1) are topical, Fano ≈ 1 terms are function-word-like; the signal
-    * behind burstiness-aware term weighting. All three moments come from
-    * one (term, doc)-keyed rollup (cf, df, Σc²), so the corpus is
-    * tokenized once; top-50 is a TakeOrdered heap. */
-  private lazy val burstiness = GraftQuery(
-    "txt_burstiness",
-    "top-50 term burstiness: mean in-doc count + Fano factor",
-    (s, d) => {
-      val td = Tables.documents(s, d)
-        .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-        .groupBy("term", "doc_id").agg(count(lit(1)).as("c"))
-      val stats = td.groupBy("term")
-        .agg(sum("c").as("cf"), count(lit(1)).as("df"),
-          sum(col("c") * col("c")).as("s2"))
-      val mean = col("cf").cast("double") / col("df")
-      stats.orderBy(desc("cf"), col("term")).limit(50)
-        .select(col("term"), col("cf"), col("df"),
-          fround(mean, 4).as("mean_in_doc"),
-          fround((col("s2").cast("double") / col("df") - mean * mean) / mean, 4)
-            .as("fano"))
-        .orderBy(desc("cf"), col("term"))
-    },
-    Some("""WITH td AS (SELECT term, doc_id, count(*) AS c FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term FROM documents) GROUP BY 1, 2), st AS (SELECT term, CAST(sum(c) AS BIGINT) AS cf, CAST(count(*) AS BIGINT) AS df, CAST(sum(c * c) AS BIGINT) AS s2 FROM td GROUP BY 1), top AS (SELECT * FROM st ORDER BY cf DESC, term LIMIT 50) SELECT term, cf, df, floor(CAST(cf AS DOUBLE) / df * 1e4 + 0.5) / 1e4 AS mean_in_doc, floor((CAST(s2 AS DOUBLE) / df - (CAST(cf AS DOUBLE) / df) * (CAST(cf AS DOUBLE) / df)) / (CAST(cf AS DOUBLE) / df) * 1e4 + 0.5) / 1e4 AS fano FROM top ORDER BY cf DESC, term"""))
 
   /** Dunning log-likelihood (G²) KEYNESS: for each source, the tokens most
     * over/under-represented vs the rest of the corpus — the statistically
@@ -1241,14 +1108,13 @@ object TextOps {
     },
     Some("""WITH tk AS (SELECT string_split(lower(text), ' ') AS tk FROM documents), uc AS (SELECT tok, CAST(count(*) AS BIGINT) AS c1 FROM (SELECT unnest(tk) AS tok FROM tk) GROUP BY 1), nt AS (SELECT CAST(sum(len(tk)) AS BIGINT) AS n FROM tk), bg AS (SELECT tk[i] AS w1, tk[i + 1] AS w2 FROM tk, LATERAL (SELECT unnest(generate_series(1, len(tk) - 1)) AS i) WHERE len(tk) >= 2), bc AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS cb FROM bg GROUP BY 1, 2 HAVING count(*) >= 5) SELECT w1 || ' ' || w2 AS bigram, cb AS pair_count, floor(ln(CAST(cb * n AS DOUBLE) / (ca.c1 * cw.c1)) * 1e4 + 0.5) / 1e4 AS pmi FROM bc JOIN uc ca ON ca.tok = w1 JOIN uc cw ON cw.tok = w2 CROSS JOIN nt ORDER BY pmi DESC, bigram LIMIT 30"""))
 
-  val all: Seq[GraftQuery] = Seq(tokenStats, quality, langId, fingerprint,
-    topNgrams, repetition, decontaminate, boilerplate, decontaminateBloom,
-    vocabTopK, vocabSketch, unigramLogprob, bpePretokenize, txtNovelty,
-    pplBuckets, charEntropy, langIdConfusion, oovRate, bpePairs,
-    langIdKappa, cdcChunks, cooccurrence, splitContamination, zipfFit,
-    featureHashing, bpeMergeStep, bigramLogprob, hapaxProfile, burstiness,
-    keynessG2, jsdSources, countMinProbe, vocabJaccardSources, heapsLaw,
-    burrowsDelta, surprisalBySource, pmiCollocations)
+  val all: Seq[GraftQuery] = Seq(
+    tokenStats, langId, fingerprint, topNgrams, repetition, decontaminate,
+    boilerplate, decontaminateBloom, vocabTopK, vocabSketch, unigramLogprob,
+    txtNovelty, pplBuckets, charEntropy, langIdConfusion, oovRate, bpePairs,
+    langIdKappa, cdcChunks, splitContamination, zipfFit, featureHashing,
+    bpeMergeStep, keynessG2, jsdSources, countMinProbe, vocabJaccardSources,
+    heapsLaw, burrowsDelta, surprisalBySource, pmiCollocations)
 
   /** MEAN TOKEN SURPRISAL per source — the unigram-LM quality signal
     * rolled to the SOURCE grain (which corpus slice is most "surprising"
@@ -1398,52 +1264,4 @@ object TextOps {
     },
     Some("""WITH st AS (SELECT DISTINCT source, tok FROM (SELECT source, unnest(string_split(lower(text), ' ')) AS tok FROM documents)), sz AS (SELECT source, count(*) AS nv FROM st GROUP BY 1), i AS (SELECT a.source AS sa, b.source AS sb, count(*) AS ninter FROM st a JOIN st b ON a.tok = b.tok AND a.source < b.source GROUP BY 1, 2) SELECT sa, sb, ninter, x.nv + y.nv - ninter AS nunion, floor(CAST(ninter AS DOUBLE) / CAST(x.nv + y.nv - ninter AS DOUBLE) * 1e4 + 0.5) / 1e4 AS vocab_jaccard FROM i JOIN sz x ON i.sa = x.source JOIN sz y ON i.sb = y.source ORDER BY 1, 2"""))
 
-  /** Add-1-smoothed BIGRAM-LM conditional log-prob per doc — the next
-    * model class up from txt_unigram_logprob (context-conditioned token
-    * probabilities: p(w2|w1) = (c(w1w2)+1)/(c(w1·)+V)), the stronger
-    * perplexity-proxy quality signal. Per-bigram ln rides as an integer
-    * micro-unit (same accepted 1-ulp ln note as the unigram), so per-doc
-    * sums are exact BIGINTs. Scale shape: the probe stream joins the
-    * bigram-count table on its OWN key (one (w1,w2)-keyed shuffle — the
-    * bigram table can be vocabulary²-sized, never broadcast); the context
-    * counts and the single-row V broadcast. */
-  private lazy val bigramLogprob = GraftQuery(
-    "txt_bigram_logprob",
-    "add-1 bigram-LM avg conditional log-prob per doc",
-    (s, d) => {
-      // spread (scale-gated identity at real sizes): the tokenize +
-      // posexplode bigram pipeline re-runs per consumer branch (no
-      // cross-branch CSE) and each re-run was a ~200 ms single-task
-      // stage on the single-file scan
-      val t = Tables.spread(s,
-        Tables.documents(s, d)
-          .select(col("doc_id"), tokens(col("text")).as("ts")),
-        col("doc_id"))
-      val bg = t.select(col("doc_id"), col("ts"),
-          posexplode(col("ts")).as(Seq("i", "w1")))
-        .withColumn("w2", expr("try_element_at(ts, i + 2)"))
-        .filter(col("w2").isNotNull)
-        .select("doc_id", "w1", "w2")
-      val c2 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-      // c1 folds from the bigram counts (Σ_w2 c2 ≡ count of bg rows per
-      // w1) instead of re-running the whole bigram pipeline a third time
-      val c1 = c2.groupBy("w1").agg(sum("c2").as("c1"))
-      val vv = t.select(explode(col("ts")).as("tok"))
-        .agg(countDistinct("tok").as("v"))
-      // c1 (first-word counts) is open-vocabulary — shuffled join on w1,
-      // never a broadcast hint; only the 1-row V estimate broadcasts
-      bg.join(c2, Seq("w1", "w2"))
-        .join(c1, Seq("w1"))
-        .crossJoin(broadcast(vv))
-        .select(col("doc_id"),
-          floor(log((col("c2").cast("double") + 1) / (col("c1") + col("v"))) * 1e6 + 0.5)
-            .cast("long").as("lpm"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bigrams"), sum("lpm").as("lps"))
-        .select(col("doc_id"), col("n_bigrams"),
-          fround(col("lps").cast("double") / (col("n_bigrams") * 1e6), 4)
-            .as("avg_logprob"))
-        .orderBy("doc_id")
-    },
-    Some("""WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS ts FROM documents), tok AS (SELECT doc_id, unnest(ts) AS tok FROM t), vv AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS v FROM tok), bg AS (SELECT doc_id, ts[i] AS w1, ts[i+1] AS w2 FROM (SELECT doc_id, ts, unnest(generate_series(1, len(ts) - 1)) AS i FROM t)), c2 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2 FROM bg GROUP BY 1, 2), c1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM bg GROUP BY 1), lp AS (SELECT doc_id, CAST(floor(ln((CAST(c2 AS DOUBLE) + 1) / (c1 + v)) * 1000000.0 + 0.5) AS BIGINT) AS lpm FROM bg JOIN c2 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN vv) SELECT doc_id, count(*) AS n_bigrams, floor(CAST(sum(lpm) AS DOUBLE) / (count(*) * 1000000.0) * 10000.0 + 0.5) / 10000.0 AS avg_logprob FROM lp GROUP BY 1 ORDER BY 1"""))
 }

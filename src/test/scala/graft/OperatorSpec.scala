@@ -137,30 +137,6 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
-  test("qa_column_profile_hll: estimates within 5% of exact twin, other metrics identical") {
-    def byCol(name: String) = run(name).collect()
-      .map(r => r.getString(0) -> r).toMap
-    val exact = byCol("qa_column_profile")
-    val hll = byCol("qa_column_profile_hll")
-    assert(exact.keySet == hll.keySet)
-    exact.foreach { case (c, e) =>
-      val h = hll(c)
-      assert(h.getLong(1) == e.getLong(1) && h.getLong(2) == e.getLong(2) &&
-        h.getString(4) == e.getString(4) && h.getString(5) == e.getString(5),
-        s"$c: non-distinct metrics must be identical to the exact twin")
-      val (est, ex) = (h.getLong(3).toDouble, e.getLong(3).toDouble)
-      assert(math.abs(est - ex) / ex <= 0.05, s"$c: est $est vs exact $ex")
-    }
-    // the point of the twin: the plan must be a plain partial-aggregatable
-    // pass, with no Expand replicating the scan into the distinct shuffle
-    val plan = SparkEntry.queries("qa_column_profile_hll")(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Expand"), "HLL profile plan must not contain Expand")
-    assert(SparkEntry.queries("qa_column_profile")(spark, sf)
-      .queryExecution.executedPlan.toString.contains("Expand"),
-      "exact twin is the Expand form this one exists to avoid")
-  }
-
   test("dedup_containment: containment >= jaccard on shared pairs, bounded by 1") {
     val cont = run("dedup_containment").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap

@@ -352,9 +352,7 @@ class PlanQualitySpec extends AnyFunSuite {
       "samp_temperature",    // quota walk over the ~#langs-row aggregate
       "txt_langid_kappa",    // po/pe fold over the 5x5 confusion matrix
       "evt_transition_matrix", // row-share over the 25-cell matrix
-      "qa_equidepth_hist",   // bin edges over the 9-quantile row set
       "txt_ppl_buckets",     // tercile cuts over the 15-row bucket table
-      "samp_largest_remainder", // remainder ranking over the source dim
       "emb_prototypicality", // row_number over the 20-row top-K prefix
       "pipe_rfm_segments",   // exact quintile ntiles over the CUSTOMER
                              // rollup (orders of magnitude below the
@@ -589,7 +587,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // these plans are 1-row totals (global aggregates).
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, ResolvedHint}
     for (q <- Seq("txt_unigram_logprob", "txt_ppl_buckets",
-        "txt_bigram_logprob", "txt_pmi_collocations")) {
+        "txt_pmi_collocations")) {
       val hints = SparkEntry.queries(q)(spark, sf)
         .queryExecution.analyzed.collect { case h: ResolvedHint => h }
       hints.foreach { h =>

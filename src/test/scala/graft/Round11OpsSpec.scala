@@ -411,41 +411,6 @@ class Round11OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("qa_encoding_advisor_hll: NDV within 5% of exact, run census identical, no Expand") {
-    val exact = run("qa_encoding_advisor").collect()
-      .map(r => r.getString(0) -> r).toMap
-    val hllDf = run("qa_encoding_advisor_hll")
-    // the scale claim is structural: the HLL plan must carry no Expand
-    // (the exact twin's multi-countDistinct replicates the scan x6)
-    assert(!hllDf.queryExecution.executedPlan.toString.contains("Expand"),
-      "HLL twin must not Expand")
-    assert(run("qa_encoding_advisor").queryExecution.executedPlan.toString
-        .contains("Expand"),
-      "exact anchor is expected to Expand — if Spark stopped doing that, " +
-        "re-evaluate whether the twin is still needed")
-    val hll = hllDf.collect()
-    assert(hll.length == exact.size)
-    for (r <- hll) {
-      val e = exact(r.getString(0))
-      // non-NDV metrics share the exact run-census lineage byte-for-byte
-      assert(r.getLong(1) == e.getLong(1), s"${r.getString(0)}: n moved")
-      assert(r.getDouble(3) == e.getDouble(3),
-        s"${r.getString(0)}: mean_run moved")
-      val (est, act) = (r.getLong(2), e.getLong(2))
-      assert(math.abs(est - act) <= math.max(1L, (act * 0.05).toLong),
-        s"${r.getString(0)}: ndv est $est vs exact $act exceeds 5%")
-      // the ADVICE column is derived from the ESTIMATED ndv, so near the
-      // decision thresholds (ndv <= 64, ndv*2 > n) an estimate drift
-      // could silently flip it; the dataset is fixed and HLL sketches
-      // are deterministic, so equality is assertable — if this ever
-      // trips, the estimate crossed a threshold and the twin's advice
-      // genuinely diverged from the exact anchor's.
-      assert(r.getString(4) == e.getString(4),
-        s"${r.getString(0)}: advice flipped under estimated ndv " +
-          s"(${r.getString(4)} vs exact ${e.getString(4)})")
-    }
-  }
-
   test("j_band_decimal matches a brute-force cross join at sf0.001 and never nested-loops") {
     val df = run("j_band_decimal")
     val p = df.queryExecution.executedPlan.toString

@@ -125,25 +125,6 @@ class Round8OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("qa_encoding_advisor: ndv matches countDistinct and the rule is applied") {
-    val out = run("qa_encoding_advisor").collect()
-      .map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getDouble(3), r.getString(4))).toMap
-    val li = Tables.lineitem(spark, sf)
-    val n = li.count()
-    assert(out.values.forall(_._1 == n))
-    val ndvFlag = li.select(countDistinct("l_returnflag")).collect().head.getLong(0)
-    assert(out("l_returnflag")._2 == ndvFlag)
-    out.foreach { case (c, (nn, ndv, run, advice)) =>
-      val want =
-        if (ndv <= 64 && run >= 2.0) "RLE_DICT"
-        else if (ndv <= 64) "DICT"
-        else if (ndv * 2 > nn) "PLAIN"
-        else "DICT"
-      assert(advice == want, s"$c: $advice vs $want")
-    }
-  }
-
   // ---- MortonZ native expression --------------------------------------------
 
   test("graft_zvalue equals the HOF interleave and stays in whole-stage codegen") {

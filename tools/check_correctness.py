@@ -33,8 +33,8 @@ def compare(name, mine: pd.DataFrame, oracle: pd.DataFrame):
         x, y = a[c], b[c]
         # The driver hashes raw values, so int64 0 vs float64 0.0 is a hash
         # FAIL even though allclose passes. DuckDB sum(BIGINT) -> HUGEINT ->
-        # pandas float64 is the classic cause (round-4 graph_pagerank /
-        # qa_column_profile regression): fail loudly on int-vs-float here.
+        # pandas float64 is the classic cause (round-4 graph_pagerank
+        # regression): fail loudly on int-vs-float here.
         if (x.dtype.kind in "iu" and y.dtype.kind == "f") or (x.dtype.kind == "f" and y.dtype.kind in "iu"):
             return (f"FAIL col {c}: int-vs-float dtype mismatch ({x.dtype} vs {y.dtype}) — "
                     f"driver hash WILL fail; align dtypes: CAST whichever side "
@@ -62,7 +62,7 @@ def compare(name, mine: pd.DataFrame, oracle: pd.DataFrame):
         compare.last_notes = "; width differs " + ", ".join(notes)
     return None
 
-# Bounded cross-engine compares for the sketch tail (round 15): the three
+# Bounded cross-engine compares for the sketch tail (round 15): the
 # no-oracle rows DuckDB can ALSO estimate get a tolerance leg —
 # |spark_est − duck_est| / exact <= bound per row, exact computed in the
 # same DuckDB query (the anchor-twin value). This does not replace the
@@ -87,23 +87,6 @@ BOUNDED = {
         "key": ["event_type"],
         "exact_cols": ["cnt", "p50_exact"],
         "est": [("p50_approx", "p50_approx", "p50_exact", 0.10)],
-    },
-    "qa_column_profile_hll": {
-        "duck": """WITH a AS (SELECT
-                     approx_count_distinct(o_orderkey) AS k_a, count(DISTINCT o_orderkey) AS k_e,
-                     approx_count_distinct(o_custkey) AS c_a, count(DISTINCT o_custkey) AS c_e,
-                     approx_count_distinct(CAST(floor(o_totalprice*100+0.5) AS BIGINT)) AS p_a,
-                     count(DISTINCT CAST(floor(o_totalprice*100+0.5) AS BIGINT)) AS p_e,
-                     approx_count_distinct(o_orderpriority) AS s_a, count(DISTINCT o_orderpriority) AS s_e
-                   FROM orders)
-                   SELECT * FROM (
-                     SELECT 'o_orderkey' AS "column", k_a AS n_distinct, k_e AS exact_distinct FROM a
-                     UNION ALL SELECT 'o_custkey', c_a, c_e FROM a
-                     UNION ALL SELECT 'o_totalprice_c', p_a, p_e FROM a
-                     UNION ALL SELECT 'o_orderpriority', s_a, s_e FROM a) ORDER BY 1""",
-        "key": ["column"],
-        "exact_cols": [],
-        "est": [("n_distinct", "n_distinct", "exact_distinct", 0.10)],
     },
 }
 

@@ -23,12 +23,39 @@ if [ "$CHECK" = 1 ]; then
   ROUND="${ROUND:-current}"
 fi
 # the forked run prints straight to stdout, unprefixed (build.sbt outputStrategy)
-OUT=$(sbt -batch "runMain graft.Counts" 2>/dev/null | sed -n '/^\(queries=\|oracled=\|no_oracle\)/p')
+OUT=$(sbt -batch "runMain graft.Counts" 2>/dev/null | sed -n '/^\(queries=\|oracled=\|no_oracle\|names=\)/p')
 QUERIES=$(echo "$OUT" | sed -n 's/^queries=//p')
 ORACLED=$(echo "$OUT" | sed -n 's/^oracled=//p')
 NO_ORACLE_N=$(echo "$OUT" | sed -n 's/^no_oracle_n=//p')
 NO_ORACLE=$(echo "$OUT" | sed -n 's/^no_oracle=//p')
-SPECS=$(grep -rho 'test("' src/test/scala/graft/*.scala | wc -l | tr -d ' ')
+# registered query names: artifact-derived figures below skip any name a
+# committed artifact still carries for a row that has since been deleted
+export REGISTERED=$(echo "$OUT" | sed -n 's/^names=//p')
+if [ -z "$QUERIES" ] || [ -z "$REGISTERED" ]; then
+  echo "graft.Counts printed no registry census (does the build compile?)" >&2
+  exit 2
+fi
+# Spec count = what the last test run ran: the sum of the tests= attributes
+# of sbt's per-suite JUnit reports, for suites whose source still exists
+# (a deleted suite's report would otherwise linger in the count).
+SPECS=$(python3 - <<'PYEOF'
+import glob, os, re, sys
+total, seen = 0, 0
+for f in glob.glob("target/test-reports/TEST-graft.*.xml"):
+    suite = os.path.basename(f)[len("TEST-graft."):-len(".xml")]
+    if not os.path.exists(f"src/test/scala/graft/{suite}.scala"):
+        continue
+    m = re.search(r'<testsuite [^>]*?tests="(\d+)"', open(f).read())
+    if m:
+        total += int(m.group(1)); seen += 1
+if seen == 0:
+    print("no test reports under target/test-reports: run the tests "
+          "(sbt \"testOnly *\") before regenerating the status block",
+          file=sys.stderr)
+    sys.exit(1)
+print(total)
+PYEOF
+)
 
 # Registry-growth policy nudge (README "Registry growth policy"): WARN on
 # newly added overhead-dominated bench rows. Never fatal.
@@ -38,7 +65,7 @@ python3 tools/registry_cost_guard.py >&2 || true
 # hand (the hand-typed total drifted from BENCH_FULL.json two rounds
 # running).
 BENCH_LINE=$(python3 - <<'PYEOF'
-import json, statistics
+import json, statistics, sys
 try:
     d = json.load(open("BENCH_FULL.json"))
 except Exception:
@@ -47,35 +74,30 @@ except Exception:
 # Since round 12 "queries" holds the per-query FLOOR (min of `reps`
 # executions) and "single_shot" the first execution; older files carry a
 # single-shot "queries" plus an optional "min3" floor map.
-qs = d.get("queries", {})
+import os
+registered = set(os.environ["REGISTERED"].split(","))
+def live(m):
+    return {k: v for k, v in m.items() if k in registered}
+qs = live(d.get("queries", {}))
 vals = sorted(qs.values())
-total = d.get("value", sum(vals))
+total = sum(vals)
 med = statistics.median(vals) if vals else 0.0
-# The exact-NDV forms exist as DuckDB-oracled ANCHORS for their one-pass
-# HLL twins (the documented scale shape, which sweeps run at 100 TB), so
-# the headline "worst" reflects the scale-shaped registry; the anchors'
-# cost is reported alongside, not hidden.
-exact_anchors = {"qa_encoding_advisor": "qa_encoding_advisor_hll",
-                 "qa_column_profile": "qa_column_profile_hll"}
-scale_qs = {k: v for k, v in qs.items() if k not in exact_anchors}
-worst = max(scale_qs.items(), key=lambda kv: kv[1]) if scale_qs else ("-", 0.0)
+worst = max(qs.items(), key=lambda kv: kv[1]) if qs else ("-", 0.0)
 reps = d.get("reps", 1)
 label = f"min-of-{reps} floors" if reps > 1 and "single_shot" in d else "single-shot"
-line = (f"Bench (BENCH_FULL.json, sf0.1 local[32], {label}): {total:.1f} s "
+# artifacts written before Bench recorded "master" keep the label they were
+# published with
+master = d.get("master", "local[32]")
+line = (f"Bench (BENCH_FULL.json, sf0.1 {master}, {label}): {total:.1f} s "
         f"total over {len(qs)} queries, median {med:.2f} s, worst {worst[0]} "
         f"{worst[1]:.2f} s, setup {d.get('setup_sec', 0.0):.1f} s.")
-anchor_note = ", ".join(f"{a} {qs[a]:.2f} s (HLL twin {qs.get(t, 0.0):.2f} s)"
-                        for a, t in exact_anchors.items() if a in qs)
-if anchor_note:
-    line += (f" Exact-NDV oracle anchors, excluded from the worst line in "
-             f"favor of their one-pass HLL scale twins: {anchor_note}.")
 if "single_shot_total" in d:
     line += f" First-shot (cold-plan) total {d['single_shot_total']:.1f} s."
 # Registry growth guard: with ~0.3 s of fixed planning/launch cost per
 # query, N queries x overhead is a large, growing share of the floor
 # total — surfacing it lets future rounds tell planning overhead from
 # compute regressions at a glance before adding more rows.
-ss = d.get("single_shot", {})
+ss = live(d.get("single_shot", {}))
 if ss and qs:
     overhead = sum(max(0.0, ss[q] - qs[q]) for q in qs if q in ss)
     line += (f" Estimated fixed per-query overhead (first-shot minus "
@@ -83,8 +105,8 @@ if ss and qs:
              f"{100 * overhead / max(total, 1e-9):.0f}% of the floor "
              f"total (cold planning/launch cost, amortized on a "
              f"long-lived session or cluster).")
-m3 = d.get("min3") or (qs if "single_shot" in d else None)
-if d.get("min3"):
+m3 = live(d.get("min3") or {})
+if m3:
     m3total = sum(m3.values())
     m3worst = max(m3.items(), key=lambda kv: kv[1])
     line += (f" Isolated re-run floor (min of {d.get('reps', 3)}): "
@@ -111,8 +133,8 @@ if bp is not None:
               f"tools/make_bench_pair.sh; refusing to publish a "
               f"cross-window ratio", file=sys.stderr)
         sys.exit(3)
-    pq = bp.get("queries", {})
-    dmin = dd.get("min", {})
+    pq = live(bp.get("queries", {}))
+    dmin = live(dd.get("min", {}))
     common = sorted(set(pq) & set(dmin))
     if common:
         ss = sum(pq[q] for q in common)
@@ -144,7 +166,7 @@ except Exception:
     pass
 try:
     st = json.load(open("SCALE_STRESS.json"))
-    qs_ = st["queries"]
+    qs_ = live(st["queries"])
     wr = max(qs_.items(), key=lambda kv: kv[1]["ratio"])
     # derive the claim from the data, never assert it unconditionally: a
     # linear_ok pass allows ratio up to rep*1.5, so "linear-or-better"
@@ -168,7 +190,7 @@ except Exception:
     pass
 try:
     ab = json.load(open("BENCH_TOPK_AB.json"))
-    h, w = ab["heap_min"], ab["window_min"]
+    h, w = live(ab["heap_min"]), ab["window_min"]
     hs, ws = sum(h.values()), sum(w[q] for q in h)
     hw = sum(1 for q in h if h[q] < w[q])
     line += (f" TopKPerKey A/B (BENCH_TOPK_AB.json, same declarative "
@@ -187,7 +209,7 @@ except Exception:
     pass
 try:
     ab = json.load(open("BENCH_BAND_AB.json"))
-    r, n = ab["rewrite_min"], ab["nested_loop_min"]
+    r, n = live(ab["rewrite_min"]), ab["nested_loop_min"]
     worst = max(r, key=lambda q: n.get(q, 0) / r[q])
     ratio = n[worst] / r[worst]
     line += (f" BandJoinRewrite A/B (BENCH_BAND_AB.json, naive band joins, "
