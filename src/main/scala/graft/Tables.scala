@@ -117,7 +117,7 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    // CIVIL-TIME CONTRACT (fail-fast, the CounterStream-TTL guard class):
+    // CIVIL-TIME CONTRACT (fail-fast):
     // every calendar derivation over `ts` — to_date, weekday names, day
     // windows — uses Spark's SESSION timezone, so a non-UTC session
     // silently shifts daily rollups, sessions, and retention cohorts

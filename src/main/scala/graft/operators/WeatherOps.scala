@@ -16,7 +16,7 @@ import graft.functions.GraftFunctions.fround
   *  - PrecipitationActor.scala:39-55      (annual sum, top-k)
   *  - WeatherStationActor.scala:43-58     (station lookup, latest reading)
   *  - KafkaStreamingActor.scala:47-64     (daily counter — batch equivalent here;
-  *    streaming equivalent in graft.streaming.CounterStream)
+  *    the streaming counters are graft.streaming.WeatherIngest's)
   *
   * Scale notes: every aggregation here is a distributed partial→final
   * hash aggregate on the grouping keys (the reference collected values to
@@ -194,10 +194,11 @@ object WeatherOps {
       .orderBy("user_id"),
     Some("""SELECT DISTINCT user_id FROM events WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-05' AND DATE '2024-01-15' ORDER BY user_id"""))
 
-  /** Batch equivalent of the streaming daily counter (ref S8/A5:
-    * KafkaStreamingActor.scala:62-64 + the counter table). The streaming
-    * path (update-mode sum + idempotent overwrite-by-key upsert) lives in
-    * graft.streaming.CounterStream and is asserted equal to this in tests. */
+  /** Batch view of the daily counter (ref S8/A5:
+    * KafkaStreamingActor.scala:62-64 + the counter table) over the events
+    * stand-in. The streaming counters over the wire format are
+    * graft.streaming.WeatherIngest's `Sum` tables, whose specs check them
+    * against the same per-key sums of their input lines. */
   private val dailyCounter = GraftQuery(
     "w_daily_counter",
     "S8/A5 keyed running sum (counter-table emulation), batch view",

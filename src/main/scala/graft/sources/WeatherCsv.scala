@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -50,22 +50,34 @@ object WeatherCsv {
       .csv(path)
 
   /** Decode raw lines (the streaming path: a Kafka/socket/file source of
-    * text lines — ref S2's `map(_.split(","))` + positional apply). */
+    * text lines — ref S2's `map(_.split(","))` + positional apply). Each
+    * row keeps its source line as `line`, for [[rejected]]; [[valid]] drops
+    * it. */
   def parseLines(lines: Dataset[String]): DataFrame =
     lines.select(from_csv(col("value"), withCorrupt,
       Map("mode" -> "PERMISSIVE",
-        "columnNameOfCorruptRecord" -> "_corrupt_record")).as("r"))
-      .select(col("r.*"))
+        "columnNameOfCorruptRecord" -> "_corrupt_record")).as("r"),
+      col("value").as("line"))
+      .select(col("r.*"), col("line"))
+
+  /** All KEY fields parsed. */
+  private val keyed: Column = col("wsid").isNotNull && col("year").isNotNull &&
+    col("month").isNotNull && col("day").isNotNull && col("hour").isNotNull
 
   /** Usable rows: all KEY fields parsed. A row with a malformed measurement
     * (e.g. non-numeric temperature) keeps its identity and the other
     * measurements — the bad field is null and the raw line is still
     * captured in `_corrupt_record` for auditing. Only rows whose key can't
-    * be trusted (short/garbled) are excluded. */
+    * be trusted (short/garbled, or a key field left empty) are excluded.
+    * Key values are not range-checked: `month=13, day=45` parses as written
+    * and is kept, as the reference's positional parser kept it. */
   def valid(parsed: DataFrame): DataFrame =
-    parsed.filter(col("wsid").isNotNull && col("year").isNotNull &&
-        col("month").isNotNull && col("day").isNotNull && col("hour").isNotNull)
-      .drop("_corrupt_record")
+    parsed.filter(keyed).drop("_corrupt_record", "line")
+
+  /** The quarantine of [[parseLines]]' rows: every row that is corrupt or
+    * that [[valid]] drops, as its source `line`. */
+  def rejected(parsed: DataFrame): DataFrame =
+    parsed.filter(col("_corrupt_record").isNotNull || !keyed).select(col("line"))
 
   /** Parse with data-quality counters riding the SAME pass
     * (Dataset.observe — accumulator-backed, so the audit adds zero extra
@@ -78,8 +90,7 @@ object WeatherCsv {
     val parsed = parseLines(lines).observe(obs,
       count(lit(1)).as("n_rows"),
       count(col("_corrupt_record")).as("n_corrupt"),
-      sum(when(col("wsid").isNull || col("year").isNull || col("month").isNull ||
-        col("day").isNull || col("hour").isNull, 1L).otherwise(0L)).as("n_keyless"),
+      sum(when(!keyed, 1L).otherwise(0L)).as("n_keyless"),
       sum(when(col("one_hour_precip").isNull, 1L).otherwise(0L)).as("n_null_precip"))
     (parsed, obs)
   }

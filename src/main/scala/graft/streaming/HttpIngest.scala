@@ -90,7 +90,14 @@ final class HttpIngest(spoolDir: String) {
       .exists(_.equalsIgnoreCase("gzip")) || feed.endsWith(".gz")
     val raw = readCapped(x.getRequestBody, HttpIngest.MaxEntityBytes)
     if (raw == null) { respond(x, 413, "entity too large"); return }
-    val body = new String(decode(gz, raw), StandardCharsets.UTF_8)
+    // the cap bounds the decoded body too: a small gzip can expand without
+    // bound
+    val decoded = if (!gz) raw else {
+      val in = new GZIPInputStream(new ByteArrayInputStream(raw))
+      try readCapped(in, HttpIngest.MaxEntityBytes) finally in.close()
+    }
+    if (decoded == null) { respond(x, 413, "decoded entity too large"); return }
+    val body = new String(decoded, StandardCharsets.UTF_8)
     val lines = body.split("\n").iterator.map(_.stripSuffix("\r"))
       .filter(_.nonEmpty).toSeq
     if (lines.isEmpty) { respond(x, 400, "empty feed"); return }
@@ -103,13 +110,6 @@ final class HttpIngest(spoolDir: String) {
       StandardCopyOption.ATOMIC_MOVE)
     accepted.addAndGet(lines.length)
     respond(x, 200, s"accepted ${lines.length}")
-  }
-
-  private def decode(gz: Boolean, raw: Array[Byte]): Array[Byte] = {
-    val in: InputStream =
-      if (gz) new GZIPInputStream(new ByteArrayInputStream(raw))
-      else new ByteArrayInputStream(raw)
-    try in.readAllBytes() finally in.close()
   }
 
   /** Buffer at most `cap` bytes; null signals the entity exceeded the cap
@@ -135,8 +135,9 @@ final class HttpIngest(spoolDir: String) {
 }
 
 object HttpIngest {
-  /** Entity-size ceiling (64 MiB of compressed bytes) — the front door
-    * buffers the body, so an unbounded POST is an OOM vector.
+  /** Entity-size ceiling (64 MiB), on the bytes received and again on the
+    * decoded body — the front door buffers both, so an unbounded POST is an
+    * OOM vector.
     */
   val MaxEntityBytes: Int = 64 * 1024 * 1024
 }

@@ -27,9 +27,9 @@ import graft.sources.WeatherCsv
   *             year_cumulative_precip COUNTER table (A6,
   *             create-timeseries.cql:86-91; present in the reference's
   *             schema though its app never writes it)
-  *         (d) corrupt-line quarantine — the PERMISSIVE corrupt-record
-  *             channel; the reference had no answer for bad lines (its
-  *             parser threw mid-batch, Weather.scala:93)
+  *         (d) quarantine — every line that is corrupt or whose key did
+  *             not parse, as it arrived; the reference had no answer for
+  *             bad lines (its parser threw mid-batch, Weather.scala:93)
   *
   * One checkpointed streaming query (`$checkpointRoot/fan`) lists the
   * source and parses each line once per trigger, as the reference parses
@@ -167,9 +167,7 @@ object WeatherIngest {
             .agg(sum("one_hour_precip").as("precipitation"), count(lit(1)).as("cnt"))
           val writes: Seq[() => Unit] = Seq(
             () => rawSink.addBatch(batchId, valid),
-            () => quarantineSink.addBatch(batchId,
-              parsed.filter(col("_corrupt_record").isNotNull)
-                .select(col("_corrupt_record").as("line"))),
+            () => quarantineSink.addBatch(batchId, WeatherCsv.rejected(parsed)),
             () => dailySink.add(counts("wsid", "year", "month", "day"), batchId),
             () => yearSink.add(counts("wsid", "year"), batchId))
           // each write runs with the batch's job group and SQL execution, so

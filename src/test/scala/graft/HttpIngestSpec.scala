@@ -74,4 +74,32 @@ class HttpIngestSpec extends AnyFunSuite {
       assert(daily(("725030:14732", 2)) == 1.0)
     } finally ingest.stop()
   }
+
+  test("front door: 413 over the cap, as sent or decoded; the next POST gets 200") {
+    val spool = Files.createTempDirectory("http-spool-cap")
+    val ingest = new HttpIngest(spool.toString)
+    val port = ingest.start()
+    try {
+      val cap = HttpIngest.MaxEntityBytes
+      // over the cap as sent: refused before any decode
+      val r1 = post(port, new Array[Byte](cap + 1), Map("Content-Encoding" -> "gzip"))
+      assert(r1.statusCode() == 413, r1.body())
+      // a small gzip of zeros that decodes past the cap
+      val zeros = {
+        val bos = new ByteArrayOutputStream()
+        val gz = new GZIPOutputStream(bos)
+        val chunk = new Array[Byte](1 << 20)
+        (0 to cap / chunk.length).foreach(_ => gz.write(chunk))
+        gz.close()
+        bos.toByteArray
+      }
+      assert(zeros.length < cap / 100)
+      val r2 = post(port, zeros, Map("Content-Encoding" -> "gzip"))
+      assert(r2.statusCode() == 413, r2.body())
+      assert(Files.list(spool).count() == 0, "a refused POST spools nothing")
+      val r3 = post(port, "724940:23234,2008,01,01,00,11.7,-0.6,1023.8,50,7.2,2,0.5,0.0\n".getBytes("UTF-8"))
+      assert(r3.statusCode() == 200 && r3.body().contains("accepted 1"), r3.body())
+      assert(ingest.acceptedLines == 1)
+    } finally ingest.stop()
+  }
 }

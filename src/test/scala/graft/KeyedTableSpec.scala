@@ -156,18 +156,20 @@ class KeyedTableSpec extends AnyFunSuite {
     assert(snapshot(t) == twin(rule, (1 to batches).map(delta)))
   }
 
-  test("read keeps the delta's column order and types; an Int column sums as Int") {
+  ruleTest("read keeps the delta's column order and types, key not leading") { rule =>
     import spark.implicits._
     val dir = Files.createTempDirectory("keyed-table-types").resolve("t")
-    val t = new KeyedTable(dir.toString, Seq("day", "k"), Sum, foldEvery = 2)
+    val t = new KeyedTable(dir.toString, Seq("day", "k"), rule, foldEvery = 2)
     t.add(Seq((3, "a", 2, 10L), (3, "b", 1, 1L)).toDF("n", "k", "day", "cnt"), 0)
     t.add(Seq((4, "a", 2, 5L)).toDF("n", "k", "day", "cnt"), 1)
     t.add(Seq((1, "a", 2, 1L)).toDF("n", "k", "day", "cnt"), 2)
     val out = t.read(spark)
     assert(out.columns.toSeq == Seq("n", "k", "day", "cnt"))
+    // an Int column stays Int; under Sum it is summed as Int
     assert(out.schema("n").dataType == org.apache.spark.sql.types.IntegerType)
+    val a = if (rule == Sum) (8, "a", 2, 16L) else (1, "a", 2, 1L)
     assert(out.collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getLong(3))).toSet ==
-      Set((8, "a", 2, 16L), (3, "b", 1, 1L)))
+      Set(a, (3, "b", 1, 1L)))
     assert(Files.isDirectory(dir.resolve("base/g=1")))
   }
 }

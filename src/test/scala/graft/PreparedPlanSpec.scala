@@ -133,8 +133,12 @@ class PreparedPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
           started.add(e)
       override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
     }
+    // plan ids grow: a plan built before `body` (an earlier call whose
+    // event is still on the listener bus) is not `body`'s
+    val before = spark.range(0).queryExecution.id
     val plans = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = ran.add(qe)
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.id > before) ran.add(qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     sc.addSparkListener(jobs)

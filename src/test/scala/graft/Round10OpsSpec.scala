@@ -7,8 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-10 additions: contract hardening on the custom-operator doors
   * (TopKPerKey.of rejects non-scalar key/order expressions with the
-  * documented exception, the TTL counter path pins its UTC contract) and
-  * the generalized band-join surface.
+  * documented exception) and the generalized band-join surface.
   */
 class Round10OpsSpec extends AnyFunSuite {
   private lazy val spark = GraftTestSpark.spark
@@ -206,26 +205,6 @@ class Round10OpsSpec extends AnyFunSuite {
           try base.sql(s"REFRESH TABLE $t")
           catch { case _: Throwable => () }
         }
-    }
-  }
-
-  test("dailyCounter(stateTtl) fails fast outside the UTC session contract") {
-    val tzKey = "spark.sql.session.timeZone"
-    val saved = spark.conf.get(tzKey)
-    val dir = java.nio.file.Files.createTempDirectory("r10tz").toString
-    try {
-      spark.conf.set(tzKey, "America/New_York")
-      val events = spark.readStream.format("rate").load()
-        .selectExpr("value AS user_id", "timestamp AS ts",
-          "'click' AS event_type", "1.0 AS value", "'' AS props")
-      val e = intercept[IllegalArgumentException] {
-        graft.streaming.CounterStream.dailyCounter(
-          events, s"$dir/tbl", s"$dir/ckpt", stateTtl = Some("7 days"))
-      }
-      assert(e.getMessage.contains("UTC"))
-    } finally {
-      spark.conf.set(tzKey, saved)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
   }
 }

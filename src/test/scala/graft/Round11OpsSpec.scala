@@ -359,7 +359,7 @@ class Round11OpsSpec extends AnyFunSuite {
     // changing answers is the silent-reproducibility hazard class. A
     // query may alternatively refuse non-UTC sessions with the
     // documented fail-fast (IllegalArgumentException naming UTC, the
-    // CounterStream contract).
+    // Tables.events contract).
     import org.apache.spark.sql.SparkSession
     val base = spark
     val utc = SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) =>

@@ -13,14 +13,21 @@ import graft.streaming.{KeyedTable, WeatherIngest}
 class WeatherIngestSpec extends AnyFunSuite {
   private lazy val spark = GraftTestSpark.spark
 
-  // 2 stations × 2 days × 3 hours + 1 corrupt line; precip 0.5/hour on
-  // station A day 1, zero elsewhere, one missing-precip field (defaults 0)
+  /** Lines with an empty key field: they parse with no corrupt record, and
+    * raw drops them, so quarantine must keep them. */
+  private val keyless = Seq(
+    ",2008,01,01,00,5.0,-1.0,1010.0,100,3.0,2,9.0,0.0",
+    "724940:23234,,01,01,00,5.0,-1.0,1010.0,100,3.0,2,9.0,0.0")
+
+  // 2 stations × 2 days × 3 hours + 1 corrupt line + the keyless lines;
+  // precip 0.5/hour on station A day 1, zero elsewhere, one missing-precip
+  // field (defaults 0)
   private val lines: Seq[String] = {
     val a = for (d <- 1 to 2; h <- 0 until 3) yield
       f"724940:23234,2008,01,$d%02d,$h%02d,11.7,-0.6,1023.8,50,7.2,2,${if (d == 1) "0.5" else "0.0"},0.0"
     val b = for (d <- 1 to 2; h <- 0 until 3) yield
       f"725030:14732,2008,01,$d%02d,$h%02d,3.0,-2.0,1011.1,200,4.6,4,${if (d == 2 && h == 0) "" else "0.0"},0.0"
-    a ++ b :+ "garbage"
+    a ++ b ++ Seq("garbage") ++ keyless
   }
 
   private def dailySnapshot(sink: KeyedTable) =
@@ -64,9 +71,9 @@ class WeatherIngestSpec extends AnyFunSuite {
     assert(y == Map(("724940:23234", 2008) -> ((1.5, 6L)),
       ("725030:14732", 2008) -> ((0.0, 6L))))
 
-    // quarantine: exactly the garbage line
+    // quarantine: exactly the garbage line and the keyless lines, as sent
     val quar = spark.read.parquet(qOut).collect().map(_.getString(0))
-    assert(quar.toSeq == Seq("garbage"))
+    assert(quar.toSeq.sorted == (keyless :+ "garbage").sorted)
   }
 
   test("kafka source builder: option plumbing matches the production wire-up") {
@@ -161,7 +168,7 @@ class WeatherIngestSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSeq.sortBy(_.toString)
     assert(rawGot == rawWant)
     assert(spark.read.parquet(qOut).collect().map(_.getString(0)).toSeq.sorted ==
-      Seq("garbage", "short,line"))
+      (keyless ++ Seq("garbage", "short,line")).sorted)
     val measured = graft.sources.WeatherCsv.withPrecipDefaults(valid).collect()
     def want[K](key: org.apache.spark.sql.Row => K) = measured.groupBy(key).map { case (k, rs) =>
       k -> ((rs.map(_.getAs[Double]("one_hour_precip")).sum, rs.length.toLong))
