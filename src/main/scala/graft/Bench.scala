@@ -311,9 +311,9 @@ object Bench {
     "w_daily_stats", "w_daily_counter", "w_topk_precip", "w_partition_pruned",
     "dedup_exact", "dedup_minhash", "dedup_simhash", "dedup_embedding_lsh",
     "dedup_components", "sim_knn_brute", "sim_knn_lsh", "sim_knn_ivf",
-    "sim_knn_pq", "txt_langid", "txt_repetition", "txt_boilerplate",
+    "sim_knn_pq", "txt_repetition", "txt_boilerplate",
     "evt_retention",
     "win_session", "win_moving_avg", "j_asof", "j_skew_salted",
     "j_bucketed_colocated", "j_dpp_prune", "sq_min_cost_join",
-    "agg_grouping_sets", "mv_rollup_cascade", "samp_stratified")
+    "agg_grouping_sets", "mv_rollup_cascade", "samp_dsir")
 }

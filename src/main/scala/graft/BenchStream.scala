@@ -28,7 +28,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * table AND folded into both counters — the honest per-line cost, not a
   * cheapest-leg number).
   *
-  * The fan-out runs `SPARK_GRAFT_STREAM_REPS` times and publishes the
+  * The fan-out runs twice (`streamReps`) and publishes the
   * best run — the floors protocol, because a single-shot rate swung 3x
   * across one day of host drift — after one unmeasured mini-spool warmup
   * that absorbs the fresh JVM's JIT/codegen init (measured cold it halved
@@ -56,16 +56,13 @@ object BenchStream {
     // floors protocol, streaming edition: one fan-out per rep, best rate
     // published — a single-shot rate swung 2,890 → 12,864 rows/s across
     // one day of host drift, which is noise, not engine change (the batch bench learned the same lesson in r12)
-    // clamp like Bench's reps: 0/negative would run the full spool write
-    // + warmups and then crash on an empty maxBy, minutes in
-    val streamReps =
-      math.max(1, sys.env.getOrElse("SPARK_GRAFT_STREAM_REPS", "2").toInt)
-    val nStations = sys.env.getOrElse("SPARK_GRAFT_STREAM_STATIONS", "200").toInt
-    val nDays = sys.env.getOrElse("SPARK_GRAFT_STREAM_DAYS", "50").toInt
+    val streamReps = 2
+    val nStations = 200
+    val nDays = 50
     // 80 files at 8 per trigger: 10 micro-batches, so the burst pays the
     // counter tables' fold (every 8th live delta) inside the timed run
-    val filesN = sys.env.getOrElse("SPARK_GRAFT_STREAM_FILES", "80").toInt
-    val filesPerTrigger = sys.env.getOrElse("SPARK_GRAFT_STREAM_FPT", "8").toInt
+    val filesN = 80
+    val filesPerTrigger = 8
     val spark = Sessions.start(Sessions.Scale)
 
     // --- sized spool: stations × days × 24 hourly readings --------------

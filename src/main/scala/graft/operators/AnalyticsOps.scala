@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
-import graft.functions.GraftFunctions.{centi, fround, md5u32, md5u32Sql, tokens}
+import graft.functions.GraftFunctions.{centi, fround, md5u32}
 
 /** Analytic capability extras a production engine needs beyond the
   * reference's surface (SURVEY §2.5 declares windows as parity extras; the
@@ -480,142 +480,6 @@ object AnalyticsOps {
     },
     Some("""WITH seq AS (SELECT user_id, event_type, lead(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_type FROM events), pairs AS (SELECT event_type AS from_type, next_type AS to_type, count(*) AS cnt FROM seq WHERE next_type IS NOT NULL GROUP BY 1, 2), w AS (SELECT *, sum(cnt) OVER (PARTITION BY from_type) AS row_total FROM pairs) SELECT from_type, to_type, cnt, floor(CAST(cnt AS DOUBLE) / row_total * 10000.0 + 0.5) / 10000.0 AS p FROM w ORDER BY 1, 2"""))
 
-  /** Winsorized robust mean per event type — the outlier-resistant
-    * aggregate a metrics pipeline uses where a single corrupt reading
-    * would drag a plain mean: values below the p05 / above the p95 order
-    * statistic are clamped to it before averaging. Percentiles are DISCRETE
-    * order statistics over integer centi-units (rank k = ⌈q·n⌉ within each
-    * type's sorted sequence), so there is no interpolation arithmetic to
-    * disagree cross-engine, and the clipped sum decomposes into integers:
-    * (k_lo−1)·p05 + Σ mid-ranks + (n−k_hi)·p95. One partitioned window
-    * sort + one keyed aggregation; partitions = event types, so at corpus
-    * scale a production run swaps the exact ranks for approx-quantile
-    * boundaries (agg_approx_percentile is that machinery) — the clipping
-    * algebra is unchanged. */
-  private val qaWinsorize = GraftQuery(
-    "qa_winsorize",
-    "winsorized mean per event type: exact p05/p95 order-statistic clipping",
-    (s, d) => {
-      val w = Window.partitionBy("event_type").orderBy(col("iv"), col("event_id"))
-      val ranked = Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), centi(col("value")).as("iv"))
-        .withColumn("rn", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(Window.partitionBy("event_type")))
-        .withColumn("k_lo", ceil(col("n") * lit(0.05)))
-        .withColumn("k_hi", ceil(col("n") * lit(0.95)))
-      ranked.groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          max(col("k_lo")).as("klo"), max(col("k_hi")).as("khi"),
-          max(when(col("rn") <= col("k_lo"), col("iv"))).as("p05c"),
-          max(when(col("rn") <= col("k_hi"), col("iv"))).as("p95c"),
-          sum(when(col("rn") >= col("k_lo") && col("rn") <= col("k_hi"),
-            col("iv")).otherwise(lit(0L))).as("mid"))
-        .select(col("event_type"), col("n"),
-          fround(col("p05c").cast("double") / 100.0, 2).as("p05"),
-          fround(col("p95c").cast("double") / 100.0, 2).as("p95"),
-          fround(((col("klo") - 1) * col("p05c") + col("mid") +
-              (col("n") - col("khi")) * col("p95c")).cast("double")
-            / col("n") / 100.0, 4).as("wins_mean"))
-        .orderBy("event_type")
-    },
-    Some("""WITH r AS (SELECT event_type, event_id, CAST(floor(value * 100 + 0.5) AS BIGINT) AS iv, row_number() OVER (PARTITION BY event_type ORDER BY CAST(floor(value * 100 + 0.5) AS BIGINT), event_id) AS rn, count(*) OVER (PARTITION BY event_type) AS n FROM events), k AS (SELECT *, CAST(ceil(n * CAST(0.05 AS DOUBLE)) AS BIGINT) AS k_lo, CAST(ceil(n * CAST(0.95 AS DOUBLE)) AS BIGINT) AS k_hi FROM r), g AS (SELECT event_type, count(*) AS n, max(k_lo) AS klo, max(k_hi) AS khi, max(CASE WHEN rn <= k_lo THEN iv END) AS p05c, max(CASE WHEN rn <= k_hi THEN iv END) AS p95c, CAST(sum(CASE WHEN rn >= k_lo AND rn <= k_hi THEN iv ELSE 0 END) AS BIGINT) AS mid FROM k GROUP BY 1) SELECT event_type, n, floor(CAST(p05c AS DOUBLE) / 100.0 * 100.0 + 0.5) / 100.0 AS p05, floor(CAST(p95c AS DOUBLE) / 100.0 * 100.0 + 0.5) / 100.0 AS p95, floor(CAST((klo - 1) * p05c + mid + (n - khi) * p95c AS DOUBLE) / n / 100.0 * 10000.0 + 0.5) / 10000.0 AS wins_mean FROM g ORDER BY 1"""))
-
-  /** PSI DRIFT MONITOR — the population-stability index between the
-    * md5-hash-split corpus halves (train = buckets 0..7 of samp_hash_split's
-    * EXACT split spelling, holdout = the rest), over the n_chars/50 length
-    * buckets. The stand-in for the real deployment
-    * question — "does this week's crawl still look like the training
-    * distribution?" — where the two halves would be two snapshots. PSI =
-    * Σ (p−q)·ln(p/q) with Laplace smoothing ((c+1)/(n+B), B = bucket
-    * count), so a bucket present in only one half contributes a finite
-    * term instead of ±∞. Determinism: counts are exact integers, p and q
-    * exact rationals evaluated in ONE fixed double-op sequence, each term
-    * floor-rounded to an integer 1e-8 unit and summed as BIGINT — the
-    * cross-row sum is integer, only the per-row ln rides libm. Scale
-    * shape: one map-side-combined aggregation to |sources|×|buckets|
-    * cells, windows and the PSI fold run over that tiny cell table,
-    * never the corpus. */
-  private val qaPsiDrift = GraftQuery(
-    "qa_psi_drift",
-    "PSI distribution drift between md5-split corpus halves, per source",
-    (s, d) => {
-      val cells = Tables.documents(s, d)
-        .select(col("source"),
-          (md5u32(col("doc_id").cast("string")) % 10 <= 7).as("is_train"),
-          floor(col("n_chars") / 50.0).cast("int").as("bucket"))
-        .groupBy("source", "bucket")
-        .agg(sum(when(col("is_train"), 1L).otherwise(0L)).as("c_tr"),
-          sum(when(!col("is_train"), 1L).otherwise(0L)).as("c_ho"))
-      val w = Window.partitionBy("source")
-      val sm = cells
-        .withColumn("n_b", count(lit(1)).over(w))
-        .withColumn("n_tr", sum("c_tr").over(w))
-        .withColumn("n_ho", sum("c_ho").over(w))
-      val p = (col("c_tr") + 1).cast("double") / (col("n_tr") + col("n_b"))
-      val q = (col("c_ho") + 1).cast("double") / (col("n_ho") + col("n_b"))
-      sm.withColumn("term_micro",
-          floor((p - q) * log(p / q) * 1e8 + 0.5).cast("long"))
-        .groupBy("source")
-        .agg(max("n_b").as("n_buckets"), max("n_tr").as("n_train"),
-          max("n_ho").as("n_holdout"), sum("term_micro").as("s_micro"))
-        .select(col("source"), col("n_buckets"), col("n_train"),
-          col("n_holdout"),
-          fround(col("s_micro").cast("double") / 1e8, 6).as("psi"))
-        .orderBy("source")
-    },
-    Some(s"""WITH u AS (SELECT source, (${md5u32Sql("md5(CAST(doc_id AS VARCHAR))")} % 10 <= 7) AS is_train, CAST(floor(n_chars / 50.0) AS INTEGER) AS bucket FROM documents), cells AS (SELECT source, bucket, CAST(sum(CASE WHEN is_train THEN 1 ELSE 0 END) AS BIGINT) AS c_tr, CAST(sum(CASE WHEN is_train THEN 0 ELSE 1 END) AS BIGINT) AS c_ho FROM u GROUP BY 1, 2), w AS (SELECT *, count(*) OVER sw AS n_b, CAST(sum(c_tr) OVER sw AS BIGINT) AS n_tr, CAST(sum(c_ho) OVER sw AS BIGINT) AS n_ho FROM cells WINDOW sw AS (PARTITION BY source)), t AS (SELECT source, n_b, n_tr, n_ho, CAST(floor((CAST(c_tr + 1 AS DOUBLE) / (n_tr + n_b) - CAST(c_ho + 1 AS DOUBLE) / (n_ho + n_b)) * ln((CAST(c_tr + 1 AS DOUBLE) / (n_tr + n_b)) / (CAST(c_ho + 1 AS DOUBLE) / (n_ho + n_b))) * 1e8 + 0.5) AS BIGINT) AS term_micro FROM w) SELECT source, max(n_b) AS n_buckets, max(n_tr) AS n_train, max(n_ho) AS n_holdout, floor(CAST(sum(term_micro) AS DOUBLE) / 1e8 * 1e6 + 0.5) / 1e6 AS psi FROM t GROUP BY 1 ORDER BY 1"""))
-
-  /** TWO-SAMPLE KOLMOGOROV-SMIRNOV drift — the continuous complement to
-    * [[qaPsiDrift]]'s binned PSI: D = max |F_A(x) - F_B(x)| between the
-    * `value` distributions of the month's first and second half. ECDFs are
-    * evaluated on deci-unit bins (floor(value*10) — D on bin edges is the
-    * standard big-data ECDF discretization), and the max runs as an exact
-    * INTEGER comparison: |ca*n_b - cb*n_a| avoids the float ratios whose
-    * last-ulp could flip the argmax between engines. (That product caps
-    * the exact form at ~3e9 rows/side in 64-bit; past that a drift monitor
-    * runs on a deterministic hash sample — samp_hash_split — as real ones
-    * do anyway.)
-    *
-    * Scale shape: one map-side-combined aggregation keyed on bucket (bin
-    * count is bounded by the VALUE RANGE, not the corpus), then the
-    * cumulative max folds over the collected bin array in a single bounded
-    * row — no global window over corpus-sized input anywhere (and no
-    * unpartitioned WindowExec: the fold is an `aggregate` HOF). `at_bucket`
-    * is the lowest bin achieving the max (strict-> fold keeps the first),
-    * i.e. where the distributions diverge most — the first thing a drift
-    * triage looks at. */
-  private val qaKsDrift = GraftQuery(
-    "qa_ks_drift",
-    "two-sample KS statistic (binned ECDF, exact integer argmax) between month halves",
-    (s, d) => {
-      val binned = Tables.events(s, d)
-        .select(floor(col("value") * 10).cast("long").as("bucket"),
-          (dayofmonth(col("ts")) <= 15).as("is_a"))
-        .groupBy("bucket")
-        .agg(sum(when(col("is_a"), 1L).otherwise(0L)).as("a"),
-          sum(when(!col("is_a"), 1L).otherwise(0L)).as("b"))
-      binned
-        .agg(sum("a").as("n_a"), sum("b").as("n_b"),
-          count(lit(1)).as("n_bins"),
-          sort_array(collect_list(struct(col("bucket"), col("a"), col("b"))))
-            .as("cells"))
-        .selectExpr("n_a", "n_b", "n_bins",
-          """aggregate(cells,
-            |  named_struct('ca', 0L, 'cb', 0L, 'best', -1L, 'at', -1L),
-            |  (acc, x) -> named_struct(
-            |    'ca', acc.ca + x.a,
-            |    'cb', acc.cb + x.b,
-            |    'best', CASE WHEN abs((acc.ca + x.a) * n_b - (acc.cb + x.b) * n_a) > acc.best
-            |            THEN abs((acc.ca + x.a) * n_b - (acc.cb + x.b) * n_a) ELSE acc.best END,
-            |    'at', CASE WHEN abs((acc.ca + x.a) * n_b - (acc.cb + x.b) * n_a) > acc.best
-            |          THEN x.bucket ELSE acc.at END)) AS st""".stripMargin)
-        .select(col("n_a"), col("n_b"), col("n_bins"),
-          fround(col("st.best").cast("double") / (col("n_a") * col("n_b")), 6)
-            .as("ks"),
-          col("st.at").as("at_bucket"))
-    },
-    Some("""WITH e AS (SELECT CAST(floor(value * 10) AS BIGINT) AS bucket, (day(ts) <= 15) AS is_a FROM events), c AS (SELECT bucket, CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS a, CAST(sum(CASE WHEN is_a THEN 0 ELSE 1 END) AS BIGINT) AS b FROM e GROUP BY 1), t AS (SELECT CAST(sum(a) AS BIGINT) AS n_a, CAST(sum(b) AS BIGINT) AS n_b, count(*) AS n_bins FROM c), w AS (SELECT bucket, CAST(sum(a) OVER (ORDER BY bucket) AS BIGINT) AS ca, CAST(sum(b) OVER (ORDER BY bucket) AS BIGINT) AS cb FROM c), dnum AS (SELECT bucket, abs(ca * t.n_b - cb * t.n_a) AS num FROM w, t) SELECT t.n_a, t.n_b, t.n_bins, floor(CAST(best.best AS DOUBLE) / (t.n_a * t.n_b) * 1000000.0 + 0.5) / 1000000.0 AS ks, at.at_bucket FROM t, (SELECT max(num) AS best FROM dnum) best, (SELECT min(bucket) AS at_bucket FROM dnum WHERE num = (SELECT max(num) FROM dnum)) at"""))
-
   /** DYADIC EWMA — per-user exponentially-weighted moving average of
     * event value, the smoother a monitoring/feature pipeline runs per
     * entity. The usual recursive form (s_t = a*x_t + (1-a)*s_{t-1}) is a
@@ -709,73 +573,6 @@ object AnalyticsOps {
         .orderBy("user_id", "event_id")
     },
     Some("""WITH v AS (SELECT user_id, event_id, ts, CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc FROM events) SELECT user_id, event_id, CAST(floor(2 * median(vc) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) + 0.5) AS BIGINT) AS med2c FROM v ORDER BY 1, 2"""))
-
-  /** Benford first-digit audit of order totals — the classic synthetic-or-
-    * tampered-numeric-data detector (a data-quality gate for ingested
-    * numeric feeds). The first significant digit is read off the exact
-    * centi-integer's decimal string (no float log10 in the grouping path);
-    * expected shares are the canonical log10(1+1/d) values pinned as ppm
-    * literals identical in both engines. Scale: one map-side-combined
-    * 9-group aggregation; the total for shares is a 9-row window. */
-  private val qaBenford = GraftQuery(
-    "qa_benford",
-    "Benford's-law first-digit distribution of o_totalprice, deviation in ppm",
-    (s, d) => {
-      val expPpm = when(col("digit") === 1, 301030L)
-        .when(col("digit") === 2, 176091L).when(col("digit") === 3, 124939L)
-        .when(col("digit") === 4, 96910L).when(col("digit") === 5, 79181L)
-        .when(col("digit") === 6, 66947L).when(col("digit") === 7, 57992L)
-        .when(col("digit") === 8, 51153L).otherwise(45757L)
-      val g = Tables.orders(s, d)
-        .select(substring(centi(col("o_totalprice")).cast("string"), 1, 1)
-          .cast("int").as("digit"))
-        .groupBy("digit").agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy()
-      g.withColumn("tot", sum("n").over(w))
-        .select(col("digit"), col("n"),
-          floor(col("n").cast("double") * 1000000.0 / col("tot") + 0.5)
-            .cast("long").as("share_ppm"),
-          expPpm.as("exp_ppm"))
-        .withColumn("dev_ppm", col("share_ppm") - col("exp_ppm"))
-        .orderBy("digit")
-    },
-    Some("""WITH dg AS (SELECT CAST(substr(CAST(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS VARCHAR), 1, 1) AS INTEGER) AS digit FROM orders), g AS (SELECT digit, CAST(count(*) AS BIGINT) AS n FROM dg GROUP BY 1), t AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM g), e AS (SELECT g.digit, g.n, CAST(floor(CAST(g.n AS DOUBLE) * 1000000.0 / t.tot + 0.5) AS BIGINT) AS share_ppm, CAST(CASE g.digit WHEN 1 THEN 301030 WHEN 2 THEN 176091 WHEN 3 THEN 124939 WHEN 4 THEN 96910 WHEN 5 THEN 79181 WHEN 6 THEN 66947 WHEN 7 THEN 57992 WHEN 8 THEN 51153 ELSE 45757 END AS BIGINT) AS exp_ppm FROM g, t) SELECT digit, n, share_ppm, exp_ppm, share_ppm - exp_ppm AS dev_ppm FROM e ORDER BY digit"""))
-
-  /** Median/MAD robust outlier count per event type — the outlier gate that
-    * survives the heavy tails that break z-scores (complement to
-    * qa_winsorize's trimmed means and evt_zscore's rolling z). All medians
-    * ride the repo's 2x-integer trick (2·median of BIGINTs is itself an
-    * exact integer under linear interpolation), so the outlier comparison
-    * `2·dev2 > 4.4478·mad2x` multiplies exact integers by the same double
-    * literal in both engines — bit-identical verdicts. Scale: three
-    * passes over the 5-group fact (exact per-group medians are sort-based;
-    * high-cardinality keys would switch to approx_percentile), each join
-    * a 5-row broadcast. */
-  private val qaOutlierMad = GraftQuery(
-    "qa_outlier_mad",
-    "median/MAD robust outlier counts per event type (3-sigma-equivalent rule)",
-    (s, d) => {
-      val ev = Tables.events(s, d)
-        .select(col("event_type"), centi(col("value")).as("vc"))
-      val med = ev.groupBy("event_type")
-        .agg(floor(percentile(col("vc"), lit(0.5)) * 2 + 0.5).cast("long").as("med2c"))
-      val dv = ev.join(broadcast(med), "event_type")
-        .withColumn("dev2", abs(col("vc") * 2 - col("med2c")))
-      val mad = dv.groupBy("event_type")
-        .agg(floor(percentile(col("dev2"), lit(0.5)) * 2 + 0.5).cast("long").as("mad2x"))
-      dv.join(broadcast(mad), "event_type")
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          max("med2c").as("m2"), max("mad2x").as("m4"),
-          sum(when(col("dev2").cast("double") * 2 > lit(4.4478) * col("mad2x"), 1L)
-            .otherwise(0L)).as("n_outliers"))
-        .select(col("event_type"), col("n"),
-          fround(col("m2").cast("double") / 200.0, 3).as("med"),
-          fround(col("m4").cast("double") / 400.0, 3).as("mad"),
-          col("n_outliers"))
-        .orderBy("event_type")
-    },
-    Some("""WITH ev AS (SELECT event_type, CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc FROM events), m AS (SELECT event_type, CAST(floor(2 * median(vc) + 0.5) AS BIGINT) AS med2c FROM ev GROUP BY 1), dv AS (SELECT ev.event_type, vc, abs(2 * vc - med2c) AS dev2, med2c FROM ev JOIN m USING (event_type)), md AS (SELECT event_type, CAST(floor(2 * median(dev2) + 0.5) AS BIGINT) AS mad2x FROM dv GROUP BY 1) SELECT dv.event_type, count(*) AS n, floor(CAST(max(dv.med2c) AS DOUBLE) / 200.0 * 1000.0 + 0.5) / 1000.0 AS med, floor(CAST(max(md.mad2x) AS DOUBLE) / 400.0 * 1000.0 + 0.5) / 1000.0 AS mad, CAST(sum(CASE WHEN CAST(dev2 AS DOUBLE) * 2 > 4.4478 * mad2x THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers FROM dv JOIN md USING (event_type) GROUP BY 1 ORDER BY 1"""))
 
   /** Exact distinct users per event type via the mergeable BITMAP aggregate
     * (functions/expressions/BitmapDistinct.scala) — one pass, map-side
@@ -896,49 +693,6 @@ object AnalyticsOps {
     },
     Some("""WITH ev AS (SELECT event_type, event_id, CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc, TRY_CAST(regexp_extract(props, '"k": (\d+)', 1) AS BIGINT) AS wt FROM events), c AS (SELECT *, sum(wt) OVER (PARTITION BY event_type ORDER BY vc, event_id ROWS UNBOUNDED PRECEDING) AS cw, sum(wt) OVER (PARTITION BY event_type) AS tot FROM ev), f AS (SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY vc, event_id) AS rn FROM c WHERE cw * 2 >= tot) SELECT event_type, floor(CAST(vc AS DOUBLE) / 100.0 * 100.0 + 0.5) / 100.0 AS w_median, CAST(tot AS BIGINT) AS total_weight FROM f WHERE rn = 1 ORDER BY 1"""))
 
-  /** Mutual information (and entropies) between the corpus's lang and
-    * source labels — the feature-dependence audit behind stratification
-    * and leakage checks ("does source already determine language?").
-    * Every Σ n·ln(·) rides as floor-rounded integer micro-nats summed as
-    * BIGINT (the lpPerDoc discipline — double sums have no fixed
-    * partial-aggregation order; integer sums do), so the only float ops
-    * are one division per output column at the edge. The uncertainty
-    * coefficient U(lang|source) = MI/H(lang) is a ratio of the two exact
-    * integer sums. ln-ulp boundary risk: same accepted class as
-    * txt_unigram_logprob (documented there). Scale: ONE corpus pass into
-    * the |lang×source| cell table (map-side combined); marginals and
-    * totals are rollups of the tiny cell table, broadcast back. */
-  private lazy val qaMutualInfo = GraftQuery(
-    "qa_mutual_info",
-    "lang×source mutual information, entropies, uncertainty coefficient",
-    (s, d) => {
-      val cells = Tables.documents(s, d)
-        .groupBy("lang", "source").agg(count(lit(1)).as("nij"))
-      val rowM = cells.groupBy("lang").agg(sum("nij").as("ni"))
-      val colM = cells.groupBy("source").agg(sum("nij").as("nj"))
-      val tot = cells.agg(sum("nij").as("nn"))
-      def microSum(df: org.apache.spark.sql.DataFrame, term: Column, as: String) =
-        df.agg(sum(floor(term * 1e6 + 0.5).cast("long")).as(as))
-      val miS = microSum(
-        cells.join(broadcast(rowM), "lang").join(broadcast(colM), "source")
-          .crossJoin(broadcast(tot)),
-        col("nij") * log((col("nij") * col("nn")).cast("double") /
-          (col("ni") * col("nj")).cast("double")), "mi_s")
-      val hlS = microSum(rowM.crossJoin(broadcast(tot)),
-        -col("ni") * log(col("ni").cast("double") / col("nn").cast("double")), "hl_s")
-      val hsS = microSum(colM.crossJoin(broadcast(tot)),
-        -col("nj") * log(col("nj").cast("double") / col("nn").cast("double")), "hs_s")
-      val nCells = cells.agg(count(lit(1)).as("n_cells"))
-      miS.crossJoin(hlS).crossJoin(hsS).crossJoin(nCells).crossJoin(tot)
-        .select(col("nn").as("n_docs"), col("n_cells"),
-          fround(col("mi_s").cast("double") / (col("nn") * 1e6), 6).as("mi_nats"),
-          fround(col("hl_s").cast("double") / (col("nn") * 1e6), 6).as("h_lang"),
-          fround(col("hs_s").cast("double") / (col("nn") * 1e6), 6).as("h_source"),
-          fround(col("mi_s").cast("double") / col("hl_s").cast("double"), 6)
-            .as("u_lang_given_source"))
-    },
-    Some("""WITH cells AS (SELECT lang, source, count(*) AS nij FROM documents GROUP BY 1, 2), r AS (SELECT lang, CAST(sum(nij) AS BIGINT) AS ni FROM cells GROUP BY 1), c AS (SELECT source, CAST(sum(nij) AS BIGINT) AS nj FROM cells GROUP BY 1), t AS (SELECT CAST(sum(nij) AS BIGINT) AS nn FROM cells), mi AS (SELECT CAST(sum(CAST(floor(nij * ln(CAST(nij * nn AS DOUBLE) / CAST(ni * nj AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS mi_s FROM cells JOIN r USING (lang) JOIN c USING (source) CROSS JOIN t), hl AS (SELECT CAST(sum(CAST(floor(-ni * ln(CAST(ni AS DOUBLE) / CAST(nn AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS hl_s FROM r CROSS JOIN t), hs AS (SELECT CAST(sum(CAST(floor(-nj * ln(CAST(nj AS DOUBLE) / CAST(nn AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS hs_s FROM c CROSS JOIN t), nc AS (SELECT count(*) AS n_cells FROM cells) SELECT nn AS n_docs, n_cells, floor(CAST(mi_s AS DOUBLE) / (nn * 1000000.0) * 1e6 + 0.5) / 1e6 AS mi_nats, floor(CAST(hl_s AS DOUBLE) / (nn * 1000000.0) * 1e6 + 0.5) / 1e6 AS h_lang, floor(CAST(hs_s AS DOUBLE) / (nn * 1000000.0) * 1e6 + 0.5) / 1e6 AS h_source, floor(CAST(mi_s AS DOUBLE) / CAST(hl_s AS DOUBLE) * 1e6 + 0.5) / 1e6 AS u_lang_given_source FROM mi CROSS JOIN hl CROSS JOIN hs CROSS JOIN nc CROSS JOIN t"""))
-
   /** THEIL-T inequality decomposition of customer revenue by nation — the
     * additively decomposable inequality index (within + between sums to
     * total, which the spec verifies): per nation g, T_g = Σ_{i∈g}
@@ -947,7 +701,7 @@ object AnalyticsOps {
     * index audits token-contribution concentration across sources. The
     * per-customer Σ x·ln(·) rides as DECIMAL(38,0) micro-nat sums (x_i
     * reaches 1e8 centi-units, so BIGINT would overflow near sf1 — same
-    * 128-bit pattern as emb_centroid_drift); ln args are ratios of exact
+    * 128-bit pattern as the other wide micro sums); ln args are ratios of exact
     * integer products. Scale: one keyed rollup orders→customer (the
     * dominant shuffle), one customer→nation rollup, broadcast totals. */
   private lazy val aggTheil = GraftQuery(
@@ -1163,180 +917,17 @@ object AnalyticsOps {
     },
     Some("""WITH ev AS (SELECT event_type, CAST(floor(value * 100 + 0.5) AS BIGINT) AS v FROM events), rk AS (SELECT event_type, v, CAST(row_number() OVER (PARTITION BY event_type ORDER BY v) AS BIGINT) AS rn FROM ev), c AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n FROM ev GROUP BY 1), tg AS (SELECT event_type, q, (q * n + 99) // 100 AS disc_rank, ((n - 1) * q) // 100 + 1 AS lo_rank, ((n - 1) * q) % 100 AS rem, ((n - 1) * q) // 100 + 1 + (CASE WHEN ((n - 1) * q) % 100 > 0 THEN 1 ELSE 0 END) AS hi_rank FROM c, (SELECT unnest([25, 50, 75]) AS q)), j AS (SELECT rk.event_type, q, rem, min(CASE WHEN rn = disc_rank THEN v END) AS vd, min(CASE WHEN rn = lo_rank THEN v END) AS vlo, min(CASE WHEN rn = hi_rank THEN v END) AS vhi FROM rk JOIN tg ON rk.event_type = tg.event_type AND (rn = disc_rank OR rn = lo_rank OR rn = hi_rank) GROUP BY 1, 2, 3) SELECT event_type, CAST(q AS INTEGER) AS q, floor(CAST(vd AS DOUBLE) / 100.0 * 1e4 + 0.5) / 1e4 AS disc_value, floor(CAST(vlo * (100 - rem) + vhi * rem AS DOUBLE) / 100.0 / 100.0 * 1e4 + 0.5) / 1e4 AS cont_value FROM j ORDER BY 1, 2"""))
 
-  /** SLICE FINDER — the automatic-insights sweep every metrics platform
-    * runs ("which segment moved the number"): for every 1-dimensional
-    * slice over three dimensions (event type, Monday-0 weekday, 6-hour
-    * band), compare the slice's mean value against its COMPLEMENT with a
-    * Welch z from exact integer moments, and surface the top-10 by
-    * |z|. The complement's moments are the global moments minus the
-    * slice's — one grouped agg per dimension plus one global agg, no
-    * second scan per slice. Doubles appear identically late in both
-    * engines; ordering is on the 4dp-rounded score with full
-    * tiebreakers. */
-  private val qaSliceFinder = GraftQuery(
-    "qa_slice_finder",
-    "top-10 metric-moving slices across 3 dims (Welch z vs complement)",
-    (s, d) => {
-      val base = Tables.events(s, d).select(
-        col("event_type"),
-        ((dayofweek(col("ts")) + lit(5)) % 7).cast("long").as("dow"),
-        expr("hour(ts) div 6").as("hb"),
-        centi(col("value")).as("x"))
-      def slices(dim: String, key: Column) = base
-        .groupBy(key.cast("string").as("slice_value"))
-        .agg(count(lit(1)).as("n1"), sum("x").as("s1"),
-          sum(col("x") * col("x")).as("q1"))
-        .withColumn("dim", lit(dim))
-      val sl = slices("event_type", col("event_type"))
-        .union(slices("weekday", col("dow")))
-        .union(slices("hour_band", col("hb")))
-      val g = base.agg(count(lit(1)).as("n"), sum("x").as("sx"),
-        sum(col("x") * col("x")).as("qx"))
-      val m1 = col("s1").cast("double") / col("n1")
-      val m0 = col("s0").cast("double") / col("n0")
-      val v1 = (col("q1").cast("double") -
-        col("s1").cast("double") * col("s1").cast("double") / col("n1")) / col("n1")
-      val v0 = (col("q0").cast("double") -
-        col("s0").cast("double") * col("s0").cast("double") / col("n0")) / col("n0")
-      sl.crossJoin(broadcast(g))
-        .withColumn("n0", col("n") - col("n1"))
-        .withColumn("s0", col("sx") - col("s1"))
-        .withColumn("q0", col("qx") - col("q1"))
-        .select(col("dim"), col("slice_value"), col("n1").as("n"),
-          fround(m1 / 100.0, 4).as("mean_slice"),
-          fround(m0 / 100.0, 4).as("mean_rest"),
-          fround((m1 - m0) / sqrt(v1 / col("n1") + v0 / col("n0")), 4)
-            .as("z"))
-        .orderBy(abs(col("z")).desc, col("dim"), col("slice_value"))
-        .limit(10)
-    },
-    Some("""WITH base AS (SELECT event_type, CAST(isodow(ts) - 1 AS BIGINT) AS dow, CAST(hour(ts) // 6 AS BIGINT) AS hb, CAST(floor(value * 100 + 0.5) AS BIGINT) AS x FROM events), sl AS (SELECT 'event_type' AS dim, CAST(event_type AS VARCHAR) AS slice_value, CAST(count(*) AS BIGINT) AS n1, CAST(sum(x) AS BIGINT) AS s1, CAST(sum(x * x) AS BIGINT) AS q1 FROM base GROUP BY 2 UNION ALL SELECT 'weekday', CAST(dow AS VARCHAR), CAST(count(*) AS BIGINT), CAST(sum(x) AS BIGINT), CAST(sum(x * x) AS BIGINT) FROM base GROUP BY 2 UNION ALL SELECT 'hour_band', CAST(hb AS VARCHAR), CAST(count(*) AS BIGINT), CAST(sum(x) AS BIGINT), CAST(sum(x * x) AS BIGINT) FROM base GROUP BY 2), g AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx, CAST(sum(x * x) AS BIGINT) AS qx FROM base), e AS (SELECT dim, slice_value, n1, s1, q1, n - n1 AS n0, sx - s1 AS s0, qx - q1 AS q0 FROM sl, g), sc AS (SELECT dim, slice_value, n1 AS n, CAST(s1 AS DOUBLE) / n1 AS m1, CAST(s0 AS DOUBLE) / n0 AS m0, (CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / n1) / n1 AS v1, (CAST(q0 AS DOUBLE) - CAST(s0 AS DOUBLE) * CAST(s0 AS DOUBLE) / n0) / n0 AS v0, n1 AS nn1, n0 AS nn0 FROM e) SELECT dim, slice_value, n, floor(m1 / 100.0 * 1e4 + 0.5) / 1e4 AS mean_slice, floor(m0 / 100.0 * 1e4 + 0.5) / 1e4 AS mean_rest, floor((m1 - m0) / sqrt(v1 / nn1 + v0 / nn0) * 1e4 + 0.5) / 1e4 AS z FROM sc ORDER BY abs(floor((m1 - m0) / sqrt(v1 / nn1 + v0 / nn0) * 1e4 + 0.5) / 1e4) DESC, dim, slice_value LIMIT 10"""))
-
   val all: Seq[GraftQuery] = Seq(
-    aggMedianTwopass, evtUpliftCuped, aggQuantileSemantics, qaSliceFinder,
-    calSeasonality, calSeasonalAnomaly, aggWeightedMedian, winSession,
-    winLagLead, aggPercentiles, aggCorr, jSkewSalted, aggStatsOnepass,
-    aggPivot, winSessionNative, aggApproxPercentile, aggArgExtremes,
-    aggMapHistogram, aggMultiDistinct, aggHllRollup, evtRetention,
-    evtZscore, evtTransitions, qaWinsorize, qaPsiDrift, qaKsDrift, evtEwma,
-    evtRunLengths, winRollingMedian, qaBenford, qaOutlierMad,
-    aggBitmapDistinct, aggBitmapOverlap, qaMutualInfo, aggTheil, aggGini,
-    winRollingCorr, winSessionSensitivity, calWeekOverWeek, qaKeyGaps,
-    aggParetoRatio, qaPkUniqueness, aggAnovaF, aggSkewKurtosis,
-    aggPythagoreanMeans, winOnlineScaling, evtPeriodicityAcf, qaEmdDrift,
-    qaProportionZtest, qaJoinCardEstimate, qaMannWhitney,
-    evtRetentionHalflife, qaSimpsonParadox, qaFkFanout, aggHhi, qaTheilSen,
-    qaDiffInDiff, qaPowerMde)
-
-  /** POWER ANALYSIS companion to qa_proportion_ztest: the minimum
-    * detectable effect at 80% power / α=0.05 two-sided for the observed
-    * sample sizes and pooled purchase rate —
-    * MDE = (z_{α/2}+z_{β})·√(p̄(1−p̄)(1/n₁+1/n₂)) — plus the per-variant
-    * sample size needed to detect a 10% relative lift. The "is this
-    * experiment even big enough" read that belongs NEXT TO the test
-    * statistic, not after the fact. Counts are exact integers off one
-    * conditional pass; both outputs are single fixed-order float
-    * expressions with the conventional 1.96/0.84 quantiles as literals. */
-  private lazy val qaPowerMde = GraftQuery(
-    "qa_power_mde",
-    "minimum detectable effect + required n for the purchase-rate test",
-    (s, d) => {
-      val c = Tables.events(s, d)
-        .select(when(dayofmonth(col("ts")) <= 15, 0).otherwise(1).as("p"),
-          when(col("event_type") === "purchase", 1L).otherwise(0L).as("conv"))
-        .agg(sum(when(col("p") === 0, 1L).otherwise(0L)).as("n1"),
-          sum(when(col("p") === 1, 1L).otherwise(0L)).as("n2"),
-          sum("conv").as("x"))
-      val pp = col("x").cast("double") / (col("n1") + col("n2")).cast("double")
-      val k = lit(1.96 + 0.84)
-      c.select(col("n1"), col("n2"),
-        fround(pp, 6).as("pooled_rate"),
-        fround(k * sqrt(pp * (lit(1.0) - pp) *
-          (lit(1.0) / col("n1").cast("double") +
-            lit(1.0) / col("n2").cast("double"))), 6).as("mde_abs"),
-        // n per variant to detect a 10% relative lift:
-        // n = (k/delta)^2 * 2*p(1-p) with delta = 0.1*p
-        fround(k * k * lit(2.0) * pp * (lit(1.0) - pp) /
-          (lit(0.1) * pp * (lit(0.1) * pp)), 1).as("n_per_variant_10pct"))
-    },
-    Some("""WITH c AS (SELECT CAST(sum(CASE WHEN day(CAST(ts AS TIMESTAMP)) <= 15 THEN 1 ELSE 0 END) AS BIGINT) AS n1, CAST(sum(CASE WHEN day(CAST(ts AS TIMESTAMP)) <= 15 THEN 0 ELSE 1 END) AS BIGINT) AS n2, CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS x FROM events) SELECT n1, n2, floor(CAST(x AS DOUBLE) / CAST(n1 + n2 AS DOUBLE) * 1e6 + 0.5) / 1e6 AS pooled_rate, floor(2.8 * sqrt((CAST(x AS DOUBLE) / CAST(n1 + n2 AS DOUBLE)) * (1.0 - CAST(x AS DOUBLE) / CAST(n1 + n2 AS DOUBLE)) * (1.0 / CAST(n1 AS DOUBLE) + 1.0 / CAST(n2 AS DOUBLE))) * 1e6 + 0.5) / 1e6 AS mde_abs, floor(2.8 * 2.8 * 2.0 * (CAST(x AS DOUBLE) / CAST(n1 + n2 AS DOUBLE)) * (1.0 - CAST(x AS DOUBLE) / CAST(n1 + n2 AS DOUBLE)) / ((0.1 * (CAST(x AS DOUBLE) / CAST(n1 + n2 AS DOUBLE))) * (0.1 * (CAST(x AS DOUBLE) / CAST(n1 + n2 AS DOUBLE)))) * 1e1 + 0.5) / 1e1 AS n_per_variant_10pct FROM c"""))
-
-  /** DIFFERENCE-IN-DIFFERENCES: the causal-inference workhorse on the
-    * synthetic treatment "purchases (treated) vs clicks (control),
-    * before vs after mid-month" — DiD = (T̄post − T̄pre) − (C̄post − C̄pre)
-    * nets out both the group level difference and the common time
-    * trend. All four cell sums/counts are exact integers from ONE
-    * conditional pass; the estimate is one fixed-order expression over
-    * them, reported with the four cell means so the reader can redo the
-    * subtraction. */
-  private lazy val qaDiffInDiff = GraftQuery(
-    "qa_diff_in_diff",
-    "difference-in-differences of mean value: purchase vs click, pre/post",
-    (s, d) => {
-      val c = Tables.events(s, d)
-        .filter(col("event_type").isin("purchase", "click"))
-        .select(when(col("event_type") === "purchase", 1).otherwise(0).as("g"),
-          when(dayofmonth(col("ts")) > 15, 1).otherwise(0).as("p"),
-          centi(col("value")).as("v"))
-        .groupBy("g", "p")
-        .agg(count(lit(1)).as("n"), sum("v").as("sv"))
-      val cells = c.select(
-        concat(when(col("g") === 1, lit("t")).otherwise(lit("c")),
-          when(col("p") === 1, lit("_post")).otherwise(lit("_pre"))).as("cell"),
-        col("n"), col("sv"))
-      val wide = cells.groupBy()
-        .pivot("cell", Seq("t_pre", "t_post", "c_pre", "c_post"))
-        .agg(first("n").as("n"), first("sv").as("sv"))
-      def mean(cell: String) =
-        col(s"${cell}_sv").cast("double") / col(s"${cell}_n").cast("double") / 100.0
-      wide.select(
-        col("t_pre_n"), col("t_post_n"), col("c_pre_n"), col("c_post_n"),
-        fround(mean("t_pre"), 4).as("treated_pre"),
-        fround(mean("t_post"), 4).as("treated_post"),
-        fround(mean("c_pre"), 4).as("control_pre"),
-        fround(mean("c_post"), 4).as("control_post"),
-        fround((mean("t_post") - mean("t_pre")) - (mean("c_post") - mean("c_pre")), 4)
-          .as("did_estimate"))
-    },
-    Some("""WITH c AS (SELECT CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS g, CASE WHEN day(CAST(ts AS TIMESTAMP)) > 15 THEN 1 ELSE 0 END AS p, CAST(floor(value * 100 + 0.5) AS BIGINT) AS v FROM events WHERE event_type IN ('purchase', 'click')), a AS (SELECT CAST(sum(CASE WHEN g = 1 AND p = 0 THEN 1 ELSE 0 END) AS BIGINT) AS t_pre_n, CAST(sum(CASE WHEN g = 1 AND p = 1 THEN 1 ELSE 0 END) AS BIGINT) AS t_post_n, CAST(sum(CASE WHEN g = 0 AND p = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c_pre_n, CAST(sum(CASE WHEN g = 0 AND p = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c_post_n, CAST(sum(CASE WHEN g = 1 AND p = 0 THEN v ELSE 0 END) AS BIGINT) AS t_pre_sv, CAST(sum(CASE WHEN g = 1 AND p = 1 THEN v ELSE 0 END) AS BIGINT) AS t_post_sv, CAST(sum(CASE WHEN g = 0 AND p = 0 THEN v ELSE 0 END) AS BIGINT) AS c_pre_sv, CAST(sum(CASE WHEN g = 0 AND p = 1 THEN v ELSE 0 END) AS BIGINT) AS c_post_sv FROM c) SELECT t_pre_n, t_post_n, c_pre_n, c_post_n, floor(CAST(t_pre_sv AS DOUBLE) / CAST(t_pre_n AS DOUBLE) / 100.0 * 1e4 + 0.5) / 1e4 AS treated_pre, floor(CAST(t_post_sv AS DOUBLE) / CAST(t_post_n AS DOUBLE) / 100.0 * 1e4 + 0.5) / 1e4 AS treated_post, floor(CAST(c_pre_sv AS DOUBLE) / CAST(c_pre_n AS DOUBLE) / 100.0 * 1e4 + 0.5) / 1e4 AS control_pre, floor(CAST(c_post_sv AS DOUBLE) / CAST(c_post_n AS DOUBLE) / 100.0 * 1e4 + 0.5) / 1e4 AS control_post, floor(((CAST(t_post_sv AS DOUBLE) / CAST(t_post_n AS DOUBLE) / 100.0 - CAST(t_pre_sv AS DOUBLE) / CAST(t_pre_n AS DOUBLE) / 100.0) - (CAST(c_post_sv AS DOUBLE) / CAST(c_post_n AS DOUBLE) / 100.0 - CAST(c_pre_sv AS DOUBLE) / CAST(c_pre_n AS DOUBLE) / 100.0)) * 1e4 + 0.5) / 1e4 AS did_estimate FROM a"""))
-
-  /** THEIL-SEN robust trend of the daily value total — the median of all
-    * pairwise slopes, immune to the outlier days that drag a
-    * least-squares line.
-    * The pair set is |days|² ≈ 30² — the DAILY series self-meets, never
-    * the fact — and every slope is the exact integer
-    * div((y_j−y_i)·1e6, j−i); the median is a rank-pick (no
-    * interpolation, no float compare). Positive-denominator div keeps
-    * Spark/DuckDB truncation in agreement; negative numerators floor the
-    * same way via the (a − (a%b+b)%b)/b spelling — avoided entirely by
-    * picking the LOWER median on the sorted micro-slope list. */
-  private lazy val qaTheilSen = GraftQuery(
-    "qa_theilsen_trend",
-    "Theil-Sen median slope of daily totals vs the OLS slope",
-    (s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
-          .cast("long").as("t"))
-        .agg(sum(centi(col("value"))).as("y"))
-      val pairs = daily.toDF("ti", "yi").join(daily.toDF("tj", "yj"),
-          col("ti") < col("tj"))
-        // floor division with positive denominator: spell as DuckDB's //
-        // (floor) — Spark div truncates, so shift negatives first
-        .select(expr(
-          "CASE WHEN yj >= yi THEN ((yj - yi) * 1000000L) div (tj - ti) " +
-            "ELSE -(((yi - yj) * 1000000L + (tj - ti) - 1) div (tj - ti)) END")
-          .as("sm"))
-      val n = pairs.agg(count(lit(1)).as("n"))
-      val w = Window.orderBy(col("sm"))
-      val med = pairs.withColumn("rk", row_number().over(w).cast("long"))
-        .crossJoin(broadcast(n))
-        .filter(col("rk") === expr("(n + 1) div 2"))
-        .select(col("n").as("n_pairs"),
-          fround(col("sm").cast("double") / 1e6 / 100.0, 4)
-            .as("theilsen_slope"))
-      med
-    },
-    Some("""WITH daily AS (SELECT CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS t, CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS y FROM events GROUP BY 1), pr AS (SELECT CASE WHEN b.y >= a.y THEN ((b.y - a.y) * 1000000) // (b.t - a.t) ELSE -(((a.y - b.y) * 1000000 + (b.t - a.t) - 1) // (b.t - a.t)) END AS sm FROM daily a JOIN daily b ON a.t < b.t), rk AS (SELECT sm, CAST(row_number() OVER (ORDER BY sm) AS BIGINT) AS rk, CAST(count(*) OVER () AS BIGINT) AS n FROM pr) SELECT n AS n_pairs, floor(CAST(sm AS DOUBLE) / 1e6 / 100.0 * 1e4 + 0.5) / 1e4 AS theilsen_slope FROM rk WHERE rk = (n + 1) // 2"""))
+    aggMedianTwopass, evtUpliftCuped, aggQuantileSemantics, calSeasonality,
+    calSeasonalAnomaly, aggWeightedMedian, winSession, winLagLead,
+    aggPercentiles, aggCorr, jSkewSalted, aggStatsOnepass, aggPivot,
+    winSessionNative, aggApproxPercentile, aggArgExtremes, aggMapHistogram,
+    aggMultiDistinct, aggHllRollup, evtRetention, evtZscore, evtTransitions,
+    evtEwma, evtRunLengths, winRollingMedian, aggBitmapDistinct,
+    aggBitmapOverlap, aggTheil, aggGini, winRollingCorr,
+    winSessionSensitivity, calWeekOverWeek, aggParetoRatio, aggAnovaF,
+    aggSkewKurtosis, aggPythagoreanMeans, winOnlineScaling,
+    evtPeriodicityAcf, evtRetentionHalflife, aggHhi)
 
   /** HERFINDAHL-HIRSCHMAN INDEX of supplier revenue concentration per
     * nation — the antitrust-style market-structure read next to the
@@ -1372,45 +963,6 @@ object AnalyticsOps {
         .orderBy("nation")
     },
     Some("""WITH sr AS (SELECT l_suppkey, CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS rev FROM lineitem GROUP BY 1), an AS (SELECT sr.l_suppkey, sr.rev, s.s_nationkey AS ng FROM sr JOIN supplier s ON s.s_suppkey = sr.l_suppkey), t AS (SELECT ng, CAST(sum(rev) AS BIGINT) AS trev FROM an GROUP BY 1), bp AS (SELECT an.ng, (rev * 10000) // trev AS bp FROM an JOIN t ON an.ng = t.ng) SELECT ng AS nation, count(*) AS n_suppliers, floor(CAST(sum(bp * bp) AS DOUBLE) / 1e4 * 1e2 + 0.5) / 1e2 AS hhi_points, CASE WHEN sum(bp * bp) > 0 THEN floor(1e8 / CAST(sum(bp * bp) AS DOUBLE) * 1e2 + 0.5) / 1e2 END AS equiv_competitors FROM bp GROUP BY 1 ORDER BY 1"""))
-
-  /** FK FAN-OUT PROFILE: the 1:N cardinality statistics of every declared
-    * relationship edge (parents, children, childless parents, mean/max
-    * fan-out) — the schema-discovery read that feeds join-size estimation
-    * (qa_join_cardinality_estimate consumes exactly these histograms) and
-    * broadcast decisions. One keyed rollup per edge, left-joined from the
-    * parent side so childless parents count. */
-  private lazy val qaFkFanout = {
-    val edges = Seq(
-      ("customer->orders", "customer", "c_custkey", "orders", "o_custkey"),
-      ("orders->lineitem", "orders", "o_orderkey", "lineitem", "l_orderkey"),
-      ("nation->customer", "nation", "n_nationkey", "customer", "c_nationkey"),
-      ("nation->supplier", "nation", "n_nationkey", "supplier", "s_nationkey"),
-      ("part->lineitem", "part", "p_partkey", "lineitem", "l_partkey"))
-    GraftQuery(
-      "qa_fk_fanout_profile",
-      "per-FK-edge fan-out stats: parents, children, childless, mean/max",
-      (s, d) => {
-        val legs = edges.map { case (name, pt, pk, ct, ck) =>
-          val kids = Tables(s, d, ct).groupBy(col(ck).as("k"))
-            .agg(count(lit(1)).as("n"))
-          Tables(s, d, pt).select(col(pk).as("k"))
-            .join(kids, Seq("k"), "left")
-            .agg(count(lit(1)).as("n_parents"),
-              sum(coalesce(col("n"), lit(0L))).as("n_children"),
-              sum(when(col("n").isNull, 1L).otherwise(0L)).as("n_childless"),
-              max(coalesce(col("n"), lit(0L))).as("max_fanout"))
-            .select(lit(name).as("edge"), col("n_parents"), col("n_children"),
-              col("n_childless"),
-              fround(col("n_children").cast("double") / col("n_parents"), 4)
-                .as("mean_fanout"),
-              col("max_fanout"))
-        }
-        legs.reduce(_.unionByName(_)).orderBy("edge")
-      },
-      Some(edges.map { case (name, pt, pk, ct, ck) =>
-        s"SELECT '$name' AS edge, count(*) AS n_parents, CAST(sum(coalesce(n, 0)) AS BIGINT) AS n_children, CAST(sum(CASE WHEN n IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_childless, floor(CAST(sum(coalesce(n, 0)) AS DOUBLE) / count(*) * 1e4 + 0.5) / 1e4 AS mean_fanout, CAST(max(coalesce(n, 0)) AS BIGINT) AS max_fanout FROM (SELECT $pk AS k FROM $pt) p LEFT JOIN (SELECT $ck AS k, count(*) AS n FROM $ct GROUP BY 1) c USING (k)"
-      }.mkString(" UNION ALL ") + " ORDER BY edge"))
-  }
 
   /** RETENTION HALF-LIFE: fit ln(retention) = α − λ·offset over the
     * pooled day-offset retention rates (offsets ≥ 1, rate > 0) and
@@ -1449,191 +1001,6 @@ object AnalyticsOps {
           .as("half_life_days"))
     },
     Some(s"""WITH act AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events), c AS (SELECT *, min(day) OVER (PARTITION BY user_id) AS cohort FROM act), o AS (SELECT CAST(date_diff('day', cohort, day) AS BIGINT) AS off, count(*) AS n_active FROM c GROUP BY 1), b AS (SELECT n_active AS n0 FROM o WHERE off = 0), p AS (SELECT off AS x, CAST(floor(ln(CAST(n_active AS DOUBLE) / CAST(n0 AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT) AS ym FROM o CROSS JOIN b WHERE off >= 1 AND n_active > 0), f AS (SELECT CAST(count(*) AS BIGINT) AS m, CAST(sum(x) AS BIGINT) AS sx, CAST(sum(ym) AS BIGINT) AS sy, CAST(sum(x * x) AS BIGINT) AS sxx, CAST(sum(x * ym) AS BIGINT) AS sxy FROM p), l AS (SELECT m AS n_offsets, floor(-CAST(m * sxy - sx * sy AS DOUBLE) / CAST(m * sxx - sx * sx AS DOUBLE) / 1e6 * 1e6 + 0.5) / 1e6 AS lambda_per_day FROM f) SELECT n_offsets, lambda_per_day, CASE WHEN lambda_per_day > 0 THEN floor(${math.log(2.0)} / lambda_per_day * 1e2 + 0.5) / 1e2 END AS half_life_days FROM l"""))
-
-  /** SIMPSON'S-PARADOX detector: the pooled revenue-vs-order-count slope
-    * across customers against each nation's within-group slope — counting
-    * nations whose sign REVERSES the pooled trend, the aggregation trap
-    * every analytics reviewer checks before trusting a corpus-wide
-    * correlation. All slopes are exact-integer-moment signs (numerator
-    * n·Σxy − Σx·Σy in DECIMAL, no division needed for a sign test). */
-  private lazy val qaSimpsonParadox = GraftQuery(
-    "qa_simpson_paradox",
-    "pooled vs per-nation slope signs of revenue on order count",
-    (s, d) => {
-      val cust = Tables.orders(s, d)
-        .groupBy("o_custkey")
-        .agg(count(lit(1)).as("x"), sum(centi(col("o_totalprice"))).as("y"))
-        .join(Tables.customer(s, d)
-          .select(col("c_custkey").as("o_custkey"), col("c_nationkey").as("ng")),
-          Seq("o_custkey"))
-      def num = (col("m") * col("sxy") - col("sx").cast("decimal(38,0)") * col("sy"))
-      val per = cust.groupBy("ng")
-        .agg(count(lit(1)).as("m"), sum("x").as("sx"), sum("y").as("sy"),
-          sum(col("x").cast("decimal(38,0)") * col("y")).as("sxy"))
-        .select(col("ng"), when(num > 0, 1L).when(num < 0, -1L).otherwise(0L)
-          .as("sgn"))
-      val pooled = cust
-        .agg(count(lit(1)).as("m"), sum("x").as("sx"), sum("y").as("sy"),
-          sum(col("x").cast("decimal(38,0)") * col("y")).as("sxy"))
-        .select(when(num > 0, 1L).when(num < 0, -1L).otherwise(0L)
-          .as("pooled_sgn"))
-      per.crossJoin(broadcast(pooled))
-        .agg(count(lit(1)).as("n_groups"),
-          max("pooled_sgn").as("pooled_sign"),
-          sum(when(col("sgn") === col("pooled_sgn"), 1L).otherwise(0L))
-            .as("n_agreeing"),
-          sum(when(col("sgn") === -col("pooled_sgn"), 1L).otherwise(0L))
-            .as("n_reversed"))
-    },
-    Some("""WITH cu AS (SELECT o_custkey, CAST(count(*) AS BIGINT) AS x, CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS y FROM orders GROUP BY 1), cust AS (SELECT cu.*, c.c_nationkey AS ng FROM cu JOIN customer c ON c.c_custkey = cu.o_custkey), per AS (SELECT ng, CASE WHEN CAST(count(*) AS HUGEINT) * sum(CAST(x AS HUGEINT) * y) - CAST(sum(x) AS HUGEINT) * sum(y) > 0 THEN 1 WHEN CAST(count(*) AS HUGEINT) * sum(CAST(x AS HUGEINT) * y) - CAST(sum(x) AS HUGEINT) * sum(y) < 0 THEN -1 ELSE 0 END AS sgn FROM cust GROUP BY 1), pl AS (SELECT CASE WHEN CAST(count(*) AS HUGEINT) * sum(CAST(x AS HUGEINT) * y) - CAST(sum(x) AS HUGEINT) * sum(y) > 0 THEN 1 WHEN CAST(count(*) AS HUGEINT) * sum(CAST(x AS HUGEINT) * y) - CAST(sum(x) AS HUGEINT) * sum(y) < 0 THEN -1 ELSE 0 END AS pooled_sgn FROM cust) SELECT count(*) AS n_groups, CAST(max(pooled_sgn) AS BIGINT) AS pooled_sign, CAST(sum(CASE WHEN sgn = pooled_sgn THEN 1 ELSE 0 END) AS BIGINT) AS n_agreeing, CAST(sum(CASE WHEN sgn = -pooled_sgn THEN 1 ELSE 0 END) AS BIGINT) AS n_reversed FROM per CROSS JOIN pl"""))
-
-  /** MANN-WHITNEY U between month halves — the NONPARAMETRIC location
-    * test (no normality assumed, unlike the z/ANOVA legs), computed
-    * EXACTLY and scale-safely from the shared centi-value histogram:
-    * U = Σ_v cA(v)·cumB(<v) + cA(v)·cB(v)/2 (ties contribute half), so
-    * the combined sample is never globally ranked — one distinct-value
-    * rollup (~|value range| rows) and one cumulative window replace the
-    * O(N log N) sort a textbook implementation needs. The half-tie term
-    * doubles everything to stay integer (U2 = 2U), and the normal
-    * approximation's z rides the same exact integers. */
-  private lazy val qaMannWhitney = GraftQuery(
-    "qa_mann_whitney",
-    "exact Mann-Whitney U (with ties) between month halves via histograms",
-    (s, d) => {
-      val h = Tables.events(s, d)
-        .select(centi(col("value")).as("v"),
-          when(dayofmonth(col("ts")) <= 15, 0).otherwise(1).as("p"))
-        .groupBy("v")
-        .agg(sum(when(col("p") === 0, 1L).otherwise(0L)).as("ca"),
-          sum(when(col("p") === 1, 1L).otherwise(0L)).as("cb"))
-      val w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-      val u2 = h
-        .withColumn("cumb", coalesce(sum("cb").over(w), lit(0L)))
-        .agg(sum("ca").as("n1"), sum("cb").as("n2"),
-          sum(col("ca").cast("decimal(38,0)") * (lit(2L) * col("cumb") + col("cb")))
-            .as("u2"))
-      val n1 = col("n1").cast("double"); val n2 = col("n2").cast("double")
-      u2.select(col("n1"), col("n2"),
-        fround(col("u2").cast("double") / 2.0, 1).as("u_stat"),
-        fround((col("u2").cast("double") / 2.0 - n1 * n2 / 2.0) /
-          sqrt(n1 * n2 * (n1 + n2 + 1.0) / 12.0), 4).as("z_approx"))
-    },
-    Some("""WITH h AS (SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS v, CAST(sum(CASE WHEN day(CAST(ts AS TIMESTAMP)) <= 15 THEN 1 ELSE 0 END) AS BIGINT) AS ca, CAST(sum(CASE WHEN day(CAST(ts AS TIMESTAMP)) <= 15 THEN 0 ELSE 1 END) AS BIGINT) AS cb FROM events GROUP BY 1), c AS (SELECT *, CAST(coalesce(sum(cb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cumb FROM h), a AS (SELECT CAST(sum(ca) AS BIGINT) AS n1, CAST(sum(cb) AS BIGINT) AS n2, sum(CAST(ca AS HUGEINT) * (2 * cumb + cb)) AS u2 FROM c) SELECT n1, n2, floor(CAST(u2 AS DOUBLE) / 2.0 * 1e1 + 0.5) / 1e1 AS u_stat, floor((CAST(u2 AS DOUBLE) / 2.0 - CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE) / 2.0) / sqrt(CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE) * (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) + 1.0) / 12.0) * 1e4 + 0.5) / 1e4 AS z_approx FROM a"""))
-
-  /** JOIN-CARDINALITY ESTIMATION audit — the optimizer-statistics theory
-    * made measurable: |orders ⋈ lineitem| estimated three ways (the
-    * textbook uniform-key formula |A|·|B|/max(ndv), a 150-bucket
-    * equi-width key histogram Σ aᵢ·bᵢ/width assuming in-bucket
-    * uniformity, and the exact per-key Σ cA(k)·cB(k)) next to the true
-    * join count — per-estimator error in one read, the audit that says
-    * how much histogram resolution buys. Everything is exact integer
-    * arithmetic from two key rollups; no actual join executes (the
-    * per-key sum IS the join count, computed as an aggregate). */
-  private lazy val qaJoinCardEstimate = GraftQuery(
-    "qa_join_cardinality_estimate",
-    "join-size estimates (uniform/histogram/exact) vs the true cardinality",
-    (s, d) => {
-      val a = Tables.orders(s, d).groupBy(col("o_orderkey").as("k"))
-        .agg(count(lit(1)).as("ca"))
-      val b = Tables.lineitem(s, d).groupBy(col("l_orderkey").as("k"))
-        .agg(count(lit(1)).as("cb"))
-      val exact = a.join(b, Seq("k"))
-        .agg(sum(col("ca") * col("cb")).as("exact_card"))
-      // a/b are one row per key by construction, so the distinct key count
-      // is a plain count(*) — countDistinct here would re-run the whole
-      // two-phase distinct machinery for a number the grouped shape
-      // already guarantees
-      val statsA = a.agg(sum("ca").as("na"), count(lit(1)).as("da"),
-        max("k").as("mx"))
-      val statsB = b.agg(sum("cb").as("nb"), count(lit(1)).as("db"))
-      val span = broadcast(statsA.select(expr("mx div 150 + 1").as("span")))
-      val ha = a.crossJoin(span)
-        .groupBy(expr("k div span").as("bk")).agg(sum("ca").as("ba"))
-      val hb = b.crossJoin(span)
-        .groupBy(expr("k div span").as("bk")).agg(sum("cb").as("bb"))
-      val hist = ha.join(hb, Seq("bk")).crossJoin(span)
-        .agg(sum(expr("(ba * bb) div span")).as("hist_card"))
-      exact.crossJoin(statsA).crossJoin(statsB).crossJoin(hist)
-        .select(col("exact_card"),
-          expr("(na * nb) div greatest(da, db)").as("uniform_card"),
-          col("hist_card"),
-          fround((expr("(na * nb) div greatest(da, db)") - col("exact_card"))
-            .cast("double") / col("exact_card").cast("double") * 100.0, 2)
-            .as("uniform_err_pct"),
-          fround((col("hist_card") - col("exact_card")).cast("double") /
-            col("exact_card").cast("double") * 100.0, 2).as("hist_err_pct"))
-    },
-    Some("""WITH a AS (SELECT o_orderkey AS k, count(*) AS ca FROM orders GROUP BY 1), b AS (SELECT l_orderkey AS k, count(*) AS cb FROM lineitem GROUP BY 1), ex AS (SELECT CAST(sum(ca * cb) AS BIGINT) AS exact_card FROM a JOIN b USING (k)), sa AS (SELECT CAST(sum(ca) AS BIGINT) AS na, CAST(count(DISTINCT k) AS BIGINT) AS da, CAST(max(k) AS BIGINT) AS mx FROM a), sb AS (SELECT CAST(sum(cb) AS BIGINT) AS nb, CAST(count(DISTINCT k) AS BIGINT) AS db FROM b), sp AS (SELECT mx // 150 + 1 AS span FROM sa), ha AS (SELECT k // (SELECT span FROM sp) AS bk, CAST(sum(ca) AS BIGINT) AS ba FROM a GROUP BY 1), hb AS (SELECT k // (SELECT span FROM sp) AS bk, CAST(sum(cb) AS BIGINT) AS bb FROM b GROUP BY 1), hist AS (SELECT CAST(sum((ba * bb) // (SELECT span FROM sp)) AS BIGINT) AS hist_card FROM ha JOIN hb USING (bk)) SELECT exact_card, (na * nb) // greatest(da, db) AS uniform_card, hist_card, floor(CAST((na * nb) // greatest(da, db) - exact_card AS DOUBLE) / CAST(exact_card AS DOUBLE) * 100.0 * 1e2 + 0.5) / 1e2 AS uniform_err_pct, floor(CAST(hist_card - exact_card AS DOUBLE) / CAST(exact_card AS DOUBLE) * 100.0 * 1e2 + 0.5) / 1e2 AS hist_err_pct FROM ex CROSS JOIN sa CROSS JOIN sb CROSS JOIN hist"""))
-
-  /** TWO-PROPORTION z-TEST: did the purchase rate change between month
-    * halves? — the A/B-test primitive completing the inference family
-    * (ANOVA for means, χ² for categories, KS/PSI/EMD for distributions,
-    * z for rates). Trials and conversions are exact integer counts from
-    * ONE conditional pass; the pooled-variance z statistic is a single
-    * fixed-order float expression over those integers. Both one-row
-    * legs' counts ship alongside the statistic so the reader can redo
-    * the arithmetic. */
-  private lazy val qaProportionZtest = GraftQuery(
-    "qa_proportion_ztest",
-    "two-proportion z-test on the purchase rate between month halves",
-    (s, d) => {
-      val c = Tables.events(s, d)
-        .select(when(dayofmonth(col("ts")) <= 15, 0).otherwise(1).as("p"),
-          when(col("event_type") === "purchase", 1L).otherwise(0L).as("conv"))
-        .agg(sum(when(col("p") === 0, 1L).otherwise(0L)).as("n1"),
-          sum(when(col("p") === 0, col("conv")).otherwise(0L)).as("x1"),
-          sum(when(col("p") === 1, 1L).otherwise(0L)).as("n2"),
-          sum(when(col("p") === 1, col("conv")).otherwise(0L)).as("x2"))
-      val p1 = col("x1").cast("double") / col("n1").cast("double")
-      val p2 = col("x2").cast("double") / col("n2").cast("double")
-      val pp = (col("x1") + col("x2")).cast("double") /
-        (col("n1") + col("n2")).cast("double")
-      c.select(col("n1"), col("x1"), col("n2"), col("x2"),
-        fround(p1, 6).as("rate_first"), fround(p2, 6).as("rate_second"),
-        fround((p1 - p2) /
-          sqrt(pp * (lit(1.0) - pp) *
-            (lit(1.0) / col("n1").cast("double") +
-              lit(1.0) / col("n2").cast("double"))), 4).as("z_stat"))
-    },
-    Some("""WITH c AS (SELECT CAST(sum(CASE WHEN p = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n1, CAST(sum(CASE WHEN p = 0 THEN conv ELSE 0 END) AS BIGINT) AS x1, CAST(sum(CASE WHEN p = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n2, CAST(sum(CASE WHEN p = 1 THEN conv ELSE 0 END) AS BIGINT) AS x2 FROM (SELECT CASE WHEN day(CAST(ts AS TIMESTAMP)) <= 15 THEN 0 ELSE 1 END AS p, CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS conv FROM events)) SELECT n1, x1, n2, x2, floor(CAST(x1 AS DOUBLE) / CAST(n1 AS DOUBLE) * 1e6 + 0.5) / 1e6 AS rate_first, floor(CAST(x2 AS DOUBLE) / CAST(n2 AS DOUBLE) * 1e6 + 0.5) / 1e6 AS rate_second, floor((CAST(x1 AS DOUBLE) / CAST(n1 AS DOUBLE) - CAST(x2 AS DOUBLE) / CAST(n2 AS DOUBLE)) / sqrt((CAST(x1 + x2 AS DOUBLE) / CAST(n1 + n2 AS DOUBLE)) * (1.0 - CAST(x1 + x2 AS DOUBLE) / CAST(n1 + n2 AS DOUBLE)) * (1.0 / CAST(n1 AS DOUBLE) + 1.0 / CAST(n2 AS DOUBLE))) * 1e4 + 0.5) / 1e4 AS z_stat FROM c"""))
-
-  /** EARTH MOVER'S (Wasserstein-1) drift between the first and second
-    * half-month value distributions — the drift metric that reports HOW
-    * FAR mass moved in value units, completing the family: PSI (ratio),
-    * KS (max gap), χ² (categorical), EMD (transport cost). On binned 1-D
-    * integers EMD is exactly Σ_bins |cumΔ|·width: counts bin at centi
-    * unit width 100 (one value unit), the CDF difference cumulates as
-    * n2·cum1 − n1·cum2 (cleared denominators — EXACT integers
-    * throughout), and the single division happens at the edge. One
-    * conditional-aggregation pass bins both halves. */
-  private lazy val qaEmdDrift = GraftQuery(
-    "qa_emd_drift",
-    "Wasserstein-1 drift of value between month halves (exact binned form)",
-    (s, d) => {
-      val binned = Tables.events(s, d)
-        .select(centi(col("value")).as("vc"),
-          when(dayofmonth(col("ts")) <= 15, 0).otherwise(1).as("p"))
-        .groupBy(expr("vc div 100").as("bin"))
-        .agg(sum(when(col("p") === 0, 1L).otherwise(0L)).as("ca"),
-          sum(when(col("p") === 1, 1L).otherwise(0L)).as("cb"))
-      val tot = binned.agg(sum("ca").as("na"), sum("cb").as("nb"))
-      val w = Window.orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      binned.crossJoin(broadcast(tot))
-        .withColumn("cuma", sum("ca").over(w))
-        .withColumn("cumb", sum("cb").over(w))
-        .withColumn("dd",
-          abs(col("nb").cast("decimal(38,0)") * col("cuma") -
-            col("na").cast("decimal(38,0)") * col("cumb")))
-        .groupBy("na", "nb")
-        .agg(count(lit(1)).as("n_bins"), sum("dd").as("sdd"))
-        .select(col("n_bins"), col("na").as("n_first_half"),
-          col("nb").as("n_second_half"),
-          fround(col("sdd").cast("double") /
-            (col("na").cast("double") * col("nb").cast("double")), 4)
-            .as("emd_value_units"))
-    },
-    Some("""WITH b AS (SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) // 100 AS bin, CASE WHEN day(CAST(ts AS TIMESTAMP)) <= 15 THEN 0 ELSE 1 END AS p FROM events), c AS (SELECT bin, CAST(sum(CASE WHEN p = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ca, CAST(sum(CASE WHEN p = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cb FROM b GROUP BY 1), t AS (SELECT CAST(sum(ca) AS BIGINT) AS na, CAST(sum(cb) AS BIGINT) AS nb FROM c), cm AS (SELECT bin, na, nb, CAST(sum(ca) OVER w AS BIGINT) AS cuma, CAST(sum(cb) OVER w AS BIGINT) AS cumb FROM c CROSS JOIN t WINDOW w AS (ORDER BY bin ROWS UNBOUNDED PRECEDING)), dd AS (SELECT na, nb, abs(CAST(nb AS HUGEINT) * cuma - CAST(na AS HUGEINT) * cumb) AS dd FROM cm) SELECT count(*) AS n_bins, na AS n_first_half, nb AS n_second_half, floor(CAST(sum(dd) AS DOUBLE) / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)) * 1e4 + 0.5) / 1e4 AS emd_value_units FROM dd GROUP BY na, nb"""))
 
   /** ONLINE MIN-MAX SCALING — the leakage-free feature-normalization a
     * streaming feature store applies: each event's value scaled by the
@@ -1772,48 +1139,6 @@ object AnalyticsOps {
     },
     Some("""WITH g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS s1, sum(CAST(x AS HUGEINT) * x) AS s2, sum(CAST(x AS HUGEINT) * x * x) AS s3, sum(CAST(x AS HUGEINT) * x * x * x) AS s4 FROM (SELECT event_type, CAST(floor(value * 100 + 0.5) AS BIGINT) AS x FROM events) GROUP BY 1), m AS (SELECT event_type, n, CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) AS m1, CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE) AS r2, CAST(s3 AS DOUBLE) / CAST(n AS DOUBLE) AS r3, CAST(s4 AS DOUBLE) / CAST(n AS DOUBLE) AS r4 FROM g), c AS (SELECT event_type, n, r2 - m1 * m1 AS m2, r3 - 3.0 * m1 * r2 + 2.0 * m1 * m1 * m1 AS m3, r4 - 4.0 * m1 * r3 + 6.0 * m1 * m1 * r2 - 3.0 * m1 * m1 * m1 * m1 AS m4 FROM m) SELECT event_type, n AS n_events, floor(m3 / sqrt(m2 * m2 * m2) * 1e6 + 0.5) / 1e6 AS skewness, floor((m4 / (m2 * m2) - 3.0) * 1e6 + 0.5) / 1e6 AS excess_kurtosis FROM c ORDER BY 1"""))
 
-  /** PRIMARY-KEY UNIQUENESS audit across the whole catalog — the first
-    * data contract every ingest asserts: per table, declared key columns,
-    * row count, distinct-key count, and duplicate rows. lineitem audits
-    * its COMPOSITE key (orderkey, linenumber). Ten map-side-combined
-    * aggregates unioned; nothing joins. */
-  private lazy val qaPkUniqueness = {
-    val singles = Seq(
-      ("region", "r_regionkey"), ("nation", "n_nationkey"),
-      ("customer", "c_custkey"), ("supplier", "s_suppkey"),
-      ("part", "p_partkey"), ("orders", "o_orderkey"),
-      ("events", "event_id"), ("documents", "doc_id"),
-      ("embeddings", "vec_id"))
-    GraftQuery(
-      "qa_pk_uniqueness",
-      "catalog-wide primary-key uniqueness audit (incl. composite lineitem key)",
-      (s, d) => {
-        // r15 plan audit: count(*) + countDistinct(k) per leg already
-        // plans as the minimal 2-exchange shape (partial group-count →
-        // keyed exchange → rollup; planAggregateWithOneDistinct) — an
-        // explicit group-then-rollup respelling produced a bit-identical
-        // physical plan, so the straightforward form stays.
-        val legs = singles.map { case (t, k) =>
-          Tables(s, d, t).agg(count(lit(1)).as("n_rows"),
-            countDistinct(col(k)).as("n_keys"))
-            .select(lit(t).as("table_name"), lit(k).as("key_cols"),
-              col("n_rows"), col("n_keys"),
-              (col("n_rows") - col("n_keys")).as("n_dup_rows"))
-        } :+ Tables.lineitem(s, d)
-          .agg(count(lit(1)).as("n_rows"),
-            countDistinct(col("l_orderkey"), col("l_linenumber")).as("n_keys"))
-          .select(lit("lineitem").as("table_name"),
-            lit("l_orderkey,l_linenumber").as("key_cols"),
-            col("n_rows"), col("n_keys"),
-            (col("n_rows") - col("n_keys")).as("n_dup_rows"))
-        legs.reduce(_.unionByName(_)).orderBy("table_name")
-      },
-      Some(singles.map { case (t, k) =>
-        s"SELECT '$t' AS table_name, '$k' AS key_cols, count(*) AS n_rows, CAST(count(DISTINCT $k) AS BIGINT) AS n_keys, count(*) - CAST(count(DISTINCT $k) AS BIGINT) AS n_dup_rows FROM $t"
-      }.mkString(" UNION ALL ") +
-        " UNION ALL SELECT 'lineitem', 'l_orderkey,l_linenumber', count(*), CAST(count(DISTINCT (l_orderkey, l_linenumber)) AS BIGINT), count(*) - CAST(count(DISTINCT (l_orderkey, l_linenumber)) AS BIGINT) FROM lineitem ORDER BY table_name"))
-  }
-
   /** ONE-WAY ANOVA of value by event type — the between/within variance
     * decomposition and its F statistic, the mean-difference test next to
     * the distribution-level KS/PSI/χ² drift family. Each group's
@@ -1859,27 +1184,6 @@ object AnalyticsOps {
           }, 6).as("eta_squared"))
     },
     Some("""WITH g AS (SELECT event_type, count(*) AS ng, CAST(sum(x) AS BIGINT) AS sx, sum(CAST(x AS HUGEINT) * x) AS sxx FROM (SELECT event_type, CAST(floor(value * 100 + 0.5) AS BIGINT) AS x FROM events) GROUP BY 1), t AS (SELECT ng, sx, sxx, CAST(floor(CAST(CAST(sx AS HUGEINT) * sx AS DOUBLE) / CAST(ng AS DOUBLE) * 1e4 + 0.5) AS HUGEINT) AS tm FROM g), a AS (SELECT count(*) AS k, CAST(sum(ng) AS BIGINT) AS nn, CAST(sum(sx) AS BIGINT) AS sxt, sum(sxx) AS sxxt, sum(tm) AS tms FROM t) SELECT k, nn AS n_rows, floor(((CAST(tms AS DOUBLE) / 1e4 - CAST(CAST(sxt AS HUGEINT) * sxt AS DOUBLE) / CAST(nn AS DOUBLE)) / CAST(k - 1 AS DOUBLE)) / ((CAST(sxxt AS DOUBLE) - CAST(tms AS DOUBLE) / 1e4) / CAST(nn - k AS DOUBLE)) * 1e4 + 0.5) / 1e4 AS f_stat, floor((CAST(tms AS DOUBLE) / 1e4 - CAST(CAST(sxt AS HUGEINT) * sxt AS DOUBLE) / CAST(nn AS DOUBLE)) / (CAST(sxxt AS DOUBLE) - CAST(CAST(sxt AS HUGEINT) * sxt AS DOUBLE) / CAST(nn AS DOUBLE)) * 1e6 + 0.5) / 1e6 AS eta_squared FROM a"""))
-
-  /** SURROGATE-KEY GAP audit: per 1000-key bucket of o_orderkey, expected
-    * span (max−min+1) vs actual count — the "did we lose rows" check for
-    * sequence-keyed ingests, computed WITHOUT materializing the expected
-    * range (a generate_series at 100 TB key-space is its own outage):
-    * gaps fall out of min/max/count per bucket, one map-side-combined
-    * rollup. TPC-H orderkeys are sparse by construction, so the audit has
-    * real signal here. */
-  private lazy val qaKeyGaps = GraftQuery(
-    "qa_key_gaps",
-    "per-bucket orderkey sequence-gap audit from min/max/count (no range explode)",
-    (s, d) => Tables.orders(s, d)
-      .groupBy(expr("o_orderkey div 1000").as("bucket"))
-      .agg(min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"),
-        count(lit(1)).as("n_actual"))
-      .select(col("bucket"), col("min_key"), col("max_key"),
-        (col("max_key") - col("min_key") + 1).as("n_span"),
-        col("n_actual"),
-        (col("max_key") - col("min_key") + 1 - col("n_actual")).as("n_missing"))
-      .orderBy("bucket"),
-    Some("""SELECT o_orderkey // 1000 AS bucket, min(o_orderkey) AS min_key, max(o_orderkey) AS max_key, max(o_orderkey) - min(o_orderkey) + 1 AS n_span, count(*) AS n_actual, max(o_orderkey) - min(o_orderkey) + 1 - count(*) AS n_missing FROM orders GROUP BY 1 ORDER BY 1"""))
 
   /** PARETO concentration read: the revenue share held by the top 10% and
     * top 20% of customers — the canonical "80/20" statement next to the

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
@@ -24,52 +23,6 @@ import graft.functions.GraftFunctions.fround
   * file-count-sized and always broadcast.
   */
 object LayoutOps {
-
-  /** ZONE-MAP PRUNING audit — for a set of ship-date windows, how many
-    * simulated files does a min/max zone map let the scan skip, and what
-    * read amplification (rows scanned / rows matched) remains? This is
-    * the measurable form of "is this table laid out well for its
-    * predicates": natural order correlates orderkey with orderdate but
-    * only loosely with shipdate, so pruning is partial — exactly the
-    * signal that triggers a re-clustering decision ([[relZorderLayout]]
-    * quantifies the candidate fix). Plan: one agg builds the per-file
-    * zone table (file-count-sized, broadcast), one fact×4-predicate
-    * explode counts true matches; no shuffle touches fact-sized data
-    * twice. */
-  private val qaZonemapPruning = GraftQuery(
-    "qa_zonemap_pruning",
-    "min/max zone-map file-skip + read-amplification per date predicate",
-    (s, d) => {
-      import s.implicits._
-      val li = Tables.lineitem(s, d).select(
-        expr("l_orderkey div 4096").as("f"),
-        col("l_shipdate").cast("date").as("sd"))
-      val zones = li.groupBy("f").agg(
-        min("sd").as("zmin"), max("sd").as("zmax"),
-        count(lit(1)).as("nrows"))
-      val preds = Seq(
-        (1, "1997-01-01", "1997-04-01"), (2, "1997-04-01", "1997-07-01"),
-        (3, "1997-07-01", "1997-10-01"), (4, "1997-10-01", "1998-01-01"))
-        .toDF("pid", "lo", "hi")
-        .select(col("pid"), col("lo").cast("date").as("lo"),
-          col("hi").cast("date").as("hi"))
-      val flags = zones.crossJoin(broadcast(preds))
-        .withColumn("scanned", col("zmin") < col("hi") && col("zmax") >= col("lo"))
-        .groupBy("pid").agg(
-          count(lit(1)).as("files_total"),
-          sum(when(col("scanned"), 1L).otherwise(0L)).as("files_scanned"),
-          sum(when(col("scanned"), col("nrows")).otherwise(0L)).as("rows_scanned"))
-      val matched = li.crossJoin(broadcast(preds))
-        .filter(col("sd") >= col("lo") && col("sd") < col("hi"))
-        .groupBy("pid").agg(count(lit(1)).as("rows_matched"))
-      flags.join(matched, Seq("pid"))
-        .select(col("pid"), col("files_scanned"), col("files_total"),
-          col("rows_scanned"), col("rows_matched"),
-          fround(col("rows_scanned").cast("double") /
-            greatest(col("rows_matched"), lit(1L)), 4).as("read_amp"))
-        .orderBy("pid")
-    },
-    Some("""WITH li AS (SELECT l_orderkey // 4096 AS f, CAST(l_shipdate AS DATE) AS sd FROM lineitem), zones AS (SELECT f, min(sd) AS zmin, max(sd) AS zmax, CAST(count(*) AS BIGINT) AS nrows FROM li GROUP BY 1), preds AS (SELECT * FROM (VALUES (1, DATE '1997-01-01', DATE '1997-04-01'), (2, DATE '1997-04-01', DATE '1997-07-01'), (3, DATE '1997-07-01', DATE '1997-10-01'), (4, DATE '1997-10-01', DATE '1998-01-01')) AS t(pid, lo, hi)), flags AS (SELECT pid, CAST(count(*) AS BIGINT) AS files_total, CAST(sum(CASE WHEN zmin < hi AND zmax >= lo THEN 1 ELSE 0 END) AS BIGINT) AS files_scanned, CAST(sum(CASE WHEN zmin < hi AND zmax >= lo THEN nrows ELSE 0 END) AS BIGINT) AS rows_scanned FROM zones, preds GROUP BY 1), mt AS (SELECT pid, CAST(count(*) AS BIGINT) AS rows_matched FROM li, preds WHERE sd >= lo AND sd < hi GROUP BY 1) SELECT pid, files_scanned, files_total, rows_scanned, rows_matched, floor(CAST(rows_scanned AS DOUBLE) / greatest(rows_matched, 1) * 1e4 + 0.5) / 1e4 AS read_amp FROM flags JOIN mt USING (pid) ORDER BY pid"""))
 
   /** Z-ORDER vs LINEAR layout comparison — the "should we OPTIMIZE
     * ZORDER BY (partkey, shipdate)" decision, answered with numbers:
@@ -172,5 +125,5 @@ object LayoutOps {
     Some("""WITH files AS (SELECT l_orderkey // 1024 AS f, CAST(count(*) AS BIGINT) AS nrows FROM lineitem GROUP BY 1), b AS (SELECT f, nrows, CAST(sum(nrows) OVER (ORDER BY f) AS BIGINT) AS cum FROM files) SELECT (cum - nrows) // 16384 AS bin, min(f) AS first_file, max(f) AS last_file, CAST(count(*) AS BIGINT) AS n_files, CAST(sum(nrows) AS BIGINT) AS rows, floor(CAST(sum(nrows) AS DOUBLE) / 16384 * 1e4 + 0.5) / 1e4 AS fill_ratio FROM b GROUP BY 1 ORDER BY 1"""))
 
   val all: Seq[GraftQuery] = Seq(
-    qaZonemapPruning, relZorderLayout, relCompactionPlan)
+    relZorderLayout, relCompactionPlan)
 }

@@ -307,183 +307,6 @@ object ParsingOps {
     },
     Some("""SELECT o_custkey, count(*) AS n_orders, floor(CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 * 100.0 + 0.5) / 100.0 AS total_price, floor(CAST(max(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 * 100.0 + 0.5) / 100.0 AS max_price FROM orders GROUP BY 1 ORDER BY 1"""))
 
-  /** Order-independent table checksums — the anti-entropy primitive for
-    * verifying two replicas / two snapshots / an engine migration hold the
-    * same data WITHOUT shipping rows: per table, XOR-fold a hash of each
-    * row's canonical string. XOR is commutative+associative, so the fold
-    * is partition-mergeable with no ordering or shuffle requirement (one
-    * narrow scan + a 1-row combine per table) and any ODD number of
-    * changed rows flips the checksum. The XOR fold's known blind spots are
-    * accepted and bounded: an even multiplicity of IDENTICAL changes
-    * cancels (countered in practice by including a unique key column in
-    * every canonical string, as all four legs here do), and concat_ws
-    * would canonicalize NULL and absent identically, so only non-null
-    * separator-free key/code columns belong in the string. Two independent
-    * 32-bit md5 words give a 64-bit effective check (a production run
-    * widens to 128 the same way). Doubles never enter the canonical string
-    * (their decimal rendering is engine-specific) — numeric content rides
-    * as centi BIGINTs. This query IS the engine-vs-oracle membership proof the
-    * hash-compare gate approximates row-by-row. */
-  private val qaTableChecksum = GraftQuery(
-    "qa_table_checksum",
-    "anti-entropy XOR row-hash checksums per table (order-independent)",
-    (s, d) => {
-      import graft.functions.GraftFunctions.{centi, xorChecksum}
-      // md5-per-row dominates this floor; each leg's scan is one task on
-      // the single-file local tables, so the hash fold ran on one core.
-      // Tables.spread (scale-gated, identity at real input sizes) spreads
-      // each leg across the session's cores on its key column before the
-      // fold — XOR is commutative, so the fold is partition-invariant by
-      // construction.
-      def legDf(name: String, t: org.apache.spark.sql.DataFrame,
-          key: Column, canon: Column) =
-        xorChecksum(Tables.spread(s, t, key), canon)
-          .select(lit(name).as("table_name"), col("n_rows"),
-            col("xor_hi"), col("xor_lo"))
-      legDf("customer", Tables.customer(s, d), col("c_custkey"),
-          concat_ws("|", col("c_custkey"), col("c_mktsegment")))
-        .unionByName(legDf("documents", Tables.documents(s, d), col("doc_id"),
-          concat_ws("|", col("doc_id"), col("lang"))))
-        .unionByName(legDf("lineitem", Tables.lineitem(s, d), col("l_orderkey"),
-          concat_ws("|", col("l_orderkey"), col("l_suppkey"),
-            centi(col("l_quantity")))))
-        .unionByName(legDf("orders", Tables.orders(s, d), col("o_orderkey"),
-          concat_ws("|", col("o_orderkey"), col("o_orderstatus"))))
-        .orderBy("table_name")
-    },
-    Some {
-      import graft.functions.GraftFunctions.md5u32Sql
-      def leg(name: String, table: String, canon: String) = {
-        val hi = md5u32Sql(s"md5($canon)")
-        val lo = md5u32Sql(s"substr(md5($canon), 9, 8)")
-        s"SELECT '$name' AS table_name, count(*) AS n_rows, bit_xor($hi) AS xor_hi, bit_xor($lo) AS xor_lo FROM $table"
-      }
-      Seq(
-        leg("customer", "customer", "concat_ws('|', c_custkey, c_mktsegment)"),
-        leg("documents", "documents", "concat_ws('|', doc_id, lang)"),
-        leg("lineitem", "lineitem",
-          "concat_ws('|', l_orderkey, l_suppkey, CAST(floor(l_quantity * 100 + 0.5) AS BIGINT))"),
-        leg("orders", "orders", "concat_ws('|', o_orderkey, o_orderstatus)"))
-        .mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY table_name")
-    })
-
-  /** Referential-integrity audit — the FK orphan sweep a warehouse runs
-    * after every load: for each declared FK edge, count child rows whose
-    * key has no parent. Each leg is a LEFT ANTI join: dimension parents
-    * (customer, part, supplier) broadcast, so those legs are narrow scans;
-    * the fact-fact leg (lineitem→orders) shuffles both sides on the join
-    * key once — the honest shape at any scale. All-zero orphan counts are
-    * the PASS state (and what this data should produce); the operator's
-    * value is the guarantee, spelled as a query. */
-  private val qaRefIntegrity = GraftQuery(
-    "qa_ref_integrity",
-    "FK orphan audit: anti-join counts per declared edge",
-    (s, d) => {
-      // ONE scan per child table: every FK edge of a child audits in the
-      // same pass (left join per parent, count null parents — equivalent
-      // to the anti-join count because parents are PK-unique, so the left
-      // join never multiplies child rows). The naive per-edge shape costs
-      // 2 scans x edges; this is 1 scan x children — at 100 TB the child
-      // scan IS the cost and lineitem carries three edges.
-      val li = Tables.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
-        .join(Tables.orders(s, d).select(col("o_orderkey")),
-          col("l_orderkey") === col("o_orderkey"), "left")
-        .join(broadcast(Tables.part(s, d).select(col("p_partkey"))),
-          col("l_partkey") === col("p_partkey"), "left")
-        .join(broadcast(Tables.supplier(s, d).select(col("s_suppkey"))),
-          col("l_suppkey") === col("s_suppkey"), "left")
-        .agg(count(lit(1)).as("n_rows"),
-          sum(when(col("o_orderkey").isNull, 1L).otherwise(0L)).as("orph_ord"),
-          sum(when(col("p_partkey").isNull, 1L).otherwise(0L)).as("orph_part"),
-          sum(when(col("s_suppkey").isNull, 1L).otherwise(0L)).as("orph_supp"))
-      val ord = Tables.orders(s, d).select(col("o_custkey"))
-        .join(broadcast(Tables.customer(s, d).select(col("c_custkey"))),
-          col("o_custkey") === col("c_custkey"), "left")
-        .agg(count(lit(1)).as("n_rows"),
-          sum(when(col("c_custkey").isNull, 1L).otherwise(0L)).as("orph_cust"))
-      val liEdges = li.select(explode(array(
-          struct(lit("lineitem.l_orderkey->orders").as("fk_edge"),
-            col("n_rows"), col("orph_ord").as("n_orphans")),
-          struct(lit("lineitem.l_partkey->part").as("fk_edge"),
-            col("n_rows"), col("orph_part").as("n_orphans")),
-          struct(lit("lineitem.l_suppkey->supplier").as("fk_edge"),
-            col("n_rows"), col("orph_supp").as("n_orphans")))).as("e"))
-        .select(col("e.fk_edge").as("fk_edge"), col("e.n_rows").as("n_rows"),
-          col("e.n_orphans").as("n_orphans"))
-      val ordEdge = ord.select(lit("orders.o_custkey->customer").as("fk_edge"),
-        col("n_rows"), col("orph_cust").as("n_orphans"))
-      liEdges.unionByName(ordEdge).orderBy("fk_edge")
-    },
-    Some {
-      def leg(edge: String, child: String, fk: String, parent: String, pk: String) =
-        s"SELECT '$edge' AS fk_edge, (SELECT count(*) FROM $child) AS n_rows, (SELECT count(*) FROM $child c WHERE NOT EXISTS (SELECT 1 FROM $parent p WHERE p.$pk = c.$fk)) AS n_orphans"
-      Seq(
-        leg("lineitem.l_orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-        leg("lineitem.l_partkey->part", "lineitem", "l_partkey", "part", "p_partkey"),
-        leg("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
-        leg("orders.o_custkey->customer", "orders", "o_custkey", "customer", "c_custkey"))
-        .mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY fk_edge")
-    })
-
-  /** One (table, key) leg of [[qaKeySkew]]: group sizes, then two tiny
-    * passes over the key-count table. The count subplan appears twice
-    * (stats + hot-key filter) with an identical canonical form, so
-    * Catalyst reuses its shuffle (ReusedExchange — plan-asserted in the
-    * spec): the fact is scanned and shuffled ONCE, everything after runs
-    * over |keys| rows. The hot-key test multiplies instead of dividing
-    * (sz * n_keys > 2 * n_rows) so it stays in exact BIGINTs. */
-  private def skewProfile(df: DataFrame, tbl: String, keyCol: String): DataFrame = {
-    val g = df.groupBy(col(keyCol).as("k")).agg(count(lit(1)).as("sz"))
-    val stats = g.agg(sum("sz").as("n_rows"), count(lit(1)).as("n_keys"),
-      max("sz").as("max_sz"))
-    // exact 128-bit compare: sz * n_keys can pass 2^63 at plausible scale
-    // (1e9-row key x 1e10 keys); LONG would wrap SILENTLY (non-ANSI) and
-    // drop the hottest keys from the list. DECIMAL(38,0) is the exact
-    // wide-integer twin of the oracle's HUGEINT (the emb_dim_profile sm2
-    // discipline).
-    val hot = g.crossJoin(broadcast(stats))
-      .filter(col("sz").cast("decimal(38,0)") * col("n_keys") >
-        col("n_rows").cast("decimal(38,0)") * lit(2L))
-      .agg(count(lit(1)).as("n_hot"))
-    stats.crossJoin(hot)
-      .select(lit(tbl).as("tbl"), lit(keyCol).as("key_col"),
-        col("n_rows"), col("n_keys"), col("max_sz"),
-        // BIGINT is exact here while max_sz < 9.2e12 — a single join key
-        // with nine trillion rows is beyond any real table; the hot-key
-        // compare above is the one that overflows at plausible scale.
-        expr("(max_sz * 1000000L) DIV n_rows").as("top_ppm"),
-        fround(col("n_rows").cast("double") / col("n_keys"), 4).as("avg_sz"),
-        col("n_hot"))
-  }
-
-  private def skewSql(tbl: String, keyCol: String): String = {
-    val g = s"SELECT count(*) AS sz FROM $tbl GROUP BY $keyCol"
-    s"SELECT '$tbl' AS tbl, '$keyCol' AS key_col, s.n_rows, s.n_keys, s.max_sz, (s.max_sz * 1000000) // s.n_rows AS top_ppm, floor(CAST(s.n_rows AS DOUBLE) / s.n_keys * 10000.0 + 0.5) / 10000.0 AS avg_sz, h.n_hot FROM (SELECT CAST(sum(sz) AS BIGINT) AS n_rows, count(*) AS n_keys, max(sz) AS max_sz FROM ($g)) s CROSS JOIN (SELECT count(*) AS n_hot FROM ($g) g CROSS JOIN (SELECT CAST(sum(sz) AS BIGINT) AS n_rows, count(*) AS n_keys FROM ($g)) s2 WHERE CAST(g.sz AS HUGEINT) * s2.n_keys > 2 * CAST(s2.n_rows AS HUGEINT)) h"
-  }
-
-  /** JOIN-KEY SKEW PROFILE — the diagnostic that decides the shuffle
-    * strategy BEFORE a 100 TB join runs: per (table, key), total rows,
-    * distinct keys, the largest group, its corpus share in exact ppm
-    * (integer division — never a float ratio), the exact-rational mean
-    * group size, and how many keys exceed 2x the mean (the salting
-    * candidates — AQE's skew-join split and manual salting both want
-    * exactly this list). Profiles the three join keys the engine's own
-    * query plane hits hardest: lineitem.l_orderkey (the fact-fact edge),
-    * orders.o_custkey (Q13's distribution), events.user_id (the
-    * sessionization key). */
-  private val qaKeySkew = GraftQuery(
-    "qa_key_skew",
-    "per join-key group-size skew profile: max/top-share/hot-key counts",
-    (s, d) => skewProfile(Tables.lineitem(s, d), "lineitem", "l_orderkey")
-      .unionByName(skewProfile(Tables.orders(s, d), "orders", "o_custkey"))
-      .unionByName(skewProfile(Tables.events(s, d), "events", "user_id"))
-      .orderBy("tbl"),
-    Some(Seq(("lineitem", "l_orderkey"), ("orders", "o_custkey"),
-        ("events", "user_id"))
-      .map { case (t, k) => skewSql(t, k) }
-      .mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY tbl")))
-
   /** CDC log compaction: latest-writer-wins per key with DELETE
     * tombstones — the lakehouse merge-on-read compaction kernel (Delta/
     * Iceberg/Hudi snapshot reads all do exactly this). The events stream
@@ -514,21 +337,6 @@ object ParsingOps {
         .orderBy("user_id")
     },
     Some("""WITH log AS (SELECT user_id, ts, event_id, CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc, CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS is_del FROM events), r AS (SELECT user_id, event_id, vc, is_del, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn, CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n_changes FROM log) SELECT user_id, event_id AS last_event_id, vc AS last_value_c, n_changes FROM r WHERE rn = 1 AND is_del = 0 ORDER BY user_id"""))
-
-  /** Multimodal RESIZE plumbing (the remaining verb of the decode /
-    * feature-extract / resize / frame-sample quartet): nearest-neighbor
-    * downsample of each payload to an 8×8 sample grid via the stub
-    * resampler (Multimodal.resizeThumb — a real deployment swaps the
-    * codec body only; the Spark-side schema, typed map, and integer-exact
-    * sample stats are the real plumbing under test). Narrow per-row map,
-    * no shuffle. */
-  private val mmResize = GraftQuery(
-    "mm_resize_grid",
-    "multimodal: 8x8 nearest-neighbor resize (stub resampler), sample stats",
-    (s, d) => graft.multimodal.Multimodal.resizeThumb(
-        graft.multimodal.Multimodal.mediaTable(s, d))
-      .orderBy("media_id"),
-    Some("""WITH d AS (SELECT doc_id AS media_id, text, length(text) AS len FROM documents), smp AS (SELECT media_id, CAST(ascii(substring(text, CAST((k * len) // 64 AS INTEGER) + 1, 1)) AS BIGINT) AS v FROM d, (SELECT unnest(generate_series(0, 63)) AS k)) SELECT media_id, CAST(count(*) AS BIGINT) AS n_samples, CAST(sum(v) AS BIGINT) AS sample_sum, min(v) AS sample_min, max(v) AS sample_max FROM smp GROUP BY 1 ORDER BY 1"""))
 
   /** Perceptual-hash near-dup over the media table: 64-bit pHash (from
     * the stub resize grid) split into four 16-bit bands; candidates are
@@ -663,143 +471,11 @@ object ParsingOps {
     },
     Some("""WITH RECURSIVE walk AS (SELECT c_custkey AS id, c_custkey AS cur, CAST(0 AS BIGINT) AS depth FROM customer UNION ALL SELECT id, cur // 10, depth + 1 FROM walk WHERE cur >= 10), res AS (SELECT id, cur AS root, depth FROM walk WHERE cur < 10), rev AS (SELECT o_custkey AS id, count(*) AS n_ord, sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS pc FROM orders GROUP BY 1) SELECT root, depth, count(*) AS n_customers, CAST(sum(coalesce(n_ord, 0)) AS BIGINT) AS n_orders, floor(CAST(sum(coalesce(pc, 0)) AS DOUBLE) / 100.0 * 100.0 + 0.5) / 100.0 AS revenue FROM res LEFT JOIN rev USING (id) GROUP BY 1, 2 ORDER BY 1, 2"""))
 
-  /** Multimodal AUDIO-FEATURE shape: payload bytes read as unsigned 8-bit
-    * PCM samples (the stub decode — text bytes stand in for a real
-    * codec's output), cut into
-    * non-overlapping 32-sample frames, per-frame energy Σ(s−64)² as an
-    * EXACT integer, silence = energy under a fixed integer threshold.
-    * Per clip: frame count, silent-frame count, total energy, RMS. This
-    * is the windowed-feature-extraction plumbing (VAD, loudness
-    * normalization) a real audio pipeline runs — swap the stub samples
-    * for decoded PCM and nothing else changes. Scale: slice/aggregate
-    * HOFs per row (no explode of the sample stream), one clip-keyed
-    * rollup. */
-  private lazy val mmAudioEnergy = GraftQuery(
-    "mm_audio_energy",
-    "multimodal: 32-sample frame energy + silence census per clip (stub PCM)",
-    (s, d) => {
-      val smp = filter(split(col("text"), ""), c => c =!= "")
-      // interpreted array-HOF decode per row = this floor's hot loop; the
-      // single-file scan gave it one task — spread (scale-gated identity
-      // at real sizes) fans the clip pipeline across the session's cores
-      val chars = Tables.spread(s,
-          Tables.documents(s, d).select(col("doc_id").as("media_id"), col("text")),
-          col("media_id"))
-        .select(col("media_id"),
-          transform(smp, c => ascii(c).cast("long")).as("smp"))
-        .filter(size(col("smp")) >= 32)
-      val framed = chars
-        .select(col("media_id"), col("smp"),
-          explode(sequence(lit(0L), expr("size(smp) div 32 - 1"))).as("w"))
-        .select(col("media_id"),
-          aggregate(slice(col("smp"), (col("w") * 32 + 1).cast("int"), lit(32)),
-            lit(0L), (acc, x) => acc + (x - 64L) * (x - 64L)).as("e2"))
-      framed.groupBy("media_id")
-        .agg(count(lit(1)).as("n_frames"),
-          sum(when(col("e2") < 40000L, 1L).otherwise(0L)).as("n_silent"),
-          sum("e2").as("total_e2"))
-        .select(col("media_id"), col("n_frames"), col("n_silent"),
-          col("total_e2"),
-          fround(sqrt(col("total_e2").cast("double") /
-            (col("n_frames") * 32).cast("double")), 4).as("mean_rms"))
-        .orderBy("media_id")
-    },
-    Some("""WITH d AS (SELECT doc_id AS media_id, text, length(text) AS len FROM documents WHERE length(text) >= 32), fr0 AS (SELECT media_id, text, unnest(generate_series(0, len // 32 - 1)) AS w FROM d), fr AS (SELECT media_id, CAST(list_sum([(ord(substr(text, CAST(w * 32 + k AS INTEGER), 1)) - 64) * (ord(substr(text, CAST(w * 32 + k AS INTEGER), 1)) - 64) for k in generate_series(1, 32)]) AS BIGINT) AS e2 FROM fr0) SELECT media_id, count(*) AS n_frames, CAST(sum(CASE WHEN e2 < 40000 THEN 1 ELSE 0 END) AS BIGINT) AS n_silent, CAST(sum(e2) AS BIGINT) AS total_e2, floor(sqrt(CAST(sum(e2) AS DOUBLE) / CAST(count(*) * 32 AS DOUBLE)) * 1e4 + 0.5) / 1e4 AS mean_rms FROM fr GROUP BY 1 ORDER BY 1"""))
-
-  /** FINGERPRINT-WIDTH collision audit: how many DISTINCT document texts
-    * collide under truncated md5 fingerprints of 4/6/8 hex digits
-    * (16/24/32 bits) — the birthday-bound measurement behind choosing a
-    * dedup fingerprint width (a 100 TB corpus at 32 bits collides
-    * constantly; this query shows the curve on real data instead of
-    * assuming the formula). Per width: distinct texts, occupied buckets,
-    * and texts lost to collisions (distinct_texts − buckets). One
-    * distinct-text pass feeds all three widths. */
-  private lazy val qaFingerprintCollisions = {
-    val widths = Seq(4, 6, 8)
-    GraftQuery(
-      "qa_fingerprint_collision_audit",
-      "distinct-text collisions under 16/24/32-bit truncated fingerprints",
-      (s, d) => {
-        val texts = Tables.documents(s, d)
-          .select(md5(lower(col("text"))).as("fp")).distinct()
-        val legs = widths.map { w =>
-          texts.select(substring(col("fp"), 1, w).as("b"))
-            .groupBy("b").agg(count(lit(1)).as("n"))
-            .agg(sum("n").as("n_texts"), count(lit(1)).as("n_buckets"),
-              sum(col("n") - 1).as("n_collided"))
-            .select(lit(w * 4).as("bits"), col("n_texts"), col("n_buckets"),
-              col("n_collided"))
-        }
-        legs.reduce(_.unionByName(_)).orderBy("bits")
-      },
-      Some("WITH t AS (SELECT DISTINCT md5(lower(text)) AS fp FROM documents) " +
-        widths.map(w =>
-          s"SELECT CAST(${w * 4} AS INTEGER) AS bits, CAST(sum(n) AS BIGINT) AS n_texts, count(*) AS n_buckets, CAST(sum(n - 1) AS BIGINT) AS n_collided FROM (SELECT substr(fp, 1, $w) AS b, count(*) AS n FROM t GROUP BY 1)")
-          .mkString(" UNION ALL ") + " ORDER BY bits"))
-  }
-
-  /** SHOT-BOUNDARY detection over stub video — the frame-difference
-    * segmentation every video-curation pipeline runs before sampling
-    * training frames: "frames" are consecutive 16-byte windows of the
-    * payload (the documents' UTF-8 bytes stand in for decoded frame
-    * buffers, same as the audio stub), each frame's signature is its
-    * exact byte sum, and a boundary fires where consecutive signatures
-    * differ by > 200. Per-video shot census (count, longest, mean) folds
-    * entirely inside the row — signatures, boundaries, and the
-    * longest-shot scan are array HOFs over a split-once codes array
-    * (the O(1)-indexing discipline txt_cdc_chunks documents), zero
-    * shuffle before the final orderBy. */
-  private val mmShotBoundary = GraftQuery(
-    "mm_shot_boundary",
-    "frame-diff shot segmentation census over stub video payloads",
-    (s, d) => {
-      val sum16 = (1 to 16)
-        .map(j => s"element_at(codes, CAST(16 * k + $j AS INT))")
-        .mkString(" + ")
-      // same single-task-scan story as mm_audio_energy: the per-frame
-      // signature HOFs dominate — spread before the heavy projection
-      Tables.spread(s,
-          Tables.documents(s, d)
-            .select(col("doc_id").as("media_id"), col("text"),
-              length(col("text")).cast("long").as("len"))
-            .filter(col("len") >= 16),
-          col("media_id"))
-        .withColumn("nf", expr("len div 16"))
-        .withColumn("codes",
-          expr("transform(split(text, ''), ch -> CAST(ascii(ch) AS BIGINT))"))
-        .withColumn("sigs", expr(
-          s"transform(sequence(CAST(0 AS BIGINT), nf - 1), k -> $sum16)"))
-        .withColumn("bnds", expr(
-          """filter(transform(sequence(CAST(1 AS BIGINT), nf - 1),
-               t -> CASE WHEN abs(element_at(sigs, CAST(t AS INT) + 1) -
-                              element_at(sigs, CAST(t AS INT))) > 200
-                    THEN t END),
-             x -> x IS NOT NULL)"""))
-        .withColumn("max_run", expr(
-          """aggregate(bnds,
-               named_struct('prev', CAST(0 AS BIGINT), 'mx', CAST(0 AS BIGINT)),
-               (acc, b) -> named_struct('prev', b, 'mx', greatest(acc.mx, b - acc.prev)),
-               acc -> acc.mx)"""))
-        .withColumn("last_b", coalesce(expr("try_element_at(bnds, -1)"), lit(0L)))
-        .select(col("media_id"), col("nf").as("n_frames"),
-          (size(col("bnds")) + 1).cast("long").as("n_shots"),
-          greatest(col("max_run"), col("nf") - col("last_b")).as("longest_shot"),
-          fround(col("nf").cast("double") /
-            (size(col("bnds")) + 1), 4).as("mean_shot"))
-        .orderBy("media_id")
-    },
-    Some {
-      val sum16Sql = "list_sum(codes[16 * k + 1 : 16 * k + 16])"
-      s"""WITH d AS (SELECT doc_id AS media_id, text, length(text) AS len FROM documents), f AS (SELECT media_id, len // 16 AS nf, list_transform(generate_series(1, len), i -> ord(substr(text, i, 1))) AS codes FROM d WHERE len >= 16), sg AS (SELECT media_id, nf, list_transform(generate_series(0, nf - 1), k -> CAST($sum16Sql AS BIGINT)) AS sigs FROM f), bd AS (SELECT media_id, nf, list_filter(list_transform(generate_series(1, nf - 1), t -> CASE WHEN abs(sigs[t + 1] - sigs[t]) > 200 THEN t END), x -> x IS NOT NULL) AS bnds FROM sg), st AS (SELECT media_id, nf, bnds, len(bnds) AS nb, CAST(list_max(list_transform(generate_series(1, len(bnds) + 1), i -> (CASE WHEN i <= len(bnds) THEN bnds[i] ELSE nf END) - (CASE WHEN i = 1 THEN 0 ELSE bnds[i - 1] END))) AS BIGINT) AS longest FROM bd) SELECT media_id, CAST(nf AS BIGINT) AS n_frames, CAST(nb + 1 AS BIGINT) AS n_shots, longest AS longest_shot, floor(CAST(nf AS DOUBLE) / (nb + 1) * 1e4 + 0.5) / 1e4 AS mean_shot FROM st ORDER BY media_id"""
-    })
-
   val all: Seq[GraftQuery] = Seq(
     csvRoundtrip, jsonStruct, jsonInferred, dateConstruct, sqlMultikeyJoin,
     mvCascade, sqlCtas, partitionPruned, dppPrune, scd2Merge,
-    mvIncrementalAgg, qaTableChecksum, qaRefIntegrity, qaKeySkew,
-    mvCompactCdc, mmResize, scd2Asof, mmPhash, mvLambdaServing,
-    sqlRecursiveHierarchy, mmAudioEnergy, qaFingerprintCollisions,
-    mmShotBoundary)
+    mvIncrementalAgg, mvCompactCdc, scd2Asof, mmPhash, mvLambdaServing,
+    sqlRecursiveHierarchy)
 
   /** Time-travel READ over the SCD2 dimension — "the dimension as of
     * 2024-07-01": for each key, exactly the one version whose

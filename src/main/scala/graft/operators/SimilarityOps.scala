@@ -136,8 +136,8 @@ object SimilarityOps {
     * scanned). Matryoshka-trained embeddings concentrate signal in the
     * prefix by construction; on this RANDOM corpus prefix-cos correlates
     * with full-cos only at sqrt(32/64) ≈ 0.71, and measured top-3 recall
-    * vs brute force is ~73% (the data-limited floor — the same caveat as
-    * txt_langid's accuracy; the serving mechanics are what's under test).
+    * vs brute force is ~73% (the data-limited floor of a near-uniform
+    * synthetic corpus; the serving mechanics are what's under test).
     * Fully oracle-replayable (slice + dot are the same math in DuckDB);
     * GraphTextOpsSpec additionally checks shortlist recall vs brute
     * force. */
@@ -202,57 +202,14 @@ object SimilarityOps {
         floor(col("x").cast("double") * 1000000.0 + 0.5).cast("long").as("micro"))
 
   /** (label, dim, n, sm) — the per-(label, dim) micro-sum base BOTH
-    * centroid views derive from: emb_centroids reports the exact rational
-    * mean, emb_assign_purity quantizes the same rational to an integer
+    * centroid views derive from: the exact rational mean and
+    * emb_assign_purity's quantization of the same rational to an integer
     * micro. One aggregation definition, so the two centroid notions can
     * never drift apart (e.g. a future degenerate-vector filter lands in
     * both or neither). */
   private def labelDimSums(s: SparkSession, d: String): DataFrame =
     microDims(s, d).groupBy("label", "dim")
       .agg(count(lit(1)).as("n"), sum("micro").as("sm"))
-
-  private val embCentroids = GraftQuery(
-    "emb_centroids",
-    "per-label embedding centroids: element-wise micro-exact means",
-    (s, d) => labelDimSums(s, d)
-      .select(col("label"), col("dim"), col("n"),
-        fround(col("sm").cast("double") / col("n") / 1000000.0, 6).as("mean_v"))
-      .orderBy("label", "dim"),
-    Some("""SELECT label, dim, count(*) AS n, floor(CAST(sum(CAST(floor(CAST(embedding[dim] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / count(*) / 1000000.0 * 1000000.0 + 0.5) / 1000000.0 AS mean_v FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS dim) GROUP BY 1, 2 ORDER BY 1, 2"""))
-
-  /** Per-DIMENSION corpus profile — the dead/collapsed-dimension detector.
-    * An embedding-pipeline failure mode: a dimension that is ~always zero
-    * or near-constant carries no signal and wastes index bytes (matryoshka
-    * truncation and PQ sub-spaces both assume healthy dims). Moments are
-    * integer-exact: sums of micros and squared micros (the evt_zscore
-    * discipline), so mean/variance are rationals evaluated with ONE fixed
-    * double-op sequence in both engines. Scale shape: posexplode + one
-    * keyed aggregation on 64 dims with map-side combine — the shuffle
-    * carries dims x partial rows, not the corpus. The squared-micro sum
-    * rides as DECIMAL(38,0) — exact 128-bit integer arithmetic, the twin
-    * of DuckDB's HUGEINT widening — because a LONG sum would silently
-    * wrap past ~2·10^6 rows/dim at |x| <= 2 (non-ANSI Spark wraps, it
-    * does not error); both engines then convert the exact integer to
-    * double with the same correct rounding. */
-  private val embDimProfile = GraftQuery(
-    "emb_dim_profile",
-    "per-dimension profile: near-zero share + integer-exact mean/variance",
-    (s, d) => microDims(s, d)
-      .groupBy("dim")
-      .agg(count(lit(1)).as("n"),
-        sum(when(abs(col("micro")) <= 1000L, lit(1L)).otherwise(lit(0L)))
-          .as("n_near_zero"),
-        min("micro").as("min_micro"), max("micro").as("max_micro"),
-        sum("micro").as("sm"),
-        sum((col("micro") * col("micro")).cast("decimal(38,0)")).as("sm2"))
-      .select(col("dim"), col("n"), col("n_near_zero"),
-        col("min_micro"), col("max_micro"),
-        fround(col("sm").cast("double") / col("n") / 1e6, 6).as("mean_v"),
-        fround((col("sm2").cast("double") / col("n") -
-          (col("sm").cast("double") / col("n")) *
-            (col("sm").cast("double") / col("n"))) / 1e12, 6).as("var_v"))
-      .orderBy("dim"),
-    Some("""WITH mic AS (SELECT dim, CAST(floor(CAST(embedding[dim] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS micro FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS dim)) SELECT dim, count(*) AS n, CAST(sum(CASE WHEN abs(micro) <= 1000 THEN 1 ELSE 0 END) AS BIGINT) AS n_near_zero, min(micro) AS min_micro, max(micro) AS max_micro, floor(CAST(sum(micro) AS DOUBLE) / count(*) / 1000000.0 * 1000000.0 + 0.5) / 1000000.0 AS mean_v, floor((CAST(sum(micro * micro) AS DOUBLE) / count(*) - (CAST(sum(micro) AS DOUBLE) / count(*)) * (CAST(sum(micro) AS DOUBLE) / count(*))) / 1000000000000.0 * 1000000.0 + 0.5) / 1000000.0 AS var_v FROM mic GROUP BY 1 ORDER BY 1"""))
 
   /** Nearest-centroid ASSIGNMENT + label purity — the classification step
     * of semantic dedup (SemDeDup: cluster, then prune within clusters) and
@@ -381,8 +338,7 @@ object SimilarityOps {
     * shape: centroids BROADCAST into a per-element term stream feeding one
     * map-side-combined aggregation keyed on vec; the global rank compiles
     * to TakeOrderedAndProject (per-partition heaps) and the row_number
-    * then runs over the 20-row prefix, not the corpus (the
-    * samp_shuffle_prefix discipline). */
+    * then runs over the 20-row prefix, not the corpus. */
   private val embPrototypicality = GraftQuery(
     "emb_prototypicality",
     "top-20 outliers by exact micro-distance to own-label centroid",
@@ -749,75 +705,6 @@ object SimilarityOps {
     },
     Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm FROM e), bq AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM n WHERE vec_id % 50 = 0), bsc AS (SELECT bq.q_id, c.vec_id AS n_id, list_sum([s[1]*s[2] for s in list_zip(bq.qv, c.v)]) / (bq.qn * c.nrm) AS cos FROM bq JOIN n c ON c.vec_id <> bq.q_id), b5 AS (SELECT q_id, n_id FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY floor(cos * 1000000.0 + 0.5) DESC, n_id) AS rnk FROM bsc) WHERE rnk <= 5), vt AS (SELECT b5.q_id, emb.label AS nl, count(*) AS v FROM b5 JOIN embeddings emb ON emb.vec_id = b5.n_id GROUP BY 1, 2), pd AS (SELECT q_id, nl AS pred FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY v DESC, nl) AS rk FROM vt) WHERE rk = 1) SELECT t.label, count(*) AS n_probes, CAST(sum(CASE WHEN pd.pred = t.label THEN 1 ELSE 0 END) AS BIGINT) AS n_correct, floor(CAST(sum(CASE WHEN pd.pred = t.label THEN 1 ELSE 0 END) AS DOUBLE) / count(*) * 1e4 + 0.5) / 1e4 AS accuracy FROM pd JOIN embeddings t ON t.vec_id = pd.q_id GROUP BY 1 ORDER BY 1"""))
 
-  /** EMBEDDING CENTROID DRIFT between the two md5-free halves of the
-    * corpus (even vs odd vec_id — the deterministic stand-in for "last
-    * snapshot vs this snapshot"): per label, the L2 distance between the
-    * half-centroids. The embedding-space drift check that catches encoder
-    * regressions before they poison an index rebuild. Exactness: per-dim
-    * sums ride integer micro-units; the cross-half difference
-    * d_i = s0·c1 − s1·c0 clears denominators, so Σ d_i² is an EXACT
-    * 128-bit integer (DECIMAL(38,0)/HUGEINT)
-    * and float math happens once per label at the output edge. Scale: one
-    * posexplode pass, one (label, half, dim)-keyed rollup, then
-    * label-sized frames. */
-  private val embCentroidDrift = GraftQuery(
-    "emb_centroid_drift",
-    "per-label centroid L2 drift between corpus halves in exact integers",
-    (s, d) => {
-      val mic = Tables.embeddings(s, d)
-        .select(col("label"), (col("vec_id") % 2).as("half"),
-          posexplode(col("embedding")).as(Seq("dim", "x")))
-        .select(col("label"), col("half"), col("dim"),
-          floor(col("x").cast("double") * 1e6 + 0.5).cast("long").as("micro"))
-      val sums = mic.groupBy("label", "half", "dim")
-        .agg(sum("micro").as("sm"), count(lit(1)).as("c"))
-      val a = sums.filter(col("half") === 0)
-        .select(col("label"), col("dim"), col("sm").as("s0"), col("c").as("c0"))
-      val b = sums.filter(col("half") === 1)
-        .select(col("label"), col("dim"), col("sm").as("s1"), col("c").as("c1"))
-      a.join(b, Seq("label", "dim"))
-        .withColumn("di",
-          (col("s0") * col("c1") - col("s1") * col("c0")).cast("decimal(38,0)"))
-        .groupBy("label", "c0", "c1")
-        .agg(sum(col("di") * col("di")).as("ss"))
-        .select(col("label"), col("c0").as("n_even"), col("c1").as("n_odd"),
-          fround(sqrt(col("ss").cast("double")) /
-            (col("c0") * col("c1")).cast("double") / 1e6, 6).as("l2_drift"))
-        .orderBy("label")
-    },
-    Some("""WITH mic AS (SELECT label, vec_id % 2 AS half, dim, CAST(floor(CAST(embedding[dim] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS micro FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS dim)), sums AS (SELECT label, half, dim, CAST(sum(micro) AS BIGINT) AS sm, count(*) AS c FROM mic GROUP BY 1, 2, 3), a AS (SELECT label, dim, sm AS s0, c AS c0 FROM sums WHERE half = 0), b AS (SELECT label, dim, sm AS s1, c AS c1 FROM sums WHERE half = 1), j AS (SELECT a.label, a.dim, c0, c1, CAST(s0 * c1 - s1 * c0 AS HUGEINT) AS di FROM a JOIN b ON a.label = b.label AND a.dim = b.dim) SELECT label, c0 AS n_even, c1 AS n_odd, floor(sqrt(CAST(sum(di * di) AS DOUBLE)) / CAST(c0 * c1 AS DOUBLE) / 1000000.0 * 1e6 + 0.5) / 1e6 AS l2_drift FROM j GROUP BY label, c0, c1 ORDER BY label"""))
-
-  /** DIRECTIONAL CONCENTRATION per label: the mean resultant length
-    * R̄ = |Σ v̂ᵢ| / n of the label's UNIT vectors — the von-Mises-Fisher
-    * concentration statistic (R̄→1: tight directional cluster, R̄→0:
-    * dispersed). Complements emb_centroid_drift (location) with spread.
-    * Unit components are micro-rounded to integers BEFORE any sum, so
-    * the per-dimension resultants are exact BIGINTs and their squared
-    * norm is an exact DECIMAL(38,0); each engine computes the norm
-    * divisor ‖v‖ from the same fixed left-to-right component fold.
-    * Scale: one posexplode pass, one (label, dim) rollup, label-sized
-    * output. */
-  private val embConcentration = GraftQuery(
-    "emb_concentration",
-    "per-label mean resultant length of unit vectors (vMF concentration)",
-    (s, d) => {
-      val unit = Tables.embeddings(s, d)
-        .select(col("label"), vecDouble(col("embedding")).as("raw"))
-        .withColumn("nrm", sqrt(aggregate(col("raw"), lit(0.0), (a, x) => a + x * x)))
-        .select(col("label"), posexplode(
-          transform(col("raw"), x => floor(x / col("nrm") * 1e6 + 0.5).cast("long")))
-          .as(Seq("dim", "um")))
-      val byDim = unit.groupBy("label", "dim")
-        .agg(sum("um").as("sd"), count(lit(1)).as("n"))
-      byDim.groupBy("label", "n")
-        .agg(sum((col("sd") * col("sd")).cast("decimal(38,0)")).as("ss"))
-        .select(col("label"), col("n").as("n_vecs"),
-          fround(sqrt(col("ss").cast("double")) / (col("n") * 1e6), 4)
-            .as("resultant_len"))
-        .orderBy("label")
-    },
-    Some("""WITH e AS (SELECT label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS raw FROM embeddings), nv AS (SELECT label, raw, sqrt(list_sum([x * x for x in raw])) AS nrm FROM e), um AS (SELECT label, dim, CAST(floor(raw[dim] / nrm * 1000000.0 + 0.5) AS BIGINT) AS um FROM nv, (SELECT unnest(generate_series(1, 64)) AS dim)), bd AS (SELECT label, dim, CAST(sum(um) AS BIGINT) AS sd, count(*) AS n FROM um GROUP BY 1, 2) SELECT label, n AS n_vecs, floor(sqrt(CAST(sum(CAST(sd AS HUGEINT) * sd) AS DOUBLE)) / (n * 1000000.0) * 1e4 + 0.5) / 1e4 AS resultant_len FROM bd GROUP BY label, n ORDER BY label"""))
-
   /** BINARY-QUANTIZATION FIDELITY: how well 1-bit-per-dimension sign codes
     * preserve cosine similarity — the audit behind shipping 64-bit binary
     * embeddings for cheap first-stage retrieval (Hamming agreement
@@ -936,46 +823,6 @@ object SimilarityOps {
     },
     Some("""WITH mic AS (SELECT vec_id, dim, CAST(floor(CAST(embedding[dim] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS micro FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS dim)), c AS (SELECT label AS c_label, dim, CAST(floor(CAST(sum(micro) AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS c_micro FROM (SELECT m.vec_id, e.label, m.dim, m.micro FROM mic m JOIN embeddings e ON e.vec_id = m.vec_id) GROUP BY 1, 2), d AS (SELECT m.vec_id, c.c_label, CAST(sum((m.micro - c.c_micro) * (m.micro - c.c_micro)) AS BIGINT) AS d2 FROM mic m JOIN c USING (dim) GROUP BY 1, 2), r AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2, c_label) AS rk FROM d), ab AS (SELECT vec_id, max(CASE WHEN rk = 1 THEN d2 END) AS a2, max(CASE WHEN rk = 2 THEN d2 END) AS b2, max(CASE WHEN rk = 1 THEN c_label END) AS cl FROM r WHERE rk <= 2 GROUP BY 1), sc AS (SELECT cl, CASE WHEN greatest(a2, b2) > 0 THEN CAST(floor((sqrt(CAST(b2 AS DOUBLE)) - sqrt(CAST(a2 AS DOUBLE))) / greatest(sqrt(CAST(a2 AS DOUBLE)), sqrt(CAST(b2 AS DOUBLE))) * 1000000.0 + 0.5) AS BIGINT) ELSE 0 END AS sm FROM ab) SELECT cl AS cluster, count(*) AS n_vecs, floor(CAST(sum(sm) AS DOUBLE) / (count(*) * 1000000.0) * 1e4 + 0.5) / 1e4 AS mean_silhouette FROM sc GROUP BY 1 ORDER BY 1"""))
 
-  /** DIAGONAL-MAHALANOBIS outliers: each vector's distance from the
-    * corpus mean in per-dimension standard-deviation units (Σ(x−μ)²/σ²
-    * over the diagonal covariance) — the multivariate outlier detector
-    * that catches points no single dimension flags. Corpus moments come
-    * from exact integer micro sums (one pass); per-dimension terms
-    * micro-floor BEFORE the per-vector sum, so the ranking never
-    * compares raw float accumulations; top-20 by (distance, vec_id).
-    * Zero-variance dimensions contribute nothing. */
-  private val embMahalanobis = GraftQuery(
-    "emb_mahalanobis_outliers",
-    "top-20 diagonal-Mahalanobis outliers from exact integer moments",
-    (s, d) => {
-      val mic = Tables.embeddings(s, d)
-        .select(col("vec_id"), posexplode(
-          transform(col("embedding"),
-            x => floor(x.cast("double") * 1e6 + 0.5).cast("long")))
-          .as(Seq("dim", "m")))
-      val stats = mic.groupBy("dim")
-        .agg(count(lit(1)).as("n"), sum("m").as("s1"),
-          sum(col("m").cast("decimal(38,0)") * col("m")).as("s2"))
-        // n²·σ² as an exact integer; zero-variance dims drop out
-        .withColumn("v2", col("n") * col("s2") -
-          col("s1").cast("decimal(38,0)") * col("s1"))
-        .filter(col("v2") > 0)
-      val terms = mic.join(broadcast(stats), Seq("dim"))
-        .select(col("vec_id"),
-          // ((n·x − Σx)² / (n²σ²))·1e6, floored — exact operands, one
-          // float division per (vector, dim)
-          floor((col("n") * col("m") - col("s1")).cast("decimal(38,0)")
-            .cast("double") *
-            (col("n") * col("m") - col("s1")).cast("decimal(38,0)")
-              .cast("double") /
-            col("v2").cast("double") * 1e6 + 0.5).cast("long").as("t"))
-      terms.groupBy("vec_id").agg(sum("t").as("d2m"))
-        .orderBy(desc("d2m"), col("vec_id")).limit(20)
-        .select(col("vec_id"),
-          fround(sqrt(col("d2m").cast("double") / 1e6), 4).as("mahalanobis"))
-    },
-    Some("""WITH mic AS (SELECT vec_id, dim, CAST(floor(CAST(embedding[dim] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS m FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS dim)), st AS (SELECT dim, CAST(count(*) AS BIGINT) AS n, CAST(sum(m) AS BIGINT) AS s1, sum(CAST(m AS HUGEINT) * m) AS s2 FROM mic GROUP BY 1), sv AS (SELECT *, n * s2 - CAST(s1 AS HUGEINT) * s1 AS v2 FROM st WHERE n * s2 - CAST(s1 AS HUGEINT) * s1 > 0), t AS (SELECT vec_id, CAST(floor(CAST(CAST(n * m - s1 AS HUGEINT) AS DOUBLE) * CAST(CAST(n * m - s1 AS HUGEINT) AS DOUBLE) / CAST(v2 AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS t FROM mic JOIN sv USING (dim)), d2 AS (SELECT vec_id, CAST(sum(t) AS BIGINT) AS d2m FROM t GROUP BY 1) SELECT vec_id, floor(sqrt(CAST(d2m AS DOUBLE) / 1000000.0) * 1e4 + 0.5) / 1e4 AS mahalanobis FROM d2 ORDER BY d2m DESC, vec_id LIMIT 20"""))
-
   /** NEAREST-NEIGHBOR MARGIN per probe: cos(NN₁) − cos(NN₂), the
     * retrieval-confidence signal (a wide margin means the top hit is
     * unambiguous; a sliver means reranking or abstention) — the
@@ -996,81 +843,10 @@ object SimilarityOps {
       .orderBy("q_id"),
     Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm FROM e), bq AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM n WHERE vec_id % 50 = 0), bsc AS (SELECT bq.q_id, c.vec_id AS n_id, list_sum([s[1]*s[2] for s in list_zip(bq.qv, c.v)]) / (bq.qn * c.nrm) AS cos FROM bq JOIN n c ON c.vec_id <> bq.q_id), b2 AS (SELECT q_id, n_id, floor(cos * 1000000.0 + 0.5) / 1000000.0 AS cos, rnk FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY floor(cos * 1000000.0 + 0.5) DESC, n_id) AS rnk FROM bsc) WHERE rnk <= 2), g AS (SELECT q_id, max(CASE WHEN rnk = 1 THEN cos END) AS c1, max(CASE WHEN rnk = 2 THEN cos END) AS c2, max(CASE WHEN rnk = 1 THEN n_id END) AS nn1 FROM b2 GROUP BY 1) SELECT q_id, nn1, floor(c1 * 1e4 + 0.5) / 1e4 AS cos_top1, floor(c2 * 1e4 + 0.5) / 1e4 AS cos_top2, floor((c1 - c2) * 1e4 + 0.5) / 1e4 AS margin FROM g ORDER BY q_id"""))
 
-  /** The deterministic ±1 Johnson–Lindenstrauss sign matrix [k=16][d=64],
-    * derived from md5 so the DuckDB oracle regenerates the identical
-    * matrix with the [[graft.functions.GraftFunctions.md5u32Sql]] nibble
-    * polynomial — model-sized, shipped to executors as a literal (the
-    * broadcast-a-tiny-model pattern; no per-row hashing in the scan). */
-  private lazy val jlSigns: Seq[Seq[Long]] =
-    (0 until 16).map { j =>
-      (0 until 64).map { i =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val hex = md.digest(s"jl|$i|$j".getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        (java.lang.Long.parseLong(hex.substring(0, 8), 16) % 2L) * 2L - 1L
-      }
-    }
-
-  private def jlSignSql: String = {
-    val poly = graft.functions.GraftFunctions.md5u32Sql(
-      "md5('jl|' || CAST(i AS VARCHAR) || '|' || CAST(j AS VARCHAR))")
-    s"(($poly % 2) * 2 - 1)"
-  }
-
-  /** JOHNSON–LINDENSTRAUSS DISTORTION audit — before committing 100 TB of
-    * embeddings to a 4× cheaper 16-dim sketch, measure what the random
-    * ±1 projection does to pairwise distances: for consecutive-id vector
-    * pairs, the ratio ‖Py‖²/(k·‖x‖²) concentrates around 1 (the JL
-    * lemma); the histogram + per-bucket mean quantifies the spread this
-    * corpus actually gets. All arithmetic is exact micro-int until the
-    * single final division: projections are BIGINT dot products against
-    * the literal sign matrix (codegen'd HOFs, zero shuffle), the pair
-    * join is a narrow div-2 key join, and the histogram is one tiny
-    * agg. */
-  private val embJlDistortion = GraftQuery(
-    "emb_jl_distortion",
-    "±1-projection JL distance-distortion histogram (64→16 dims)",
-    (s, d) => {
-      // spread (scale-gated identity at real sizes): the 16×64-term JL
-      // projection runs through interpreted HOF lambdas per row and the
-      // single-task scan re-runs it per pair side — two ~180 ms one-core
-      // stages without the fan-out
-      val proj = Tables.spread(s, Tables.embeddings(s, d), col("vec_id"))
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))")
-            .as("m"))
-        .withColumn("sgn", typedlit(jlSigns))
-        .withColumn("y", expr(
-          """transform(sgn, row -> aggregate(sequence(0, 63),
-             CAST(0 AS BIGINT),
-             (acc, i) -> acc + element_at(row, i + 1) * element_at(m, i + 1)))"""))
-        .select(col("vec_id"), col("m"), col("y"))
-      val a = proj.filter(col("vec_id") % 2 === 0)
-        .select(expr("vec_id div 2").as("p"), col("m").as("ma"), col("y").as("ya"))
-      val b = proj.filter(col("vec_id") % 2 === 1)
-        .select(expr("vec_id div 2").as("p"), col("m").as("mb"), col("y").as("yb"))
-      a.join(b, Seq("p"))
-        .withColumn("d2f", expr(
-          "aggregate(zip_with(ma, mb, (x, y) -> (x - y) * (x - y)), CAST(0 AS BIGINT), (acc, v) -> acc + v)"))
-        .withColumn("d2p", expr(
-          "aggregate(zip_with(ya, yb, (x, y) -> (x - y) * (x - y)), CAST(0 AS BIGINT), (acc, v) -> acc + v)"))
-        .filter(col("d2f") > 0)
-        .withColumn("ratio_u",
-          floor(col("d2p").cast("double") / (col("d2f").cast("double") * 16.0)
-            * 1e4 + 0.5).cast("long"))
-        .groupBy(expr("ratio_u div 1000").as("bucket"))
-        .agg(count(lit(1)).as("n_pairs"), sum("ratio_u").as("su"))
-        .select(col("bucket"), col("n_pairs"),
-          fround(col("su").cast("double") / col("n_pairs") / 1e4, 4)
-            .as("mean_ratio"))
-        .orderBy("bucket")
-    },
-    Some(s"""WITH m AS (SELECT vec_id, list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS m FROM embeddings), y AS (SELECT vec_id, j, CAST(list_sum(list_transform(generate_series(0, 63), i -> $jlSignSql * m.m[i + 1])) AS BIGINT) AS yj FROM m, (SELECT unnest(generate_series(0, 15)) AS j)), yl AS (SELECT vec_id, list(yj ORDER BY j) AS y FROM y GROUP BY 1), pm AS (SELECT m.vec_id, m.m, yl.y FROM m JOIN yl USING (vec_id)), pr AS (SELECT a.vec_id // 2 AS p, CAST(list_sum([(z[1] - z[2]) * (z[1] - z[2]) for z in list_zip(a.m, b.m)]) AS BIGINT) AS d2f, CAST(list_sum([(z[1] - z[2]) * (z[1] - z[2]) for z in list_zip(a.y, b.y)]) AS BIGINT) AS d2p FROM pm a JOIN pm b ON b.vec_id = a.vec_id + 1 AND a.vec_id % 2 = 0), ru AS (SELECT CAST(floor(CAST(d2p AS DOUBLE) / (CAST(d2f AS DOUBLE) * 16.0) * 1e4 + 0.5) AS BIGINT) AS ratio_u FROM pr WHERE d2f > 0) SELECT ratio_u // 1000 AS bucket, CAST(count(*) AS BIGINT) AS n_pairs, floor(CAST(sum(ratio_u) AS DOUBLE) / count(*) / 1e4 * 1e4 + 0.5) / 1e4 AS mean_ratio FROM ru GROUP BY 1 ORDER BY 1"""))
-
   /** RANK-STABILITY eval for dimension truncation — Spearman's ρ between
     * the full-64-dim ranking and the 16-dim-prefix ranking of each
     * probe's true top-20: the retrieval-quality companion to
-    * [[embJlDistortion]] (distance distortion) and sim_knn_matryoshka
+    * sim_knn_matryoshka
     * (the serving path it justifies). Both rankings ride the shared
     * brute top-k scan + one prefix re-score of 20 rows per probe; ρ is
     * exact integer arithmetic (rank differences) until the final
@@ -1140,11 +916,9 @@ object SimilarityOps {
     Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm FROM e), bq AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM n WHERE vec_id % 50 = 0), bsc AS (SELECT bq.q_id, c.vec_id AS n_id, list_sum([s[1]*s[2] for s in list_zip(bq.qv, c.v)]) / (bq.qn * c.nrm) AS cos FROM bq JOIN n c ON c.vec_id <> bq.q_id), b10 AS (SELECT q_id, n_id, rnk AS brnk FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY floor(cos * 1000000.0 + 0.5) DESC, n_id) AS rnk FROM bsc) WHERE rnk <= 10), proj AS (SELECT vec_id, p, list_sum([(CASE WHEN instr('0123456789abcdef', substr(md5(p::VARCHAR || ':' || (i-1)::VARCHAR), 1, 1)) % 2 = 1 THEN 1.0 ELSE -1.0 END) * v[i] for i in generate_series(1, len(v))]) AS dp FROM n, (SELECT unnest(generate_series(0, 7)) AS p)), codes AS (SELECT vec_id, CAST(sum(CASE WHEN dp > 0 THEN 1 << p ELSE 0 END) AS BIGINT) AS code FROM proj GROUP BY 1), c2 AS (SELECT n.vec_id, n.v, n.nrm, codes.code FROM n JOIN codes USING (vec_id)), lq AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn, code AS qcode FROM c2 WHERE vec_id % 50 = 0), lsc AS (SELECT lq.q_id, c2.vec_id AS n_id, list_sum([s[1]*s[2] for s in list_zip(lq.qv, c2.v)]) / (lq.qn * c2.nrm) AS cos FROM lq JOIN c2 ON c2.code = lq.qcode AND c2.vec_id <> lq.q_id), l10 AS (SELECT q_id, n_id, rnk AS lrnk FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY floor(cos * 1000000.0 + 0.5) DESC, n_id) AS rnk FROM lsc) WHERE rnk <= 10), ks AS (SELECT unnest([1, 3, 5, 10]) AS k), hits AS (SELECT k, CAST(count(*) AS BIGINT) AS n_common FROM b10 JOIN l10 USING (q_id, n_id), ks WHERE brnk <= k AND lrnk <= k GROUP BY 1), pr AS (SELECT CAST(count(*) AS BIGINT) AS n_probes FROM b10 WHERE brnk = 1) SELECT CAST(ks.k AS INTEGER) AS k, n_probes, coalesce(hits.n_common, 0) AS n_common, floor(CAST(coalesce(hits.n_common, 0) AS DOUBLE) / (ks.k * n_probes) * 1e4 + 0.5) / 1e4 AS mean_recall FROM ks LEFT JOIN hits ON hits.k = ks.k CROSS JOIN pr ORDER BY 1"""))
 
   val all: Seq[GraftQuery] = Seq(
-    knnBrute, labelStats, knnLsh, knnMatryoshka, embCentroids,
-    embDimProfile, embAssignPurity, dedupSemantic, embPrototypicality,
-    simHubness, hardNegatives, embKmeansStep, embSimHistogram, embPcaPower,
-    embPcaVar, embKmeansppSeed, simRecallEval, knnLabelAccuracy,
-    embCentroidDrift, embConcentration, embSignFidelity, embIntrinsicDim,
-    embSilhouette, embMahalanobis, knnMargin, embJlDistortion,
-    simRankSpearman, simRecallCurve)
+    knnBrute, labelStats, knnLsh, knnMatryoshka, embAssignPurity,
+    dedupSemantic, embPrototypicality, simHubness, hardNegatives,
+    embKmeansStep, embSimHistogram, embPcaPower, embPcaVar, embKmeansppSeed,
+    simRecallEval, knnLabelAccuracy, embSignFidelity, embIntrinsicDim,
+    embSilhouette, knnMargin, simRankSpearman, simRecallCurve)
 }

@@ -483,8 +483,8 @@ object TemporalOps {
     * sum of floor-rounded micro-nat ln((n−d)/n) terms — per-row window
     * cumulation over the ~|distinct lifetimes| table, so no float ever
     * accumulates; exp() is applied once per output row to the exact
-    * rational cum/1e6 (same accepted libm-ulp class as
-    * txt_unigram_logprob, absorbed by fround 4). Scale: one user-keyed
+    * rational cum/1e6 (an accepted libm-ulp risk, absorbed by
+    * fround 4). Scale: one user-keyed
     * rollup over the corpus; everything after is |distinct lifetimes|
     * rows (≤ corpus day span), where the unpartitioned windows are
     * audited-benign. */
@@ -529,8 +529,7 @@ object TemporalOps {
     * H(next) — their gap is the mutual information the previous event
     * carries about the next one ("how predictable is the stream"), the
     * sequence-level complement of evt_transition_matrix /
-    * evt_markov_stationary. Same integer micro-nat discipline as
-    * qa_mutual_info: per-cell n·ln(·) terms floor to BIGINTs over the
+    * evt_markov_stationary. Integer micro-nat discipline: per-cell n·ln(·) terms floor to BIGINTs over the
     * 25-cell (and 5-row) tables, so no float ever accumulates. Scale: one
     * user-keyed window pass for the pairs, then constant-size rollups. */
   private val entropyRate = GraftQuery(

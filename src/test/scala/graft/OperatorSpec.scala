@@ -189,27 +189,6 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
-  test("samp_weighted_reservoir: selection replays exactly and biases toward weight") {
-    import org.apache.spark.sql.functions._
-    import graft.functions.GraftFunctions.md5u32
-    val sel = run("samp_weighted_reservoir").collect()
-    assert(sel.length == 100 && sel.map(_.getLong(0)).distinct.length == 100)
-    // replay A-ES keys over the full corpus and confirm the query picked
-    // exactly the top-100
-    val keys = Tables.documents(spark, sf)
-      .select(col("doc_id"), col("n_chars"),
-        (log((md5u32(concat(lit("res:"), col("doc_id").cast("string")))
-          .cast("double") + lit(0.5)) / lit(4294967296.0)) / col("n_chars")).as("k"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val expect = keys.sortBy(t => (-t._3, t._1)).take(100).map(_._1).toSet
-    assert(sel.map(_.getLong(0)).toSet == expect)
-    // A-ES draws ∝ weight: the selected docs' mean length must exceed the
-    // corpus mean (the whole point of weighting by n_chars)
-    val meanSel = sel.map(_.getLong(1)).sum.toDouble / sel.length
-    val meanAll = keys.map(_._2).sum.toDouble / keys.length
-    assert(meanSel > meanAll, s"selected mean $meanSel not above corpus mean $meanAll")
-  }
-
   test("win_percent_rank: ratios are in [0,1]; cume_dist tops out at 1 per partition") {
     val rows = run("win_percent_rank").collect()
     assert(rows.nonEmpty)
@@ -220,17 +199,6 @@ class OperatorSpec extends AnyFunSuite {
     rows.groupBy(_.getString(1)).foreach { case (p, g) =>
       assert(g.map(_.getDouble(3)).max == 1.0, s"partition $p: max cume_dist != 1")
       assert(g.map(_.getDouble(2)).min == 0.0, s"partition $p: min percent_rank != 0")
-    }
-  }
-
-  test("qa_winsorize: clipped mean sits inside [p05, p95], bounds ordered") {
-    val rows = run("qa_winsorize").collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      val (p05, p95, wm) = (r.getDouble(2), r.getDouble(3), r.getDouble(4))
-      assert(p05 <= p95, s"${r.getString(0)}: p05 $p05 > p95 $p95")
-      assert(wm >= p05 - 1e-9 && wm <= p95 + 1e-9,
-        s"${r.getString(0)}: winsorized mean $wm outside [$p05, $p95]")
     }
   }
 
@@ -253,52 +221,6 @@ class OperatorSpec extends AnyFunSuite {
     contained.foreach { id =>
       assert(nov(id) <= 0.00005 + 1e-4, s"contained doc $id has novelty ${nov(id)}")
     }
-  }
-
-  test("qa_table_checksum: partition-order invariant and single-row sensitive") {
-    import org.apache.spark.sql.functions._
-    val out = run("qa_table_checksum").collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    assert(out.keySet == Set("customer", "documents", "lineitem", "orders"))
-    // replay the customer leg under a hostile repartitioning: XOR folding
-    // must be bit-identical regardless of partition count or row order
-    def word(c: org.apache.spark.sql.Column, from: Int) =
-      conv(substring(md5(c), from, 8), 16, 10).cast("long")
-    val canon = concat_ws("|", col("c_custkey"), col("c_mktsegment"))
-    val replay = Tables.customer(spark, sf).repartition(7).sortWithinPartitions(desc("c_name"))
-      .select(word(canon, 1).as("hi"), word(canon, 9).as("lo"))
-      .agg(count(lit(1)), expr("bit_xor(hi)"), expr("bit_xor(lo)"))
-      .collect().head
-    assert((replay.getLong(0), replay.getLong(1), replay.getLong(2)) == out("customer"))
-    // ...and flipping a single row's content must change the checksum
-    val tampered = Tables.customer(spark, sf)
-      .withColumn("c_mktsegment",
-        when(col("c_custkey") === 1, lit("TAMPERED")).otherwise(col("c_mktsegment")))
-    val tam = tampered
-      .select(word(canon, 1).as("hi"), word(canon, 9).as("lo"))
-      .agg(expr("bit_xor(hi)"), expr("bit_xor(lo)")).collect().head
-    assert((tam.getLong(0), tam.getLong(1)) != (out("customer")._2, out("customer")._3))
-  }
-
-  test("emb_centroids: full label x dim grid, counts consistent, means replayed") {
-    import org.apache.spark.sql.functions._
-    val rows = run("emb_centroids").collect()
-    val labels = Tables.embeddings(spark, sf).groupBy("label").count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(rows.length == labels.size * 64, "expected |labels| x 64 grid")
-    rows.foreach { r =>
-      assert(r.getLong(2) == labels(r.getInt(0)), "n must equal the label's vector count")
-    }
-    // replay one cell exactly: label with the smallest id, dim 1
-    val l0 = labels.keySet.min
-    val direct = Tables.embeddings(spark, sf).filter(col("label") === l0)
-      .select(floor(element_at(col("embedding"), 1).cast("double") * 1000000.0 + 0.5)
-        .cast("long").as("m"))
-      .agg(sum("m"), count(lit(1))).collect().head
-    val expect = math.floor(direct.getLong(0).toDouble / direct.getLong(1) / 1000000.0
-      * 1000000.0 + 0.5) / 1000000.0
-    val got = rows.find(r => r.getInt(0) == l0 && r.getLong(1) == 1L).get.getDouble(3)
-    assert(got == expect, s"centroid cell mismatch: $got vs $expect")
   }
 
   test("j_fuzzy_match: pairs verified by a reference DP, blocked set is complete") {
@@ -358,59 +280,6 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
-  test("qa_ref_integrity: clean corpus audits to zero orphans; a bogus FK is caught") {
-    import org.apache.spark.sql.functions._
-    val rows = run("qa_ref_integrity").collect()
-    assert(rows.length == 4)
-    rows.foreach(r => assert(r.getLong(2) == 0L,
-      s"${r.getString(0)}: expected 0 orphans, got ${r.getLong(2)}"))
-    // sensitivity: inject one orphan child row and confirm the same
-    // anti-join counts it
-    val tampered = Tables.orders(spark, sf).select(col("o_custkey"))
-      .unionByName(spark.range(1).select(lit(-999L).as("o_custkey")))
-    val orphans = tampered
-      .join(Tables.customer(spark, sf).select(col("c_custkey")),
-        col("o_custkey") === col("c_custkey"), "left_anti")
-      .count()
-    assert(orphans == 1L)
-  }
-
-  test("txt_ppl_buckets: terciles partition each language, head outranks tail") {
-    import org.apache.spark.sql.functions._
-    val rows = run("txt_ppl_buckets").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
-    val perLang = Tables.documents(spark, sf).groupBy("lang").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    perLang.foreach { case (lang, n) =>
-      // n=1 yields only a head row, n=2 head+middle — guard so a sparse
-      // language fails with a diagnostic, not a bare NoSuchElementException
-      def bucket(b: String) = rows.getOrElse((lang, b),
-        fail(s"$lang (n=$n docs): missing '$b' tercile row"))
-      val h = bucket("head"); val m = bucket("middle"); val t = bucket("tail")
-      assert(h._1 + m._1 + t._1 == n, s"$lang: buckets must partition the language")
-      assert(h._1 == (n + 2) / 3, s"$lang: head tercile size")
-      assert(h._2 >= m._2 && m._2 >= t._2,
-        s"$lang: bucket means must be ordered head >= middle >= tail")
-    }
-  }
-
-  test("samp_balanced_classes: every label keeps exactly the minority size") {
-    val kept = run("samp_balanced_classes").collect()
-      .map(r => (r.getInt(0), r.getLong(1)))
-    val origSizes = Tables.embeddings(spark, sf).groupBy("label").count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val minSize = origSizes.values.min
-    val keptSizes = kept.groupBy(_._1).map { case (l, v) => l -> v.size.toLong }
-    assert(keptSizes.keySet == origSizes.keySet, "every label must survive")
-    keptSizes.foreach { case (l, n) =>
-      assert(n == minSize, s"label $l kept $n, expected minority size $minSize")
-    }
-    // kept rows must be actual members of their label
-    val membership = Tables.embeddings(spark, sf).select("vec_id", "label")
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    kept.foreach { case (l, id) => assert(membership(id) == l) }
-  }
-
   test("dedup_keep_longest: representative is the longest member of each component") {
     val comps = run("dedup_components").collect()
       .map(r => (r.getLong(0), r.getLong(1)))               // (doc_id, comp)
@@ -429,25 +298,6 @@ class OperatorSpec extends AnyFunSuite {
       assert(keep == best && kc == chars(best),
         s"comp $comp: expected representative $best (${chars(best)} chars), got $keep ($kc)")
     }
-  }
-
-  test("emb_dim_profile: full dim grid, moments replayed on one dimension") {
-    val rows = run("emb_dim_profile").collect()
-    assert(rows.map(_.getLong(0)).toSeq == (1L to 64L), "one row per dim, ordered")
-    val nVec = Tables.embeddings(spark, sf).count()
-    rows.foreach { r =>
-      assert(r.getLong(1) == nVec, s"dim ${r.getLong(0)}: n must equal corpus size")
-      assert(r.getDouble(6) >= 0.0, s"dim ${r.getLong(0)}: variance must be >= 0")
-      assert(r.getLong(3) <= r.getLong(4), s"dim ${r.getLong(0)}: min <= max")
-    }
-    // replay dim 1 from raw vectors with the same micro arithmetic
-    val micros = Tables.embeddings(spark, sf).select("embedding").collect()
-      .map(r => math.floor(r.getSeq[Float](0).head.toDouble * 1e6 + 0.5).toLong)
-    val d1 = rows.head
-    assert(d1.getLong(2) == micros.count(m => math.abs(m) <= 1000L), "near-zero count")
-    assert(d1.getLong(3) == micros.min && d1.getLong(4) == micros.max)
-    val mean = micros.sum.toDouble / micros.length / 1e6
-    assert(d1.getDouble(5) == math.floor(mean * 1e6 + 0.5) / 1e6, "dim-1 mean replays")
   }
 
   test("emb_assign_purity: confusion matrix replays a brute-force exact argmin") {
@@ -571,49 +421,6 @@ class OperatorSpec extends AnyFunSuite {
     assert(dropped > 0 && dropped < got.length, s"degenerate: $dropped dropped")
   }
 
-  test("txt_oov_rate: brute-force vocab build + per-source oov replay") {
-    val toks = Tables.documents(spark, sf).select("source", "text").collect()
-      .flatMap(r => r.getString(1).toLowerCase.split(" ", -1)
-        .map(t => (r.getString(0), t)))
-    val vocab = toks.groupBy(_._2).view.mapValues(_.length).toSeq
-      .sortBy { case (t, c) => (-c, t) }.take(16).map(_._1).toSet
-    val expected = toks.groupBy(_._1).map { case (src, g) =>
-      val oov = g.count(t => !vocab(t._2)).toLong
-      src -> (g.length.toLong, oov, oov * 1000000L / g.length)
-    }
-    val got = run("txt_oov_rate").collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    assert(got == expected)
-    assert(got.values.exists(_._2 > 0L), "no OOV anywhere: vocab cutoff degenerate")
-  }
-
-  test("txt_langid_confusion: folds the per-doc langid table exactly") {
-    val perDoc = run("txt_langid").collect()
-      .map(r => (r.getString(3), r.getString(2)))          // (labeled, predicted)
-    val counts = perDoc.groupBy(identity).view.mapValues(_.length.toLong).toMap
-    val labelTotals = perDoc.groupBy(_._1).view.mapValues(_.length.toLong).toMap
-    val got = run("txt_langid_confusion").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-    assert(got.map(r => (r._1, r._2) -> r._3).toMap == counts)
-    got.foreach { case (l, _, n, share) =>
-      val exp = math.floor(n.toDouble / labelTotals(l) * 1e4 + 0.5) / 1e4
-      assert(share == exp, s"($l): share $share != $exp")
-    }
-  }
-
-  test("qa_key_skew: brute-force replay of the events.user_id leg") {
-    val uids = Tables.events(spark, sf).select("user_id").collect()
-      .map(_.getLong(0))
-    val g = uids.groupBy(identity).map(_._2.length.toLong).toSeq
-    val (nRows, nKeys, maxSz) = (uids.length.toLong, g.size.toLong, g.max)
-    val r = run("qa_key_skew").filter("tbl = 'events'").collect().head
-    assert((r.getLong(2), r.getLong(3), r.getLong(4)) == ((nRows, nKeys, maxSz)))
-    assert(r.getLong(5) == maxSz * 1000000L / nRows)       // top_ppm
-    assert(r.getDouble(6) ==
-      math.floor(nRows.toDouble / nKeys * 1e4 + 0.5) / 1e4) // avg_sz
-    assert(r.getLong(7) == g.count(sz => sz * nKeys > 2L * nRows).toLong)
-  }
-
   test("emb_prototypicality: brute-force replay of own-centroid distances") {
     val vecs = Tables.embeddings(spark, sf)
       .select("vec_id", "label", "embedding").collect()
@@ -630,34 +437,6 @@ class OperatorSpec extends AnyFunSuite {
     val got = run("emb_prototypicality").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getInt(2), r.getLong(3)))
     assert(got.toSeq == expected.toSeq)
-  }
-
-  test("qa_psi_drift: brute-force replay of the Laplace-smoothed PSI fold") {
-    val docs = Tables.documents(spark, sf)
-      .select("doc_id", "source", "n_chars").collect()
-      .map { r =>
-        val hex = java.security.MessageDigest.getInstance("MD5")
-          .digest(r.getLong(0).toString.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        (r.getString(1), java.lang.Long.parseLong(hex.substring(0, 8), 16) % 10 <= 7,
-          math.floor(r.getLong(2) / 50.0).toInt)
-      }
-    val expected = docs.groupBy(_._1).map { case (src, g) =>
-      val cells = g.groupBy(_._3).toSeq.map { case (_, c) =>
-        (c.count(_._2).toLong, c.count(!_._2).toLong)
-      }
-      val (nB, nTr, nHo) = (cells.size.toLong, cells.map(_._1).sum, cells.map(_._2).sum)
-      val sMicro = cells.map { case (cTr, cHo) =>
-        val p = (cTr + 1).toDouble / (nTr + nB)
-        val q = (cHo + 1).toDouble / (nHo + nB)
-        math.floor((p - q) * math.log(p / q) * 1e8 + 0.5).toLong
-      }.sum
-      src -> (nB, nTr, nHo, math.floor(sMicro.toDouble / 1e8 * 1e6 + 0.5) / 1e6)
-    }
-    val got = run("qa_psi_drift").collect().map(r => r.getString(0) ->
-      (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
-    assert(got == expected)
-    assert(got.values.exists(_._4 > 0.0), "all-zero PSI: split degenerate")
   }
 
   test("samp_cluster_split: no component straddles a split boundary") {
@@ -722,28 +501,6 @@ class OperatorSpec extends AnyFunSuite {
     assert(hist == expected.filter { case (d, n) => n > 0 || d == 0 })
   }
 
-  test("txt_bpe_pairs: brute-force replay of corpus-weighted pair counts") {
-    val texts = Tables.documents(spark, sf).select("text").collect()
-      .map(_.getString(0))
-    val freq = scala.collection.mutable.Map.empty[String, Long]
-    texts.foreach(_.toLowerCase.split(" ", -1).foreach(t =>
-      freq(t) = freq.getOrElse(t, 0L) + 1L))
-    val pairs = scala.collection.mutable.Map.empty[String, (Long, Set[String])]
-    freq.foreach { case (tok, cnt) =>
-      if (tok.length >= 2) (0 until tok.length - 1).foreach { i =>
-        val p = tok.substring(i, i + 2)
-        val (c, ts) = pairs.getOrElse(p, (0L, Set.empty[String]))
-        pairs(p) = (c + cnt, ts + tok)
-      }
-    }
-    val expected = pairs.toSeq
-      .map { case (p, (c, ts)) => (p, c, ts.size.toLong) }
-      .sortBy { case (p, c, _) => (-c, p) }.take(20)
-    val got = run("txt_bpe_pairs").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(got == expected)
-  }
-
   test("sim_hard_negatives: brute-force replay of cross-label top-3") {
     val vecs = Tables.embeddings(spark, sf)
       .select("vec_id", "label", "embedding").collect()
@@ -768,29 +525,6 @@ class OperatorSpec extends AnyFunSuite {
     assert(expected.forall { case (_, ql, _, nl, _, _) => ql != nl })
   }
 
-  test("qa_ks_drift: brute-force replay of the integer-argmax ECDF fold") {
-    val evs = Tables.events(spark, sf).select("ts", "value").collect().map { r =>
-      val day = r.getTimestamp(0).toInstant
-        .atZone(java.time.ZoneOffset.UTC).getDayOfMonth
-      (math.floor(r.getDouble(1) * 10).toLong, day <= 15)
-    }
-    val cells = evs.groupBy(_._1).toSeq.map { case (b, g) =>
-      (b, g.count(_._2).toLong, g.count(!_._2).toLong)
-    }.sortBy(_._1)
-    val nA = cells.map(_._2).sum; val nB = cells.map(_._3).sum
-    var (ca, cb, best, at) = (0L, 0L, -1L, -1L)
-    cells.foreach { case (b, a, bb) =>
-      ca += a; cb += bb
-      val num = math.abs(ca * nB - cb * nA)
-      if (num > best) { best = num; at = b }
-    }
-    val r = run("qa_ks_drift").collect().head
-    assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((nA, nB, cells.size.toLong)))
-    assert(r.getDouble(3) == math.floor(best.toDouble / (nA * nB) * 1e6 + 0.5) / 1e6)
-    assert(r.getLong(4) == at)
-    assert(r.getDouble(3) > 0.0 && r.getDouble(3) < 1.0)
-  }
-
   test("rel_skyline: naive dominance replay") {
     val parts = Tables.part(spark, sf)
       .select("p_partkey", "p_retailprice", "p_size").collect()
@@ -804,70 +538,6 @@ class OperatorSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     assert(got.toSeq == frontier.toSeq)
     assert(got.nonEmpty)
-  }
-
-  test("samp_temperature: sqrt micro-unit replay; quotas under-allocate by < |langs|") {
-    val counts = Tables.documents(spark, sf).groupBy("lang").count().collect()
-      .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
-    val micro = counts.map { case (l, n) =>
-      (l, n, math.floor(math.sqrt(n.toDouble) * 1e6 + 0.5).toLong) }
-    val tot = micro.map(_._3).sum
-    val expected = micro.map { case (l, n, s) =>
-      (l, n, math.floor(s.toDouble / tot * 1e6 + 0.5) / 1e6, s * 10000 / tot) }
-    val got = run("samp_temperature").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-    assert(got.toSeq == expected.toSeq)
-    val qsum = got.map(_._4).sum  // floor division loses < 1 unit per lang
-    assert(qsum > 10000 - got.length && qsum <= 10000)
-  }
-
-  test("txt_langid_kappa: exact integer replay from the confusion cells") {
-    val stops = Set("the", "a", "of")
-    val docs = Tables.documents(spark, sf).select("lang", "text").collect()
-      .map { r =>
-        val pred = if (r.getString(1).toLowerCase.split(" ", -1).exists(stops))
-          "en" else "und"
-        (r.getString(0), pred)
-      }
-    val n = docs.length.toLong
-    val diag = docs.count { case (l, p) => l == p }.toLong
-    val rows = docs.groupBy(_._1).map { case (k, g) => k -> g.length.toLong }
-    val cols = docs.groupBy(_._2).map { case (k, g) => k -> g.length.toLong }
-    val peNum = rows.keySet.intersect(cols.keySet).toSeq
-      .map(k => rows(k) * cols(k)).sum
-    val r = run("txt_langid_kappa").collect().head
-    assert(r.getLong(0) == n && r.getLong(1) == diag)
-    assert(r.getDouble(2) ==
-      math.floor(diag.toDouble / n * 1e6 + 0.5) / 1e6)
-    assert(r.getDouble(4) ==
-      math.floor((n * diag - peNum).toDouble / (n * n - peNum) * 1e6 + 0.5) / 1e6)
-    // chance correction must bite: kappa strictly below raw agreement po
-    assert(r.getDouble(4) < r.getDouble(2))
-  }
-
-  test("txt_cdc_chunks: per-doc boundary replay and chunk invariants") {
-    // base-131 Rabin window hash, the engine's boundary rule
-    def winHash(text: String, i: Int): Long =
-      (0 until 8).map(k => text.charAt(i - 1 + k).toLong *
-        math.pow(131.0, k).toLong).sum
-    val docs = Tables.documents(spark, sf).select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    val expected = docs.sortBy(_._1).map { case (id, text) =>
-      val len = text.length.toLong
-      val cuts = (1 to text.length - 7)
-        .filter(i => winHash(text, i) % 64 == 0).map(_ + 7L)
-      val gaps = cuts.zip(0L +: cuts.dropRight(1)).map { case (c, p) => c - p }
-      val tail = len - cuts.lastOption.getOrElse(0L)
-      val nChunks = (cuts.size + (if (tail > 0) 1 else 0)).toLong
-      val maxChunk = math.max(gaps.maxOption.getOrElse(0L), tail)
-      (id, len, nChunks, maxChunk,
-        math.floor(len.toDouble / nChunks * 1e4 + 0.5) / 1e4)
-    }
-    val got = run("txt_cdc_chunks").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getDouble(4)))
-    assert(got.toSeq == expected.toSeq)
-    assert(got.exists(_._3 > 1))  // boundaries actually fire on this corpus
   }
 
   test("evt_ewma: dyadic fold replay over trailing-16 windows") {

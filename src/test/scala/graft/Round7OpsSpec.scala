@@ -79,23 +79,6 @@ class Round7OpsSpec extends AnyFunSuite {
 
   // ---- systematic sampling --------------------------------------------------
 
-  test("samp_systematic: exact ceil(n/10) rows at stride 10, ranks 1,11,21,…, ids match driver-side md5 order") {
-    val rows = run("samp_systematic").collect()
-    val n = Tables.documents(spark, sf).count()
-    assert(rows.length == ((n + 9) / 10).toInt)
-    assert(rows.map(_.getLong(0)).toSeq == (1L to n by 10L).toSeq)
-    // independent reimplementation: collect ids, md5-order in the driver
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def u32(s: String): Long = {
-      val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex.substring(0, 8), 16)
-    }
-    val ids = Tables.documents(spark, sf).select("doc_id").collect().map(_.getLong(0))
-    val expect = ids.map(i => (u32(i.toString), i)).sorted.map(_._2)
-      .zipWithIndex.collect { case (id, ix) if ix % 10 == 0 => id }
-    assert(rows.map(_.getLong(1)).toSeq == expect.toSeq)
-  }
-
   // ---- PCA power iteration --------------------------------------------------
 
   test("emb_pca_power matches an independent driver-side BigInt power iteration") {
@@ -191,25 +174,7 @@ class Round7OpsSpec extends AnyFunSuite {
 
   // ---- benford --------------------------------------------------------------
 
-  test("qa_benford: 9 digits, expected ppm sums to exactly 1e6, observed within rounding") {
-    val rows = run("qa_benford").collect()
-    assert(rows.map(_.getInt(0)).toSeq == (1 to 9))
-    assert(rows.map(_.getLong(3)).sum == 1000000L)
-    val shareSum = rows.map(_.getLong(2)).sum
-    assert(math.abs(shareSum - 1000000L) <= 9, s"share ppm sum $shareSum")
-  }
-
   // ---- MAD outliers ---------------------------------------------------------
-
-  test("qa_outlier_mad: per-type outliers bounded and med/mad positive") {
-    val rows = run("qa_outlier_mad").collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      assert(r.getLong(4) >= 0 && r.getLong(4) < r.getLong(1),
-        "outliers are a strict minority")
-      assert(r.getDouble(2) > 0 && r.getDouble(3) >= 0)
-    }
-  }
 
   // ---- snapshot diff --------------------------------------------------------
 
@@ -323,16 +288,6 @@ class Round7OpsSpec extends AnyFunSuite {
 
   // ---- zipf fit -------------------------------------------------------------
 
-  test("txt_zipf_fit: negative slope, r2 in [0,1], n = min(vocab, 100)") {
-    val r = run("txt_zipf_fit").collect().head
-    val vocab = Tables.documents(spark, sf)
-      .select(explode(split(lower(col("text")), " ")).as("t"))
-      .agg(countDistinct("t")).collect().head.getLong(0)
-    assert(r.getLong(0) == math.min(vocab, 100L))
-    assert(r.getDouble(1) < 0, "Zipf slope must be negative")
-    assert(r.getDouble(3) >= 0 && r.getDouble(3) <= 1)
-  }
-
   // ---- sweep-line concurrency -----------------------------------------------
 
   test("rel_sweep_concurrency conserves total session-time: sum(level * dur) = sum(session lengths)") {
@@ -359,68 +314,9 @@ class Round7OpsSpec extends AnyFunSuite {
 
   // ---- feature hashing ------------------------------------------------------
 
-  test("txt_feature_hashing: nnz <= 256, counts conserve tokens, norm bounds hold") {
-    val rows = run("txt_feature_hashing").collect()
-    val tokCounts = Tables.documents(spark, sf)
-      .select(col("doc_id"), size(split(lower(col("text")), " ")).cast("long").as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(rows.length == tokCounts.size)
-    rows.foreach { r =>
-      val (id, nnz, sq, mx) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-      val n = tokCounts(id)
-      assert(nnz >= 1 && nnz <= math.min(256L, n))
-      assert(mx * mx <= sq && sq <= n * n)
-      // sq_norm >= n (sum of c^2 >= sum of c when c >= 1)
-      assert(sq >= n)
-    }
-  }
-
   // ---- multimodal resize ----------------------------------------------------
 
-  test("mm_resize_grid: 64 samples per doc, byte-range stats, driver replay of one doc") {
-    val rows = run("mm_resize_grid").collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      val (n, sum, mn, mx) = (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-      assert(n == 64L)
-      assert(mn >= 0 && mx <= 255 && mn <= mx)
-      assert(sum >= 64 * mn && sum <= 64 * mx)
-    }
-    // replay the strided sampling for the first doc
-    val doc = Tables.documents(spark, sf).orderBy("doc_id")
-      .select("doc_id", "text").collect().head
-    val bytes = doc.getString(1).getBytes("UTF-8")
-    val samples = (0 until 64).map(k => (bytes((k.toLong * bytes.length / 64).toInt) & 0xff).toLong)
-    val got = rows.find(_.getLong(0) == doc.getLong(0)).get
-    assert(got.getLong(2) == samples.sum && got.getLong(3) == samples.min &&
-      got.getLong(4) == samples.max)
-  }
-
   // ---- BPE merge step -------------------------------------------------------
-
-  test("txt_bpe_merge_step applies the argmax pair and matches a driver-side replay") {
-    val rows = run("txt_bpe_merge_step").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    assert(rows.nonEmpty)
-    val appliedPair = rows.head._1
-    assert(rows.forall(_._1 == appliedPair))
-    // replay: word-frequency table -> top pair -> java replace (same
-    // left-to-right non-overlap semantics as SQL replace) -> recount
-    val vocab = Tables.documents(spark, sf)
-      .select(explode(split(lower(col("text")), " ")).as("t"))
-      .groupBy("t").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).filter(_._1.length >= 2)
-    def pairCounts(words: Seq[(String, Long)]): Map[String, Long] =
-      words.flatMap { case (w, c) =>
-        (0 until w.length - 1).map(i => w.substring(i, i + 2) -> c)
-      }.groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2).sum }
-    val top = pairCounts(vocab.toSeq).toSeq.minBy { case (p, c) => (-c, p) }._1
-    assert(top == appliedPair)
-    val merged = vocab.toSeq.map { case (w, c) => w.replace(top, "~") -> c }
-      .filter(_._1.length >= 2)
-    val want = pairCounts(merged).toSeq.sortBy { case (p, c) => (-c, p) }.take(10)
-    assert(rows.map(r => (r._2, r._3)).toSeq == want)
-  }
 
   // ---- neighbor jaccard -----------------------------------------------------
 
@@ -500,38 +396,7 @@ class Round7OpsSpec extends AnyFunSuite {
 
   // ---- mutual information ---------------------------------------------------
 
-  test("qa_mutual_info: 0 <= MI <= min(H), U in [0,1], entropies bounded by ln(k)") {
-    val r = run("qa_mutual_info").collect().head
-    val (mi, hl, hs, u) = (r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5))
-    val tol = 1e-4 // micro-nat floor-rounding slack across the three sums
-    assert(mi >= -tol && mi <= math.min(hl, hs) + tol)
-    assert(hl >= 0 && hs >= 0 && u >= -tol && u <= 1 + tol)
-    val nLang = Tables.documents(spark, sf).select("lang").distinct().count()
-    assert(hl <= math.log(nLang.toDouble) + tol, "H(lang) <= ln(#langs)")
-  }
-
   // ---- keyness --------------------------------------------------------------
-
-  test("txt_keyness_g2: 8 ranked rows per source, counts consistent, G2 nonneg and rank-ordered") {
-    val rows = run("txt_keyness_g2").collect()
-    val bySource = rows.groupBy(_.getString(0))
-    assert(bySource.forall(_._2.length == 8))
-    bySource.values.foreach { rs =>
-      val g2s = rs.sortBy(_.getInt(1)).map(_.getDouble(6)).toSeq
-      assert(g2s == g2s.sorted.reverse, "g2 descending by rank")
-      assert(g2s.forall(_ >= 0.0), "top-8 G2 values nonneg")
-    }
-    // spot-check counts for the global top row against a direct recompute
-    val top = rows.minBy(r => (r.getString(0), r.getInt(1)))
-    val (src, tok) = (top.getString(0), top.getString(2))
-    val n = Tables.documents(spark, sf)
-      .select(col("source"), explode(split(lower(col("text")), " ")).as("tok"))
-      .filter(col("tok") === tok)
-      .groupBy("source").agg(count(lit(1)).as("c")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(top.getLong(3) == n.getOrElse(src, 0L), "n_in_source")
-    assert(top.getLong(4) == n.filter(_._1 != src).values.sum, "n_elsewhere")
-  }
 
   // ---- Kaplan-Meier ---------------------------------------------------------
 
@@ -590,17 +455,6 @@ class Round7OpsSpec extends AnyFunSuite {
 
   // ---- JSD ------------------------------------------------------------------
 
-  test("txt_jsd_sources: bounded by ln 2, canonical pair order, shared <= union vocab") {
-    val rows = run("txt_jsd_sources").collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      assert(r.getString(0) < r.getString(1), "sa < sb")
-      assert(r.getLong(2) <= r.getLong(3), "shared <= union")
-      val jsd = r.getDouble(4)
-      assert(jsd >= -1e-6 && jsd <= math.log(2.0) + 1e-4, s"jsd=$jsd")
-    }
-  }
-
   // ---- entropy rate ---------------------------------------------------------
 
   test("evt_entropy_rate: 0 <= H(next|prev) <= H(next) <= ln 5, gain = difference") {
@@ -628,20 +482,6 @@ class Round7OpsSpec extends AnyFunSuite {
   }
 
   // ---- centroid drift -------------------------------------------------------
-
-  test("emb_centroid_drift: halves cover each label, drift nonneg and below the value range") {
-    val rows = run("emb_centroid_drift").collect()
-    assert(rows.nonEmpty)
-    val perLabel = Tables.embeddings(spark, sf).groupBy("label").count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    rows.foreach { r =>
-      assert(r.getLong(1) + r.getLong(2) == perLabel(r.getInt(0)),
-        "even+odd halves cover the label")
-      val drift = r.getDouble(3)
-      // embeddings live in [-1, 1]^64 -> centroid L2 distance <= 2*sqrt(64)
-      assert(drift >= 0.0 && drift <= 16.0, s"drift=$drift")
-    }
-  }
 
   // ---- length batching ------------------------------------------------------
 
@@ -690,37 +530,7 @@ class Round7OpsSpec extends AnyFunSuite {
 
   // ---- Neyman allocation ----------------------------------------------------
 
-  test("samp_neyman_allocation: budgets land within rounding of 500, Neyman skews to spread") {
-    val rows = run("samp_neyman_allocation").collect()
-    assert(rows.nonEmpty)
-    val k = rows.length
-    val propSum = rows.map(_.getLong(3)).sum
-    val neySum = rows.map(_.getLong(4)).sum
-    // independent per-stratum floor(+0.5) can drift at most k/2 seats
-    assert(math.abs(propSum - 500L) <= k && math.abs(neySum - 500L) <= k)
-    rows.foreach(r => assert(r.getLong(3) >= 0 && r.getLong(4) >= 0))
-  }
-
   // ---- audio energy ---------------------------------------------------------
-
-  test("mm_audio_energy: frame counts match len div 32, energy recomputes exactly for a sample clip") {
-    val rows = run("mm_audio_energy").collect()
-    assert(rows.nonEmpty)
-    val lens = Tables.documents(spark, sf)
-      .select(col("doc_id"), length(col("text")).cast("long").as("len"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    rows.foreach { r =>
-      assert(r.getLong(1) == lens(r.getLong(0)) / 32, "n_frames = len div 32")
-      assert(r.getLong(2) <= r.getLong(1), "silent <= frames")
-    }
-    // exact JVM recompute for the first clip
-    val id = rows.head.getLong(0)
-    val text = Tables.documents(spark, sf).filter(col("doc_id") === id)
-      .select("text").collect().head.getString(0)
-    val e2s = text.getBytes("UTF-8").map(b => (b & 0xff) - 64L)
-      .grouped(32).filter(_.length == 32).map(w => w.map(x => x * x).sum).toSeq
-    assert(rows.head.getLong(3) == e2s.sum, "total_e2 exact")
-  }
 
   // ---- Theil decomposition --------------------------------------------------
 
@@ -761,43 +571,9 @@ class Round7OpsSpec extends AnyFunSuite {
 
   // ---- power / MDE ----------------------------------------------------------
 
-  test("qa_power_mde: MDE shrinks with n, required n consistent with the closed form") {
-    val r = run("qa_power_mde").collect().head
-    val (n1, n2, p, mde, nReq) =
-      (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))
-    assert(p > 0 && p < 1)
-    val expMde = 2.8 * math.sqrt(p * (1 - p) * (1.0 / n1 + 1.0 / n2))
-    assert(math.abs(mde - expMde) < 1e-5)
-    val expN = 2.8 * 2.8 * 2.0 * p * (1 - p) / ((0.1 * p) * (0.1 * p))
-    assert(math.abs(nReq - expN) < 0.2)
-    assert(nReq > n1, "a 10% relative lift needs more data than this split has")
-  }
-
   // ---- PPS sampling ---------------------------------------------------------
 
-  test("samp_pps_systematic: multiplicities sum to ~100, selection favors long docs deterministically") {
-    val rows = run("samp_pps_systematic").collect()
-    val msum = rows.map(_.getLong(2)).sum
-    assert(msum >= 99 && msum <= 100, s"grid points accounted for: $msum")
-    rows.foreach(r => assert(r.getLong(2) >= 1))
-    // size-proportional: mean selected length exceeds corpus mean
-    val meanSel = rows.map(r => r.getLong(1) * r.getLong(2)).sum.toDouble / msum
-    val meanAll = Tables.documents(spark, sf)
-      .agg(avg(col("n_chars"))).collect().head.getDouble(0)
-    assert(meanSel > meanAll, s"PPS mean $meanSel should exceed corpus mean $meanAll")
-    val again = run("samp_pps_systematic").collect()
-    assert(rows.map(_.toString).toSeq == again.map(_.toString).toSeq)
-  }
-
   // ---- diff in diff ---------------------------------------------------------
-
-  test("qa_diff_in_diff: estimate equals the four-cell arithmetic, cells cover both groups") {
-    val r = run("qa_diff_in_diff").collect().head
-    assert(Seq(0, 1, 2, 3).forall(i => r.getLong(i) > 0), "all four cells populated")
-    val did = (r.getDouble(5) - r.getDouble(4)) - (r.getDouble(7) - r.getDouble(6))
-    assert(math.abs(r.getDouble(8) - did) < 1e-3,
-      s"reported ${r.getDouble(8)} vs recomputed $did")
-  }
 
   // ---- growth accounting ----------------------------------------------------
 
@@ -825,39 +601,7 @@ class Round7OpsSpec extends AnyFunSuite {
 
   // ---- Theil-Sen ------------------------------------------------------------
 
-  test("qa_theilsen_trend: pair count = d(d-1)/2, slope matches a JVM median of pairwise slopes") {
-    val r = run("qa_theilsen_trend").collect().head
-    val daily = Tables.events(spark, sf)
-      .groupBy(to_date(col("ts")).as("day"))
-      .agg(sum(floor(col("value") * 100 + 0.5).cast("long")).as("y"))
-      .collect().map(x => x.getDate(0).toLocalDate.toEpochDay -> x.getLong(1))
-      .sortBy(_._1)
-    val dcount = daily.length.toLong
-    assert(r.getLong(0) == dcount * (dcount - 1) / 2)
-    val slopes = (for {
-      i <- daily.indices; j <- (i + 1) until daily.length
-    } yield {
-      val num = (daily(j)._2 - daily(i)._2) * 1000000L
-      val den = daily(j)._1 - daily(i)._1
-      Math.floorDiv(num, den)
-    }).sorted
-    val med = slopes(((slopes.length + 1) / 2 - 1).toInt)
-    assert(math.abs(r.getDouble(1) - med / 1e6 / 100.0) < 1e-3,
-      s"engine ${r.getDouble(1)} vs jvm ${med / 1e6 / 100.0}")
-  }
-
   // ---- Mahalanobis ----------------------------------------------------------
-
-  test("emb_mahalanobis_outliers: 20 ranked outliers, distances positive and in sd-unit scale") {
-    val rows = run("emb_mahalanobis_outliers").collect()
-    assert(rows.length == 20)
-    val ds = rows.map(_.getDouble(1))
-    assert(ds.zip(ds.tail).forall { case (a, b) => b <= a + 1e-9 }, "ranked desc")
-    // expected distance for 64 standardized dims is ~sqrt(64) = 8; the
-    // TOP outliers must exceed that, and nothing plausible passes 80
-    assert(ds.head > math.sqrt(64.0) * 0.8 && ds.head < 80.0, s"top ${ds.head}")
-    ds.foreach(x => assert(x > 0))
-  }
 
   // ---- personalized PageRank ------------------------------------------------
 
@@ -872,15 +616,6 @@ class Round7OpsSpec extends AnyFunSuite {
   }
 
   // ---- surprisal by source --------------------------------------------------
-
-  test("txt_surprisal_by_source: positive surprisal, token totals match the corpus") {
-    val rows = run("txt_surprisal_by_source").collect()
-    assert(rows.nonEmpty)
-    val total = Tables.documents(spark, sf)
-      .select(explode(split(lower(col("text")), " "))).count()
-    assert(rows.map(_.getLong(2)).sum == total)
-    rows.foreach(r => assert(r.getDouble(3) > 0.0, "surprisal positive"))
-  }
 
   // ---- tf-idf pair cosine ---------------------------------------------------
 
@@ -911,18 +646,6 @@ class Round7OpsSpec extends AnyFunSuite {
   }
 
   // ---- FK fan-out -----------------------------------------------------------
-
-  test("qa_fk_fanout_profile: child totals match table sizes, childless <= parents") {
-    val rows = run("qa_fk_fanout_profile").collect()
-      .map(r => r.getString(0) -> r).toMap
-    assert(rows.size == 5)
-    assert(rows("orders->lineitem").getLong(2) ==
-      Tables.lineitem(spark, sf).count(), "every lineitem has a parent order")
-    rows.values.foreach { r =>
-      assert(r.getLong(3) <= r.getLong(1))
-      assert(r.getLong(5) >= 0 && r.getDouble(4) >= 0.0)
-    }
-  }
 
   // ---- attribution comparison -----------------------------------------------
 
@@ -984,40 +707,7 @@ class Round7OpsSpec extends AnyFunSuite {
 
   // ---- Simpson detector -----------------------------------------------------
 
-  test("qa_simpson_paradox: groups partition nations, agree+reverse <= groups") {
-    val r = run("qa_simpson_paradox").collect().head
-    val nations = Tables.orders(spark, sf)
-      .join(Tables.customer(spark, sf),
-        col("o_custkey") === col("c_custkey"))
-      .select("c_nationkey").distinct().count()
-    assert(r.getLong(0) == nations)
-    assert(r.getLong(2) + r.getLong(3) <= r.getLong(0))
-    assert(math.abs(r.getLong(1)) <= 1)
-  }
-
   // ---- Mann-Whitney ---------------------------------------------------------
-
-  test("qa_mann_whitney: U within [0, n1*n2], matches a JVM brute-force with ties") {
-    val r = run("qa_mann_whitney").collect().head
-    val (n1, n2, u) = (r.getLong(0), r.getLong(1), r.getDouble(2))
-    assert(u >= 0.0 && u <= n1.toDouble * n2)
-    // brute force at spec SF: U = #{a > b} + #{a == b}/2
-    val vals = Tables.events(spark, sf)
-      .select(floor(col("value") * 100 + 0.5).cast("long").as("v"),
-        when(dayofmonth(col("ts")) <= 15, 0).otherwise(1).as("p"))
-      .collect().map(r2 => (r2.getLong(0), r2.getInt(1)))
-    val as = vals.filter(_._2 == 0).map(_._1)
-    val bs = vals.filter(_._2 == 1).map(_._1).sorted
-    def cntBelow(x: Long): (Long, Long) = {
-      var lo = 0; var hi = bs.length
-      while (lo < hi) { val m = (lo + hi) / 2; if (bs(m) < x) lo = m + 1 else hi = m }
-      val firstGE = lo; var hi2 = bs.length; var lo2 = firstGE
-      while (lo2 < hi2) { val m = (lo2 + hi2) / 2; if (bs(m) <= x) lo2 = m + 1 else hi2 = m }
-      (firstGE.toLong, (lo2 - firstGE).toLong)
-    }
-    val u2 = as.map { x => val (below, eq) = cntBelow(x); 2 * below + eq }.sum
-    assert(math.abs(u - u2 / 2.0) < 0.51, s"engine U $u vs brute ${u2 / 2.0}")
-  }
 
   // ---- constrained funnel ---------------------------------------------------
 
@@ -1030,26 +720,7 @@ class Round7OpsSpec extends AnyFunSuite {
 
   // ---- join cardinality -----------------------------------------------------
 
-  test("qa_join_cardinality_estimate: exact matches a real join count; estimates in sane range") {
-    val r = run("qa_join_cardinality_estimate").collect().head
-    val truth = Tables.orders(spark, sf).select(col("o_orderkey"))
-      .join(Tables.lineitem(spark, sf).select(col("l_orderkey")),
-        col("o_orderkey") === col("l_orderkey")).count()
-    assert(r.getLong(0) == truth, "per-key sum equals the executed join count")
-    assert(r.getLong(1) > 0 && r.getLong(2) > 0)
-    // histogram estimate should not be worse than 10x off on TPC-H keys
-    assert(math.abs(r.getDouble(4)) < 1000.0)
-  }
-
   // ---- proportion z-test ----------------------------------------------------
-
-  test("qa_proportion_ztest: halves cover the corpus, rates recompute, z finite") {
-    val r = run("qa_proportion_ztest").collect().head
-    assert(r.getLong(0) + r.getLong(2) == Tables.events(spark, sf).count())
-    assert(r.getLong(1) <= r.getLong(0) && r.getLong(3) <= r.getLong(2))
-    assert(math.abs(r.getDouble(4) - r.getLong(1).toDouble / r.getLong(0)) < 1e-5)
-    assert(!r.getDouble(6).isNaN && !r.getDouble(6).isInfinite)
-  }
 
   // ---- journey trigrams -----------------------------------------------------
 
@@ -1080,17 +751,6 @@ class Round7OpsSpec extends AnyFunSuite {
 
   // ---- Burrows' delta -------------------------------------------------------
 
-  test("txt_burrows_delta: canonical pairs, nonneg symmetric distance, consistent word panel") {
-    val rows = run("txt_burrows_delta").collect()
-    assert(rows.nonEmpty)
-    val panels = rows.map(_.getLong(2)).distinct
-    assert(panels.length == 1 && panels.head <= 30, "one shared word panel")
-    rows.foreach { r =>
-      assert(r.getString(0) < r.getString(1))
-      assert(r.getDouble(3) >= 0.0)
-    }
-  }
-
   // ---- silhouette -----------------------------------------------------------
 
   test("emb_cluster_silhouette: scores in [-1,1], vecs partition, clusters match labels") {
@@ -1105,17 +765,6 @@ class Round7OpsSpec extends AnyFunSuite {
   }
 
   // ---- fingerprint collisions -----------------------------------------------
-
-  test("qa_fingerprint_collision_audit: wider fingerprints collide less, text count constant") {
-    val rows = run("qa_fingerprint_collision_audit").collect().sortBy(_.getInt(0))
-    assert(rows.map(_.getInt(0)).toSeq == Seq(16, 24, 32))
-    assert(rows.map(_.getLong(1)).distinct.length == 1,
-      "same distinct-text universe at every width")
-    val coll = rows.map(_.getLong(3))
-    assert(coll.zip(coll.tail).forall { case (a, b) => b <= a },
-      "more bits cannot create collisions")
-    rows.foreach(r => assert(r.getLong(2) + r.getLong(3) == r.getLong(1)))
-  }
 
   // ---- Haar energy ----------------------------------------------------------
 
@@ -1144,16 +793,6 @@ class Round7OpsSpec extends AnyFunSuite {
 
   // ---- EMD drift ------------------------------------------------------------
 
-  test("qa_emd_drift: nonneg, bounded by the value range, halves partition the corpus") {
-    val r = run("qa_emd_drift").collect().head
-    assert(r.getLong(1) + r.getLong(2) == Tables.events(spark, sf).count())
-    val emd = r.getDouble(3)
-    assert(emd >= 0.0, "transport cost nonneg")
-    val rng = Tables.events(spark, sf)
-      .agg(max(col("value")) - min(col("value"))).collect().head.getDouble(0)
-    assert(emd <= rng + 1.0, s"EMD $emd cannot exceed the value range $rng")
-  }
-
   // ---- shard miss audit -----------------------------------------------------
 
   test("dedup_shard_miss_audit: caught+missed = pairs, miss rate near 1-1/8 for random sharding") {
@@ -1167,20 +806,6 @@ class Round7OpsSpec extends AnyFunSuite {
   }
 
   // ---- temperature sweep ----------------------------------------------------
-
-  test("samp_temperature_sweep: shares sum to 1 per alpha, flattening with lower alpha") {
-    val rows = run("samp_temperature_sweep").collect()
-    val byAlpha = rows.groupBy(_.getString(0))
-    assert(byAlpha.keySet == Set("0.25", "0.5", "0.75", "1.0"))
-    byAlpha.foreach { case (a, rs) =>
-      assert(math.abs(rs.map(_.getDouble(3)).sum - 1.0) < 1e-3, s"alpha $a shares")
-    }
-    // lower temperature flattens the mixture: max share is non-decreasing in alpha
-    val maxShare = byAlpha.map { case (a, rs) => a.toDouble -> rs.map(_.getDouble(3)).max }
-      .toSeq.sortBy(_._1).map(_._2)
-    assert(maxShare.zip(maxShare.tail).forall { case (lo, hi) => lo <= hi + 1e-9 },
-      s"max shares by alpha: ${maxShare.mkString(", ")}")
-  }
 
   // ---- circadian ------------------------------------------------------------
 
@@ -1254,24 +879,6 @@ class Round7OpsSpec extends AnyFunSuite {
 
   // ---- Heaps' law -----------------------------------------------------------
 
-  test("txt_heaps_law: 10 monotone deciles, vocab sublinear (0 < beta < 1), totals match corpus") {
-    val rows = run("txt_heaps_law").collect().sortBy(_.getLong(0))
-    assert(rows.length == 10)
-    val toks = rows.map(_.getLong(1)); val voc = rows.map(_.getLong(2))
-    assert(toks.zip(toks.tail).forall { case (a, b) => b > a }, "tokens strictly grow")
-    assert(voc.zip(voc.tail).forall { case (a, b) => b >= a }, "vocab non-decreasing")
-    val totalTok = Tables.documents(spark, sf)
-      .select(explode(split(lower(col("text")), " "))).count()
-    assert(toks.last == totalTok, "final decile covers the corpus")
-    // the synthetic corpus samples a small closed vocabulary, so the
-    // full word set appears almost immediately and beta is legitimately
-    // ~0 — exactly the "template language" signal the operator exists to
-    // raise; natural text would land 0.4-0.8
-    val beta = rows.head.getDouble(3)
-    assert(beta >= -1e-9 && beta < 1.0, s"Heaps beta $beta outside [0,1)")
-    if (voc.last == voc.head) assert(beta <= 0.05, "flat vocab must fit ~0")
-  }
-
   // ---- Fano factor ----------------------------------------------------------
 
   test("evt_fano_factor: top-20 ranked desc, fano nonneg, active days >= 2") {
@@ -1286,18 +893,6 @@ class Round7OpsSpec extends AnyFunSuite {
   }
 
   // ---- k-fold ---------------------------------------------------------------
-
-  test("samp_kfold_audit: folds partition the corpus, shares bounded, assignment deterministic") {
-    val rows = run("samp_kfold_audit").collect()
-    assert(rows.map(_.getLong(0)).toSet.subsetOf(Set(0L, 1L, 2L, 3L, 4L)))
-    assert(rows.map(_.getLong(1)).sum == Tables.documents(spark, sf).count())
-    rows.foreach { r =>
-      assert(r.getDouble(3) >= r.getDouble(4), "max >= min share")
-      assert(r.getDouble(3) <= 1.0 && r.getDouble(4) >= 0.0)
-    }
-    val again = run("samp_kfold_audit").collect()
-    assert(rows.map(_.toString).toSeq == again.map(_.toString).toSeq)
-  }
 
   // ---- user entropy profile -------------------------------------------------
 
@@ -1398,17 +993,6 @@ class Round7OpsSpec extends AnyFunSuite {
 
   // ---- vocab jaccard --------------------------------------------------------
 
-  test("txt_vocab_jaccard_sources: jaccard in (0,1], canonical order, inter <= union") {
-    val rows = run("txt_vocab_jaccard_sources").collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      assert(r.getString(0) < r.getString(1))
-      assert(r.getLong(2) <= r.getLong(3))
-      val j = r.getDouble(4)
-      assert(j > 0.0 && j <= 1.0, s"jaccard $j")
-    }
-  }
-
   // ---- sign fidelity --------------------------------------------------------
 
   test("emb_sign_fidelity: positive cosine-sign correlation, hamming within [0,64]") {
@@ -1424,25 +1008,6 @@ class Round7OpsSpec extends AnyFunSuite {
   }
 
   // ---- PK uniqueness --------------------------------------------------------
-
-  test("qa_pk_uniqueness: all ten tables audited; single-col keys unique, lineitem's real dupes surfaced") {
-    val rows = run("qa_pk_uniqueness").collect()
-    assert(rows.length == 10)
-    rows.foreach { r =>
-      assert(r.getLong(4) == r.getLong(2) - r.getLong(3), "dup arithmetic")
-      if (r.getString(0) != "lineitem")
-        assert(r.getLong(4) == 0L,
-          s"${r.getString(0)} has ${r.getLong(4)} duplicate key rows")
-    }
-    // the audit's reason to exist: the synthetic generator REUSES
-    // (l_orderkey, l_linenumber) pairs, and the audit reports it (verified
-    // against a direct recompute) instead of assuming TPC-H's contract
-    val li = rows.find(_.getString(0) == "lineitem").get
-    val truth = Tables.lineitem(spark, sf)
-      .select("l_orderkey", "l_linenumber").distinct().count()
-    assert(li.getLong(3) == truth && li.getLong(4) == li.getLong(2) - truth)
-    assert(rows.map(_.getString(0)).toSet == Tables.names.toSet)
-  }
 
   // ---- ANOVA ----------------------------------------------------------------
 
@@ -1480,17 +1045,6 @@ class Round7OpsSpec extends AnyFunSuite {
   }
 
   // ---- key gaps -------------------------------------------------------------
-
-  test("qa_key_gaps: spans bound counts, totals reconcile with the table") {
-    val rows = run("qa_key_gaps").collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      assert(r.getLong(4) <= r.getLong(3), "actual <= span")
-      assert(r.getLong(5) == r.getLong(3) - r.getLong(4))
-      assert(r.getLong(5) >= 0)
-    }
-    assert(rows.map(_.getLong(4)).sum == Tables.orders(spark, sf).count())
-  }
 
   // ---- Pareto ---------------------------------------------------------------
 
@@ -1548,33 +1102,7 @@ class Round7OpsSpec extends AnyFunSuite {
 
   // ---- AQP ------------------------------------------------------------------
 
-  test("samp_aqp_revenue: estimate within a few std errors of exact, sample is ~1%") {
-    val r = run("samp_aqp_revenue").collect().head
-    val (n, est, exact, relErr, se) =
-      (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))
-    val orders = Tables.orders(spark, sf).count()
-    assert(n > 0 && n < orders / 20, "sample is a small fraction")
-    assert(se > 0)
-    assert(math.abs(est - exact) <= 6 * se,
-      s"estimate $est vs exact $exact beyond 6 SE ($se)")
-    assert(math.abs(relErr) <= 100.0)
-  }
-
   // ---- count-min ------------------------------------------------------------
-
-  test("txt_count_min_probe: never underestimates, error bounded by eps*N, deterministic") {
-    val rows = run("txt_count_min_probe").collect()
-    assert(rows.length == 10)
-    val nTok = Tables.documents(spark, sf)
-      .select(explode(split(lower(col("text")), " "))).count()
-    rows.foreach { r =>
-      assert(r.getBoolean(3), s"CMS underestimated ${r.getString(0)}")
-      assert(r.getLong(2) - r.getLong(1) <= math.ceil(0.001 * nTok).toLong * 3,
-        s"error beyond 3x eps*N for ${r.getString(0)}")
-    }
-    val again = run("txt_count_min_probe").collect()
-    assert(rows.map(_.toString).toSeq == again.map(_.toString).toSeq)
-  }
 
   // ---- ROUGE pairs ----------------------------------------------------------
 
@@ -1592,17 +1120,6 @@ class Round7OpsSpec extends AnyFunSuite {
   }
 
   // ---- concentration --------------------------------------------------------
-
-  test("emb_concentration: resultant length in [0,1], labels cover the corpus") {
-    val rows = run("emb_concentration").collect()
-    assert(rows.nonEmpty)
-    val total = rows.map(_.getLong(1)).sum
-    assert(total == Tables.embeddings(spark, sf).count())
-    rows.foreach { r =>
-      val rl = r.getDouble(2)
-      assert(rl >= 0.0 && rl <= 1.0 + 1e-4, s"R=$rl")
-    }
-  }
 
   // ---- drawdown -------------------------------------------------------------
 

@@ -85,20 +85,6 @@ class Round8OpsSpec extends AnyFunSuite {
 
   // ---- layout audits --------------------------------------------------------
 
-  test("qa_zonemap_pruning: scanned superset of matched, matched equals direct filter") {
-    val out = run("qa_zonemap_pruning").collect()
-    assert(out.length == 4)
-    out.foreach { r =>
-      assert(r.getLong(1) <= r.getLong(2), "files_scanned <= files_total")
-      assert(r.getLong(3) >= r.getLong(4), "rows_scanned >= rows_matched")
-      assert(r.getDouble(5) >= 1.0 || r.getLong(4) == 0L)
-    }
-    val q1 = Tables.lineitem(spark, sf)
-      .filter(col("l_shipdate") >= lit("1997-01-01") &&
-        col("l_shipdate") < lit("1997-04-01")).count()
-    assert(out.find(_.getInt(0) == 1).get.getLong(4) == q1)
-  }
-
   test("rel_zorder_layout: matched counts are layout-independent and zorder prunes the partkey-only box better") {
     val out = run("rel_zorder_layout").collect()
       .map(r => (r.getString(0), r.getInt(1)) ->
@@ -159,17 +145,6 @@ class Round8OpsSpec extends AnyFunSuite {
   }
 
   // ---- JL distortion --------------------------------------------------------
-
-  test("emb_jl_distortion: pair census complete and distortion concentrates near 1") {
-    val out = run("emb_jl_distortion").collect()
-    val nVec = Tables.embeddings(spark, sf).count()
-    val nPairs = out.map(_.getLong(1)).sum
-    assert(nPairs <= nVec / 2 && nPairs >= nVec / 2 - 1)
-    assert(out.forall(_.getLong(0) >= 0L))
-    val wmean = out.map(r => r.getDouble(2) * r.getLong(1)).sum / nPairs
-    assert(wmean > 0.5 && wmean < 1.5,
-      s"JL estimator should be near-unbiased, got weighted mean $wmean")
-  }
 
   test("sim_rank_spearman: rho bounded and exact for one probe recomputed in memory") {
     val out = run("sim_rank_spearman").collect()
@@ -316,19 +291,6 @@ class Round8OpsSpec extends AnyFunSuite {
 
   // ---- temporal split audit -------------------------------------------------
 
-  test("samp_temporal_split: event conservation and hash split is user-disjoint") {
-    val out = run("samp_temporal_split").collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5), r.getLong(6), r.getDouble(7))).toMap
-    val total = Tables.events(spark, sf).count()
-    val (tr, te, dr, _, ut, ub, _) = out("temporal_gap")
-    assert(tr + te + dr == total, "temporal split partitions all events")
-    assert(ub <= ut)
-    val (htr, hte, hdr, _, _, hub, hleak) = out("user_hash")
-    assert(htr + hte == total && hdr == 0L)
-    assert(hub == 0L && hleak == 0.0, "hash split must be user-disjoint")
-  }
-
   // ---- CUPED ----------------------------------------------------------------
 
   test("evt_uplift_cuped: theta and adjusted means replay from user moments") {
@@ -420,60 +382,7 @@ class Round8OpsSpec extends AnyFunSuite {
 
   // ---- slice finder ---------------------------------------------------------
 
-  test("qa_slice_finder: 10 rows, |z| non-increasing, top slice recomputed") {
-    val out = run("qa_slice_finder").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(5)))
-    assert(out.length == 10)
-    out.zip(out.drop(1)).foreach { case (a, b) =>
-      assert(math.abs(a._4) >= math.abs(b._4) - 1e-9)
-    }
-    // recompute the top slice's z from raw rows
-    val (dim, sv, n1, z) = out.head
-    val rows = Tables.events(spark, sf)
-      .select(col("event_type"),
-        ((dayofweek(col("ts")) + lit(5)) % 7).cast("long").as("dow"),
-        expr("hour(ts) div 6").as("hb"),
-        floor(col("value") * 100 + 0.5).cast("long").as("x"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val inSlice: ((String, Long, Long, Long)) => Boolean = dim match {
-      case "event_type" => t => t._1 == sv
-      case "weekday"    => t => t._2.toString == sv
-      case _            => t => t._3.toString == sv
-    }
-    val (s1, s0) = rows.partition(inSlice)
-    assert(s1.length.toLong == n1)
-    def stats(xs: Array[(String, Long, Long, Long)]) = {
-      val n = xs.length.toDouble
-      val m = xs.map(_._4).sum.toDouble / n
-      val v = (xs.map(t => t._4.toDouble * t._4).sum - n * m * m) / n
-      (n, m, v)
-    }
-    val (na, ma, va) = stats(s1); val (nb, mb, vb) = stats(s0)
-    val want = (ma - mb) / math.sqrt(va / na + vb / nb)
-    assert(math.abs(z - math.floor(want * 1e4 + 0.5) / 1e4) < 1e-3,
-      s"top z $z vs $want")
-  }
-
   // ---- shot boundaries ------------------------------------------------------
-
-  test("mm_shot_boundary replays in memory and respects invariants") {
-    val got = run("mm_shot_boundary").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toMap
-    val docs = Tables.documents(spark, sf).select("doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    docs.filter(_._2.length >= 16).foreach { case (id, text) =>
-      val nf = text.length / 16
-      val sigs = (0 until nf).map(k =>
-        text.substring(16 * k, 16 * k + 16).map(_.toLong).sum)
-      val bnds = (1 until nf).filter(t => math.abs(sigs(t) - sigs(t - 1)) > 200)
-      val shots = (bnds :+ nf).zip(0 +: bnds).map { case (e, st) => e - st }
-      val (gn, gs, gl) = got(id)
-      assert(gn == nf.toLong && gs == (bnds.size + 1).toLong &&
-        gl == shots.max.toLong, s"media $id")
-    }
-    assert(got.values.forall { case (nf, ns, ls) => ns >= 1 && ls <= nf })
-  }
 
   // ---- recall curve ---------------------------------------------------------
 
