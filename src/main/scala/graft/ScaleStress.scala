@@ -64,7 +64,7 @@ object ScaleStress {
     // surface at 10×
     "dedup_minhash", "dedup_ngram_jaccard", "dedup_simhash",
     "dedup_components", "graph_pagerank", "j_skew_salted", "win_session",
-    "evt_retention",
+    "samp_stratified", "evt_retention",
     // tier 3 (round 13): the custom-plan / optimizer-rule surfaces under
     // growth — the heap top-k lowering with its codegen build (run in the
     // cap-flush regime, see the partialMaxKeys config below), the native
@@ -79,11 +79,12 @@ object ScaleStress {
     // usual linear gate; the closed 64-bucket model must stay a broadcast
     // at any corpus size
     "samp_dsir",
-    // round 14: the Zipf-skew target that wasn't already here — the
+    // round 14: the Zipf-skew targets that weren't already here — the
     // df-capped positioned-gram self-join (a hot gram must be SHED as
-    // boilerplate, never paired); it also gets a uniform 10× row like
-    // everything else
-    "dedup_dup_spans")
+    // boilerplate, never paired) and the skew PROFILE itself (map-side
+    // partial combine bounds a hot key's reduce row to one per task);
+    // both also get uniform 10× rows like everything else
+    "dedup_dup_spans", "qa_key_skew")
 
   /** Default second-stress-point (rep2) families: the highest 10× ratios
     * from round 13 among the registered rows. */
@@ -96,7 +97,7 @@ object ScaleStress {
 
   /** Default Zipf-skew corpus targets. */
   private[graft] val SkewQueries = Seq("win_session", "dedup_dup_spans",
-    "j_skew_salted")
+    "qa_key_skew", "j_skew_salted")
 
   /** Build the rep× stress corpus into a fresh temp dir and return its
     * path. Extracted from [[main]] so the corpus-construction invariants

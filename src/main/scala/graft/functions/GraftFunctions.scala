@@ -55,8 +55,8 @@ object GraftFunctions {
     }.mkString("(", " + ", ")")
 
   /** One 32-bit word of md5(c) as a BIGINT, starting at 1-based hex digit
-    * `from` (1 = high word, 9 = low word) — the row-hash halves of
-    * [[xorChecksum]]. */
+    * `from` (1 = high word, 9 = low word) — the row-hash halves of the
+    * qa_table_checksum anti-entropy primitive. */
   def md5Word(c: Column, from: Int): Column =
     conv(substring(md5(c), from, 8), 16, 10).cast("long")
 
@@ -64,7 +64,9 @@ object GraftFunctions {
     * canonical row string: one row (n_rows, xor_hi, xor_lo). XOR is
     * commutative + associative, so partial folds over ANY partitioning or
     * micro-batching merge to the same triple (StreamChecksumSpec proves the
-    * stream merge against THIS definition). */
+    * stream merge against THIS definition). qa_table_checksum builds its
+    * per-table legs on this; spec and production share it so the
+    * streamability proof stays attached to the shipped primitive. */
   def xorChecksum(df: DataFrame, canon: Column): DataFrame =
     df.select(md5Word(canon, 1).as("hi"), md5Word(canon, 9).as("lo"))
       .agg(count(lit(1)).as("n_rows"),

@@ -307,6 +307,124 @@ object ParsingOps {
     },
     Some("""SELECT o_custkey, count(*) AS n_orders, floor(CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 * 100.0 + 0.5) / 100.0 AS total_price, floor(CAST(max(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 * 100.0 + 0.5) / 100.0 AS max_price FROM orders GROUP BY 1 ORDER BY 1"""))
 
+  /** Order-independent table checksums — the anti-entropy primitive for
+    * verifying two replicas / two snapshots / an engine migration hold the
+    * same data WITHOUT shipping rows: per table, XOR-fold a hash of each
+    * row's canonical string. XOR is commutative+associative, so the fold
+    * is partition-mergeable with no ordering or shuffle requirement (one
+    * narrow scan + a 1-row combine per table) and any ODD number of
+    * changed rows flips the checksum. The XOR fold's known blind spots are
+    * accepted and bounded: an even multiplicity of IDENTICAL changes
+    * cancels (countered in practice by including a unique key column in
+    * every canonical string, as all four legs here do), and concat_ws
+    * would canonicalize NULL and absent identically, so only non-null
+    * separator-free key/code columns belong in the string. Two independent
+    * 32-bit md5 words give a 64-bit effective check (a production run
+    * widens to 128 the same way). Doubles never enter the canonical string
+    * (their decimal rendering is engine-specific) — numeric content rides
+    * as centi BIGINTs. This query IS the engine-vs-oracle membership proof the
+    * hash-compare gate approximates row-by-row. */
+  private val qaTableChecksum = GraftQuery(
+    "qa_table_checksum",
+    "anti-entropy XOR row-hash checksums per table (order-independent)",
+    (s, d) => {
+      import graft.functions.GraftFunctions.{centi, xorChecksum}
+      // md5-per-row dominates this floor; each leg's scan is one task on
+      // the single-file local tables, so the hash fold ran on one core.
+      // Tables.spread (scale-gated, identity at real input sizes) spreads
+      // each leg across the session's cores on its key column before the
+      // fold — XOR is commutative, so the fold is partition-invariant by
+      // construction.
+      def legDf(name: String, t: org.apache.spark.sql.DataFrame,
+          key: Column, canon: Column) =
+        xorChecksum(Tables.spread(s, t, key), canon)
+          .select(lit(name).as("table_name"), col("n_rows"),
+            col("xor_hi"), col("xor_lo"))
+      legDf("customer", Tables.customer(s, d), col("c_custkey"),
+          concat_ws("|", col("c_custkey"), col("c_mktsegment")))
+        .unionByName(legDf("documents", Tables.documents(s, d), col("doc_id"),
+          concat_ws("|", col("doc_id"), col("lang"))))
+        .unionByName(legDf("lineitem", Tables.lineitem(s, d), col("l_orderkey"),
+          concat_ws("|", col("l_orderkey"), col("l_suppkey"),
+            centi(col("l_quantity")))))
+        .unionByName(legDf("orders", Tables.orders(s, d), col("o_orderkey"),
+          concat_ws("|", col("o_orderkey"), col("o_orderstatus"))))
+        .orderBy("table_name")
+    },
+    Some {
+      import graft.functions.GraftFunctions.md5u32Sql
+      def leg(name: String, table: String, canon: String) = {
+        val hi = md5u32Sql(s"md5($canon)")
+        val lo = md5u32Sql(s"substr(md5($canon), 9, 8)")
+        s"SELECT '$name' AS table_name, count(*) AS n_rows, bit_xor($hi) AS xor_hi, bit_xor($lo) AS xor_lo FROM $table"
+      }
+      Seq(
+        leg("customer", "customer", "concat_ws('|', c_custkey, c_mktsegment)"),
+        leg("documents", "documents", "concat_ws('|', doc_id, lang)"),
+        leg("lineitem", "lineitem",
+          "concat_ws('|', l_orderkey, l_suppkey, CAST(floor(l_quantity * 100 + 0.5) AS BIGINT))"),
+        leg("orders", "orders", "concat_ws('|', o_orderkey, o_orderstatus)"))
+        .mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY table_name")
+    })
+
+  /** One (table, key) leg of [[qaKeySkew]]: group sizes, then two tiny
+    * passes over the key-count table. The count subplan appears twice
+    * (stats + hot-key filter) with an identical canonical form, so
+    * Catalyst reuses its shuffle (ReusedExchange — plan-asserted in the
+    * spec): the fact is scanned and shuffled ONCE, everything after runs
+    * over |keys| rows. The hot-key test multiplies instead of dividing
+    * (sz * n_keys > 2 * n_rows) so it stays in exact BIGINTs. */
+  private def skewProfile(df: DataFrame, tbl: String, keyCol: String): DataFrame = {
+    val g = df.groupBy(col(keyCol).as("k")).agg(count(lit(1)).as("sz"))
+    val stats = g.agg(sum("sz").as("n_rows"), count(lit(1)).as("n_keys"),
+      max("sz").as("max_sz"))
+    // exact 128-bit compare: sz * n_keys can pass 2^63 at plausible scale
+    // (1e9-row key x 1e10 keys); LONG would wrap SILENTLY (non-ANSI) and
+    // drop the hottest keys from the list. DECIMAL(38,0) is the exact
+    // wide-integer twin of the oracle's HUGEINT (the emb_dim_profile sm2
+    // discipline).
+    val hot = g.crossJoin(broadcast(stats))
+      .filter(col("sz").cast("decimal(38,0)") * col("n_keys") >
+        col("n_rows").cast("decimal(38,0)") * lit(2L))
+      .agg(count(lit(1)).as("n_hot"))
+    stats.crossJoin(hot)
+      .select(lit(tbl).as("tbl"), lit(keyCol).as("key_col"),
+        col("n_rows"), col("n_keys"), col("max_sz"),
+        // BIGINT is exact here while max_sz < 9.2e12 — a single join key
+        // with nine trillion rows is beyond any real table; the hot-key
+        // compare above is the one that overflows at plausible scale.
+        expr("(max_sz * 1000000L) DIV n_rows").as("top_ppm"),
+        fround(col("n_rows").cast("double") / col("n_keys"), 4).as("avg_sz"),
+        col("n_hot"))
+  }
+
+  private def skewSql(tbl: String, keyCol: String): String = {
+    val g = s"SELECT count(*) AS sz FROM $tbl GROUP BY $keyCol"
+    s"SELECT '$tbl' AS tbl, '$keyCol' AS key_col, s.n_rows, s.n_keys, s.max_sz, (s.max_sz * 1000000) // s.n_rows AS top_ppm, floor(CAST(s.n_rows AS DOUBLE) / s.n_keys * 10000.0 + 0.5) / 10000.0 AS avg_sz, h.n_hot FROM (SELECT CAST(sum(sz) AS BIGINT) AS n_rows, count(*) AS n_keys, max(sz) AS max_sz FROM ($g)) s CROSS JOIN (SELECT count(*) AS n_hot FROM ($g) g CROSS JOIN (SELECT CAST(sum(sz) AS BIGINT) AS n_rows, count(*) AS n_keys FROM ($g)) s2 WHERE CAST(g.sz AS HUGEINT) * s2.n_keys > 2 * CAST(s2.n_rows AS HUGEINT)) h"
+  }
+
+  /** JOIN-KEY SKEW PROFILE — the diagnostic that decides the shuffle
+    * strategy BEFORE a 100 TB join runs: per (table, key), total rows,
+    * distinct keys, the largest group, its corpus share in exact ppm
+    * (integer division — never a float ratio), the exact-rational mean
+    * group size, and how many keys exceed 2x the mean (the salting
+    * candidates — AQE's skew-join split and manual salting both want
+    * exactly this list). Profiles the three join keys the engine's own
+    * query plane hits hardest: lineitem.l_orderkey (the fact-fact edge),
+    * orders.o_custkey (Q13's distribution), events.user_id (the
+    * sessionization key). */
+  private val qaKeySkew = GraftQuery(
+    "qa_key_skew",
+    "per join-key group-size skew profile: max/top-share/hot-key counts",
+    (s, d) => skewProfile(Tables.lineitem(s, d), "lineitem", "l_orderkey")
+      .unionByName(skewProfile(Tables.orders(s, d), "orders", "o_custkey"))
+      .unionByName(skewProfile(Tables.events(s, d), "events", "user_id"))
+      .orderBy("tbl"),
+    Some(Seq(("lineitem", "l_orderkey"), ("orders", "o_custkey"),
+        ("events", "user_id"))
+      .map { case (t, k) => skewSql(t, k) }
+      .mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY tbl")))
+
   /** CDC log compaction: latest-writer-wins per key with DELETE
     * tombstones — the lakehouse merge-on-read compaction kernel (Delta/
     * Iceberg/Hudi snapshot reads all do exactly this). The events stream
@@ -474,8 +592,8 @@ object ParsingOps {
   val all: Seq[GraftQuery] = Seq(
     csvRoundtrip, jsonStruct, jsonInferred, dateConstruct, sqlMultikeyJoin,
     mvCascade, sqlCtas, partitionPruned, dppPrune, scd2Merge,
-    mvIncrementalAgg, mvCompactCdc, scd2Asof, mmPhash, mvLambdaServing,
-    sqlRecursiveHierarchy)
+    mvIncrementalAgg, qaTableChecksum, qaKeySkew, mvCompactCdc, scd2Asof,
+    mmPhash, mvLambdaServing, sqlRecursiveHierarchy)
 
   /** Time-travel READ over the SCD2 dimension — "the dimension as of
     * 2024-07-01": for each key, exactly the one version whose

@@ -30,6 +30,25 @@ object PipelineOps {
 
   import graft.functions.GraftFunctions.{md5u32, md5u32Sql}
 
+  private val uSql = md5u32Sql("h")
+
+  /** Deterministic train/val/test split by content-independent key hash
+    * (80/10/10). The split is a property of the doc_id alone: reproducible
+    * across runs, engines, and corpus growth, with zero shuffle — the
+    * aggregation here just summarizes the three buckets for verification. */
+  private val sampHashSplit = GraftQuery(
+    "samp_hash_split",
+    "deterministic md5 train/val/test split (80/10/10) of the corpus",
+    (s, d) => Tables.documents(s, d)
+      .withColumn("m", md5u32(col("doc_id").cast("string")) % 10)
+      .withColumn("split",
+        when(col("m") <= 7, "train").when(col("m") === 8, "val").otherwise("test"))
+      .groupBy("split")
+      .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"),
+        min("doc_id").as("min_id"), max("doc_id").as("max_id"))
+      .orderBy("split"),
+    Some(s"""WITH u AS (SELECT doc_id, n_chars, $uSql % 10 AS m FROM (SELECT doc_id, n_chars, md5(doc_id::VARCHAR) AS h FROM documents)), sp AS (SELECT CASE WHEN m <= 7 THEN 'train' WHEN m = 8 THEN 'val' ELSE 'test' END AS split, doc_id, n_chars FROM u) SELECT split, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars, min(doc_id) AS min_id, max(doc_id) AS max_id FROM sp GROUP BY 1 ORDER BY 1"""))
+
   /** LEAKAGE-SAFE split — the fix for the eval-contamination failure mode
     * a plain per-doc hash split has: near-duplicate documents land on
     * BOTH sides of a train/test boundary, so the test set silently
@@ -42,7 +61,7 @@ object PipelineOps {
     *
     * Scale shape: the component label table is pair-bounded (near-dup
     * nodes only), so it BROADCASTS into the corpus scan; the split is then
-    * a narrow map over an md5 hash of doc_id, and the summary is one
+    * a narrow map exactly like samp_hash_split, and the summary is one
     * map-side-combined aggregation. The single countDistinct is over grp
     * within 3 split groups — a two-stage partial distinct, no Expand. */
   private val sampClusterSplit = GraftQuery(
@@ -520,7 +539,7 @@ object PipelineOps {
     * tokens per 20 tokens (≈15% corruption), span starts drawn from the
     * md5 hash of (doc_id, span index) so the mask is a pure function of
     * the document identity — reproducible across runs, engines, and
-    * corpus growth. Overlapping spans merge (the
+    * corpus growth, like samp_hash_split. Overlapping spans merge (the
     * masked-position set is distinct), so n_masked ≤ 3·n_spans and the
     * realized ratio is reported against the 15% target. Docs under 20
     * tokens get no spans but stay in the output. Scale: explode is
@@ -710,9 +729,9 @@ object PipelineOps {
   }
 
   val all: Seq[GraftQuery] = Seq(
-    sampClusterSplit, arrHofStats, evtFunnel, aggMode, calGapFill,
-    calInterpolate, pipePack, pipeMixWeights, pipeChunk, pipeFilterGate,
-    pipeCurationFunnel, pipeTokenBudget, pipeAuditTrail, calBusinessDays,
-    pipeSpanCorruption, pipeLengthBatching, pipeDatasetCard, pipeCurriculum,
-    pipePaddingCurve)
+    sampHashSplit, sampClusterSplit, arrHofStats, evtFunnel, aggMode,
+    calGapFill, calInterpolate, pipePack, pipeMixWeights, pipeChunk,
+    pipeFilterGate, pipeCurationFunnel, pipeTokenBudget, pipeAuditTrail,
+    calBusinessDays, pipeSpanCorruption, pipeLengthBatching,
+    pipeDatasetCard, pipeCurriculum, pipePaddingCurve)
 }

@@ -1131,7 +1131,7 @@ object RelationalOps {
     * sum over boundary time IS the concurrency step function). The global
     * running sum is DECOMPOSED by UTC day — per-day in-partition running
     * sums plus a broadcast day-prefix offset table (the same bucketed
-    * global-index pattern) — and synthetic zero-delta
+    * global-index pattern as samp_systematic) — and synthetic zero-delta
     * points at every day's start/end close the step intervals inside each
     * partition, so no window in the plan is unpartitioned over the
     * boundary stream. Per-level DURATION sums are invariant to the

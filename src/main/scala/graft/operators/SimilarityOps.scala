@@ -202,14 +202,57 @@ object SimilarityOps {
         floor(col("x").cast("double") * 1000000.0 + 0.5).cast("long").as("micro"))
 
   /** (label, dim, n, sm) — the per-(label, dim) micro-sum base BOTH
-    * centroid views derive from: the exact rational mean and
-    * emb_assign_purity's quantization of the same rational to an integer
+    * centroid views derive from: emb_centroids reports the exact rational
+    * mean, emb_assign_purity quantizes the same rational to an integer
     * micro. One aggregation definition, so the two centroid notions can
     * never drift apart (e.g. a future degenerate-vector filter lands in
     * both or neither). */
   private def labelDimSums(s: SparkSession, d: String): DataFrame =
     microDims(s, d).groupBy("label", "dim")
       .agg(count(lit(1)).as("n"), sum("micro").as("sm"))
+
+  private val embCentroids = GraftQuery(
+    "emb_centroids",
+    "per-label embedding centroids: element-wise micro-exact means",
+    (s, d) => labelDimSums(s, d)
+      .select(col("label"), col("dim"), col("n"),
+        fround(col("sm").cast("double") / col("n") / 1000000.0, 6).as("mean_v"))
+      .orderBy("label", "dim"),
+    Some("""SELECT label, dim, count(*) AS n, floor(CAST(sum(CAST(floor(CAST(embedding[dim] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / count(*) / 1000000.0 * 1000000.0 + 0.5) / 1000000.0 AS mean_v FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS dim) GROUP BY 1, 2 ORDER BY 1, 2"""))
+
+  /** Per-DIMENSION corpus profile — the dead/collapsed-dimension detector.
+    * An embedding-pipeline failure mode: a dimension that is ~always zero
+    * or near-constant carries no signal and wastes index bytes (matryoshka
+    * truncation and PQ sub-spaces both assume healthy dims). Moments are
+    * integer-exact: sums of micros and squared micros (the evt_zscore
+    * discipline), so mean/variance are rationals evaluated with ONE fixed
+    * double-op sequence in both engines. Scale shape: posexplode + one
+    * keyed aggregation on 64 dims with map-side combine — the shuffle
+    * carries dims x partial rows, not the corpus. The squared-micro sum
+    * rides as DECIMAL(38,0) — exact 128-bit integer arithmetic, the twin
+    * of DuckDB's HUGEINT widening — because a LONG sum would silently
+    * wrap past ~2·10^6 rows/dim at |x| <= 2 (non-ANSI Spark wraps, it
+    * does not error); both engines then convert the exact integer to
+    * double with the same correct rounding. */
+  private val embDimProfile = GraftQuery(
+    "emb_dim_profile",
+    "per-dimension profile: near-zero share + integer-exact mean/variance",
+    (s, d) => microDims(s, d)
+      .groupBy("dim")
+      .agg(count(lit(1)).as("n"),
+        sum(when(abs(col("micro")) <= 1000L, lit(1L)).otherwise(lit(0L)))
+          .as("n_near_zero"),
+        min("micro").as("min_micro"), max("micro").as("max_micro"),
+        sum("micro").as("sm"),
+        sum((col("micro") * col("micro")).cast("decimal(38,0)")).as("sm2"))
+      .select(col("dim"), col("n"), col("n_near_zero"),
+        col("min_micro"), col("max_micro"),
+        fround(col("sm").cast("double") / col("n") / 1e6, 6).as("mean_v"),
+        fround((col("sm2").cast("double") / col("n") -
+          (col("sm").cast("double") / col("n")) *
+            (col("sm").cast("double") / col("n"))) / 1e12, 6).as("var_v"))
+      .orderBy("dim"),
+    Some("""WITH mic AS (SELECT dim, CAST(floor(CAST(embedding[dim] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS micro FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS dim)) SELECT dim, count(*) AS n, CAST(sum(CASE WHEN abs(micro) <= 1000 THEN 1 ELSE 0 END) AS BIGINT) AS n_near_zero, min(micro) AS min_micro, max(micro) AS max_micro, floor(CAST(sum(micro) AS DOUBLE) / count(*) / 1000000.0 * 1000000.0 + 0.5) / 1000000.0 AS mean_v, floor((CAST(sum(micro * micro) AS DOUBLE) / count(*) - (CAST(sum(micro) AS DOUBLE) / count(*)) * (CAST(sum(micro) AS DOUBLE) / count(*))) / 1000000000000.0 * 1000000.0 + 0.5) / 1000000.0 AS var_v FROM mic GROUP BY 1 ORDER BY 1"""))
 
   /** Nearest-centroid ASSIGNMENT + label purity — the classification step
     * of semantic dedup (SemDeDup: cluster, then prune within clusters) and
@@ -338,7 +381,8 @@ object SimilarityOps {
     * shape: centroids BROADCAST into a per-element term stream feeding one
     * map-side-combined aggregation keyed on vec; the global rank compiles
     * to TakeOrderedAndProject (per-partition heaps) and the row_number
-    * then runs over the 20-row prefix, not the corpus. */
+    * then runs over the 20-row prefix, not the corpus (the
+    * samp_shuffle_prefix discipline). */
   private val embPrototypicality = GraftQuery(
     "emb_prototypicality",
     "top-20 outliers by exact micro-distance to own-label centroid",
@@ -916,9 +960,10 @@ object SimilarityOps {
     Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), n AS (SELECT vec_id, v, sqrt(list_sum([x*x for x in v])) AS nrm FROM e), bq AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM n WHERE vec_id % 50 = 0), bsc AS (SELECT bq.q_id, c.vec_id AS n_id, list_sum([s[1]*s[2] for s in list_zip(bq.qv, c.v)]) / (bq.qn * c.nrm) AS cos FROM bq JOIN n c ON c.vec_id <> bq.q_id), b10 AS (SELECT q_id, n_id, rnk AS brnk FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY floor(cos * 1000000.0 + 0.5) DESC, n_id) AS rnk FROM bsc) WHERE rnk <= 10), proj AS (SELECT vec_id, p, list_sum([(CASE WHEN instr('0123456789abcdef', substr(md5(p::VARCHAR || ':' || (i-1)::VARCHAR), 1, 1)) % 2 = 1 THEN 1.0 ELSE -1.0 END) * v[i] for i in generate_series(1, len(v))]) AS dp FROM n, (SELECT unnest(generate_series(0, 7)) AS p)), codes AS (SELECT vec_id, CAST(sum(CASE WHEN dp > 0 THEN 1 << p ELSE 0 END) AS BIGINT) AS code FROM proj GROUP BY 1), c2 AS (SELECT n.vec_id, n.v, n.nrm, codes.code FROM n JOIN codes USING (vec_id)), lq AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn, code AS qcode FROM c2 WHERE vec_id % 50 = 0), lsc AS (SELECT lq.q_id, c2.vec_id AS n_id, list_sum([s[1]*s[2] for s in list_zip(lq.qv, c2.v)]) / (lq.qn * c2.nrm) AS cos FROM lq JOIN c2 ON c2.code = lq.qcode AND c2.vec_id <> lq.q_id), l10 AS (SELECT q_id, n_id, rnk AS lrnk FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY floor(cos * 1000000.0 + 0.5) DESC, n_id) AS rnk FROM lsc) WHERE rnk <= 10), ks AS (SELECT unnest([1, 3, 5, 10]) AS k), hits AS (SELECT k, CAST(count(*) AS BIGINT) AS n_common FROM b10 JOIN l10 USING (q_id, n_id), ks WHERE brnk <= k AND lrnk <= k GROUP BY 1), pr AS (SELECT CAST(count(*) AS BIGINT) AS n_probes FROM b10 WHERE brnk = 1) SELECT CAST(ks.k AS INTEGER) AS k, n_probes, coalesce(hits.n_common, 0) AS n_common, floor(CAST(coalesce(hits.n_common, 0) AS DOUBLE) / (ks.k * n_probes) * 1e4 + 0.5) / 1e4 AS mean_recall FROM ks LEFT JOIN hits ON hits.k = ks.k CROSS JOIN pr ORDER BY 1"""))
 
   val all: Seq[GraftQuery] = Seq(
-    knnBrute, labelStats, knnLsh, knnMatryoshka, embAssignPurity,
-    dedupSemantic, embPrototypicality, simHubness, hardNegatives,
-    embKmeansStep, embSimHistogram, embPcaPower, embPcaVar, embKmeansppSeed,
-    simRecallEval, knnLabelAccuracy, embSignFidelity, embIntrinsicDim,
-    embSilhouette, knnMargin, simRankSpearman, simRecallCurve)
+    knnBrute, labelStats, knnLsh, knnMatryoshka, embCentroids,
+    embDimProfile, embAssignPurity, dedupSemantic, embPrototypicality,
+    simHubness, hardNegatives, embKmeansStep, embSimHistogram, embPcaPower,
+    embPcaVar, embKmeansppSeed, simRecallEval, knnLabelAccuracy,
+    embSignFidelity, embIntrinsicDim, embSilhouette, knnMargin,
+    simRankSpearman, simRecallCurve)
 }

@@ -225,6 +225,42 @@ object TextOps {
     },
     Some("""WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents), sh AS (SELECT DISTINCT doc_id, unnest([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3] for i in generate_series(1, greatest(len(toks) - 3, 0))]) AS sh FROM t), ev AS (SELECT doc_id AS eval_id, sh FROM sh WHERE doc_id % 100 = 0), tr AS (SELECT doc_id AS train_id, sh FROM sh WHERE doc_id % 100 <> 0) SELECT train_id, eval_id, count(*) AS n_shared FROM tr JOIN ev USING (sh) GROUP BY 1, 2 ORDER BY 1, 2"""))
 
+  /** Vocabulary building — the tokenizer-training precursor: global token
+    * frequencies with document frequency, corpus share, and cumulative
+    * coverage of the top-K. One map-side-combined aggregation over the
+    * exploded tokens (groupBy(tok) folds to vocab size per partition before
+    * the shuffle); the corpus total is summed from the vocab table itself —
+    * never a second scan of the raw text. Top-K compiles to
+    * TakeOrderedAndProject (per-partition heaps, no global sort) and the
+    * cumulative window then runs over K rows, not the vocabulary.
+    * Reference analog: the per-key frequency rollups the aggregation plane
+    * serves (AggregationActor.scala:43-60), lifted to corpus vocabulary. */
+  private val vocabTopK = GraftQuery(
+    "txt_vocab_topk",
+    "vocabulary top-50: token freq, doc freq, corpus share, cumulative coverage",
+    (s, d) => {
+      val tok = Tables.documents(s, d)
+        .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
+      val vocab = tok.groupBy("tok")
+        .agg(count(lit(1)).as("cnt"), countDistinct(col("doc_id")).as("df"))
+      // corpus token total from the (small) vocab table, not a rescan
+      val total = vocab.agg(sum("cnt").as("total"))
+      val top = vocab.orderBy(desc("cnt"), col("tok")).limit(50)
+      // unpartitioned on purpose: runs over the 50-row top-K, not the
+      // vocabulary — audited benign (see QuietLogs)
+      val w = Window.orderBy(desc("cnt"), col("tok"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      top.crossJoin(broadcast(total))
+        .withColumn("rk", row_number().over(Window.orderBy(desc("cnt"), col("tok"))))
+        .withColumn("share", col("cnt").cast("double") / col("total"))
+        .withColumn("cum_share", sum(col("cnt")).over(w).cast("double") / col("total"))
+        .select(col("rk"), col("tok"), col("cnt"), col("df"),
+          fround(col("share"), 6).as("share"),
+          fround(col("cum_share"), 6).as("cum_share"))
+        .orderBy("rk")
+    },
+    Some("""WITH tok AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents), v AS (SELECT tok, count(*) AS cnt, count(DISTINCT doc_id) AS df FROM tok GROUP BY 1), t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM v), top AS (SELECT * FROM v ORDER BY cnt DESC, tok LIMIT 50) SELECT row_number() OVER (ORDER BY cnt DESC, tok) AS rk, tok, cnt, df, floor(CAST(cnt AS DOUBLE) / total * 1000000.0 + 0.5) / 1000000.0 AS share, floor(CAST(sum(cnt) OVER (ORDER BY cnt DESC, tok ROWS UNBOUNDED PRECEDING) AS DOUBLE) / total * 1000000.0 + 0.5) / 1000000.0 AS cum_share FROM top CROSS JOIN t ORDER BY rk"""))
+
   /** The sketch twin of [[vocabTopK]] — mergeable Misra-Gries heavy
     * hitters as a native TypedImperativeAggregate (see
     * functions/expressions/MisraGries.scala). Exact vocabulary counting
@@ -268,6 +304,70 @@ object TextOps {
     },
     None, boundedBy = Some("FreqSketchSpec"))
 
+  /** THE shared unigram-LM scoring pipeline (txt_unigram_logprob +
+    * txt_ppl_buckets — one implementation, so a determinism fix lands in
+    * one place). The perplexity-proxy quality signal: CCNet trains a real
+    * LM; the unigram model is its exact-arithmetic skeleton. Per doc,
+    * (n_tok, lp_sum) where lp_sum is the BIGINT sum of per-token
+    * micro-unit log-probs under the corpus's own unigram distribution —
+    * order-independent, unlike a double sum whose partial-aggregation
+    * order Spark does not fix. `extra` columns (e.g. lang) are carried
+    * through the grouping. Scale shape: one vocab aggregation (map-side
+    * combined), the open-vocabulary model SHUFFLE-joined back onto the
+    * token stream (never a broadcast hint — AQE may still broadcast from
+    * observed sizes), one doc-keyed aggregation.
+    * Lockstep rounding (see GraftFunctions.fround):
+    * floor(x*1e6 + 0.5) spelled identically in both engines — Spark's
+    * round() goes through BigDecimal HALF_UP on the shortest decimal
+    * string and can disagree with DuckDB's round() on boundary doubles.
+    * ACCEPTED RISK (deliberate): ln() itself is libm, not IEEE-exact —
+    * Java Math.log and DuckDB std::log could differ by 1 ulp, and a
+    * disagreeing ulp landing EXACTLY on a .5 micro-unit boundary would
+    * flip the floor. Both are correctly-rounded to well under 1 ulp and
+    * have matched on every (cnt,total) pair across all three SFs
+    * (txt_unigram_logprob's per-token ln terms); a corpus that ever trips
+    * this will surface as a hash mismatch in the driver gate, and the
+    * fallback is to micro-round cnt/total BEFORE the ln on both sides —
+    * applied HERE and in [[lpPerDocCtes]], nowhere else. */
+  private def lpPerDoc(s: SparkSession, d: String, extra: Seq[String]) = {
+    val keep = col("doc_id") +: extra.map(col)
+    val tok = Tables.documents(s, d)
+      .select(keep :+ explode(tokens(col("text"))).as("tok"): _*)
+    val vocab = tok.groupBy("tok").agg(count(lit(1)).as("cnt"))
+    val total = vocab.agg(sum("cnt").as("total"))
+    // the unigram model is OPEN-vocabulary (10⁸–10⁹ rows at corpus
+    // scale) so it reaches the token stream by a plain SHUFFLED join —
+    // never a broadcast hint (the txt_pmi_collocations lesson); the only
+    // forced broadcast is the 1-row total. AQE may still broadcast the
+    // vocab at runtime from OBSERVED sizes — size-informed, not hinted.
+    tok.join(vocab, Seq("tok")).crossJoin(broadcast(total))
+      .select(keep :+
+        floor(log(col("cnt").cast("double") / col("total")) * 1e6 + 0.5)
+          .cast("long").as("lp_micro"): _*)
+      .groupBy("doc_id", extra: _*)
+      .agg(count(lit(1)).as("n_tok"), sum("lp_micro").as("lp_sum"))
+  }
+
+  /** Oracle twin of [[lpPerDoc]] — CTEs ending in
+    * pd(doc_id[, extra], n_tok, lp_sum). `extra` is "" or ", lang" etc.;
+    * keep the two in lockstep (same micro-rounding, same ln risk note). */
+  private def lpPerDocCtes(extra: String): String =
+    s"tok AS (SELECT doc_id$extra, unnest(string_split(lower(text), ' ')) AS tok FROM documents), " +
+      "v AS (SELECT tok, count(*) AS cnt FROM tok GROUP BY 1), " +
+      "t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM v), " +
+      s"pd AS (SELECT doc_id$extra, count(*) AS n_tok, CAST(sum(CAST(floor(ln(CAST(cnt AS DOUBLE) / total) * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS lp_sum FROM tok JOIN v USING (tok) CROSS JOIN t GROUP BY doc_id$extra)"
+
+  private val unigramLogprob = GraftQuery(
+    "txt_unigram_logprob",
+    "unigram-LM avg log-prob per doc (perplexity-proxy quality signal)",
+    (s, d) => lpPerDoc(s, d, Nil)
+      .select(col("doc_id"), col("n_tok"),
+        fround(col("lp_sum").cast("double") / (col("n_tok") * 1e6), 4)
+          .as("avg_logprob"))
+      .orderBy("doc_id"),
+    Some("WITH " + lpPerDocCtes("") +
+      " SELECT doc_id, n_tok, floor(CAST(lp_sum AS DOUBLE) / (n_tok * 1000000.0) * 10000.0 + 0.5) / 10000.0 AS avg_logprob FROM pd ORDER BY doc_id"))
+
   /** Per-document NOVELTY — the share of a doc's 4-gram shingles that
     * appear in no other document. The dedup diagnostic that separates
     * "this doc is boilerplate recombination" (novelty ≈ 0, every shingle
@@ -309,6 +409,39 @@ object TextOps {
     },
     Some("WITH " + DedupOps.shingleCte4 +
       """, df AS (SELECT sh, count(*) AS dfreq FROM sh GROUP BY 1) SELECT s.doc_id, count(*) AS n_sh, CAST(sum(CASE WHEN df.dfreq = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_uniq, floor(CAST(sum(CASE WHEN df.dfreq = 1 THEN 1 ELSE 0 END) AS DOUBLE) / count(*) * 10000.0 + 0.5) / 10000.0 AS novelty FROM sh s JOIN df USING (sh) GROUP BY 1 ORDER BY 1"""))
+
+  /** CCNet-style perplexity bucketing: rank each language's documents by
+    * unigram-LM avg log-prob and split into head/middle/tail terciles —
+    * the canonical "keep the head, sample the middle, drop the tail"
+    * curation signal. Rank boundaries are integer arithmetic
+    * (k1 = ⌈n/3⌉ = (n+2) DIV 3 — positive DIV and // agree), the ordering
+    * key is the per-doc exact rational lp_sum/n_tok evaluated as one IEEE
+    * division (identical both engines), and the per-bucket mean is
+    * TOKEN-WEIGHTED from integer sums (Σlp_micro / Σn_tok) — a mean of
+    * per-doc doubles would be a cross-row float sum with unfixed merge
+    * order. One lang-partitioned window over the per-doc score table. */
+  private val pplBuckets = GraftQuery(
+    "txt_ppl_buckets",
+    "CCNet head/middle/tail perplexity terciles per language",
+    (s, d) => {
+      val perDoc = lpPerDoc(s, d, Seq("lang"))
+        .withColumn("avg_lp", col("lp_sum").cast("double") / col("n_tok"))
+      val w = Window.partitionBy("lang").orderBy(desc("avg_lp"), col("doc_id"))
+      perDoc
+        .withColumn("rn", row_number().over(w))
+        .withColumn("n", count(lit(1)).over(Window.partitionBy("lang")))
+        .withColumn("bucket",
+          when(col("rn") <= expr("(n + 2) DIV 3"), lit("head"))
+            .when(col("rn") <= expr("(2 * n + 2) DIV 3"), lit("middle"))
+            .otherwise(lit("tail")))
+        .groupBy("lang", "bucket")
+        .agg(count(lit(1)).as("n_docs"),
+          fround(sum("lp_sum").cast("double") / (sum("n_tok") * lit(1e6)), 4)
+            .as("mean_logprob"))
+        .orderBy("lang", "bucket")
+    },
+    Some("WITH " + lpPerDocCtes(", lang") +
+      """, r AS (SELECT *, CAST(lp_sum AS DOUBLE) / n_tok AS avg_lp FROM pd), w AS (SELECT *, row_number() OVER (PARTITION BY lang ORDER BY avg_lp DESC, doc_id) AS rn, count(*) OVER (PARTITION BY lang) AS n FROM r) SELECT lang, CASE WHEN rn <= (n + 2) // 3 THEN 'head' WHEN rn <= (2 * n + 2) // 3 THEN 'middle' ELSE 'tail' END AS bucket, count(*) AS n_docs, floor(CAST(sum(lp_sum) AS DOUBLE) / (sum(n_tok) * 1000000.0) * 10000.0 + 0.5) / 10000.0 AS mean_logprob FROM w GROUP BY 1, 2 ORDER BY 1, 2"""))
 
   /** Per-document character-distribution Shannon entropy — the gibberish /
     * degenerate-text detector (keyboard mash, repeated fill, base64 blobs
@@ -352,7 +485,7 @@ object TextOps {
     Some("""WITH ch AS (SELECT doc_id, unnest(regexp_extract_all(text, '[\s\S]')) AS ch FROM documents WHERE length(text) > 0), c AS (SELECT doc_id, ch, count(*) AS cnt FROM ch GROUP BY 1, 2), t AS (SELECT doc_id, cnt, CAST(sum(cnt) OVER (PARTITION BY doc_id) AS BIGINT) AS n, count(*) OVER (PARTITION BY doc_id) AS nd FROM c) SELECT doc_id, max(n) AS n_chars, max(nd) AS n_distinct, floor(-CAST(sum(cnt * CAST(floor(ln(CAST(cnt AS DOUBLE) / n) * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / (max(n) * 1000000.0) * 10000.0 + 0.5) / 10000.0 AS entropy FROM t GROUP BY 1 ORDER BY 1"""))
 
   /** Cross-SPLIT contamination report: after the deterministic 80/10/10
-    * md5 hash split of doc_id, how many 4-gram shingles
+    * md5 hash split (samp_hash_split's rule), how many 4-gram shingles
     * leak from train into val/test, and how many docs on each side are
     * involved — the split-integrity audit that must be zero-ish before an
     * eval number is trustworthy (txt_decontaminate checks against an
@@ -433,6 +566,32 @@ object TextOps {
       s"""WITH ${DedupOps.shingleCte4}, sp AS (SELECT doc_id, CASE WHEN $uD % 10 < 8 THEN 'train' WHEN $uD % 10 = 8 THEN 'val' ELSE 'test' END AS split FROM documents), shs AS (SELECT sh.doc_id, sh.sh, sp.split FROM sh JOIN sp USING (doc_id)), tr AS (SELECT doc_id AS train_id, sh FROM shs WHERE split = 'train'), ev AS (SELECT doc_id AS eval_id, split, sh FROM shs WHERE split <> 'train') SELECT split, CAST(count(DISTINCT sh) AS BIGINT) AS n_shared_shingles, CAST(count(DISTINCT eval_id) AS BIGINT) AS n_eval_docs_hit, CAST(count(DISTINCT train_id) AS BIGINT) AS n_train_docs_hit FROM tr JOIN ev USING (sh) GROUP BY 1 ORDER BY 1"""
     })
 
+  /** Feature hashing (the "hashing trick"): project each document's bag of
+    * words into a fixed 256-bucket count vector via md5-mod bucketing — the
+    * vocabulary-free featurization that never builds (or shuffles) a term
+    * dictionary, which is what makes it THE text-featurizer shape at
+    * 100 TB: one explode + one (doc, bucket) map-side-combined aggregation,
+    * no vocabulary table, no broadcast, memory O(buckets) per doc
+    * regardless of corpus vocabulary. Reported per doc: nonzero buckets,
+    * exact squared L2 norm, and the heaviest bucket (collision pressure =
+    * nnz vs token count; sq_norm spikes flag repetitive docs). Bucket ids
+    * ride the repo's md5u32 lockstep hash. */
+  private val featureHashing = GraftQuery(
+    "txt_feature_hashing",
+    "hashing-trick 256-bucket doc vectors: nnz, exact sq-norm, top bucket",
+    (s, d) => {
+      val bkt = Tables.documents(s, d)
+        .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
+        .select(col("doc_id"), pmod(md5u32(col("tok")), lit(256L)).as("bkt"))
+        .groupBy("doc_id", "bkt").agg(count(lit(1)).as("c"))
+      bkt.groupBy("doc_id")
+        .agg(count(lit(1)).as("nnz"),
+          sum(col("c") * col("c")).as("sq_norm"),
+          max("c").as("max_bucket_count"))
+        .orderBy("doc_id")
+    },
+    Some(s"""WITH tok AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents), b AS (SELECT doc_id, ${graft.functions.GraftFunctions.md5u32Sql("md5(tok)")} % 256 AS bkt FROM tok), g AS (SELECT doc_id, bkt, CAST(count(*) AS BIGINT) AS c FROM b GROUP BY 1, 2) SELECT doc_id, count(*) AS nnz, CAST(sum(c * c) AS BIGINT) AS sq_norm, max(c) AS max_bucket_count FROM g GROUP BY 1 ORDER BY 1"""))
+
   /** PMI COLLOCATIONS — pointwise mutual information over adjacent token
     * pairs, the classic collocation extractor (phrases whose parts
     * co-occur far above chance; the phrase-mining step before tokenizer
@@ -488,7 +647,28 @@ object TextOps {
 
   val all: Seq[GraftQuery] = Seq(
     tokenStats, fingerprint, topNgrams, repetition, decontaminate,
-    boilerplate, decontaminateBloom, vocabSketch, txtNovelty, charEntropy,
-    splitContamination, pmiCollocations)
+    boilerplate, decontaminateBloom, vocabTopK, vocabSketch, unigramLogprob,
+    txtNovelty, pplBuckets, charEntropy, splitContamination, featureHashing,
+    surprisalBySource, pmiCollocations)
+
+  /** MEAN TOKEN SURPRISAL per source — the unigram-LM quality signal
+    * rolled to the SOURCE grain (which corpus slice is most "surprising"
+    * under the corpus's own distribution: high = diverse/rare vocabulary,
+    * low = templated): rides THE shared lpPerDoc pipeline (one
+    * implementation with txt_unigram_logprob and txt_ppl_buckets), so
+    * per-source sums stay exact micro-nat BIGINTs end-to-end. */
+  private lazy val surprisalBySource = GraftQuery(
+    "txt_surprisal_by_source",
+    "per-source mean token surprisal under the corpus unigram LM",
+    (s, d) => lpPerDoc(s, d, Seq("source"))
+      .groupBy("source")
+      .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"),
+        sum("lp_sum").as("lps"))
+      .select(col("source"), col("n_docs"), col("n_tokens"),
+        fround(-col("lps").cast("double") / (col("n_tokens") * 1e6), 4)
+          .as("mean_surprisal_nats"))
+      .orderBy("source"),
+    Some("WITH " + lpPerDocCtes(", source") +
+      " SELECT source, count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens, floor(-CAST(sum(lp_sum) AS DOUBLE) / (sum(n_tok) * 1000000.0) * 1e4 + 0.5) / 1e4 AS mean_surprisal_nats FROM pd GROUP BY 1 ORDER BY 1"))
 
 }

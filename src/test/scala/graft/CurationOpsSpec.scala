@@ -12,4 +12,68 @@ class CurationOpsSpec extends AnyFunSuite {
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 
+  test("stratified sample is identical across runs and repartitionings") {
+    val a = run("samp_stratified").collect().map(_.getLong(0)).toSet
+    val b = run("samp_stratified").repartition(7).collect().map(_.getLong(0)).toSet
+    assert(a == b && a.nonEmpty)
+  }
+
+  test("stratified sample rates: en stratum kept at ~2x the tail rate") {
+    val docs = Tables.documents(spark, sf)
+    val total = docs.groupBy("lang").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val kept = run("samp_stratified").groupBy("lang").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    // md5 mod is uniform: expected keep ratio 1/2 for en, 1/4 elsewhere
+    val enR = kept.getOrElse("en", 0L).toDouble / total("en")
+    assert(enR > 0.3 && enR < 0.7, s"en keep ratio $enR")
+    val restKept = (kept - "en").values.sum.toDouble
+    val restTotal = (total - "en").values.sum.toDouble
+    val restR = restKept / restTotal
+    assert(restR > 0.12 && restR < 0.40, s"tail keep ratio $restR")
+  }
+
+  test("quota sampling never exceeds 5 docs per source") {
+    val bySource = run("samp_quota").collect().groupBy(_.getString(1))
+    assert(bySource.nonEmpty)
+    bySource.foreach { case (src, rows) =>
+      assert(rows.length <= 5, s"source $src got ${rows.length}")
+      assert(rows.map(_.getInt(2)).sorted.toSeq == (1 to rows.length))
+    }
+  }
+
+  test("shuffle-prefix compiles to TakeOrderedAndProject (no global sort of the corpus)") {
+    val p = run("samp_shuffle_prefix").queryExecution.executedPlan.toString
+    assert(p.contains("TakeOrderedAndProject"), p.take(2000))
+  }
+
+  test("stratified sampling plan has no shuffle (pure narrow map + filter)") {
+    val p = run("samp_stratified").queryExecution.executedPlan.toString
+    // the only exchange allowed is the output ordering's range partition
+    val exchanges = p.linesIterator.count(_.contains("Exchange"))
+    assert(exchanges <= 1, p.take(2000))
+  }
+
+  test("normalization strips only stopwords: clean count <= raw count, gap = stopword count") {
+    import org.apache.spark.sql.functions._
+    val joined = run("txt_normalize").join(
+      Tables.documents(spark, sf).select(col("doc_id"),
+        size(split(lower(col("text")), " ")).as("raw_n"),
+        size(filter(split(lower(col("text")), " "),
+          t => t === "the" || t === "a")).as("stop_n")),
+      "doc_id")
+    assert(joined.filter(col("n_tok") - col("n_tok_clean") =!= col("stop_n")).count() == 0)
+  }
+
+  test("int8 quantization checksum is within representable range") {
+    val rows = run("emb_quantize").collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val scale = r.getDouble(1)
+      assert(scale > 0, s"vec ${r.getLong(0)} scale $scale")
+      // |q_sum| <= 127 * dim (dim learned from one vector)
+    }
+    val dim = Tables.embeddings(spark, sf).selectExpr("size(embedding)").head().getInt(0)
+    rows.foreach(r => assert(math.abs(r.getLong(2)) <= 127L * dim))
+  }
 }

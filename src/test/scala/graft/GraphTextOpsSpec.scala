@@ -13,6 +13,34 @@ class GraphTextOpsSpec extends AnyFunSuite {
   private val sf = GraftTestSpark.sf
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 
+  test("txt_vocab_topk: shares in (0,1], cum_share monotone, full coverage when K >= |V|") {
+    val rows = run("txt_vocab_topk").collect()
+    assert(rows.nonEmpty)
+    val cums = rows.map(_.getDouble(5))
+    assert(cums.zip(cums.tail).forall { case (a, b) => b >= a - 1e-12 })
+    val cnts = rows.map(_.getLong(2))
+    assert(cnts.zip(cnts.tail).forall { case (a, b) => b <= a }, "counts descend")
+    // sf0.001's synthetic vocabulary is smaller than K=50, so the top-K
+    // covers the whole corpus: cumulative share must end at exactly 1.0
+    if (rows.length < 50) assert(math.abs(cums.last - 1.0) < 1e-6)
+    rows.foreach { r => assert(r.getLong(3) >= 1L && r.getDouble(4) > 0.0) }
+  }
+
+  test("txt_unigram_logprob: all avg log-probs negative; rare-token docs score lower") {
+    val rows = run("txt_unigram_logprob").collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      assert(r.getDouble(2) < 0.0, s"doc ${r.getLong(0)}: logprob must be < 0")
+      assert(r.getLong(1) > 0L)
+    }
+    // corpus-level sanity: average over docs matches the corpus unigram
+    // entropy's sign and rough scale (tiny vocab => entropy < ln(|V|))
+    val nVocab = run("txt_vocab_topk").count()
+    val meanLp = rows.map(_.getDouble(2)).sum / rows.length
+    assert(meanLp >= -math.log(nVocab.toDouble) - 0.1,
+      s"mean logprob $meanLp below -ln|V| floor")
+  }
+
   test("samp_importance: kept iff u01 < w, weights in [0.2, 1.0], deterministic") {
     val a = run("samp_importance").collect()
     assert(a.nonEmpty)

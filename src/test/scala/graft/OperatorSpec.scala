@@ -189,6 +189,27 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
+  test("samp_weighted_reservoir: selection replays exactly and biases toward weight") {
+    import org.apache.spark.sql.functions._
+    import graft.functions.GraftFunctions.md5u32
+    val sel = run("samp_weighted_reservoir").collect()
+    assert(sel.length == 100 && sel.map(_.getLong(0)).distinct.length == 100)
+    // replay A-ES keys over the full corpus and confirm the query picked
+    // exactly the top-100
+    val keys = Tables.documents(spark, sf)
+      .select(col("doc_id"), col("n_chars"),
+        (log((md5u32(concat(lit("res:"), col("doc_id").cast("string")))
+          .cast("double") + lit(0.5)) / lit(4294967296.0)) / col("n_chars")).as("k"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val expect = keys.sortBy(t => (-t._3, t._1)).take(100).map(_._1).toSet
+    assert(sel.map(_.getLong(0)).toSet == expect)
+    // A-ES draws ∝ weight: the selected docs' mean length must exceed the
+    // corpus mean (the whole point of weighting by n_chars)
+    val meanSel = sel.map(_.getLong(1)).sum.toDouble / sel.length
+    val meanAll = keys.map(_._2).sum.toDouble / keys.length
+    assert(meanSel > meanAll, s"selected mean $meanSel not above corpus mean $meanAll")
+  }
+
   test("win_percent_rank: ratios are in [0,1]; cume_dist tops out at 1 per partition") {
     val rows = run("win_percent_rank").collect()
     assert(rows.nonEmpty)
@@ -221,6 +242,52 @@ class OperatorSpec extends AnyFunSuite {
     contained.foreach { id =>
       assert(nov(id) <= 0.00005 + 1e-4, s"contained doc $id has novelty ${nov(id)}")
     }
+  }
+
+  test("qa_table_checksum: partition-order invariant and single-row sensitive") {
+    import org.apache.spark.sql.functions._
+    val out = run("qa_table_checksum").collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    assert(out.keySet == Set("customer", "documents", "lineitem", "orders"))
+    // replay the customer leg under a hostile repartitioning: XOR folding
+    // must be bit-identical regardless of partition count or row order
+    def word(c: org.apache.spark.sql.Column, from: Int) =
+      conv(substring(md5(c), from, 8), 16, 10).cast("long")
+    val canon = concat_ws("|", col("c_custkey"), col("c_mktsegment"))
+    val replay = Tables.customer(spark, sf).repartition(7).sortWithinPartitions(desc("c_name"))
+      .select(word(canon, 1).as("hi"), word(canon, 9).as("lo"))
+      .agg(count(lit(1)), expr("bit_xor(hi)"), expr("bit_xor(lo)"))
+      .collect().head
+    assert((replay.getLong(0), replay.getLong(1), replay.getLong(2)) == out("customer"))
+    // ...and flipping a single row's content must change the checksum
+    val tampered = Tables.customer(spark, sf)
+      .withColumn("c_mktsegment",
+        when(col("c_custkey") === 1, lit("TAMPERED")).otherwise(col("c_mktsegment")))
+    val tam = tampered
+      .select(word(canon, 1).as("hi"), word(canon, 9).as("lo"))
+      .agg(expr("bit_xor(hi)"), expr("bit_xor(lo)")).collect().head
+    assert((tam.getLong(0), tam.getLong(1)) != (out("customer")._2, out("customer")._3))
+  }
+
+  test("emb_centroids: full label x dim grid, counts consistent, means replayed") {
+    import org.apache.spark.sql.functions._
+    val rows = run("emb_centroids").collect()
+    val labels = Tables.embeddings(spark, sf).groupBy("label").count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(rows.length == labels.size * 64, "expected |labels| x 64 grid")
+    rows.foreach { r =>
+      assert(r.getLong(2) == labels(r.getInt(0)), "n must equal the label's vector count")
+    }
+    // replay one cell exactly: label with the smallest id, dim 1
+    val l0 = labels.keySet.min
+    val direct = Tables.embeddings(spark, sf).filter(col("label") === l0)
+      .select(floor(element_at(col("embedding"), 1).cast("double") * 1000000.0 + 0.5)
+        .cast("long").as("m"))
+      .agg(sum("m"), count(lit(1))).collect().head
+    val expect = math.floor(direct.getLong(0).toDouble / direct.getLong(1) / 1000000.0
+      * 1000000.0 + 0.5) / 1000000.0
+    val got = rows.find(r => r.getInt(0) == l0 && r.getLong(1) == 1L).get.getDouble(3)
+    assert(got == expect, s"centroid cell mismatch: $got vs $expect")
   }
 
   test("j_fuzzy_match: pairs verified by a reference DP, blocked set is complete") {
@@ -280,6 +347,25 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
+  test("txt_ppl_buckets: terciles partition each language, head outranks tail") {
+    import org.apache.spark.sql.functions._
+    val rows = run("txt_ppl_buckets").collect()
+      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
+    val perLang = Tables.documents(spark, sf).groupBy("lang").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    perLang.foreach { case (lang, n) =>
+      // n=1 yields only a head row, n=2 head+middle — guard so a sparse
+      // language fails with a diagnostic, not a bare NoSuchElementException
+      def bucket(b: String) = rows.getOrElse((lang, b),
+        fail(s"$lang (n=$n docs): missing '$b' tercile row"))
+      val h = bucket("head"); val m = bucket("middle"); val t = bucket("tail")
+      assert(h._1 + m._1 + t._1 == n, s"$lang: buckets must partition the language")
+      assert(h._1 == (n + 2) / 3, s"$lang: head tercile size")
+      assert(h._2 >= m._2 && m._2 >= t._2,
+        s"$lang: bucket means must be ordered head >= middle >= tail")
+    }
+  }
+
   test("dedup_keep_longest: representative is the longest member of each component") {
     val comps = run("dedup_components").collect()
       .map(r => (r.getLong(0), r.getLong(1)))               // (doc_id, comp)
@@ -298,6 +384,25 @@ class OperatorSpec extends AnyFunSuite {
       assert(keep == best && kc == chars(best),
         s"comp $comp: expected representative $best (${chars(best)} chars), got $keep ($kc)")
     }
+  }
+
+  test("emb_dim_profile: full dim grid, moments replayed on one dimension") {
+    val rows = run("emb_dim_profile").collect()
+    assert(rows.map(_.getLong(0)).toSeq == (1L to 64L), "one row per dim, ordered")
+    val nVec = Tables.embeddings(spark, sf).count()
+    rows.foreach { r =>
+      assert(r.getLong(1) == nVec, s"dim ${r.getLong(0)}: n must equal corpus size")
+      assert(r.getDouble(6) >= 0.0, s"dim ${r.getLong(0)}: variance must be >= 0")
+      assert(r.getLong(3) <= r.getLong(4), s"dim ${r.getLong(0)}: min <= max")
+    }
+    // replay dim 1 from raw vectors with the same micro arithmetic
+    val micros = Tables.embeddings(spark, sf).select("embedding").collect()
+      .map(r => math.floor(r.getSeq[Float](0).head.toDouble * 1e6 + 0.5).toLong)
+    val d1 = rows.head
+    assert(d1.getLong(2) == micros.count(m => math.abs(m) <= 1000L), "near-zero count")
+    assert(d1.getLong(3) == micros.min && d1.getLong(4) == micros.max)
+    val mean = micros.sum.toDouble / micros.length / 1e6
+    assert(d1.getDouble(5) == math.floor(mean * 1e6 + 0.5) / 1e6, "dim-1 mean replays")
   }
 
   test("emb_assign_purity: confusion matrix replays a brute-force exact argmin") {
@@ -419,6 +524,19 @@ class OperatorSpec extends AnyFunSuite {
     assert(got.toSeq == expected.toSeq)
     val dropped = got.count(!_._4)
     assert(dropped > 0 && dropped < got.length, s"degenerate: $dropped dropped")
+  }
+
+  test("qa_key_skew: brute-force replay of the events.user_id leg") {
+    val uids = Tables.events(spark, sf).select("user_id").collect()
+      .map(_.getLong(0))
+    val g = uids.groupBy(identity).map(_._2.length.toLong).toSeq
+    val (nRows, nKeys, maxSz) = (uids.length.toLong, g.size.toLong, g.max)
+    val r = run("qa_key_skew").filter("tbl = 'events'").collect().head
+    assert((r.getLong(2), r.getLong(3), r.getLong(4)) == ((nRows, nKeys, maxSz)))
+    assert(r.getLong(5) == maxSz * 1000000L / nRows)       // top_ppm
+    assert(r.getDouble(6) ==
+      math.floor(nRows.toDouble / nKeys * 1e4 + 0.5) / 1e4) // avg_sz
+    assert(r.getLong(7) == g.count(sz => sz * nKeys > 2L * nRows).toLong)
   }
 
   test("emb_prototypicality: brute-force replay of own-centroid distances") {

@@ -11,6 +11,17 @@ class PipelineOpsSpec extends AnyFunSuite {
   private val sf = GraftTestSpark.sf
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 
+  test("samp_hash_split: splits partition the corpus, ~80/10/10") {
+    val rows = run("samp_hash_split").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(rows.keySet == Set("train", "val", "test"))
+    val total = rows.values.sum
+    assert(total == Tables.documents(spark, sf).count())
+    assert(rows("train") > rows("val") && rows("train") > rows("test"))
+    // the split is a pure function of doc_id: rerunning moves nothing
+    assert(run("samp_hash_split").collect().map(r => r.getString(0) -> r.getLong(1)).toMap == rows)
+  }
+
   test("arr_hof_stats: one row per vector, min <= mean <= max, n_pos <= dim") {
     val df = run("arr_hof_stats")
     assert(df.count() == Tables.embeddings(spark, sf).count())

@@ -70,6 +70,16 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("partial_sum") || p.contains("HashAggregate"), p.take(2000))
   }
 
+  test("qa_key_skew reuses the key-count shuffle (each fact scanned once)") {
+    // the key-count subplan feeds both the stats agg and the hot-key
+    // filter; identical canonical form -> AQE reuses its exchange. The
+    // reuse only materializes in the FINAL adaptive plan, so execute first.
+    val df = SparkEntry.queries("qa_key_skew")(spark, sf)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("ReusedExchange"), p.take(3000))
+  }
+
   test("dedup_semantic: pairwise join is keyed on cluster, never all-pairs") {
     val p = plan("dedup_semantic")
     assert(p.contains("BroadcastHashJoin"), p.take(3000))   // centroids broadcast
@@ -150,6 +160,11 @@ class PlanQualitySpec extends AnyFunSuite {
       assert(!"Exchange hashpartitioning".r.findFirstIn(p).isDefined,
         s"$name: ${p.take(3000)}")
     }
+  }
+
+  test("vocab top-K short-circuits via TakeOrderedAndProject, never a global sort") {
+    val p = plan("txt_vocab_topk")
+    assert(p.contains("TakeOrderedAndProject"), p.take(3000))
   }
 
   test("pagerank iterations broadcast the node-sized contributions (edges never shuffle mid-loop)") {
@@ -233,6 +248,16 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("BroadcastNestedLoopJoin"), p.take(3000))
   }
 
+  test("weighted reservoir compiles to TakeOrderedAndProject (no global sort of the corpus)") {
+    val p = plan("samp_weighted_reservoir")
+    assert(p.contains("TakeOrderedAndProject"), p.take(2000))
+  }
+
+  test("emb_centroids aggregates map-side before the (label, dim)-keyed shuffle") {
+    val p = plan("emb_centroids")
+    assert(p.contains("partial_sum"), p.take(2500))
+  }
+
   test("fuzzy join is equi-keyed on the block, never a cartesian/BNLJ") {
     val p = plan("j_fuzzy_match")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
@@ -245,9 +270,22 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("GreaterThanOrEqual(o_orderdate"), p.take(2500))
   }
 
+  test("table checksum legs prune to the canonical-string columns") {
+    val p = plan("qa_table_checksum")
+    val custLeg = p.linesIterator.find(l =>
+      l.contains("ReadSchema") && l.contains("customer.parquet")).get
+    assert(custLeg.contains("c_custkey") && custLeg.contains("c_mktsegment") &&
+      !custLeg.contains("c_name") && !custLeg.contains("c_acctbal"), custLeg)
+  }
+
   test("keep-longest broadcasts the pair-bounded component labels (corpus never shuffles for the join)") {
     val p = plan("dedup_keep_longest")
     assert(p.contains("BroadcastHashJoin"), p.take(2500))
+  }
+
+  test("emb_dim_profile aggregates map-side before the 64-group dim shuffle") {
+    val p = plan("emb_dim_profile")
+    assert(p.contains("partial_sum"), p.take(2500))
   }
 
   test("nearest-centroid assignment broadcasts the centroid table and combines terms map-side") {
@@ -299,14 +337,18 @@ class PlanQualitySpec extends AnyFunSuite {
     // the registry (the classic scale-killer: every row funnels through
     // one task) fails here by name instead of scrolling past in a log.
     val allowed = Set(
+      "txt_vocab_topk",      // windows over the 50-row top-K
       "pipe_mix_weights",    // window over the ~#sources-row aggregate
+      "samp_shuffle_prefix", // row_number over the 200-row LIMIT prefix
       "rel_skyline",         // running max over the price-LEVEL table —
                              // bounded by the centi-price value range
                              // (groupBy reduced), not the part corpus
       "emb_sim_histogram",   // row_number over the 200-row md5 sample
+      "samp_systematic",     // cumulative offsets over the 256-bucket dim
       "rel_sweep_concurrency", // day-prefix offsets over the ~30-day dim
       "pipe_pack_sequences", // bin offsets over the packed-bin aggregate
       "evt_transition_matrix", // row-share over the 25-cell matrix
+      "txt_ppl_buckets",     // tercile cuts over the 15-row bucket table
       "emb_prototypicality", // row_number over the 20-row top-K prefix
       "pipe_rfm_segments",   // exact quintile ntiles over the CUSTOMER
                              // rollup (orders of magnitude below the
@@ -428,6 +470,13 @@ class PlanQualitySpec extends AnyFunSuite {
       builtin.take(2000))
   }
 
+  test("feature hashing never builds a vocabulary: aggregates only, no join in the plan") {
+    val p = plan("txt_feature_hashing")
+    assert(!p.contains("Join"),
+      s"hashing-trick featurization must not join a term dictionary:\n${p.take(2000)}")
+    assert(p.contains("HashAggregate"), p.take(2000))
+  }
+
   test("nearest as-of join plans ZERO joins (two frames of one window ordering)") {
     val p = plan("j_asof_nearest")
     assert(!p.contains("Join"),
@@ -454,6 +503,14 @@ class PlanQualitySpec extends AnyFunSuite {
     val windows = windowNodes(exec)
     assert(windows.count(_.partitionSpec.nonEmpty) >= 2,
       s"expected user- and day-partitioned windows:\n${p.take(2000)}")
+  }
+
+  test("systematic sampling: per-bucket ranking windows are partitioned; only the 256-row offset dim is not") {
+    val df = SparkEntry.queries("samp_systematic")(spark, sf)
+    val exec = df.queryExecution.executedPlan
+    assert(windowNodes(exec).exists(_.partitionSpec.nonEmpty),
+      "the corpus-side row_number must partition by bucket")
+    assert(exec.toString.contains("BroadcastHashJoin"))
   }
 
   test("basket lift serves its four consumers from the materialized (order, brand) set") {
@@ -513,7 +570,8 @@ class PlanQualitySpec extends AnyFunSuite {
     // by shuffle, never by hint. The only legitimate forced broadcasts in
     // these plans are 1-row totals (global aggregates).
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, ResolvedHint}
-    for (q <- Seq("txt_pmi_collocations")) {
+    for (q <- Seq("txt_unigram_logprob", "txt_ppl_buckets",
+        "txt_pmi_collocations")) {
       val hints = SparkEntry.queries(q)(spark, sf)
         .queryExecution.analyzed.collect { case h: ResolvedHint => h }
       hints.foreach { h =>

@@ -79,6 +79,23 @@ class Round7OpsSpec extends AnyFunSuite {
 
   // ---- systematic sampling --------------------------------------------------
 
+  test("samp_systematic: exact ceil(n/10) rows at stride 10, ranks 1,11,21,…, ids match driver-side md5 order") {
+    val rows = run("samp_systematic").collect()
+    val n = Tables.documents(spark, sf).count()
+    assert(rows.length == ((n + 9) / 10).toInt)
+    assert(rows.map(_.getLong(0)).toSeq == (1L to n by 10L).toSeq)
+    // independent reimplementation: collect ids, md5-order in the driver
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def u32(s: String): Long = {
+      val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      java.lang.Long.parseLong(hex.substring(0, 8), 16)
+    }
+    val ids = Tables.documents(spark, sf).select("doc_id").collect().map(_.getLong(0))
+    val expect = ids.map(i => (u32(i.toString), i)).sorted.map(_._2)
+      .zipWithIndex.collect { case (id, ix) if ix % 10 == 0 => id }
+    assert(rows.map(_.getLong(1)).toSeq == expect.toSeq)
+  }
+
   // ---- PCA power iteration --------------------------------------------------
 
   test("emb_pca_power matches an independent driver-side BigInt power iteration") {
@@ -313,6 +330,22 @@ class Round7OpsSpec extends AnyFunSuite {
   }
 
   // ---- feature hashing ------------------------------------------------------
+
+  test("txt_feature_hashing: nnz <= 256, counts conserve tokens, norm bounds hold") {
+    val rows = run("txt_feature_hashing").collect()
+    val tokCounts = Tables.documents(spark, sf)
+      .select(col("doc_id"), size(split(lower(col("text")), " ")).cast("long").as("n"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(rows.length == tokCounts.size)
+    rows.foreach { r =>
+      val (id, nnz, sq, mx) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+      val n = tokCounts(id)
+      assert(nnz >= 1 && nnz <= math.min(256L, n))
+      assert(mx * mx <= sq && sq <= n * n)
+      // sq_norm >= n (sum of c^2 >= sum of c when c >= 1)
+      assert(sq >= n)
+    }
+  }
 
   // ---- multimodal resize ----------------------------------------------------
 
@@ -616,6 +649,15 @@ class Round7OpsSpec extends AnyFunSuite {
   }
 
   // ---- surprisal by source --------------------------------------------------
+
+  test("txt_surprisal_by_source: positive surprisal, token totals match the corpus") {
+    val rows = run("txt_surprisal_by_source").collect()
+    assert(rows.nonEmpty)
+    val total = Tables.documents(spark, sf)
+      .select(explode(split(lower(col("text")), " "))).count()
+    assert(rows.map(_.getLong(2)).sum == total)
+    rows.foreach(r => assert(r.getDouble(3) > 0.0, "surprisal positive"))
+  }
 
   // ---- tf-idf pair cosine ---------------------------------------------------
 

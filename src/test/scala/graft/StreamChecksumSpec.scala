@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-/** End-to-end proof that the XOR-fold table checksum is STREAMABLE:
+/** End-to-end proof that the qa_table_checksum primitive is STREAMABLE:
   * XOR folding is commutative/associative, so per-micro-batch partial
   * checksums merged on the driver must equal the one-shot batch checksum
   * REGARDLESS of how the stream is batched. The spec forces a hostile
@@ -20,9 +20,9 @@ class StreamChecksumSpec extends AnyFunSuite {
   private val sf = GraftTestSpark.sf
 
   private def canon = concat_ws("|", col("event_id"), col("event_type"))
-  // the PRODUCTION fold (GraftFunctions.xorChecksum) — not a spec-local
-  // copy, so any future change to the checksum definition keeps this
-  // streamability proof attached to it
+  // the PRODUCTION fold (GraftFunctions.xorChecksum, the primitive behind
+  // qa_table_checksum) — not a spec-local copy, so any future change to the
+  // checksum definition keeps this streamability proof attached to it
   private def fold(df: DataFrame) =
     graft.functions.GraftFunctions.xorChecksum(df, canon)
       .select(col("xor_hi"), col("xor_lo"), col("n_rows"))

@@ -3,7 +3,7 @@
 dominated bench rows.
 
 Every registered query costs ~0.3 s of fixed planning/launch overhead per
-bench execution; with 274 queries that fixed cost already dominates the
+bench execution; with 291 queries that fixed cost already dominates the
 floor total (~65%, see README). A query whose floor is essentially ALL
 fixed overhead (first-shot ~= floor ~= the registry's launch floor) adds
 bench minutes but no scale signal — its correctness is already carried by
